@@ -63,8 +63,7 @@ object Bench {
     // the record couldn't self-explain because diagnostics were opt-in
     // and the driver never opts in. Now the evidence rides the artifact.
     val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").contains("1")
-    // Per-query session hygiene (default ON; SPARK_GRAFT_BENCH_CLEAN=0
-    // disables for A/B). A ~110-query single-JVM suite accumulates
+    // Per-query session hygiene. A ~110-query single-JVM suite accumulates
     // session litter that per-query fixed costs pay for: persisted
     // blocks left by iterative localCheckpoint rounds (q76) and
     // intra-query caches, terminated-streaming-query registry entries,
@@ -73,7 +72,6 @@ object Bench {
     // worst — the r6 driver tail read q80/q81 at 8x their isolated
     // cost. Cross-query warm state lives on DISK (bucketed tables, IVF
     // sidecars), so dropping every in-memory leftover is free.
-    val clean = !sys.env.get("SPARK_GRAFT_BENCH_CLEAN").contains("0")
     def cleanup(): Unit = {
       try {
         val sc = spark.sparkContext
@@ -149,7 +147,7 @@ object Bench {
           diags(name) = snap
         }
         if (diag) diagLine(name, r._2, snap)
-        if (clean) cleanup()
+        cleanup()
         r
       }
     }
@@ -228,7 +226,7 @@ object Bench {
       .flatMap { case (k, _) => diags.get(k).map { case (h, t, r, l, g) =>
         "\"" + k + s"""\":{"heap_mb":$h,"threads":$t,"rdds":$r,"load":${f"$l%.1f"},"gc_ms":$g}""" } }
       .mkString("{", ",", "}")
-    println(s"""{"bench_summary":{"total_sec":${f"$total%.2f"},"total_steady_sec":${f"$totalSteady%.2f"},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"slowest10":$slowest,"slowest10_diag":$slowDiag,"runs":$effRuns,"clean":$clean,$envJson,"sf":"$sfDir"}}""")
+    println(s"""{"bench_summary":{"total_sec":${f"$total%.2f"},"total_steady_sec":${f"$totalSteady%.2f"},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"slowest10":$slowest,"slowest10_diag":$slowDiag,"runs":$effRuns,$envJson,"sf":"$sfDir"}}""")
     spark.stop()
     // both JSON lines are on stdout by here; a non-daemon straggler
     // thread must not wedge the driver's bench step (see Verify)

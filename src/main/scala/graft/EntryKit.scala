@@ -37,7 +37,6 @@ private[graft] trait EntryKit {
     * (centroid means, SemDeDup) keep the plain `t` read. */
   private[graft] def twide(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(s, dir, name)
-    if (sys.env.get("SPARK_GRAFT_WIDE_SCANS").contains("0")) return df
     val cores = s.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
   }
@@ -47,8 +46,8 @@ private[graft] trait EntryKit {
     * partition bounds and then executes it AGAIN for the shuffle write,
     * so expensive map-side lineage below a global sort runs twice — and
     * Catalyst never moves a projection below a Sort, so the cost is
-    * structural (measured: `Probe sortshape`, project-then-sort 0.54 s
-    * vs 0.37 s for the same result computed once). A LAZY local
+    * structural (measured in OPTIMIZATION_r17.md: project-then-sort
+    * 0.54 s vs 0.37 s for the same result computed once). A LAZY local
     * checkpoint computes the child once inside the timed action and
     * serves both the sampling pass and the shuffle write from its
     * MEMORY_AND_DISK blocks.
@@ -60,10 +59,9 @@ private[graft] trait EntryKit {
     * checkpointed blocks are exactly the rows the sort must shuffle
     * anyway, so the cache is bounded by the shuffle the query already
     * pays; the alternative at 100 TB is a full extra codec/regex pass
-    * over the corpus. SPARK_GRAFT_SORT_PIN=0 disables for A/B. */
+    * over the corpus. */
   private[graft] def pinSort(df: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_SORT_PIN").contains("0")) df
-    else df.localCheckpoint(eager = false)
+    df.localCheckpoint(eager = false)
 
   /** Store root for the write-path queries (q60/q63/q79), keyed by the
     * source dir so each scale gets its own artifacts. Unsigned-widened

@@ -44,9 +44,8 @@ object GraftSession {
       // Sized for breadth (thousands of distinct operators), not data
       // scale: the cache holds compiled classes, not rows, so the cost
       // is a few MB of metaspace per thousand entries on driver and
-      // executors alike. Overridable via SPARK_GRAFT_CODEGEN_CACHE.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      // executors alike.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // AQE partition coalescing by TARGET SIZE, not parallelism floor:
       // with the default (parallelismFirst=true) every post-shuffle read
       // keeps >= defaultParallelism partitions no matter how few bytes it
@@ -60,12 +59,13 @@ object GraftSession {
       // CAVEAT measured this round: size-based coalescing under-sizes
       // stages whose cost is CPU per row, not bytes (regex scans, PQ
       // ADC distance folds) — those need a LOW advisory size so byte-
-      // light/CPU-heavy shuffles keep their width. Both dials are env-
-      // overridable for A/B and deployment tuning.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY_BYTES", "67108864"))
+      // light/CPU-heavy shuffles keep their width.
+      //
+      // A deployment overrides any of these three dials with a later
+      // `.config(k, v)` on the returned builder (the last one wins), or
+      // with `spark.conf.set` at runtime for the two AQE confs.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864")
 
   /** Get-or-create with graft functions registered even when an existing
     * session (built elsewhere, e.g. by the driver) is returned. */

@@ -194,42 +194,6 @@ object Probe {
         } finally q.stop()
         s32.stop()
         sys.exit(0)
-      case Some("sortshape") =>
-        // Range-sort double-execution probe (guide §2.1/§2.4): a global
-        // orderBy's range exchange SAMPLES its child to pick partition
-        // bounds, then executes the child again for the shuffle write —
-        // so any expensive map-side lineage below the sort runs twice.
-        // Times three shapes of the same result (expensive regex fold
-        // over sf0.1 documents, then a total order):
-        //   A  project-then-sort  (the current query shape)
-        //   B  sort-then-project  (range exchange carries the raw input;
-        //      the expensive projection runs once, above the sort)
-        //   C  project + localCheckpoint, then sort (materialize instead)
-        import org.apache.spark.sql.functions._
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-        val s32 = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-        s32.sparkContext.setLogLevel("ERROR")
-        val docs = s32.read.parquet(s"$sfDir/documents.parquet")
-        def expensive(df: org.apache.spark.sql.DataFrame) = df.select(
-          col("doc_id"),
-          regexp_count(coalesce(col("text"), lit("")),
-            lit("(?:[a-z]+[0-9]|[0-9]+[a-z])[a-z0-9]*")).as("c1"),
-          length(regexp_replace(coalesce(col("text"), lit("")),
-            "(\\w)\\1", "#")).as("c2"))
-        def time(tag: String)(mk: => org.apache.spark.sql.DataFrame): Unit =
-          (1 to 3).foreach { rep =>
-            val t0 = System.nanoTime()
-            mk.write.mode("overwrite").format("noop").save()
-            println(f"[sortshape] $tag rep$rep ${(System.nanoTime() - t0) / 1e9}%.3f s")
-          }
-        time("A:project-then-sort") { expensive(docs).orderBy("doc_id") }
-        time("B:sort-then-project") { expensive(docs.orderBy("doc_id")) }
-        time("C:checkpoint-then-sort") { expensive(docs).localCheckpoint().orderBy("doc_id") }
-        println("---- B plan (does the project stay above the sort?) ----")
-        expensive(docs.orderBy("doc_id")).explain("formatted")
-        s32.stop()
-        sys.exit(0)
       case Some("finalplan") =>
         // AQE-final plan check: `explain` captures the INITIAL adaptive
         // plan (isFinalPlan=false), which shows SortMergeJoin for joins
@@ -256,226 +220,12 @@ object Probe {
         }
         s32.stop()
         sys.exit(0)
-      case Some("clfshape") =>
-        // perceptron epoch-job plan: the declared q175 plan is the
-        // (unchanged) scoring pass, so the evidence for the trainer
-        // restructure is THIS — the per-epoch gradient frame's plan under
-        // the current SPARK_GRAFT_CLF_FLAT setting (run twice, flipping
-        // the env, to capture before/after).
-        import org.apache.spark.sql.functions._
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        val outPath = args.lift(2).getOrElse("/tmp/clfshape.txt")
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-        val s32 = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-        s32.sparkContext.setLogLevel("ERROR")
-        val docs = s32.read.parquet(s"$sfDir/documents.parquet")
-        val labeled = docs.filter(col("doc_id") % 7 === 0)
-          .select(col("doc_id").cast("string").as("id"), col("text"),
-            (col("doc_id") % 3 === 0).as("label"))
-        val txt = graft.operators.QualityClassifier
-          .epochGradientPlan(labeled, "id", "text", "label", dim = 64)
-        val w = new java.io.PrintWriter(outPath)
-        try w.write(txt) finally w.close()
-        println(s"[clfshape] wrote $outPath (flat=${!sys.env.get("SPARK_GRAFT_CLF_FLAT").contains("0")})")
-        s32.stop()
-        sys.exit(0)
-      case Some("clftime") =>
-        // trainer-only timing at a chosen SEED size (the axis the flat
-        // restructure scales with — the corpus only feeds the unchanged
-        // scoring pass): time trainPerceptron alone, reps under the
-        // active SPARK_GRAFT_CLF_FLAT mode.
-        import org.apache.spark.sql.functions._
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        val seedCap = args.lift(2).map(_.toLong).getOrElse(500L)
-        val reps = args.lift(3).map(_.toInt).getOrElse(3)
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-        val s32 = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-        s32.sparkContext.setLogLevel("ERROR")
-        val d = s32.read.parquet(s"$sfDir/documents.parquet")
-        val txt = coalesce(col("text"), lit(""))
-        val lab = d.filter(col("doc_id") % (d.count() / seedCap).max(1L) === 0)
-          .withColumn("label",
-            !txt.contains("slow") && size(split(txt, " ")) >= 30)
-        println(s"[clftime] seed rows=${lab.count()} flat=${!sys.env.get("SPARK_GRAFT_CLF_FLAT").contains("0")}")
-        (1 to reps).foreach { rep =>
-          val t0 = System.nanoTime()
-          val w = graft.operators.QualityClassifier.trainPerceptron(
-            lab, "doc_id", "text", "label", dim = 64, epochs = 3)
-          println(f"[clftime] rep$rep train=${(System.nanoTime() - t0) / 1e9}%.3f s wsum=${w.sum}")
-        }
-        s32.stop()
-        sys.exit(0)
       case Some("plans") =>
         Seq("q06_filter_range", "q11_knn_cosine", "q15_knn_batch",
             "q20_tpch_q1", "q21_topk_per_nation", "q30_minhash_candidates").foreach { q =>
           println(s"========== $q ==========")
           SparkEntry.queries(q)(spark, dir).explain("formatted")
         }
-      case Some("wide") =>
-        // 1k-col assembly shape probe: codegen survival + timing
-        import org.apache.spark.sql.functions._
-        val sf = args.lift(1).getOrElse("sf0.1")
-        val reps = args.lift(2).map(_.toInt).getOrElse(64)
-        val emb = spark.read.parquet(s"/root/testdata/$sf/embeddings.parquet")
-        // tile rows so the timing is not fixture-bound
-        val big = emb.crossJoin(spark.range(reps).select(org.apache.spark.sql.functions.col("id").as("rep")))
-          .select((col("vec_id") * reps + col("rep")).as("doc_id"), col("embedding"))
-        val wideCols = (0 until 1024).map { j =>
-          when(pmod(col("doc_id") + lit(j), lit(17)) === 0, lit(null).cast("float"))
-            .otherwise(element_at(col("embedding"), (j % 64) + 1)).as(s"emb_$j")
-        }
-        val wide = big.select(col("doc_id") +: wideCols: _*)
-        val path = "/tmp/wide1k_probe"
-        if (!new java.io.File(path + "/_SUCCESS").exists())
-          wide.write.mode("overwrite").parquet(path)
-        val w = spark.read.parquet(path)
-        println(s"rows=${w.count()} cols=${w.columns.length}")
-        def time(tag: String)(body: => Long): Unit = {
-          (1 to 3).foreach { i =>
-            val t0 = System.nanoTime(); val n = body
-            println(f"$tag run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s (agg=$n)")
-          }
-        }
-        val names = w.columns.toSeq.filter(_.startsWith("emb_"))
-        def planMarks(df: org.apache.spark.sql.DataFrame): String = {
-          val s = df.queryExecution.executedPlan.toString
-          Seq("WholeStageCodegen", "ColumnarToRow", "Scan parquet")
-            .map(m => s"$m=${s.split('\n').count(_.contains(m))}").mkString(" ")
-        }
-        def matrix(tag: String, confs: Map[String, String]): Unit = {
-          confs.foreach { case (k, v) => spark.conf.set(k, v) }
-          val wl = spark.read.parquet(path)
-          val q = wl.select(col("doc_id"),
-            graft.operators.Assemble.assembleVector(names).as("vec"))
-            .select(sum(size(col("vec"))))
-          println(s"--- $tag: ${planMarks(q)}")
-          time(tag)(q.head().getLong(0))
-          confs.keys.foreach(spark.conf.unset)
-        }
-        matrix("default", Map())
-        def noop(tag: String)(df: => org.apache.spark.sql.DataFrame): Unit =
-          time(tag) { df.write.format("noop").mode("overwrite").save(); 0L }
-        noop("noop-width1025")(w)
-        noop("noop-width65")(w.select(col("doc_id") +: names.take(64).map(col): _*))
-        noop("noop-native")(w.select(col("doc_id"),
-          graft.operators.Assemble.assembleVector(names).as("vec")))
-        noop("noop-hof")(w.select(col("doc_id"),
-          graft.operators.Assemble.assembleVectorHof(names).as("vec")))
-        val qn = w.select(col("doc_id"),
-          graft.operators.Assemble.assembleVector(names).as("vec"))
-          .select(sum(size(col("vec"))))
-        time("agg-native")(qn.head().getLong(0))
-      case Some("graph") =>
-        // graph-ANN vs IVF recall/cost at sf0.1 — the BASELINE r17 table
-        import org.apache.spark.sql.functions._
-        import graft.operators.{Ann, GraphAnn, Knn}
-        val emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet").cache()
-        val n = emb.count()
-        val qids = Seq(11L, 101L, 303L, 505L, 707L, 909L, 1111L, 1313L, 1515L, 1717L)
-        val qs = qids.map(i => emb.filter(col("vec_id") === i)
-          .select("embedding").head().getSeq[Float](0))
-        def timeIt[T](body: => T): (T, Double) = {
-          val t0 = System.nanoTime(); val r = body
-          (r, (System.nanoTime() - t0) / 1e9)
-        }
-        val (truth, tExact) = timeIt(qs.map(q =>
-          Knn.topK(emb, "vec_id", "embedding", q, 10, "l2")
-            .select(col("vec_id").cast("string")).collect().map(_.getString(0)).toSet))
-        println(f"exact scan: ${tExact / qs.size}%.3f s/query (corpus $n)")
-        def recall(got: Seq[Set[String]]): Double =
-          got.zip(truth).map { case (g, t) => g.intersect(t).size / 10.0 }.sum / qs.size
-        // IVF: the store's own autodial shape (nlist ~ sqrt(n))
-        val (ivf, tIvfBuild) = timeIt(Ann.buildIvf(emb, "vec_id", "embedding", nlist = 45))
-        val assigned = ivf.assigned.cache(); assigned.count()
-        val (ivfHits, tIvfQ) = timeIt(qs.map { q =>
-          val cells = Ann.nearestCellsOf(ivf.centroids, q, 4)
-          Knn.topK(assigned.filter(col("cell").isin(cells: _*)),
-              "vec_id", "embedding", q, 10, "l2")
-            .select(col("vec_id").cast("string")).collect().map(_.getString(0)).toSet
-        })
-        println(f"IVF nlist=45 nprobe=4: build $tIvfBuild%.1f s, " +
-          f"${tIvfQ / qs.size}%.3f s/query, recall ${recall(ivfHits)}%.2f")
-        for ((m, tables) <- Seq((8, 4), (16, 8))) {
-          val (g0, tB) = timeIt {
-            val g = GraphAnn.buildKnnGraphLsh(emb, "vec_id", "embedding",
-              m = m, dim = 64, nBits = 6, tables = tables).cache()
-            g.count(); g
-          }
-          val entries = GraphAnn.spreadEntries(emb, "vec_id", "embedding", dim = 64, nBits = 4)
-          for (beam <- Seq(8, 32)) {
-            val (hits, tQ) = timeIt(qs.map(q =>
-              GraphAnn.search(g0, emb, "vec_id", "embedding", q, 10,
-                  entryIds = entries, beam = beam, hops = 4)
-                .select("id").collect().map(_.getString(0)).toSet))
-            println(f"graph-LSH M=$m tables=$tables beam=$beam hops=4: " +
-              f"build $tB%.1f s, ${tQ / qs.size}%.3f s/query, recall ${recall(hits)}%.2f")
-          }
-          g0.unpersist()
-        }
-        // exact build: separates candidate-generation loss (LSH) from
-        // search loss (beam/hops)
-        val (gx, tBx) = timeIt {
-          val g = GraphAnn.buildKnnGraph(emb, "vec_id", "embedding", m = 16).cache()
-          g.count(); g
-        }
-        val entriesX = GraphAnn.spreadEntries(emb, "vec_id", "embedding", dim = 64, nBits = 4)
-        val (hitsX, tQx) = timeIt(qs.map(q =>
-          GraphAnn.search(gx, emb, "vec_id", "embedding", q, 10,
-              entryIds = entriesX, beam = 32, hops = 4)
-            .select("id").collect().map(_.getString(0)).toSet))
-        println(f"graph-EXACT M=16 beam=32 hops=4: build $tBx%.1f s, " +
-          f"${tQx / qs.size}%.3f s/query, recall ${recall(hitsX)}%.2f")
-      case Some("locality") =>
-        // mutation-locality refresh: 1-tenant upsert, prefix-pt vs spread
-        import org.apache.spark.sql.functions._
-        import graft.catalog.{Collection, CollectionCatalog}
-        import spark.implicits._
-        val tenants = (0 until 16).map(t => f"t$t%02d")
-        val perTenant = 2000
-        def run(tag: String, sep: Option[String]): Unit = {
-          val root = java.nio.file.Files.createTempDirectory(
-            java.nio.file.Paths.get("/root/repo/target"), "loc-probe").toString
-          val cat = new CollectionCatalog(spark, root, numBuckets = 32)
-          val c = cat.getOrCreateCollection("t",
-            metadata = sep.map(Collection.PtPrefixSepKey -> _).toMap)
-          val rows = tenants.flatMap(t => (0 until perTenant).map(i =>
-            (s"$t/doc$i", s"document $i of tenant $t with corpus shared terms " +
-              s"alpha beta gamma delta epsilon word$i token${i % 97}")))
-            .toDF("id", "document")
-          c.add(rows)
-          val tB0 = System.nanoTime(); c.buildKeywordIndex()
-          val buildS = (System.nanoTime() - tB0) / 1e9
-          c.upsert((0 until perTenant).map(i =>
-            (s"t03/doc$i", s"REVISED document $i of tenant t03 zeta eta theta word$i"))
-            .toDF("id", "document"))
-          val tR0 = System.nanoTime(); val rebuilt = c.refreshKeywordIndex()
-          val refreshS = (System.nanoTime() - tR0) / 1e9
-          println(f"$tag: build $buildS%.1f s, 1-tenant refresh $refreshS%.1f s, " +
-            f"rebuilt $rebuilt/32 buckets")
-        }
-        run("prefix-pt (graft:pt_prefix_sep=/)", Some("/"))
-        run("whole-id hash (spread)", None)
-      case Some("catalog") =>
-        // catalog-scale audit: 10k collections, listing + resolution cost
-        import graft.catalog.CollectionCatalog
-        val n = args.lift(1).map(_.toInt).getOrElse(10000)
-        val root = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/root/repo/target"), "cat-audit").toString
-        val cat = new CollectionCatalog(spark, root, numBuckets = 4)
-        val t0 = System.nanoTime()
-        (0 until n).foreach(i => cat.getOrCreateCollection(f"coll$i%05d"))
-        println(f"create $n: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        (1 to 3).foreach { r =>
-          val t = System.nanoTime()
-          val ls = cat.listCollections()
-          println(f"list run$r: ${(System.nanoTime() - t) / 1e9}%.2f s (${ls.size} collections)")
-        }
-        val t1 = System.nanoTime()
-        (0 until 1000).foreach(i => cat.getCollection(f"coll${i * 7 % n}%05d"))
-        println(f"resolve 1000 hits: ${(System.nanoTime() - t1) / 1e9}%.2f s")
-        val t2 = System.nanoTime()
-        (0 until 1000).foreach(i => cat.getCollection(s"absent$i"))
-        println(f"resolve 1000 misses: ${(System.nanoTime() - t2) / 1e9}%.2f s")
       case _ =>
         val df = SparkEntry.entry(spark)
         df.show(10, false)

@@ -961,11 +961,9 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * the write serves from blocks. Unobserved batches are left alone:
     * id-pruning already serves their stats pass better than a full-width
     * cache would. MEMORY_AND_DISK — a commit's batch is small by
-    * definition, and spill beats recompute for a rare huge one.
-    * `SPARK_GRAFT_ADD_PIN=0` disables (A/B switch). */
+    * definition, and spill beats recompute for a rare huge one. */
   private def withBatchPinned[A](batch: DataFrame)(body: => A): A = {
-    val pin = !sys.env.get("SPARK_GRAFT_ADD_PIN").contains("0") &&
-      batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
+    val pin = batch.storageLevel == org.apache.spark.storage.StorageLevel.NONE &&
       batch.queryExecution.analyzed.collectFirst {
         case m: org.apache.spark.sql.catalyst.plans.logical.CollectMetrics => m
       }.isDefined
@@ -1414,7 +1412,15 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * monotonically_increasing_id tie-break would not guarantee. Only
     * affected buckets are rewritten. */
   def upsert(batch: DataFrame, orderCol: Option[String] = None): Unit = {
-    val contentOrder = xxhash64(struct(batch.columns.map(col): _*))
+    // Spark refuses to hash a MAP (the `metadata` column Hydrator writes):
+    // a map enters the content hash as its key-sorted entry array, which
+    // is also independent of the map's insertion order
+    val contentOrder = xxhash64(struct(batch.schema.fields.toSeq.map { f =>
+      f.dataType match {
+        case _: org.apache.spark.sql.types.MapType => array_sort(map_entries(col(f.name)))
+        case _ => col(f.name)
+      }
+    }: _*))
     val w = Window.partitionBy("id")
       .orderBy(orderCol.map(c => col(c).desc).getOrElse(contentOrder.desc))
     val dedupBatch = batch.withColumn("__rn", row_number().over(w))
@@ -1645,13 +1651,94 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
 
   // ---- machinery shared by ALL index families (`index_v` IVF/PQ,
   // `docindex_v` trigram postings, `kwindex_v` keyword stats): ONE
-  // claim/adopt/commit discipline parameterized by family name, so a
+  // claim/adopt/commit discipline parameterized by [[Family]], so a
   // protocol fix (claim race, marker handling, adoption rule) lands
   // once instead of once per family ----
 
-  private def familyPrefix(family: String, v: Int): String = f"${family}_v$v%06d"
-  private def familyBuildDir(family: String, v: Int, b: Int): Path =
-    new Path(dir, f"${familyPrefix(family, v)}.b$b%03d")
+  /** One sidecar index family: version-pinned build dirs
+    * `<name>_v<V>.b<B>/` whose refreshable layout slices on
+    * `<axis>=<x>/pb=<b>`, plus the durable `_graft_has_<name>` marker. */
+  private final class Family(val name: String, val axis: String,
+                             val refresh: () => Int) {
+    private def prefix(v: Int): String = f"${name}_v$v%06d"
+
+    /** Whether a dir name is a build of this family (any version). The
+      * `_v` suffix keeps `index_v` from matching `docindex_v`. */
+    def owns(dirName: String): Boolean = dirName.startsWith(s"${name}_v")
+
+    private def buildsOf(v: Int): Seq[Path] =
+      io.list(dir).filter { e =>
+        e.isDir && (e.name == prefix(v) || e.name.startsWith(prefix(v) + ".b"))
+      }.map(_.path)
+
+    /** Highest marker-complete build for version `m.version`. */
+    def current(m: CollectionMeta): Option[Path] =
+      buildsOf(m.version)
+        .filter(p => io.exists(new Path(p, "_graft_committed")))
+        .sortBy(buildNumberOf).lastOption
+
+    /** Newest committed build of ANY version (highest (version, build))
+      * — the refresh diff basis. */
+    def newestCommitted: Option[Path] =
+      io.list(dir).filter(e => e.isDir && owns(e.name)).map(_.path)
+        .filter(p => io.exists(new Path(p, "_graft_committed")))
+        .sortBy(p => (indexVersionOf(p), buildNumberOf(p))).lastOption
+
+    /** Claim the next build dir via O_CREAT|O_EXCL directory create —
+      * racing builders each win a DISTINCT number, never share a dir. */
+    def claim(version: Int): Path = {
+      def buildDir(b: Int) = new Path(dir, f"${prefix(version)}.b$b%03d")
+      var b = buildsOf(version).map(buildNumberOf).maxOption.fold(0)(_ + 1)
+      var claimed: Path = null
+      while (claimed == null) {
+        try {
+          io.createDirExclusive(buildDir(b))
+          claimed = buildDir(b)
+        } catch { case _: java.nio.file.FileAlreadyExistsException => b += 1 }
+      }
+      claimed
+    }
+
+    /** Whether `build` uses the two-level refreshable layout: its first-
+      * axis dirs hold `pb=` slices — locally, or via carry-manifest
+      * entries (a refresh that rewrote nothing has ONLY carried slices). */
+    def hasPbSlices(build: Path): Boolean =
+      io.list(build).find(e => e.isDir && e.name.startsWith(s"$axis=")).exists(g =>
+        io.list(g.path).exists(e => e.isDir && e.name.startsWith("pb="))) ||
+        Carry.read(io, build).keys.exists(k => k.startsWith(s"$axis=") && k.contains("/pb="))
+
+    private def marker: Path = new Path(dir, s"_graft_has_$name")
+
+    /** Durable "this family was built once" marker (a flat file outside
+      * the versioned build dirs): the owner's sizing decision survives
+      * even when [[vacuum]] reclaims every superseded BUILD (an
+      * overwrite makes all builds version-stale, and an overwrite+vacuum
+      * without refresh used to leave [[refreshIndexes]] with nothing to
+      * detect the family by — refresh=true on the NEXT write silently
+      * no-opped and the collection was stranded index-less with no
+      * SQL-surface recovery). Written at every build commit; self-healed
+      * by [[refreshIndexes]] for pre-marker collections. */
+    def record(): Unit = if (!io.exists(marker)) io.writeBytes(marker, Array.emptyByteArray)
+
+    def recorded: Boolean = io.exists(marker)
+
+    /** Delete ALL builds (any version, committed or claimed) plus the
+      * marker. Returns whether any build existed. */
+    def drop(): Boolean = {
+      val builds = io.list(dir).filter(e => e.isDir && owns(e.name)).map(_.path)
+      builds.foreach(io.deleteRecursively)
+      if (recorded) io.deleteRecursively(marker)
+      builds.nonEmpty
+    }
+  }
+
+  private val ivfFamily = new Family("index", "cell", () => refreshIndex())
+  private val docFamily = new Family("docindex", "gp", () => refreshDocIndex())
+  private val kwFamily = new Family("kwindex", "tp", () => refreshKeywordIndex())
+  /** The postings families share one build/refresh/compaction body. */
+  private val postingsFamilies = Seq(docFamily, kwFamily)
+  /** Every family, in refresh and compaction order. */
+  private val families = ivfFamily +: postingsFamilies
 
   /** Build number of an index dir name; the legacy unsuffixed
     * `index_v<V>` layout reads as build 0. */
@@ -1661,42 +1748,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     if (dot < 0) 0 else n.substring(dot + 2).toInt
   }
 
-  private def familyBuildsOf(family: String, v: Int): Seq[Path] =
-    io.list(dir).filter { e =>
-      val n = e.name
-      e.isDir && (n == familyPrefix(family, v) ||
-        n.startsWith(familyPrefix(family, v) + ".b"))
-    }.map(_.path)
-
-  /** Highest marker-complete build of one family for one version. */
-  private def currentFamilyBuild(family: String, m: CollectionMeta): Option[Path] =
-    familyBuildsOf(family, m.version)
-      .filter(p => io.exists(new Path(p, "_graft_committed")))
-      .sortBy(buildNumberOf).lastOption
-
-  /** Claim the next build dir via O_CREAT|O_EXCL directory create —
-    * racing builders each win a DISTINCT number, never share a dir. */
-  private def claimFamilyBuild(family: String, version: Int): Path = {
-    var b = familyBuildsOf(family, version)
-      .map(buildNumberOf).maxOption.fold(0)(_ + 1)
-    var claimed: Path = null
-    while (claimed == null) {
-      try {
-        io.createDirExclusive(familyBuildDir(family, version, b))
-        claimed = familyBuildDir(family, version, b)
-      } catch { case _: java.nio.file.FileAlreadyExistsException => b += 1 }
-    }
-    claimed
-  }
-
-  private def indexPrefix(v: Int): String = familyPrefix("index", v)
-  private def indexBuildDir(v: Int, b: Int): Path = familyBuildDir("index", v, b)
   /** Committed index for the CURRENT version: (path, centroids), if any —
     * the highest marker-complete build. Centroid sidecars are parsed once
     * per committed build (they are immutable after the marker lands), not
     * on every query. */
   private def currentIndex(m: CollectionMeta): Option[(Path, Array[(Int, Array[Double])])] =
-    currentFamilyBuild("index", m)
+    ivfFamily.current(m)
       .flatMap { p =>
         Collection.cachedCentroids(io, p, spark.sparkContext.hadoopConfiguration)
           .map(c => (p, c))
@@ -1713,7 +1770,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     if (exact) None
     else currentIndex(m) match {
       case s @ Some(_) => s
-      case None => warnIfStale("index", m); None
+      case None => warnIfStale(ivfFamily, m); None
     }
 
   /** Build an IVF index over the current version with k-means centroids
@@ -1767,12 +1824,9 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     m
   }
 
-  private def claimIndexBuild(version: Int): Path =
-    claimFamilyBuild("index", version)
-
   private def writeIndex(model: Ann.IvfModel, version: Int,
                          pq: Option[Ann.PqModel] = None): Unit = {
-    val claimed = claimIndexBuild(version)
+    val claimed = ivfFamily.claim(version)
     // one shuffle BY CELL at build time: without it every write task emits
     // a file into every cell it happens to hold (tasks × nlist small files)
     val packed = model.copy(assigned = model.assigned.repartition(col("cell")))
@@ -1782,7 +1836,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // complete codebook for its codes column
     pq.foreach(p => Ann.writePqSidecar(claimed, p, spark.sparkContext.hadoopConfiguration))
     io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
-    recordFamily("index")
+    ivfFamily.record()
   }
 
   /** PQ codebooks of a committed index build (None for a plain IVF one);
@@ -1801,7 +1855,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * with centroid drift — re-run buildIndexPqResidualSeeded to re-train
     * when refreshIndexReport flags drift. */
   private def carriedPq(df: DataFrame): Option[Ann.PqModel] = {
-    val pq = newestCommittedBuild("index_v").flatMap(pqModelOf)
+    val pq = ivfFamily.newestCommitted.flatMap(pqModelOf)
     pq.foreach { _ =>
       require(!df.columns.contains("codes"),
         "collection gained a user 'codes' column after its PQ index was built — " +
@@ -2095,16 +2149,16 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // must not silently clobber a user column named cell/pb that a later
     // batch introduced (upsert's allowMissingColumns admits new columns)
     val m = indexableMeta()
-    val prior = newestCommittedBuild("index_v")
+    val prior = ivfFamily.newestCommitted
     val priorCents = prior.flatMap(p =>
       Collection.cachedCentroids(io, p, spark.sparkContext.hadoopConfiguration))
     val refreshed = (prior, priorCents) match {
       case (Some(old), _) if indexVersionOf(old) == m.version =>
         0 // a committed build already serves this version
-      case (Some(old), Some(cents)) if hasPbSlices(old, "cell=") &&
+      case (Some(old), Some(cents)) if ivfFamily.hasPbSlices(old) &&
           io.exists(dataDir(indexVersionOf(old))) =>
         val changed = changedBucketsBetween(indexVersionOf(old), m.version)
-        val claimed = claimIndexBuild(m.version)
+        val claimed = ivfFamily.claim(m.version)
         val touched = currentWithPtOf(m)
           .filter(col("pt").isin(changed.toSeq: _*))
           .withColumnRenamed("pt", "pb")
@@ -2264,14 +2318,13 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
 
   /** Index-side policy check, run after an incremental index refresh:
     * a long refresh chain accumulates one small file per refresh per
-    * touched slice plus a carry-owner spread — past the bound, both
-    * committed builds repack ([[compactIndexes]]) and vacuum reclaims
+    * touched slice plus a carry-owner spread — past the bound, every
+    * committed build repacks ([[compactIndexes]]) and vacuum reclaims
     * the superseded builds. */
   private def maybeAutoCompactIndexes(): Unit = {
     val m = meta
     autoCompactBound(m).foreach { bound =>
-      val files = (currentIndex(m).map(_._1) ++ currentDocIndex(m) ++ currentKwIndex(m))
-        .map(indexFileCount).sum
+      val files = families.flatMap(_.current(m)).map(indexFileCount).sum
       if (files > bound) {
         val keep = metaPositiveInt(m, "graft:autocompact.keephistory").getOrElse(0)
         log.warn(s"auto-compaction of collection '${m.name}' indexes: $files " +
@@ -2288,7 +2341,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * semantics are the contract), but at 100 TB the SILENT cost cliff is
     * the bug — a SQL-only writer (`df.write.format("graft")`) advances
     * the version without any way to know the sidecars went stale. */
-  private def warnIfStale(family: String, m: CollectionMeta): Unit = {
+  private def warnIfStale(family: Family, m: CollectionMeta): Unit = {
     // memoized per (collection, family, version) and JVM: the warning is
     // a log line, so probing once per version is enough — without the
     // memo EVERY scan-fallback read (including on collections that never
@@ -2296,20 +2349,20 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // decide not to log, a per-query I/O tax on object stores. A build
     // committed for the SAME version after the probe only suppresses the
     // (already moot) warning, never a serving decision.
-    if (!Collection.staleProbe.add(s"$dir|$family|v${m.version}")) return
+    if (!Collection.staleProbe.add(s"$dir|${family.name}|v${m.version}")) return
     if (Collection.staleProbe.size > 65536) Collection.staleProbe.clear()
-    newestCommittedBuild(s"${family}_v") match {
+    family.newestCommitted match {
       case Some(b) if indexVersionOf(b) != m.version =>
-        log.warn(s"collection '${m.name}': newest committed $family build " +
+        log.warn(s"collection '${m.name}': newest committed ${family.name} build " +
           s"serves v${indexVersionOf(b)} but the collection is at " +
           s"v${m.version} — serving the full scan instead (correct, but " +
           "O(corpus)); refresh via refreshIndexes() or the SQL write " +
           "option refresh=true")
-      case None if familyMarker(family) =>
+      case None if family.recorded =>
         // the family was built once but NO build survives (an overwrite
         // made every build version-stale and vacuum reclaimed them) —
         // without this arm the cost cliff would be silent forever
-        log.warn(s"collection '${m.name}': the $family index was built " +
+        log.warn(s"collection '${m.name}': the ${family.name} index was built " +
           "once but no build survives (overwrite + vacuum) — serving the " +
           "full scan; refreshIndexes() or the SQL write option " +
           "refresh=true rebuilds it in full")
@@ -2320,43 +2373,31 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   /** Refresh EVERY index family that has ever been built — the one-call
     * freshness contract behind the SQL write surface's `refresh=true`
     * option (a plain-SQL user has no per-family handles). Family
-    * detection is committed-build OR the durable [[recordFamily]] marker,
+    * detection is committed-build OR the durable [[Family.record]] marker,
     * so an overwrite+vacuum that reclaimed every stale build still
     * rebuilds (full re-derivation — the refresh methods' own fallback).
     * Families never built are not built here (building is a sizing
     * decision — `ivf:nlist`, analyzer — the owner makes once); families
     * already current are O(listing) no-ops. Returns family → id buckets
     * rebuilt, for logging/specs. */
-  def refreshIndexes(): Map[String, Int] = {
-    def known(fam: String): Boolean = {
-      val found = newestCommittedBuild(s"${fam}_v").isDefined
-      if (found) recordFamily(fam) // self-heal pre-marker collections
-      found || familyMarker(fam)
-    }
-    val out = Seq.newBuilder[(String, Int)]
-    if (known("index")) {
+  def refreshIndexes(): Map[String, Int] =
+    families.flatMap { f =>
+      // families are probed one at a time, AFTER the previous family's
+      // refresh (which may auto-compact and vacuum)
+      val found = f.newestCommitted.isDefined
+      if (found) f.record() // self-heal pre-marker collections
+      if (!found && !f.recorded) None
       // the IVF full-rebuild fallback re-trains from ivf:nlist; a seeded
       // build wiped by overwrite+vacuum has no nlist to re-train from —
       // warn loudly instead of throwing the whole multi-family refresh
-      if (newestCommittedBuild("index_v").isDefined ||
-          meta.metadata.contains("ivf:nlist"))
-        out += ("index" -> refreshIndex())
-      else log.warn(s"collection '$name': the IVF index was built once " +
-        "but no build survives and the collection carries no ivf:nlist " +
-        "metadata to re-train from — rebuild explicitly via " +
-        "buildIndex(nlist)/buildIndexSeeded")
-    }
-    if (known("docindex")) out += ("docindex" -> refreshDocIndex())
-    if (known("kwindex")) out += ("kwindex" -> refreshKeywordIndex())
-    out.result().toMap
-  }
-
-  /** Newest committed index build dir with the given name prefix
-    * (highest (version, build)) — the refresh diff basis. */
-  private def newestCommittedBuild(prefix: String): Option[Path] =
-    io.list(dir).filter(e => e.isDir && e.name.startsWith(prefix)).map(_.path)
-      .filter(p => io.exists(new Path(p, "_graft_committed")))
-      .sortBy(p => (indexVersionOf(p), buildNumberOf(p))).lastOption
+      else if (f == ivfFamily && !found && !meta.metadata.contains("ivf:nlist")) {
+        log.warn(s"collection '$name': the IVF index was built once " +
+          "but no build survives and the collection carries no ivf:nlist " +
+          "metadata to re-train from — rebuild explicitly via " +
+          "buildIndex(nlist)/buildIndexSeeded")
+        None
+      } else Some(f.name -> f.refresh())
+    }.toMap
 
   /** Id buckets whose data changed between two committed versions (see
     * [[bucketSignatures]] for why an owner+file-name diff is the right
@@ -2384,24 +2425,11 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * user intent — unlike rebuild, this DOES delete: every build of the
     * family (stale versions included — they serve nothing, and a
     * surviving committed one would let [[refreshIndexes]]'s self-heal
-    * resurrect the family) AND the durable [[recordFamily]] marker, so
+    * resurrect the family) AND the durable [[Family.record]] marker, so
     * `refreshIndexes()` / the SQL write option `refresh=true` honor the
     * drop instead of silently rebuilding in full, and [[warnIfStale]]
     * stays quiet on a deliberately index-less collection. */
-  def dropIndex(): Boolean = dropFamily("index")
-
-  /** [[dropIndex]]'s shared body: delete ALL builds of `family` (any
-    * version, committed or claimed) plus its `_graft_has_<family>`
-    * marker. Returns whether any build existed. */
-  private def dropFamily(family: String): Boolean = {
-    val builds = io.list(dir).filter { e =>
-      e.isDir && e.name.startsWith(s"${family}_v")
-    }.map(_.path)
-    builds.foreach(io.deleteRecursively)
-    val marker = new Path(dir, s"_graft_has_$family")
-    if (io.exists(marker)) io.deleteRecursively(marker)
-    builds.nonEmpty
-  }
+  def dropIndex(): Boolean = ivfFamily.drop()
 
   // ---- where_document postings index (SURVEY §2.B B8's scale path) ----
   //
@@ -2412,23 +2440,20 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   // [[graft.operators.DocIndex]] (trigram postings; index answers are
   // superset-prefilter + verbatim re-check, bit-identical to the scan).
 
-  private def currentDocIndex(m: CollectionMeta): Option[Path] =
-    currentFamilyBuild("docindex", m)
-
-  def hasDocIndex: Boolean = currentDocIndex(meta).isDefined
+  def hasDocIndex: Boolean = docFamily.current(meta).isDefined
 
   /** Build the `where_document` postings index over the current version.
     * Postings are sliced by the store's own id bucket (`gp=<g>/pb=<b>`)
     * so later [[refreshDocIndex]] calls can carry unchanged slices
     * forward instead of re-deriving the whole corpus. */
-  def buildDocIndex(): Unit = buildPostingsFamily("docindex", DocIndex.writeWithPb)
+  def buildDocIndex(): Unit = buildPostingsFamily(docFamily, DocIndex.writeWithPb)
 
   /** Shared build for the document-derived postings families ("docindex"
     * trigram postings, "kwindex" keyword stats): one claim/write/commit
     * discipline, the family's writer plugged in — a protocol fix lands
     * once. The writer receives ((id, document, pt) frame, idCol, docCol,
     * pbCol, path, maxRowsPerFile) — both writers share that signature. */
-  private def buildPostingsFamily(family: String,
+  private def buildPostingsFamily(family: Family,
       writer: (DataFrame, String, String, Column, String, Long) => Unit,
       stamp: Option[(String, String)] = None): Unit = {
     val m = meta
@@ -2437,7 +2462,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val data = currentWithPtOf(m)
     require(data.columns.contains("document"),
       s"collection '${m.name}' carries no document column — nothing to index")
-    val claimed = claimFamilyBuild(family, m.version)
+    val claimed = family.claim(m.version)
     writer(data.select(col("id"), col("document"), col("pt")),
       "id", "document", col("pt"), claimed.toString, maxRowsPerFile)
     // family-specific build identity (e.g. the keyword analyzer stamp),
@@ -2445,25 +2470,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     stamp.foreach { case (f, v) =>
       io.writeBytes(new Path(claimed, f), v.getBytes(StandardCharsets.UTF_8)) }
     io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
-    recordFamily(family)
+    family.record()
   }
-
-  /** Durable "this family was built once" marker (`_graft_has_<family>`,
-    * a flat file outside the versioned build dirs): the owner's sizing
-    * decision survives even when [[vacuum]] reclaims every superseded
-    * BUILD (an overwrite makes all builds version-stale, and an
-    * overwrite+vacuum without refresh used to leave [[refreshIndexes]]
-    * with nothing to detect the family by — refresh=true on the NEXT
-    * write silently no-opped and the collection was stranded index-less
-    * with no SQL-surface recovery). Written at every build commit;
-    * self-healed by [[refreshIndexes]] for pre-marker collections. */
-  private def recordFamily(family: String): Unit = {
-    val p = new Path(dir, s"_graft_has_$family")
-    if (!io.exists(p)) io.writeBytes(p, Array.emptyByteArray)
-  }
-
-  private def familyMarker(family: String): Boolean =
-    io.exists(new Path(dir, s"_graft_has_$family"))
 
   /** Shared incremental refresh for the postings families (see
     * [[buildPostingsFamily]]): postings (and, for the keyword family, the
@@ -2471,24 +2479,24 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * `<axis>=<a>/pb=<b>` slice carries from the last committed build by
     * manifest. Returns buckets rebuilt; full rebuild without a usable
     * prior build. */
-  private def refreshPostingsFamily(family: String, axis: String,
+  private def refreshPostingsFamily(family: Family,
       writer: (DataFrame, String, String, Column, String, Long) => Unit,
       stamp: Option[(String, String)] = None,
       priorUsable: Path => Boolean = _ => true): Int = {
     val m = meta
     require(currentDataOf(m).nonEmpty,
       s"collection '${m.name}' is empty — nothing to index")
-    val refreshed = newestCommittedBuild(s"${family}_v") match {
+    val refreshed = family.newestCommitted match {
       // `priorUsable` gates BOTH reuse paths: a build whose identity
       // stamp disagrees with the collection's current setting (the
       // keyword analyzer was re-pointed) must not satisfy the refresh —
       // and must never donate carried slices — or index ≡ scan breaks
       case Some(old) if indexVersionOf(old) == m.version && priorUsable(old) =>
         0 // a committed build already serves this version
-      case Some(old) if priorUsable(old) && hasPbSlices(old, axis) &&
+      case Some(old) if priorUsable(old) && family.hasPbSlices(old) &&
           io.exists(dataDir(indexVersionOf(old))) =>
         val changed = changedBucketsBetween(indexVersionOf(old), m.version)
-        val claimed = claimFamilyBuild(family, m.version)
+        val claimed = family.claim(m.version)
         if (changed.nonEmpty)
           writer(
             currentWithPtOf(m).filter(col("pt").isin(changed.toSeq: _*))
@@ -2508,9 +2516,6 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     if (refreshed > 0) maybeAutoCompactIndexes()
     refreshed
   }
-
-  private def claimDocIndexBuild(version: Int): Path =
-    claimFamilyBuild("docindex", version)
 
   /** Version number encoded in an index build dir name
     * (`docindex_v<V>[.b<B>]` / `index_v<V>[.b<B>]`). */
@@ -2533,15 +2538,6 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         else Set.empty[String]
       part.stripPrefix("pt=").toInt -> (owner.getName -> files)
     }
-
-  /** Whether `build` uses the two-level refreshable layout: its first-
-    * axis dirs (`gp=`/`cell=` per `prefix`) hold `pb=` slices — locally,
-    * or via carry-manifest entries (a refresh that rewrote nothing has
-    * ONLY carried slices). */
-  private def hasPbSlices(build: Path, prefix: String): Boolean =
-    io.list(build).find(e => e.isDir && e.name.startsWith(prefix)).exists(g =>
-      io.list(g.path).exists(e => e.isDir && e.name.startsWith("pb="))) ||
-      Carry.read(io, build).keys.exists(k => k.startsWith(prefix) && k.contains("/pb="))
 
   /** Incrementally refresh the postings index to the CURRENT version:
     * rebuild postings ONLY for the id buckets whose data changed since
@@ -2566,12 +2562,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * readers adopt only marker-complete builds of the current version.
     */
   def refreshDocIndex(): Int =
-    refreshPostingsFamily("docindex", "gp=", DocIndex.writeWithPb)
+    refreshPostingsFamily(docFamily, DocIndex.writeWithPb)
 
   /** Drop the postings index — every build plus the durable family
     * marker (the [[dropIndex]] contract: a drop must not be undone by
     * `refreshIndexes()`). */
-  def dropDocIndex(): Boolean = dropFamily("docindex")
+  def dropDocIndex(): Boolean = docFamily.drop()
 
   /** Confine `df` to the postings index's candidate ids when a committed
     * index matches snapshot `m` and `whereDoc` is gram-confinable; no-op
@@ -2584,10 +2580,10 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     (for {
       wd <- whereDoc
       sets <- DocIndex.gramSets(wd)
-    } yield currentDocIndex(m) match {
+    } yield docFamily.current(m) match {
       case Some(idx) => df.join(
         DocIndex.candidates(readIndexBuild(idx), sets), Seq("id"), "left_semi")
-      case None => warnIfStale("docindex", m); df
+      case None => warnIfStale(docFamily, m); df
     }).getOrElse(df)
 
   // ---- keyword-statistics (BM25) sidecar — hybrid retrieval's scale path ----
@@ -2600,10 +2596,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   // postings carrying tf/dl + per-bucket stats rows; served scores are
   // bit-identical to the Retrieval.bm25 scan by the shared-fold contract).
 
-  private def currentKwIndex(m: CollectionMeta): Option[Path] =
-    currentFamilyBuild("kwindex", m)
-
-  def hasKeywordIndex: Boolean = currentKwIndex(meta).isDefined
+  def hasKeywordIndex: Boolean = kwFamily.current(meta).isDefined
 
   /** The collection's keyword ANALYZER setting ([[Collection.AnalyzerKey]]
     * metadata; absent = "whitespace") — the ONE tokenization rule the
@@ -2645,12 +2638,9 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * unchanged slices forward instead of re-deriving the whole corpus. */
   def buildKeywordIndex(): Unit = {
     val a = analyzerOf(meta)
-    buildPostingsFamily("kwindex", kwWriter(a),
+    buildPostingsFamily(kwFamily, kwWriter(a),
       stamp = Some((KeywordIndex.AnalyzerStamp, a)))
   }
-
-  private def claimKwIndexBuild(version: Int): Path =
-    claimFamilyBuild("kwindex", version)
 
   /** Incrementally refresh the keyword sidecar to the CURRENT version —
     * the [[refreshDocIndex]] contract over the `tp=`/`pb=` layout:
@@ -2665,7 +2655,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * slices tokenize under a retired rule and must not be carried). */
   def refreshKeywordIndex(): Int = {
     val a = analyzerOf(meta)
-    refreshPostingsFamily("kwindex", "tp=", kwWriter(a),
+    refreshPostingsFamily(kwFamily, kwWriter(a),
       stamp = Some((KeywordIndex.AnalyzerStamp, a)),
       priorUsable = b => kwAnalyzerOf(b) == a)
   }
@@ -2673,7 +2663,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   /** Drop the keyword sidecar — every build plus the durable family
     * marker (the [[dropIndex]] contract: a drop must not be undone by
     * `refreshIndexes()`). */
-  def dropKeywordIndex(): Boolean = dropFamily("kwindex")
+  def dropKeywordIndex(): Boolean = kwFamily.drop()
 
   /** The committed keyword build SERVABLE under snapshot `m`: current
     * version AND analyzer stamp = the collection's current setting. A
@@ -2681,7 +2671,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * way a version-stale one is — both fall back to the (analyzer-
     * correct) scan, loudly, until a refresh rebuilds. */
   private def servableKwIndex(m: CollectionMeta, a: String): Option[Path] =
-    currentKwIndex(m) match {
+    kwFamily.current(m) match {
       case Some(idx) if kwAnalyzerOf(idx) == a => Some(idx)
       case Some(idx) =>
         // memoized like warnIfStale: the mismatch holds until a refresh
@@ -2694,7 +2684,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
             s"set to '$a' — serving the O(corpus) scan path; run " +
             "refreshKeywordIndex() to rebuild")
         None
-      case None => warnIfStale("kwindex", m); None
+      case None => warnIfStale(kwFamily, m); None
     }
 
   /** Caller-provided terms normalized by the collection's analyzer
@@ -2991,7 +2981,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * is USER data and must survive the read (indexableMeta rejects the
     * name for every new build, so the ambiguity cannot recur). */
   private def indexLayoutCols(build: Path): Seq[String] =
-    if (hasPbSlices(build, "cell=")) Seq("cell", "pb") else Seq("cell")
+    if (ivfFamily.hasPbSlices(build)) Seq("cell", "pb") else Seq("cell")
 
   /** B6 query: top-k nearest neighbors with optional prefilters. When a
     * committed index matches the current version, the scan prunes to the
@@ -3478,7 +3468,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val m = meta
     var n = 0
     currentIndex(m).foreach { case (old, cents) =>
-      val claimed = claimIndexBuild(m.version)
+      val claimed = ivfFamily.claim(m.version)
       val assigned0 = readIndexBuild(old)
       val withPb = keepRefreshAxis && assigned0.columns.contains("pb")
       val assigned = if (withPb) assigned0 else assigned0.drop("pb")
@@ -3492,28 +3482,17 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
       n += 1
     }
-    currentDocIndex(m).foreach { old =>
-      val claimed = claimDocIndexBuild(m.version)
+    for (f <- postingsFamilies; old <- f.current(m)) {
+      val claimed = f.claim(m.version)
       val postings0 = readIndexBuild(old)
       val withPb = keepRefreshAxis && postings0.columns.contains("pb")
+      // dropping the pb axis merges the keyword family's per-bucket
+      // STATS rows' slices too — they keep their reserved tp partition,
+      // and queries sum them regardless of slicing, so corpus totals are
+      // unchanged
       val postings = if (withPb) postings0 else postings0.drop("pb")
-      val parts = if (withPb) Seq("gp", "pb") else Seq("gp")
-      postings.repartition(col("gp")).write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRowsPerFile)
-        .partitionBy(parts: _*).parquet(claimed.toString)
-      io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
-      n += 1
-    }
-    currentKwIndex(m).foreach { old =>
-      val claimed = claimKwIndexBuild(m.version)
-      val postings0 = readIndexBuild(old)
-      val withPb = keepRefreshAxis && postings0.columns.contains("pb")
-      // dropping the pb axis merges the per-bucket STATS rows' slices
-      // too — they keep their reserved tp partition, and queries sum
-      // them regardless of slicing, so corpus totals are unchanged
-      val postings = if (withPb) postings0 else postings0.drop("pb")
-      val parts = if (withPb) Seq("tp", "pb") else Seq("tp")
-      postings.repartition(col("tp")).write.mode("overwrite")
+      val parts = if (withPb) Seq(f.axis, "pb") else Seq(f.axis)
+      postings.repartition(col(f.axis)).write.mode("overwrite")
         .option("maxRecordsPerFile", maxRowsPerFile)
         .partitionBy(parts: _*).parquet(claimed.toString)
       io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
@@ -3536,19 +3515,11 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val cutoff = current - keepHistory
     def versionOf(p: Path): Int =
       p.getName.dropWhile(!_.isDigit).takeWhile(_.isDigit).toInt
-    // both index KINDS (IVF `index_v`, postings `docindex_v`) follow the
-    // same build discipline and are vacuumed alike; live-build tracking is
-    // keyed (kind, version) so the kinds never shadow each other.
-    // ORDER MATTERS in kindOf: "docindex_v" would also prefix-match a
-    // startsWith("index_v")==false, but keep the longer prefix first
-    // anyway so the intent is explicit.
-    def kindOf(p: Path): Option[String] = {
-      val n = p.getName
-      if (n.startsWith("docindex_v")) Some("docindex")
-      else if (n.startsWith("kwindex_v")) Some("kwindex")
-      else if (n.startsWith("index_v")) Some("index")
-      else None
-    }
+    // every index family follows the same build discipline and is
+    // vacuumed alike; live-build tracking is keyed (family, version) so
+    // the families never shadow each other
+    def kindOf(p: Path): Option[String] =
+      families.find(_.owns(p.getName)).map(_.name)
     val versioned = io.list(dir)
       .filter(e => e.isDir && (e.name.startsWith("data_v") || kindOf(e.path).isDefined))
       .map(_.path)

@@ -335,15 +335,11 @@ object Dedup {
     // change the min — one shuffle saved per build.
     val e = truncate(pairs.select(col(idACol).as("s"), col(idBCol).as("t"))
       .union(pairs.select(col(idBCol).as("s"), col(idACol).as("t"))))
-    val fuse = !sys.env.get("SPARK_GRAFT_CC_FUSE").contains("0")
     // the seed derives from the already-checkpointed edge list by one
     // distinct — folding it into round 1's job saves the eager
     // materialization job a per-seed truncate() would run (the round-1
     // checkpoint truncates its lineage anyway)
-    var labels =
-      if (fuse) e.select(col("s").as("id")).distinct().withColumn("lbl", col("id"))
-      else truncate(e.select(col("s").as("id")).distinct()
-        .withColumn("lbl", col("id")))
+    var labels = e.select(col("s").as("id")).distinct().withColumn("lbl", col("id"))
     var iter = 0
     var changed = 1L
     // only read on non-convergence AFTER at least one round (maxIter<=0
@@ -363,31 +359,23 @@ object Dedup {
       // means a genuinely long chain is present, and from there the jump
       // turns the remaining O(diameter) rounds into O(log diameter):
       // dense graphs never pay for it, chains cannot exhaust maxIter.
-      val prop = if (fuse) {
-        // FUSED round (one join + ONE aggregate): the id's own label row
-        // unions the gathered neighbor labels, so min(cand) over the
-        // group IS least(lbl, min neighbor) — including the no-neighbor
-        // case (the self row alone) — and max over the single
-        // self-tagged row re-attaches the previous label, replacing the
-        // old re-attach join (labels ⋈ nbrMin) that shuffled `labels` a
-        // second time every round. Exactly equivalent: min over
-        // {lbl} ∪ {neighbor labels} = least(lbl, coalesce(nmin, lbl)).
-        val gathered = e
-          .join(lbls.select(col("id").as("t"), col("lbl").as("cand")), Seq("t"))
-          .select(col("s").as("id"), col("cand"), lit(false).as("self"))
-        val selfRows = lbls.select(col("id"), col("lbl").as("cand"), lit(true).as("self"))
-        gathered.unionByName(selfRows)
-          .groupBy("id")
-          .agg(max(when(col("self"), col("cand"))).as("lbl"),
-            min(col("cand")).as("plbl"))
-          .select(col("id"), col("lbl"), col("plbl"))
-      } else {
-        val nbrMin = e.join(lbls.select(col("id").as("t"), col("lbl").as("nlbl")), Seq("t"))
-          .groupBy(col("s").as("id")).agg(min(col("nlbl")).as("nmin"))
-        lbls.join(nbrMin, Seq("id"), "left")
-          .select(col("id"), col("lbl"),
-            least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("plbl"))
-      }
+      //
+      // FUSED round (one join + ONE aggregate): the id's own label row
+      // unions the gathered neighbor labels, so min(cand) over the group
+      // IS least(lbl, min neighbor) — including the no-neighbor case (the
+      // self row alone) — and max over the single self-tagged row
+      // re-attaches the previous label without a second join that would
+      // shuffle `labels` again every round. Exactly equivalent: min over
+      // {lbl} ∪ {neighbor labels} = least(lbl, coalesce(nmin, lbl)).
+      val gathered = e
+        .join(lbls.select(col("id").as("t"), col("lbl").as("cand")), Seq("t"))
+        .select(col("s").as("id"), col("cand"), lit(false).as("self"))
+      val selfRows = lbls.select(col("id"), col("lbl").as("cand"), lit(true).as("self"))
+      val prop = gathered.unionByName(selfRows)
+        .groupBy("id")
+        .agg(max(when(col("self"), col("cand"))).as("lbl"),
+          min(col("cand")).as("plbl"))
+        .select(col("id"), col("lbl"), col("plbl"))
       val stepped =
         if (stepIdx < 8) prop.select(col("id"), col("lbl"), col("plbl").as("nlbl"))
         else prop
@@ -406,7 +394,7 @@ object Dedup {
         case other => throw new IllegalStateException(
           s"convergence metric missing or mistyped: $other")
       }
-    // TWO steps per materialized job (SPARK_GRAFT_CC_PAIR=0 restores one):
+    // TWO steps per materialized job:
     // each job pays a checkpoint write of the label table plus per-job
     // scheduling; composing two exact propagation steps into one plan
     // halves both — same joins, half the barriers — and stays exact
@@ -416,11 +404,9 @@ object Dedup {
     // the LAST step's count, identical to stepping singly (a job whose
     // first step already converged runs one identity second step —
     // harmless, and only possible in the job that detects convergence).
-    val pairSteps = !sys.env.get("SPARK_GRAFT_CC_PAIR").contains("0")
-    val ccDebug = sys.env.get("SPARK_GRAFT_CC_DEBUG").contains("1")
+    // An odd maxIter ends on a single-step job.
     while (changed > 0 && iter < maxIter) {
-      val t0 = if (ccDebug) System.nanoTime() else 0L
-      val nSteps = if (pairSteps) math.min(2, maxIter - iter) else 1
+      val nSteps = math.min(2, maxIter - iter)
       val obs1 = org.apache.spark.sql.Observation()
       val s1 = step(labels, iter, obs1)
       val (stepped, lastObs) =
@@ -437,8 +423,6 @@ object Dedup {
       labels = next.select(col("id"), col("nlbl").as("lbl"))
       lastStep = next
       iter += nSteps
-      if (ccDebug) System.err.println(
-        f"[ccdebug] steps=$iter%3d job=${(System.nanoTime() - t0) / 1e9}%.3f s changed=$changed")
     }
     if (changed != 0) {
       // degenerate budget: no round ever ran, so the pre-seeded sentinel

@@ -27,7 +27,7 @@ import graft.expressions.TokenSpreadHashes
   *
   * 100 TB shape: the SEED SET is small by definition (labels are the
   * expensive artifact), so training materializes only the labeled
-  * slice's (id, y, bucket, count) rows — cached, one aggregate job per
+  * slice's (y, bucket occurrences) rows — cached, one aggregate job per
   * epoch, weights (dim+1 longs) held driver-side (a bounded collect of
   * the model, like the PQ codebooks). Corpus scoring is ONE map-only
   * pass: the weight vector rides into the plan as an array literal and
@@ -50,90 +50,54 @@ object QualityClassifier {
     * map-only margin fold plus one dim+1-row aggregate — no per-epoch
     * shuffle of the seed slice.
     *
-    * Equivalence to the grouped (id, y, bucket, count) form this replaces:
+    * Equivalence to the grouped (id, y, bucket, count) update rule:
     * the margin Σ_b c_b·w_b IS Σ over occurrences w_b, and the gradient
     * Σ_{misclassified docs} y·c_b IS sum(y) over those docs' occurrences
     * grouped by bucket — every intermediate is a BIGINT, integer addition
     * is order-free, so the weights are bit-identical (pinned in
-    * QualityClassifierSpec). The old form additionally shuffled the seed
-    * slice TWICE per epoch (groupBy doc for the margin, groupBy bucket for
+    * QualityClassifierSpec). The grouped form shuffles the seed slice
+    * TWICE per epoch (groupBy doc for the margin, groupBy bucket for
     * the gradient); this shape shuffles only the dim+1 partial-aggregated
     * gradient rows. Trade: the cache holds one int per token occurrence
     * instead of ≤dim+1 counted pairs per doc — the same order as the seed
     * text itself, which is small by definition (labels are the expensive
-    * artifact). `SPARK_GRAFT_CLF_FLAT=0` restores the grouped form (A/B). */
+    * artifact). */
   def trainPerceptron(labeled: DataFrame, idCol: String, textCol: String,
                       labelCol: String, dim: Int = 64,
                       epochs: Int = 3): Array[Long] = {
     require(dim > 0 && epochs >= 1, s"need dim > 0, epochs >= 1; got $dim, $epochs")
-    val feat = featuresOf(labeled, idCol, textCol, labelCol, dim).cache()
+    val feat = featuresOf(labeled, textCol, labelCol, dim).cache()
     try {
       val w = Array.fill(dim + 1)(0L)
       for (_ <- 0 until epochs) {
-        val grad = gradientOf(feat, w, dim).collect()
+        val grad = gradientOf(feat, w).collect()
         grad.foreach(r => w(r.getInt(0)) += r.getLong(1))
       }
       w
     } finally { feat.unpersist(); () }
   }
 
-  private def flatMode: Boolean =
-    !sys.env.get("SPARK_GRAFT_CLF_FLAT").contains("0")
-
-  /** The cached per-epoch input. Flat mode (default): (y, [bucket
-    * occurrences..., bias]) — one row per doc, MAP-ONLY build. Grouped
-    * mode (`SPARK_GRAFT_CLF_FLAT=0`, the pre-r17 form): exploded
-    * (id, y, b, c) counted rows — one shuffle to build, and each epoch
-    * pays a groupBy-doc shuffle to reassemble the margin. */
-  private def featuresOf(labeled: DataFrame, idCol: String, textCol: String,
+  /** The cached per-epoch input: (y, [bucket occurrences..., bias]) —
+    * one row per doc, a MAP-ONLY build. */
+  private def featuresOf(labeled: DataFrame, textCol: String,
                          labelCol: String, dim: Int): DataFrame = {
     val y = when(col(labelCol), 1L).otherwise(-1L)
-    if (flatMode)
-      labeled.select(y.as("__y"),
-        concat(bucketsOf(col(textCol), dim), array(lit(dim))).as("__bs"))
-    else
-      labeled
-        .select(col(idCol).as("__id"), y.as("__y"),
-          explode(concat(bucketsOf(col(textCol), dim), array(lit(dim)))).as("__b"))
-        .groupBy("__id", "__y", "__b").agg(count(lit(1)).as("__c"))
+    labeled.select(y.as("__y"),
+      concat(bucketsOf(col(textCol), dim), array(lit(dim))).as("__bs"))
   }
 
   /** One epoch's gradient frame under weights `w`: (bucket, Σ y·c) over
-    * the misclassified docs, dim+1 rows. Flat mode computes each doc's
-    * margin as a per-row fold over its occurrence array (the same shape
-    * score() uses) — no shuffle until the final dim+1-row aggregate;
-    * grouped mode reassembles docs with a groupBy first. */
-  private def gradientOf(feat: DataFrame, w: Array[Long], dim: Int): DataFrame = {
+    * the misclassified docs, dim+1 rows. Each doc's margin is a per-row
+    * fold over its occurrence array (the same shape score() uses) — no
+    * shuffle until the final dim+1-row aggregate. */
+  private def gradientOf(feat: DataFrame, w: Array[Long]): DataFrame = {
     val wlit = array(w.map(lit(_)): _*)
-    if (flatMode)
-      feat
-        .withColumn("__m", aggregate(col("__bs"), lit(0L),
-          (acc, b) => acc + element_at(wlit, b + 1)))
-        .filter(col("__y") * col("__m") <= 0)
-        .select(col("__y"), explode(col("__bs")).as("__b"))
-        .groupBy("__b").agg(sum(col("__y")).as("__g"))
-    else
-      feat
-        .withColumn("__w", element_at(wlit, col("__b") + 1))
-        .withColumn("__p", col("__c") * col("__w"))
-        .groupBy("__id", "__y").agg(sum(col("__p")).as("__m"),
-          collect_list(struct(col("__b"), col("__c"))).as("__f"))
-        .filter(col("__y") * col("__m") <= 0)
-        .select(col("__y"), explode(col("__f")).as("__bc"))
-        .groupBy(col("__bc.__b").as("__b"))
-        .agg(sum(col("__y") * col("__bc.__c")).as("__g"))
-  }
-
-  /** Dev-only (Probe clfshape): the epoch-1 gradient plan under the
-    * active SPARK_GRAFT_CLF_FLAT mode — the plan-artifact evidence for
-    * the flat-trainer restructure. */
-  private[graft] def epochGradientPlan(labeled: DataFrame, idCol: String,
-                                       textCol: String, labelCol: String,
-                                       dim: Int): String = {
-    val feat = featuresOf(labeled, idCol, textCol, labelCol, dim)
-    gradientOf(feat, Array.fill(dim + 1)(0L), dim)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    feat
+      .withColumn("__m", aggregate(col("__bs"), lit(0L),
+        (acc, b) => acc + element_at(wlit, b + 1)))
+      .filter(col("__y") * col("__m") <= 0)
+      .select(col("__y"), explode(col("__bs")).as("__b"))
+      .groupBy("__b").agg(sum(col("__y")).as("__g"))
   }
 
   /** Score `docs` with trained weights: one map-only pass, the weight

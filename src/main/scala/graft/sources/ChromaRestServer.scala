@@ -53,10 +53,18 @@ import graft.operators.ChromaFilter.JsonMini
   * these.
   */
 final class ChromaRestServer private (server: HttpServer,
+                                      handlers: java.util.concurrent.ExecutorService,
                                       val generation: String) {
   def port: Int = server.getAddress.getPort
   def baseUrl: String = s"http://127.0.0.1:$port"
-  def stop(): Unit = server.stop(0)
+
+  /** Stop accepting requests and end the handler threads: they are
+    * non-daemon, so a live pool would keep the JVM from exiting. */
+  def stop(): Unit = {
+    server.stop(0)
+    handlers.shutdownNow()
+    handlers.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+  }
 }
 
 object ChromaRestServer {
@@ -69,10 +77,17 @@ object ChromaRestServer {
       s"generation must be v1 or v2, got '$generation'")
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(cat, generation, ex))
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    val threadPrefix = handlerThreadPrefix(server.getAddress.getPort)
+    val seq = new java.util.concurrent.atomic.AtomicInteger(0)
+    val handlers = java.util.concurrent.Executors.newFixedThreadPool(4,
+      (r: Runnable) => new Thread(r, threadPrefix + seq.incrementAndGet()))
+    server.setExecutor(handlers)
     server.start()
-    new ChromaRestServer(server, generation)
+    new ChromaRestServer(server, handlers, generation)
   }
+
+  /** Name prefix of the handler threads of the server on `port`. */
+  private[graft] def handlerThreadPrefix(port: Int): String = s"chroma-rest-$port-"
 
   /** Stable collection id the routes address records by. A real Chroma
     * mints UUIDs; the engine's collections are name-keyed, so the id is

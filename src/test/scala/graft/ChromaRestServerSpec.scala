@@ -72,6 +72,24 @@ class ChromaRestServerSpec extends SparkTestBase {
     }
   }
 
+  test("stop() ends every handler thread, so a serving JVM can exit") {
+    import scala.jdk.CollectionConverters._
+    val cat = freshCat("restsrv-stop")
+    hydrated(cat)
+    val srv = ChromaRestServer.serve(cat)
+    val prefix = ChromaRestServer.handlerThreadPrefix(srv.port)
+    def handlerThreads() =
+      Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith(prefix))
+    try {
+      // several page requests: the fixed pool starts a thread per request
+      // until all 4 exist
+      assert(ChromaRestSource.read(spark, srv.baseUrl, "served", pageSize = 7).count() == 40)
+      assert(handlerThreads().nonEmpty, s"no live thread named $prefix* while serving")
+    } finally srv.stop()
+    assert(handlerThreads().isEmpty,
+      s"handler threads alive after stop(): ${handlerThreads().map(_.getName)}")
+  }
+
   test("loopback v1 generation: negotiation downgrades off the heartbeat 404 and serves") {
     val cat = freshCat("restsrv-v1")
     hydrated(cat)

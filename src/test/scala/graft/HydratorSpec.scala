@@ -188,6 +188,31 @@ class HydratorSpec extends SparkTestBase {
     assert(coll.count() == 4)
   }
 
+  test("upsert without orderCol on a hydrated collection: MAP metadata hashes, same winner under any layout") {
+    // within-batch duplicate ids; the variants differ only in row order,
+    // partitioning and map insertion order
+    val rows = Seq(
+      ("1", "rewrite a", Seq(1f, 0f, 0f), Seq("rating" -> "1.0")),
+      ("1", "rewrite b", Seq(0f, 1f, 0f), Seq("rating" -> "2.0")),
+      ("1", "rewrite c", Seq(0f, 0f, 1f), Seq("rating" -> "3.0", "src" -> "cdc")),
+      ("4", "new d", Seq(1f, 1f, 0f), Seq("rating" -> "4.0")),
+      ("4", "new e", Seq(0f, 1f, 1f), Seq("src" -> "cdc", "rating" -> "5.0")))
+    def upserted(batch: Seq[(String, String, Seq[Float], Seq[(String, String)])],
+                 parts: Int): Seq[org.apache.spark.sql.Row] = {
+      val coll = Hydrator.run(spark, cfg(tmpRoot())).get
+      assert(coll.toDF.schema("metadata").dataType.isInstanceOf[org.apache.spark.sql.types.MapType])
+      coll.upsert(batch.map { case (i, d, e, m) => (i, d, e, m.toMap) }
+        .toDF("id", "document", "embedding", "metadata").repartition(parts))
+      assert(coll.count() == 4)
+      coll.get(ids = Seq("1", "4")).select("id", "document", "embedding", "metadata")
+        .orderBy("id").collect().toSeq
+    }
+    val a = upserted(rows, 1)
+    val b = upserted(rows.reverse.map { case (i, d, e, m) => (i, d, e, m.reverse) }, 3)
+    assert(a == b)
+    assert(a.map(_.getString(0)) == Seq("1", "4"))
+  }
+
   test("delta classifies insert/update/skip null-safely") {
     val cur = Seq(("1", "a", "en"), ("2", "b", null), ("3", "c", "de"))
       .toDF("id", "document", "lang")

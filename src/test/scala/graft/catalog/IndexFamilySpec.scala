@@ -1,0 +1,83 @@
+package graft.catalog
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions._
+
+import graft.operators.{ChromaFilter, Retrieval}
+
+/** All three sidecar index families (IVF `index`, trigram `docindex`,
+  * keyword `kwindex`) on ONE collection, driven through the calls that
+  * dispatch over every family at once: refreshIndexes, compactIndexes,
+  * vacuum, and a drop that refreshIndexes must honor. */
+class IndexFamilySpec extends graft.SparkTestBase {
+  import spark.implicits._
+
+  private val io: StoreIO = new StoreIO.Local
+  private val families = Seq("index", "docindex", "kwindex")
+
+  private def rows(ids: Range) = ids.map { i =>
+    (s"id$i", s"doc $i ${if (i % 3 == 0) "brown fox" else "lazy dog"} w${i % 5}",
+      Seq(i.toFloat, (i % 4).toFloat))
+  }.toDF("id", "document", "embedding")
+
+  /** Build dir names per family. */
+  private def builds(coll: Path): Map[String, Set[String]] = {
+    val names = io.list(coll).filter(_.isDir).map(_.name)
+    families.map(f => f -> names.filter(_.startsWith(s"${f}_v")).toSet).toMap
+  }
+
+  private def assertReadsMatchScans(c: Collection): Unit = {
+    val q = Seq(7f, 3f)
+    assert(c.query(q, k = 5, nprobe = 2).select("id", "dist").collect().toSeq ==
+      c.query(q, k = 5, exact = true).select("id", "dist").collect().toSeq)
+    assert(c.get(whereDoc = Some(ChromaFilter.Contains("brown fox")))
+      .select("id").as[String].collect().toSet ==
+      c.toDF.filter(col("document").contains("brown fox")).select("id").as[String].collect().toSet)
+    val terms = Seq("brown", "w2", "dog")
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSeq
+    assert(ranked(c.keywordTopK(terms, 6)) ==
+      ranked(Retrieval.bm25TopK(c.toDF, "id", "document", terms, 6)))
+  }
+
+  test("refreshIndexes, compactIndexes and vacuum dispatch over all three families") {
+    val root = tmpDir("family-test")
+    val cat = new CollectionCatalog(spark, root, numBuckets = 4)
+    val c = cat.getOrCreateCollection("c", metadata = Map("ivf:nlist" -> "2"))
+    val coll = new Path(root, "c")
+    c.add(rows(0 until 24))
+    c.buildIndex(nlist = 2)
+    c.buildDocIndex()
+    c.buildKeywordIndex()
+    assert(c.hasIndex && c.hasDocIndex && c.hasKeywordIndex)
+
+    // one id → exactly one id bucket changes
+    c.upsert(Seq(("id4", "rewritten brown fox w2", Seq(7f, 3f)))
+      .toDF("id", "document", "embedding"))
+    assert(c.refreshIndexes() == families.map(_ -> 1).toMap)
+    assertReadsMatchScans(c)
+
+    val beforeCompact = builds(coll)
+    assert(c.compactIndexes() == 3)
+    val compacted = builds(coll).map { case (f, bs) => f -> (bs -- beforeCompact(f)) }
+    families.foreach(f => assert(compacted(f).size == 1, s"$f: $compacted"))
+
+    c.vacuum()
+    val after = builds(coll)
+    families.foreach { f =>
+      assert(after(f) == compacted(f),
+        s"$f: vacuum must reclaim every superseded build, left ${after(f)}")
+      assert(beforeCompact(f).forall(b => !after(f).contains(b)))
+    }
+    assertReadsMatchScans(c)
+
+    // a drop of one family is not undone by the multi-family refresh
+    assert(c.dropDocIndex())
+    c.upsert(Seq(("id9", "another brown fox w1", Seq(2f, 2f)))
+      .toDF("id", "document", "embedding"))
+    assert(c.refreshIndexes().keySet == Set("index", "kwindex"))
+    assert(!c.hasDocIndex && c.hasIndex && c.hasKeywordIndex)
+    assert(builds(coll)("docindex").isEmpty)
+    assertReadsMatchScans(c)
+  }
+}
