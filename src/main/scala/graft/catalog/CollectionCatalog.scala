@@ -33,9 +33,6 @@ import graft.operators.{Ann, ChromaFilter, DocIndex, Embedder, EmbeddingFunction
 private[graft] object Carry {
   val ManifestName = "_graft_carry.json"
 
-  /** Record `entries` (partition dir name → physical owner dir name, a
-    * sibling under the same collection dir) for `vdir`. Nothing carried →
-    * no manifest file (the marker of the plain-read fast path). */
   /** Keys are partition dir paths (`pt=<n>`, `cell=<c>/pb=<b>`, ...);
     * values are sibling dir names (`data_v000003`, `index_v000001.b002`).
     * The hand-rolled JSON below does NO string escaping and [[read]]
@@ -45,6 +42,9 @@ private[graft] object Carry {
     * loudly at write time instead of silently corrupting the manifest. */
   private val DirNameShape = "[A-Za-z0-9_.=/-]+".r
 
+  /** Record `entries` (partition dir name → physical owner dir name, a
+    * sibling under the same collection dir) for `vdir`. Nothing carried →
+    * no manifest file (the marker of the plain-read fast path). */
   def write(io: StoreIO, vdir: Path, entries: Map[String, String]): Unit =
     if (entries.nonEmpty) {
       entries.foreach { case (k, v) =>
@@ -266,18 +266,14 @@ final class CollectionCatalog(
     * dev/experiment copies of a production collection for the cost of a
     * directory walk. Chroma parity: chromadb's `collection.fork()`.
     *
-    * Committed sidecar INDEXES (IVF — plain or PQ-coded — and the
-    * trigram postings) travel with the snapshot, re-keyed to the fork's
-    * v1: assignment, codes, and postings are pure functions of the data
-    * CONTENT, which the fork's v1 shares bit-for-bit with the source's
-    * current version, so a resolved physical copy of the newest
-    * committed build serves identical answers. (Before r12 they were
-    * dropped as "rebuildable on demand" — false for a PQ build, whose
-    * seeded codebooks are derived from seed IDS the fork no longer
-    * knows; a forked PQ collection could only fail loudly.) Carry
-    * manifests cannot cross the collection boundary (the data walk's
-    * argument), so carried slices materialize physically. Lineage is
-    * recorded as `forked_from = <src>@v<N>` in the fork's metadata.
+    * Each index family's committed build of the forked version (IVF —
+    * plain or PQ-coded — trigram postings, keyword stats) travels too,
+    * re-keyed to the fork's v1 ([[Collection.copyBuildsForFork]]):
+    * assignment, codes and postings are pure functions of the data
+    * CONTENT, which the fork's v1 shares bit-for-bit, so the copy serves
+    * identical answers — and a seeded PQ build could not be rebuilt
+    * without its seed ids. Lineage is recorded as
+    * `forked_from = <src>@v<N>` in the fork's metadata.
     * Caveat (same as time travel): a concurrent writer+vacuum on the
     * source can reclaim the snapshot mid-walk; fork under that race
     * fails loudly on the missing file, never links half a version
@@ -328,53 +324,8 @@ final class CollectionCatalog(
       if (io.exists(sidecar))
         io.writeBytes(new Path(tmpDir, Collection.EmbedderSidecar),
           io.readBytes(sidecar))
-      // committed sidecar indexes, re-keyed to v1 (see scaladoc): the
-      // newest committed build of each family whose version == the
-      // forked snapshot's version — an older build would answer for
-      // stale content and must NOT carry
-      def newestCommitted(versionedPrefix: String): Option[Path] = {
-        def buildNo(p: Path): Int = {
-          val n = p.getName; val dot = n.indexOf(".b")
-          if (dot < 0) 0 else n.substring(dot + 2).toInt
-        }
-        io.list(srcDir).filter(e => e.isDir && (e.name == versionedPrefix ||
-            e.name.startsWith(versionedPrefix + ".b"))).map(_.path)
-          .filter(p => io.exists(new Path(p, "_graft_committed")))
-          .sortBy(buildNo).lastOption
-      }
-      def copyResolvedBuild(srcBuild: Path, dstName: String): Unit = {
-        val dstBuild = new Path(tmpDir, dstName)
-        io.mkdirs(dstBuild)
-        // two-level slices (cell|gp / pb), carry-manifest-resolved —
-        // physical copies, the manifest itself does not travel
-        Carry.slicedOwners(io, srcDir, srcBuild).foreach { case (slice, owner) =>
-          val fromD = new Path(owner, slice); val into = new Path(dstBuild, slice)
-          io.mkdirs(into)
-          io.list(fromD).filterNot(_.isDir).foreach(f =>
-            io.carryFile(f.path, new Path(into, f.name)))
-        }
-        // one-level slices (compactIndexes(keepRefreshAxis = false)
-        // drops the pb axis; such builds are manifest-free)
-        io.list(srcBuild).filter(e => e.isDir && e.name.contains("=")).foreach { axis =>
-          val files = io.list(axis.path).filterNot(_.isDir)
-          if (files.nonEmpty) {
-            val into = new Path(dstBuild, axis.name); io.mkdirs(into)
-            files.foreach(f => io.carryFile(f.path, new Path(into, f.name)))
-          }
-        }
-        // top-level sidecars (centroids, PQ codebooks + residual flag):
-        // everything but the carry manifest and the marker (written last)
-        io.list(srcBuild).filterNot(_.isDir)
-          .filterNot(e => e.name == "_graft_committed" || e.name == Carry.ManifestName)
-          .foreach(e => io.writeBytes(new Path(dstBuild, e.name), io.readBytes(e.path)))
-        io.writeBytes(new Path(dstBuild, "_graft_committed"), Array.emptyByteArray)
-      }
-      newestCommitted(f"index_v${src.version}%06d")
-        .foreach(copyResolvedBuild(_, "index_v000001.b000"))
-      newestCommitted(f"docindex_v${src.version}%06d")
-        .foreach(copyResolvedBuild(_, "docindex_v000001.b000"))
-      newestCommitted(f"kwindex_v${src.version}%06d")
-        .foreach(copyResolvedBuild(_, "kwindex_v000001.b000"))
+      // committed sidecar indexes, re-keyed to v1 (see scaladoc)
+      new Collection(spark, io, srcDir, maxRowsPerFile).copyBuildsForFork(src, tmpDir)
       io.writeBytes(CollectionMeta.commitMarker(tmpDir, 1), Array.emptyByteArray)
       CollectionMeta.atomicWrite(io, tmpDir, dst)
     }
@@ -524,11 +475,15 @@ object CollectionMeta {
   private[catalog] def claimVersionOf(name: String): Int =
     name.stripPrefix("meta.v").stripSuffix(".json").toInt
 
+  /** Completeness marker of a data version or an index build, written
+    * LAST: readers adopt only dirs that carry it. */
+  private[catalog] val CommittedName = "_graft_committed"
+
   /** `data_v<N>/_graft_committed`: written after ALL data work for the
     * version (parquet write + carry manifest) — `_SUCCESS` alone is not
     * enough, Spark writes it before the carry pass. */
   private[catalog] def commitMarker(dir: Path, version: Int): Path =
-    new Path(new Path(dir, f"data_v$version%06d"), "_graft_committed")
+    new Path(new Path(dir, f"data_v$version%06d"), CommittedName)
 
   /** Current meta = the `meta.json` pointer, unless a newer COMMITTED
     * claim exists (claim file + its version's completeness marker): a
@@ -689,7 +644,6 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val p = dataDir(m.version)
     if (io.exists(p)) Some(p) else None
   }
-  private def currentData: Option[Path] = currentDataOf(meta)
 
   /** Opt-in MUTATION-LOCALITY bucketing (`graft:pt_prefix_sep` collection
     * metadata, set at creation): when present, the pt hash covers only
@@ -765,16 +719,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     Carry.readResolved(spark, io, build, Carry.slicedOwners(io, dir, build))
 
   /** Current contents (empty frame with canonical schema if never written). */
-  def toDF: DataFrame = { val m = meta; currentDataOf(m) match {
-    case Some(_) => readVersion(m.version).drop("pt")
-    case None => spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.StringType, false),
-        org.apache.spark.sql.types.StructField("document", org.apache.spark.sql.types.StringType, true),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType), true))))
-  } }
+  def toDF: DataFrame = snapshotDF(meta)
 
   /** Current contents WITH the bucket column (internal merge path). */
   private def currentWithPtOf(m: CollectionMeta): DataFrame =
@@ -787,7 +732,13 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * version-N+1 data with version-N index artifacts. */
   private def snapshotDF(m: CollectionMeta): DataFrame = currentDataOf(m) match {
     case Some(_) => readVersion(m.version).drop("pt")
-    case None => toDF // canonical empty frame (meta re-read harmless: no data)
+    case None => spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.StringType, false),
+        org.apache.spark.sql.types.StructField("document", org.apache.spark.sql.types.StringType, true),
+        org.apache.spark.sql.types.StructField("embedding",
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType), true))))
   }
 
   /** Single-writer commit: the version-claim file move is the atomic CAS
@@ -844,34 +795,37 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   }
 
   /** Full rewrite into a fresh version (first write / fallback /
-    * compaction). `repack` routes every bucket to one task so the output
-    * is exactly one file chain per bucket — without it each read task
-    * emits a file per bucket it happens to hold (tasks x buckets files,
-    * the opposite of compaction). */
+    * compaction), repacked to one file chain per bucket (see below). */
   private def writeVersion(
-      df: DataFrame, expected: CollectionMeta, repack: Boolean = false,
-      beforeCommit: () => Unit = () => ()): Unit = {
+      df: DataFrame, expected: CollectionMeta,
+      beforeCommit: () => Unit = () => ()): Unit = commitNext(expected) { newDir =>
+    val b = bucketed(df)
+    // EVERY full write routes through the hash-by-pt exchange, not just
+    // compaction: a dynamic-partition write from W input partitions
+    // emits up to W x numBuckets files (each task starts a file per pt
+    // it holds) — a 32-wide embed pipeline feeding this store paid
+    // ~W x buckets tiny files per commit (measured: q121 1.9 -> 4.7 s
+    // when its input went 32-wide). The exchange moves one commit's
+    // batch (small by definition) and makes the layout CANONICAL — one
+    // file chain per bucket at every version, which every later pruned
+    // read pays for otherwise. Width cannot be probed here cheaply:
+    // calling .rdd on `df` would create a second plan reference, and
+    // these frames carry caller observe() nodes whose metrics must fire
+    // exactly once (the add/Hydrator single-reference contract).
+    val out = b.repartition(numBuckets, col("pt"))
+    out.write.mode("overwrite")
+      .option("maxRecordsPerFile", maxRowsPerFile)
+      .partitionBy("pt").parquet(newDir.toString)
+    beforeCommit()
+  }
+
+  /** One version commit: claim the next version, run `write` into its
+    * data dir, then marker + pointer — or, if `write` throws, abandon the
+    * claim (nothing is ever served) and rethrow. */
+  private def commitNext(expected: CollectionMeta)(write: Path => Unit): Unit = {
     val next = claimNext(expected)
-    try {
-      val b = bucketed(df)
-      // EVERY full write routes through the hash-by-pt exchange, not just
-      // compaction: a dynamic-partition write from W input partitions
-      // emits up to W x numBuckets files (each task starts a file per pt
-      // it holds) — a 32-wide embed pipeline feeding this store paid
-      // ~W x buckets tiny files per commit (measured: q121 1.9 -> 4.7 s
-      // when its input went 32-wide). The exchange moves one commit's
-      // batch (small by definition) and makes the layout CANONICAL — one
-      // file chain per bucket at every version, which every later pruned
-      // read pays for otherwise. Width cannot be probed here cheaply:
-      // calling .rdd on `df` would create a second plan reference, and
-      // these frames carry caller observe() nodes whose metrics must fire
-      // exactly once (the add/Hydrator single-reference contract).
-      val out = b.repartition(numBuckets, col("pt"))
-      out.write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRowsPerFile)
-        .partitionBy("pt").parquet(dataDir(next.version).toString)
-      beforeCommit()
-    } catch { case e: Throwable => abandon(next); throw e }
+    try write(dataDir(next.version))
+    catch { case e: Throwable => abandon(next); throw e }
     commit(next)
   }
 
@@ -889,32 +843,22 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     */
   private def writeMergedVersion(
       mergedAffected: DataFrame, affected: Set[Int], expected: CollectionMeta,
-      beforeCommit: () => Unit = () => ()): Unit = {
-    val m = expected
-    val next = claimNext(m)
-    val newDir = dataDir(next.version)
-    try {
-      // same canonical-layout rule as writeVersion (and the same
-      // no-.rdd-probe constraint: the merge plan carries the clash-probe
-      // observe()); the affected-bucket count bounds the exchange width
-      val out = bucketed(mergedAffected.drop("pt"))
-        .repartition(math.min(numBuckets, math.max(1, affected.size)), col("pt"))
-      out.write.mode("overwrite")
-        .option("maxRecordsPerFile", maxRowsPerFile)
-        .partitionBy("pt").parquet(newDir.toString)
-      val carryEntries = Carry.owners(io, dir, dataDir(m.version), "pt=")
-        .filterNot { case (part, _) =>
-          affected.contains(part.stripPrefix("pt=").toInt) }
-        .map { case (part, owner) => part -> owner.getName }
-      Carry.write(io, newDir, carryEntries)
-      beforeCommit()
-    } catch { case e: Throwable => abandon(next); throw e }
-    commit(next)
+      beforeCommit: () => Unit = () => ()): Unit = commitNext(expected) { newDir =>
+    // same canonical-layout rule as writeVersion (and the same
+    // no-.rdd-probe constraint: the merge plan carries the clash-probe
+    // observe()); the affected-bucket count bounds the exchange width
+    val out = bucketed(mergedAffected.drop("pt"))
+      .repartition(math.min(numBuckets, math.max(1, affected.size)), col("pt"))
+    out.write.mode("overwrite")
+      .option("maxRecordsPerFile", maxRowsPerFile)
+      .partitionBy("pt").parquet(newDir.toString)
+    val carryEntries = Carry.owners(io, dir, dataDir(expected.version), "pt=")
+      .filterNot { case (part, _) =>
+        affected.contains(part.stripPrefix("pt=").toInt) }
+      .map { case (part, owner) => part -> owner.getName }
+    Carry.write(io, newDir, carryEntries)
+    beforeCommit()
   }
-
-  /** Distinct id-hash buckets hit by a batch (small driver-side collect). */
-  private def bucketsOf(df: DataFrame): Set[Int] =
-    bucketed(df).select("pt").distinct().collect().map(_.getInt(0)).toSet
 
   /** ONE job for both facts every mutation needs about its batch: the
     * id-hash buckets it touches (partition pruning) and whether any id
@@ -1247,7 +1191,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // family — compiled column path; embedFrame would append at the end
     // and silently reorder the stored layout)
     writeVersion(cur.withColumn("embedding", ef.embedText(col("document"))),
-      expected, repack = true,
+      expected,
       beforeCommit = () => io.writeBytes(new Path(dir, Collection.EmbedderSidecar),
         ef.modelText.getBytes(StandardCharsets.UTF_8)))
     ef
@@ -1284,30 +1228,39 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       ef
     } else Embedder.fromName(efName)
 
-  /** `query(query_texts=...)`: embed the texts driver-side with the
-    * collection's RECORDED embedding function (never a caller-supplied
-    * one — the binding is what guarantees query vectors and stored
-    * vectors come from the same function), then the standard vector read
-    * path: index-pruned, prefiltered, batched. */
-  def queryText(texts: Seq[String], k: Int, where: Option[Where] = None,
-                whereDoc: Option[WhereDocument] = None, nprobe: Int = 0,
-                exact: Boolean = false): DataFrame = {
-    require(texts.nonEmpty, "queryText needs at least one query text")
-    val efName = meta.metadata.getOrElse("embedding_function",
-      throw new IllegalStateException(
-        s"collection '$name' has no registered embedding function — " +
-          "hydrate via addDocuments, or query with explicit vectors"))
-    val ef = resolveEmbedder(efName)
-    val vecs = texts.map(t => ef.embedOne(t))
-    // mirror the add-side gate: a zero query vector in cosine space would
-    // make every distance NaN and the rank window would return k
-    // arbitrary rows — reject loudly instead (symmetry with addDocuments)
-    if (space == "cosine") vecs.zip(texts).foreach { case (v, t) =>
+  /** Query texts embedded in the calling JVM with the collection's RECORDED
+    * embedding function — never a caller-supplied one: the binding is
+    * what guarantees query vectors and stored vectors come from the same
+    * function. Mirrors the add-side gate in cosine space: a zero query
+    * vector would make every distance NaN and the rank window would
+    * return k arbitrary rows, so it is rejected loudly. */
+  private def embedQueryTexts(op: String, texts: Seq[String],
+      explicitForm: String = "query with explicit vectors"): Seq[Seq[Float]] = {
+    require(texts.nonEmpty, s"$op needs at least one query text")
+    val m = meta
+    val ef = recordedEmbedder(m, s"hydrate via addDocuments, or $explicitForm")
+    val vecs = texts.map(ef.embedOne)
+    if (m.space == "cosine") vecs.zip(texts).foreach { case (v, t) =>
       require(v.exists(_ != 0f),
         s"query text '$t' embeds to the zero vector — cosine distance is undefined")
     }
-    queryBatch(vecs, k, where, whereDoc, nprobe, exact)
+    vecs
   }
+
+  /** The embedding function snapshot `m` records; LOUD without one
+    * (`hint` names the alternative). */
+  private def recordedEmbedder(m: CollectionMeta, hint: String): EmbeddingFunction =
+    resolveEmbedder(m.metadata.getOrElse("embedding_function",
+      throw new IllegalStateException(
+        s"collection '${m.name}' has no registered embedding function — $hint")))
+
+  /** `query(query_texts=...)`: embed the texts with the collection's
+    * RECORDED embedding function ([[embedQueryTexts]]), then the standard
+    * vector read path: index-pruned, prefiltered, batched. */
+  def queryText(texts: Seq[String], k: Int, where: Option[Where] = None,
+                whereDoc: Option[WhereDocument] = None, nprobe: Int = 0,
+                exact: Boolean = false): DataFrame =
+    queryBatch(embedQueryTexts("queryText", texts), k, where, whereDoc, nprobe, exact)
 
   /** `query(query_texts=...)` through the PQ-coded index: embed with the
     * collection's RECORDED function ([[queryText]]'s binding rule, zero-
@@ -1317,20 +1270,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * committed PQ build (queryPqBatch's contract). */
   def queryTextPq(texts: Seq[String], k: Int, nprobe: Int = 0, fetchN: Int = 0,
                   where: Option[Where] = None,
-                  whereDoc: Option[WhereDocument] = None): DataFrame = {
-    require(texts.nonEmpty, "queryTextPq needs at least one query text")
-    val efName = meta.metadata.getOrElse("embedding_function",
-      throw new IllegalStateException(
-        s"collection '$name' has no registered embedding function — " +
-          "hydrate via addDocuments, or query with explicit vectors"))
-    val ef = resolveEmbedder(efName)
-    val vecs = texts.map(t => ef.embedOne(t))
-    if (space == "cosine") vecs.zip(texts).foreach { case (v, t) =>
-      require(v.exists(_ != 0f),
-        s"query text '$t' embeds to the zero vector — cosine distance is undefined")
-    }
-    queryPqBatch(vecs, k, nprobe, fetchN, where, whereDoc)
-  }
+                  whereDoc: Option[WhereDocument] = None): DataFrame =
+    queryPqBatch(embedQueryTexts("queryTextPq", texts), k, nprobe, fetchN, where, whereDoc)
 
   /** [[queryStruct]] from TEXT queries — chromadb's
     * `query(query_texts=..., include=...)` returns the same parallel-list
@@ -1341,20 +1282,9 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
                       where: Option[Where] = None,
                       whereDoc: Option[WhereDocument] = None,
                       include: Set[String] = Set("documents", "distances", "metadatas"),
-                      nprobe: Int = 0, exact: Boolean = false): DataFrame = {
-    require(texts.nonEmpty, "queryTextStruct needs at least one query text")
-    val efName = meta.metadata.getOrElse("embedding_function",
-      throw new IllegalStateException(
-        s"collection '$name' has no registered embedding function — " +
-          "hydrate via addDocuments, or query with explicit vectors"))
-    val ef = resolveEmbedder(efName)
-    val vecs = texts.map(ef.embedOne)
-    if (space == "cosine") vecs.zip(texts).foreach { case (v, t) =>
-      require(v.exists(_ != 0f),
-        s"query text '$t' embeds to the zero vector — cosine distance is undefined")
-    }
-    queryStruct(vecs, k, where, whereDoc, include, nprobe, exact)
-  }
+                      nprobe: Int = 0, exact: Boolean = false): DataFrame =
+    queryStruct(embedQueryTexts("queryTextStruct", texts), k, where, whereDoc,
+      include, nprobe, exact)
 
   /** Diversity-aware top-k (Maximal Marginal Relevance) over the store:
     * the candidate fetch takes the SAME pruned path as [[query]] (IVF
@@ -1367,21 +1297,11 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
                lambda: Double = 0.5, where: Option[Where] = None,
                whereDoc: Option[WhereDocument] = None, nprobe: Int = 0,
                exact: Boolean = false): DataFrame = {
-    require(space == "cosine",
-      s"queryMmr requires a cosine-space collection, got '$space'")
-    requireDim(queryVec.length)
     val m = meta
-    val base = ivfOrScan(m, exact) match {
-      case Some((idxPath, cents)) =>
-        val cells = Ann.nearestCellsOf(cents, queryVec, resolveNprobe(m, nprobe))
-        readIndexBuild(idxPath)
-          .filter(col("cell").isin(cells: _*)).drop(indexLayoutCols(idxPath): _*)
-      case None => snapshotDF(m)
-    }
-    val confined = docIndexConfine(base, m, whereDoc)
-    val filtered = ChromaFilter.predicate(where, whereDoc, col("document"),
-      keyResolver(confined)).map(confined.filter).getOrElse(confined)
-    Retrieval.mmr(filtered, "id", "embedding", queryVec, k, fetchN, lambda)
+    require(m.space == "cosine",
+      s"queryMmr requires a cosine-space collection, got '${m.space}'")
+    val s = vectorScan(m, "queryMmr", Seq(queryVec), k, where, whereDoc, nprobe, exact, Nil)
+    Retrieval.mmr(s.dropLayout(s.rows), "id", "embedding", queryVec, k, fetchN, lambda)
       .withColumnRenamed("score", "mmr_score")
   }
 
@@ -1395,13 +1315,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
                    lambda: Double = 0.5, where: Option[Where] = None,
                    whereDoc: Option[WhereDocument] = None, nprobe: Int = 0,
                    exact: Boolean = false): DataFrame = {
-    val efName = meta.metadata.getOrElse("embedding_function",
-      throw new IllegalStateException(
-        s"collection '$name' has no registered embedding function — " +
-          "hydrate via addDocuments, or use queryMmr with an explicit vector"))
-    val v = resolveEmbedder(efName).embedOne(text)
-    require(v.exists(_ != 0f),
-      s"query text '$text' embeds to the zero vector — cosine distance is undefined")
+    val v = embedQueryTexts("queryMmrText", Seq(text),
+      explicitForm = "use queryMmr with an explicit vector").head
     queryMmr(v, k, fetchN, lambda, where, whereDoc, nprobe, exact)
   }
 
@@ -1426,8 +1341,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val dedupBatch = batch.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
     val m = meta
-    // bucketStats, not bucketsOf: its null-id rejection must cover the
-    // upsert path too (a null-keyed row would survive every later
+    // bucketStats, not a bare bucket probe: its null-id rejection must
+    // cover the upsert path too (a null-keyed row would survive every later
     // left_anti merge — null == null never matches — and accumulate).
     // Its dup flag is ignored: within-batch dups are upsert's JOB to
     // resolve. Probing the RAW batch skips one window computation — the
@@ -1571,9 +1486,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       val base = snapshotDF(m)
       if (ids.nonEmpty) base.filter(col("id").isin(ids: _*)) else base
     }
-    df = docIndexConfine(df, m, whereDoc)
-    ChromaFilter.predicate(where, whereDoc, col("document"), keyResolver(df))
-      .foreach(p => df = df.filter(p))
+    df = prefiltered(df, m, where, whereDoc)
     // include projection BEFORE the sort/page: the select is what lets
     // Catalyst prune the scan — projecting after limit would be
     // presentation-only and still read the dropped columns
@@ -1607,10 +1520,9 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
                 whereDoc: Option[WhereDocument] = None,
                 limit: Option[Int] = None, offset: Int = 0,
                 include: Set[String] = Set("documents", "metadatas")): DataFrame = {
-    val unknown = include.diff(Set("documents", "embeddings", "metadatas", "uris", "data"))
-    require(unknown.isEmpty, s"unknown include entries: ${unknown.mkString(", ")}")
-    // push the include down to the long form so the scan pruning is real
-    // (a documents+metadatas getStruct never reads the embedding column)
+    // push the include down to the long form (get validates it) so the
+    // scan pruning is real (a documents+metadatas getStruct never reads
+    // the embedding column)
     val page = get(ids, where, whereDoc, limit, offset, Some(include))
     val fields: Seq[FoldField] =
       ("id", "ids", col("id")) +:
@@ -1636,28 +1548,24 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   //   <dir>/index_v<V>.b<B>/_graft_committed     (written LAST)
   //
   // The index is valid only while meta.version == V: any mutation bumps the
-  // version and the read path silently falls back to the exact scan until
-  // `buildIndex` runs again — approximate answers are never served from
-  // stale data, and a crashed build (no marker) is never adopted. Builds
-  // follow the same MVCC discipline as data versions: each `buildIndex`
-  // claims a FRESH build dir (`O_CREAT|O_EXCL` directory create = the CAS,
-  // racing builders get distinct dirs), readers adopt the highest
-  // marker-complete build, and nothing is ever deleted in place — a rebuild
-  // racing an in-flight reader of the previous build cannot pull files out
-  // from under its scan; superseded builds are reclaimed by [[vacuum]].
-  // The base store stays id-hash (`pt`) partitioned so merges keep their
+  // version and the read path falls back to the exact scan until a build
+  // or refresh runs again — approximate answers are never served from
+  // stale data. Builds follow the [[Family]] discipline. The base store
+  // stays id-hash (`pt`) partitioned so merges keep their
   // O(affected-buckets) cost; the index pays one extra corpus copy, the
   // normal price of any secondary index.
 
-  // ---- machinery shared by ALL index families (`index_v` IVF/PQ,
-  // `docindex_v` trigram postings, `kwindex_v` keyword stats): ONE
-  // claim/adopt/commit discipline parameterized by [[Family]], so a
-  // protocol fix (claim race, marker handling, adoption rule) lands
-  // once instead of once per family ----
-
-  /** One sidecar index family: version-pinned build dirs
+  /** One sidecar index family (`index` IVF/PQ, `docindex` trigram
+    * postings, `kwindex` keyword stats): version-pinned build dirs
     * `<name>_v<V>.b<B>/` whose refreshable layout slices on
-    * `<axis>=<x>/pb=<b>`, plus the durable `_graft_has_<name>` marker. */
+    * `<axis>=<x>/pb=<b>`, plus the durable `_graft_has_<name>` marker.
+    * ONE discipline for every family, the data versions' MVCC: each build
+    * claims a FRESH dir (`O_CREAT|O_EXCL` directory create = the CAS,
+    * racing writers get distinct dirs), commits with its marker LAST,
+    * readers adopt the highest marker-complete build of their version
+    * (a crashed build is never adopted), and nothing is deleted in place
+    * — a rebuild cannot pull files from under an in-flight reader;
+    * [[vacuum]] reclaims superseded builds. */
   private final class Family(val name: String, val axis: String,
                              val refresh: () => Int) {
     private def prefix(v: Int): String = f"${name}_v$v%06d"
@@ -1671,32 +1579,42 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         e.isDir && (e.name == prefix(v) || e.name.startsWith(prefix(v) + ".b"))
       }.map(_.path)
 
+    /** Build dir `b` of version `version` under collection dir `under`. */
+    def buildDir(under: Path, version: Int, b: Int): Path =
+      new Path(under, f"${prefix(version)}.b$b%03d")
+
     /** Highest marker-complete build for version `m.version`. */
     def current(m: CollectionMeta): Option[Path] =
-      buildsOf(m.version)
-        .filter(p => io.exists(new Path(p, "_graft_committed")))
-        .sortBy(buildNumberOf).lastOption
+      buildsOf(m.version).filter(isCommitted).sortBy(buildNumberOf).lastOption
 
     /** Newest committed build of ANY version (highest (version, build))
       * — the refresh diff basis. */
     def newestCommitted: Option[Path] =
       io.list(dir).filter(e => e.isDir && owns(e.name)).map(_.path)
-        .filter(p => io.exists(new Path(p, "_graft_committed")))
+        .filter(isCommitted)
         .sortBy(p => (indexVersionOf(p), buildNumberOf(p))).lastOption
 
     /** Claim the next build dir via O_CREAT|O_EXCL directory create —
       * racing builders each win a DISTINCT number, never share a dir. */
     def claim(version: Int): Path = {
-      def buildDir(b: Int) = new Path(dir, f"${prefix(version)}.b$b%03d")
       var b = buildsOf(version).map(buildNumberOf).maxOption.fold(0)(_ + 1)
       var claimed: Path = null
       while (claimed == null) {
         try {
-          io.createDirExclusive(buildDir(b))
-          claimed = buildDir(b)
+          io.createDirExclusive(buildDir(dir, version, b))
+          claimed = buildDir(dir, version, b)
         } catch { case _: java.nio.file.FileAlreadyExistsException => b += 1 }
       }
       claimed
+    }
+
+    /** Commit a fully written build: the family's identity stamp (e.g.
+      * the keyword analyzer), then the marker — LAST, so a build is never
+      * adopted unstamped or half-written. */
+    def commit(build: Path, stamp: Option[(String, String)] = None): Unit = {
+      stamp.foreach { case (f, v) =>
+        io.writeBytes(new Path(build, f), v.getBytes(StandardCharsets.UTF_8)) }
+      io.writeBytes(new Path(build, CollectionMeta.CommittedName), Array.emptyByteArray)
     }
 
     /** Whether `build` uses the two-level refreshable layout: its first-
@@ -1748,6 +1666,40 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     if (dot < 0) 0 else n.substring(dot + 2).toInt
   }
 
+  private def isCommitted(build: Path): Boolean =
+    io.exists(new Path(build, CollectionMeta.CommittedName))
+
+  /** [[CollectionCatalog.forkCollection]]'s index carry: each family's
+    * committed build of snapshot `m` — never a version-stale one, which
+    * would answer for content the fork does not hold — lands in
+    * `forkDir` as build 0 of v1. Slices are resolved through the carry
+    * manifest and copied physically (a manifest cannot cross the
+    * collection boundary); top-level sidecars (centroids, PQ codebooks,
+    * stamps) travel as bytes; the marker is written last. */
+  private[catalog] def copyBuildsForFork(m: CollectionMeta, forkDir: Path): Unit =
+    for (f <- families; srcBuild <- f.current(m)) {
+      val dstBuild = f.buildDir(forkDir, 1, 0)
+      io.mkdirs(dstBuild)
+      def filesIn(p: Path): Seq[DirEntry] = io.list(p).filterNot(_.isDir)
+      def copyFiles(files: Seq[DirEntry], into: Path): Unit = {
+        io.mkdirs(into)
+        files.foreach(e => io.carryFile(e.path, new Path(into, e.name)))
+      }
+      // two-level slices (cell|gp|tp / pb), carry-manifest-resolved
+      Carry.slicedOwners(io, dir, srcBuild).foreach { case (slice, owner) =>
+        copyFiles(filesIn(new Path(owner, slice)), new Path(dstBuild, slice)) }
+      // one-level slices (compactIndexes(keepRefreshAxis = false) drops
+      // the pb axis; such builds are manifest-free)
+      io.list(srcBuild).filter(e => e.isDir && e.name.contains("=")).foreach { axis =>
+        val files = filesIn(axis.path)
+        if (files.nonEmpty) copyFiles(files, new Path(dstBuild, axis.name))
+      }
+      io.list(srcBuild).filterNot(_.isDir)
+        .filterNot(e => e.name == CollectionMeta.CommittedName || e.name == Carry.ManifestName)
+        .foreach(e => io.writeBytes(new Path(dstBuild, e.name), io.readBytes(e.path)))
+      f.commit(dstBuild)
+    }
+
   /** Committed index for the CURRENT version: (path, centroids), if any —
     * the highest marker-complete build. Centroid sidecars are parsed once
     * per committed build (they are immutable after the marker lands), not
@@ -1779,16 +1731,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * carries the store's id bucket as a second partition axis
     * (`cell=<c>/pb=<b>`) so [[refreshIndex]] can later carry unchanged
     * slices forward; queries prune on `cell` alone. */
-  def buildIndex(nlist: Int, seed: Long = 42L, trainFraction: Double = 1.0): Unit = {
-    val m = indexableMeta()
-    val df = currentWithPtOf(m).withColumnRenamed("pt", "pb")
-    val ivf = Ann.buildIvf(df, "id", "embedding", nlist, seed, trainFraction)
-    val pq = carriedPq(df)
-    writeIndex(
-      ivf.copy(assigned = pq.fold(ivf.assigned)(
-        Ann.pqEncodeFor(ivf.assigned, "embedding", ivf.centroids, _))),
-      m.version, pq)
-  }
+  def buildIndex(nlist: Int, seed: Long = 42L, trainFraction: Double = 1.0): Unit =
+    buildIvfPq(b => Ann.buildIvf(b.df, "id", "embedding", nlist, seed, trainFraction))
 
   /** [[buildIndex]] sized by the collection's `ivf:nlist` metadata —
     * Chroma-style collection-level index tuning (their analog:
@@ -1802,41 +1746,156 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   /** Deterministic IVF build: cells seeded by existing row ids (cell i =
     * the vector of seedIds(i)), argmin-L2 assignment, ties to the lowest
     * cell — the reproducible-anywhere form ([[Ann.buildIvfSeeded]]). */
-  def buildIndexSeeded(seedIds: Seq[String]): Unit = {
-    val m = indexableMeta()
-    val df = currentWithPtOf(m).withColumnRenamed("pt", "pb")
-    val ivf = Ann.buildIvfSeededAny(df, "id", "embedding", seedIds)
-    // a PQ-coded collection keeps its codes/codebooks through an explicit
-    // re-train: a plain rebuild here would strand queryPq() loudly-broken
-    val pq = carriedPq(df)
-    writeIndex(
-      ivf.copy(assigned = pq.fold(ivf.assigned)(
-        Ann.pqEncodeFor(ivf.assigned, "embedding", ivf.centroids, _))),
-      m.version, pq)
+  def buildIndexSeeded(seedIds: Seq[String]): Unit =
+    buildIvfPq(b => Ann.buildIvfSeededAny(b.df, "id", "embedding", seedIds))
+
+  /** TRAINED store PQ build — the production entry point ([[
+    * buildIndexPqSeeded]] exists for oracle replay; hand-picking codebook
+    * rows is not a user workflow): k-means cells ([[Ann.buildIvf]], fit on
+    * `trainFraction`) + per-subspace k-means codebooks ([[Ann.buildPq]],
+    * bounded deterministic sample). Size-aware defaults, all
+    * integer-only rules: `ksub = 0` → [[Ann.pqKsubFor]](n); `nlist = 0` →
+    * the collection's `ivf:nlist` metadata, else
+    * [[graft.operators.Dedup.cellsFor]](n) (occupancy ≈ 250/cell, the
+    * same dial the SemDeDup path uses). Same MVCC build discipline and
+    * read path as the seeded form — queryPq/queryPqBatch/refresh/compact
+    * serve either build identically (the codebook sidecar is the
+    * contract, not the trainer). */
+  def buildIndexPq(m: Int, ksub: Int = 0, nlist: Int = 0, seed: Long = 42L,
+                   trainFraction: Double = 1.0): Unit =
+    buildIvfPq(trainedCells(nlist, seed, trainFraction), Some((b, _, d) =>
+      Ann.buildPq(b.df, "id", "embedding", d, m, b.ksubOr(ksub), seed)))
+
+  /** TRAINED residual store build — [[buildIndexPq]]'s residual twin
+    * (codes quantize v − centroid(cell) under codebooks trained on
+    * sampled residuals): the production form of
+    * [[buildIndexPqResidualSeeded]], same size-aware dials as
+    * [[buildIndexPq]], same sidecar `residual` flag routing every read
+    * and re-encode. */
+  def buildIndexPqResidual(m: Int, ksub: Int = 0, nlist: Int = 0,
+                           seed: Long = 42L,
+                           trainFraction: Double = 1.0): Unit =
+    buildIvfPq(trainedCells(nlist, seed, trainFraction), Some((b, ivf, d) =>
+      Ann.buildPqResidual(ivf.assigned, "id", "embedding", ivf.centroids,
+        d, m, b.ksubOr(ksub), seed)))
+
+  /** Deterministic IVF-PQ build (FAISS's IVFPQ, store-side): the seeded
+    * IVF layout of [[buildIndexSeeded]] PLUS a `codes` column — every
+    * row's m nearest-subcentroid codes under codebooks seeded by
+    * `pqSeedIds` rows ([[Ann.buildPqSeeded]]). [[queryPq]] then ADC-scans
+    * only (id, codes) inside the probed cells — at 100 TB: nprobe/nlist
+    * of the directory listing × m bytes per row, with the raw embedding
+    * column left unread until the fetchN refine — where [[query]] reads
+    * dim floats per pruned row. Same MVCC build discipline; refresh and
+    * compactIndexes carry codes and codebooks along. */
+  def buildIndexPqSeeded(cellSeedIds: Seq[String], pqSeedIds: Seq[String],
+                         m: Int): Unit =
+    buildIvfPq(b => Ann.buildIvfSeededAny(b.df, "id", "embedding", cellSeedIds),
+      Some((b, _, d) => Ann.buildPqSeeded(b.df, "id", "embedding", d, m, pqSeedIds)))
+
+  /** The FULL Jégou construction as the collection index (residual
+    * IVF-PQ): codes quantize `r = v − centroid(cell(v))` under codebooks
+    * seeded by the `pqSeedIds` rows' OWN residuals — residuals
+    * concentrate near 0 regardless of where cells sit, so the same ksub
+    * codes spend their resolution on what the cell has not already
+    * explained (measurably better ADC fidelity than [[buildIndexPqSeeded]]
+    * at identical storage; q141 vs q139). The `residual` flag rides the
+    * codebook sidecar, so [[queryPq]]/[[queryPqBatch]] pick the per-cell
+    * ADC route and [[refreshIndex]]/rebuilds re-encode residuals — a
+    * residual build can never be ADC'd against a raw-query table.
+    * Keep pqSeedIds DISJOINT from cellSeedIds: a cell seed's residual is
+    * the zero vector, and duplicate zero codebook entries waste codes. */
+  def buildIndexPqResidualSeeded(cellSeedIds: Seq[String], pqSeedIds: Seq[String],
+                                 m: Int): Unit =
+    buildIvfPq(b => Ann.buildIvfSeededAny(b.df, "id", "embedding", cellSeedIds),
+      Some((b, ivf, d) => Ann.buildPqResidualSeeded(ivf.assigned, "id", "embedding",
+        ivf.centroids, d, m, pqSeedIds)))
+
+  /** The snapshot one IVF/PQ build indexes: ONE meta read, its rows with
+    * the id bucket as `pb`, and the row count sizing reads from that
+    * same snapshot (lazy: only the trained PQ builds size by it). */
+  private final class BuildInput(val snapshot: CollectionMeta) {
+    val df: DataFrame = currentWithPtOf(snapshot).withColumnRenamed("pt", "pb")
+    lazy val rows: Long = snapshotCount(snapshot)
+    def ksubOr(ksub: Int): Int = if (ksub > 0) ksub else Ann.pqKsubFor(rows)
+  }
+
+  /** The k-means cell trainer of the TRAINED PQ builds. The row count is
+    * read before training whatever the dials say — it sizes `nlist` here
+    * and `ksub` in the codebook trainer. */
+  private def trainedCells(nlist: Int, seed: Long, trainFraction: Double)(
+      b: BuildInput): Ann.IvfModel = {
+    val n = b.rows
+    val nl = if (nlist > 0) nlist
+             else metaPositiveInt(b.snapshot, "ivf:nlist")
+               .getOrElse(graft.operators.Dedup.cellsFor(n))
+    Ann.buildIvf(b.df, "id", "embedding", nl, seed, trainFraction)
+  }
+
+  /** The one body of every IVF/PQ build. A PQ build (`codebooks` given)
+    * claims the `codes` column and trains codebooks with the snapshot's
+    * dimension; a plain (re)build carries the newest committed build's
+    * codebooks ([[carriedPq]]). Either way the codes encode through
+    * [[Ann.pqEncodeFor]], whose sidecar `residual` flag picks the
+    * construction, and one build commits. */
+  private def buildIvfPq(
+      cells: BuildInput => Ann.IvfModel,
+      codebooks: Option[(BuildInput, Ann.IvfModel, Int) => Ann.PqModel] = None): Unit = {
+    val b = new BuildInput(indexableMeta())
+    val (ivf, pq) = codebooks match {
+      case None =>
+        val carried = carriedPq(b.df)
+        (cells(b), carried)
+      case Some(train) =>
+        requireNoCodes(b.df)
+        val d = snapshotDim(b.snapshot).getOrElse(throw new IllegalStateException(
+          s"collection '${b.snapshot.name}' is empty — nothing to index"))
+        val ivf = cells(b)
+        (ivf, Some(train(b, ivf, d)))
+    }
+    writeIndex(ivf.copy(assigned = pq.fold(ivf.assigned)(
+      Ann.pqEncodeFor(ivf.assigned, "embedding", ivf.centroids, _))), b.snapshot.version, pq)
+  }
+
+  /** The current meta, LOUD when it holds no data to index. */
+  private def nonEmptyMeta(): CollectionMeta = {
+    val m = meta
+    require(currentDataOf(m).nonEmpty, s"collection '${m.name}' is empty — nothing to index")
+    m
   }
 
   private def indexableMeta(): CollectionMeta = {
-    val m = meta
-    require(currentDataOf(m).nonEmpty, s"collection '${m.name}' is empty — nothing to index")
+    val m = nonEmptyMeta()
     val clash = currentWithPtOf(m).columns.intersect(Seq("cell", "pb"))
     require(clash.isEmpty,
       s"collection has ${clash.mkString("/")} column(s), which collide with the index layout; rename them")
     m
   }
 
+  /** A user `codes` column collides with a PQ-coded layout's own: every
+    * PQ build, rebuild and refresh rejects it. */
+  private def requireNoCodes(df: DataFrame): Unit =
+    require(!df.columns.contains("codes"),
+      "collection has a 'codes' column, which collides with the PQ index layout; " +
+        "rename it (or dropIndex() to rebuild without PQ)")
+
   private def writeIndex(model: Ann.IvfModel, version: Int,
-                         pq: Option[Ann.PqModel] = None): Unit = {
+                         pq: Option[Ann.PqModel]): Unit = {
     val claimed = ivfFamily.claim(version)
-    // one shuffle BY CELL at build time: without it every write task emits
-    // a file into every cell it happens to hold (tasks × nlist small files)
-    val packed = model.copy(assigned = model.assigned.repartition(col("cell")))
-    Ann.writeIvf(packed, claimed.toString, withPb = true)
-    // PQ codebooks ride the build as a second sidecar (like the
-    // centroids) — BEFORE the marker, so a committed build always has a
-    // complete codebook for its codes column
-    pq.foreach(p => Ann.writePqSidecar(claimed, p, spark.sparkContext.hadoopConfiguration))
-    io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
+    writeIvfBuild(claimed, model, pq)
+    ivfFamily.commit(claimed)
     ivfFamily.record()
+  }
+
+  /** An IVF build's data in claimed dir `build`: cell-partitioned parquet
+    * (+ centroid sidecar), then a PQ-coded build's codebook sidecar. One
+    * shuffle BY CELL: without it every write task emits a file into every
+    * cell it holds (tasks × nlist small files). */
+  private def writeIvfBuild(build: Path, model: Ann.IvfModel,
+                            pq: Option[Ann.PqModel], withPb: Boolean = true): Unit = {
+    Ann.writeIvf(model.copy(assigned = model.assigned.repartition(col("cell"))),
+      build.toString, withPb = withPb)
+    pq.foreach(p => Ann.writePqSidecar(build, p, spark.sparkContext.hadoopConfiguration))
   }
 
   /** PQ codebooks of a committed index build (None for a plain IVF one);
@@ -1852,126 +1911,26 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * trained on the old cells' residuals, so after a re-seed they keep
     * serving (codes re-encode against the new centroids — well-defined,
     * and the exact refine keeps answers correct) but their fit decays
-    * with centroid drift — re-run buildIndexPqResidualSeeded to re-train
+    * with centroid drift — re-run buildIndexPqResidual to re-train
     * when refreshIndexReport flags drift. */
   private def carriedPq(df: DataFrame): Option[Ann.PqModel] = {
     val pq = ivfFamily.newestCommitted.flatMap(pqModelOf)
-    pq.foreach { _ =>
-      require(!df.columns.contains("codes"),
-        "collection gained a user 'codes' column after its PQ index was built — " +
-          "rename it or dropIndex() before rebuilding")
-    }
+    if (pq.isDefined) requireNoCodes(df)
     pq
   }
 
-  /** Deterministic IVF-PQ build (FAISS's IVFPQ, store-side): the seeded
-    * IVF layout of [[buildIndexSeeded]] PLUS a `codes` column — every
-    * row's m nearest-subcentroid codes under codebooks seeded by
-    * `pqSeedIds` rows ([[Ann.buildPqSeeded]]). [[queryPq]] then ADC-scans
-    * only (id, codes) inside the probed cells — at 100 TB: nprobe/nlist
-    * of the directory listing × m bytes per row, with the raw embedding
-    * column left unread until the fetchN refine — where [[query]] reads
-    * dim floats per pruned row. Same MVCC build discipline; refresh and
-    * compactIndexes carry codes and codebooks along. */
-  /** TRAINED store PQ build — the production entry point ([[
-    * buildIndexPqSeeded]] exists for oracle replay; hand-picking codebook
-    * rows is not a user workflow): k-means cells ([[Ann.buildIvf]], fit on
-    * `trainFraction`) + per-subspace k-means codebooks ([[Ann.buildPq]],
-    * bounded deterministic sample). Size-aware defaults, all
-    * integer-only rules: `ksub = 0` → [[Ann.pqKsubFor]](n); `nlist = 0` →
-    * the collection's `ivf:nlist` metadata, else
-    * [[graft.operators.Dedup.cellsFor]](n) (occupancy ≈ 250/cell, the
-    * same dial the SemDeDup path uses). Same MVCC build discipline and
-    * read path as the seeded form — queryPq/queryPqBatch/refresh/compact
-    * serve either build identically (the codebook sidecar is the
-    * contract, not the trainer). */
-  def buildIndexPq(m: Int, ksub: Int = 0, nlist: Int = 0, seed: Long = 42L,
-                   trainFraction: Double = 1.0): Unit = {
-    val meta0 = indexableMeta()
-    val df = currentWithPtOf(meta0).withColumnRenamed("pt", "pb")
-    require(!df.columns.contains("codes"),
-      "collection has a 'codes' column, which collides with the PQ index layout; rename it")
-    val d = dim().getOrElse(throw new IllegalStateException(
-      s"collection '$name' is empty — nothing to index"))
-    val n = count()
-    val ks = if (ksub > 0) ksub else Ann.pqKsubFor(n)
-    val nl = if (nlist > 0) nlist
-             else metaPositiveInt(meta0, "ivf:nlist")
-               .getOrElse(graft.operators.Dedup.cellsFor(n))
-    val ivf = Ann.buildIvf(df, "id", "embedding", nl, seed, trainFraction)
-    val pq = Ann.buildPq(df, "id", "embedding", d, m, ks, seed)
-    writeIndex(ivf.copy(assigned = Ann.pqEncode(ivf.assigned, "embedding", pq)),
-      meta0.version, Some(pq))
-  }
-
-  /** TRAINED residual store build — [[buildIndexPq]]'s residual twin
-    * (codes quantize v − centroid(cell) under codebooks trained on
-    * sampled residuals): the production form of
-    * [[buildIndexPqResidualSeeded]], same size-aware dials as
-    * [[buildIndexPq]], same sidecar `residual` flag routing every read
-    * and re-encode. */
-  def buildIndexPqResidual(m: Int, ksub: Int = 0, nlist: Int = 0,
-                           seed: Long = 42L,
-                           trainFraction: Double = 1.0): Unit = {
-    val meta0 = indexableMeta()
-    val df = currentWithPtOf(meta0).withColumnRenamed("pt", "pb")
-    require(!df.columns.contains("codes"),
-      "collection has a 'codes' column, which collides with the PQ index layout; rename it")
-    val d = dim().getOrElse(throw new IllegalStateException(
-      s"collection '$name' is empty — nothing to index"))
-    val n = count()
-    val ks = if (ksub > 0) ksub else Ann.pqKsubFor(n)
-    val nl = if (nlist > 0) nlist
-             else metaPositiveInt(meta0, "ivf:nlist")
-               .getOrElse(graft.operators.Dedup.cellsFor(n))
-    val ivf = Ann.buildIvf(df, "id", "embedding", nl, seed, trainFraction)
-    val pq = Ann.buildPqResidual(ivf.assigned, "id", "embedding",
-      ivf.centroids, d, m, ks, seed)
-    writeIndex(ivf.copy(assigned =
-      Ann.pqEncodeResidual(ivf.assigned, "embedding", ivf.centroids, pq)),
-      meta0.version, Some(pq))
-  }
-
-  def buildIndexPqSeeded(cellSeedIds: Seq[String], pqSeedIds: Seq[String],
-                         m: Int): Unit = {
-    val meta0 = indexableMeta()
-    val df = currentWithPtOf(meta0).withColumnRenamed("pt", "pb")
-    require(!df.columns.contains("codes"),
-      "collection has a 'codes' column, which collides with the PQ index layout; rename it")
-    val d = dim().getOrElse(throw new IllegalStateException(
-      s"collection '$name' is empty — nothing to index"))
-    val ivf = Ann.buildIvfSeededAny(df, "id", "embedding", cellSeedIds)
-    val pq = Ann.buildPqSeeded(df, "id", "embedding", d, m, pqSeedIds)
-    writeIndex(ivf.copy(assigned = Ann.pqEncode(ivf.assigned, "embedding", pq)),
-      meta0.version, Some(pq))
-  }
-
-  /** The FULL Jégou construction as the collection index (residual
-    * IVF-PQ): codes quantize `r = v − centroid(cell(v))` under codebooks
-    * seeded by the `pqSeedIds` rows' OWN residuals — residuals
-    * concentrate near 0 regardless of where cells sit, so the same ksub
-    * codes spend their resolution on what the cell has not already
-    * explained (measurably better ADC fidelity than [[buildIndexPqSeeded]]
-    * at identical storage; q141 vs q139). The `residual` flag rides the
-    * codebook sidecar, so [[queryPq]]/[[queryPqBatch]] pick the per-cell
-    * ADC route and [[refreshIndex]]/rebuilds re-encode residuals — a
-    * residual build can never be ADC'd against a raw-query table.
-    * Keep pqSeedIds DISJOINT from cellSeedIds: a cell seed's residual is
-    * the zero vector, and duplicate zero codebook entries waste codes. */
-  def buildIndexPqResidualSeeded(cellSeedIds: Seq[String], pqSeedIds: Seq[String],
-                                 m: Int): Unit = {
-    val meta0 = indexableMeta()
-    val df = currentWithPtOf(meta0).withColumnRenamed("pt", "pb")
-    require(!df.columns.contains("codes"),
-      "collection has a 'codes' column, which collides with the PQ index layout; rename it")
-    val d = dim().getOrElse(throw new IllegalStateException(
-      s"collection '$name' is empty — nothing to index"))
-    val ivf = Ann.buildIvfSeededAny(df, "id", "embedding", cellSeedIds)
-    val pq = Ann.buildPqResidualSeeded(ivf.assigned, "id", "embedding",
-      ivf.centroids, d, m, pqSeedIds)
-    writeIndex(ivf.copy(assigned =
-      Ann.pqEncodeResidual(ivf.assigned, "embedding", ivf.centroids, pq)),
-      meta0.version, Some(pq))
+  /** The ADC shortlist depth of a PQ read. fetchN = 0 → SIZE-AWARE
+    * default from the snapshot's row count (Ann.pqFetchNFor, integer-only
+    * and oracle-replayable) — a frozen k·4 measured recall 0.2 at bench
+    * scale where the scaled dial measures ~1.0 (Recall.pq_scaled); the
+    * count on a parquet-backed version is a footer-count job,
+    * listing-order work. */
+  private def pqFetchN(m: CollectionMeta, fetchN: Int, k: Int): Int = {
+    val fn = if (fetchN > 0) fetchN else Ann.pqFetchNFor(snapshotCount(m), k)
+    require(fn >= k, s"fetchN ($fn) must be >= k ($k)")
+    require(fn <= Ann.MaxFetchN,
+      s"fetchN ($fn) exceeds MaxFetchN (${Ann.MaxFetchN}) — shortlists broadcast")
+    fn
   }
 
   /** B6 through the PQ-coded index: ADC over the probed cells' (id,
@@ -1986,30 +1945,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   def queryPq(queryVec: Seq[Float], k: Int, nprobe: Int = 0, fetchN: Int = 0,
               where: Option[Where] = None,
               whereDoc: Option[WhereDocument] = None): DataFrame = {
-    requireDim(queryVec.length)
     val m = meta
-    val (idxPath, cents) = currentIndex(m).getOrElse(throw new IllegalStateException(
-      s"collection '$name' has no committed index for version ${m.version} — run buildIndexPqSeeded"))
-    val pq = pqModelOf(idxPath).getOrElse(throw new IllegalStateException(
-      s"index build $idxPath carries no PQ codebooks — built with buildIndex? " +
-        "run buildIndexPqSeeded for the ADC path or query() for the plain one"))
-    // fetchN = 0 → SIZE-AWARE default from the live corpus count
-    // (Ann.pqFetchNFor, integer-only and oracle-replayable) — a frozen
-    // k·4 measured recall 0.2 at bench scale where the scaled dial
-    // measures ~1.0 (Recall.pq_scaled); count() on a parquet-backed
-    // version is a footer-count job, listing-order work
-    val fn = if (fetchN > 0) fetchN else Ann.pqFetchNFor(count(), k)
-    require(fn >= k, s"fetchN ($fn) must be >= k ($k)")
-    require(fn <= Ann.MaxFetchN,
-      s"fetchN ($fn) exceeds MaxFetchN (${Ann.MaxFetchN}) — shortlists broadcast")
-    val cells = Ann.nearestCellsOf(cents, queryVec, resolveNprobe(m, nprobe))
-    val indexed = readIndexBuild(idxPath)
-    val layoutCols = indexLayoutCols(idxPath)
-    requireNoReserved(indexed.drop("codes" +: layoutCols: _*), Seq("dist", "adc"))
-    val pruned0 = docIndexConfine(
-      indexed.filter(col("cell").isin(cells: _*)), m, whereDoc)
-    val pruned = ChromaFilter.predicate(where, whereDoc, col("document"),
-      keyResolver(indexed)).map(pruned0.filter).getOrElse(pruned0)
+    val scan = vectorScan(m, "queryPq", Seq(queryVec), k, where, whereDoc, nprobe,
+      exact = false, Seq("dist", "adc"), pqPlain = Some("query"))
+    val (pq, cents, cells, pruned) =
+      (scan.pq.get, scan.centroids.get, scan.cellsPerQuery.head, scan.rows)
+    val fn = pqFetchN(m, fetchN, k)
     // ADC stage: column-pruned to (id, codes[, cell]) + whatever the
     // prefilters referenced; the embedding column stays unread until the
     // refine. A residual build routes through per-cell tables (the codes
@@ -2049,35 +1990,15 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   def queryPqBatch(queryVecs: Seq[Seq[Float]], k: Int, nprobe: Int = 0,
                    fetchN: Int = 0, where: Option[Where] = None,
                    whereDoc: Option[WhereDocument] = None): DataFrame = {
-    require(queryVecs.nonEmpty, "queryPqBatch needs at least one query vector")
-    require(queryVecs.map(_.length).distinct.size == 1,
-      s"query vectors must share one dimension, got ${queryVecs.map(_.length).distinct}")
-    requireDim(queryVecs.head.length)
     val m = meta
-    val (idxPath, cents) = currentIndex(m).getOrElse(throw new IllegalStateException(
-      s"collection '$name' has no committed index for version ${m.version} — run buildIndexPqSeeded"))
-    val pq = pqModelOf(idxPath).getOrElse(throw new IllegalStateException(
-      s"index build $idxPath carries no PQ codebooks — built with buildIndex? " +
-        "run buildIndexPqSeeded for the ADC path or queryBatch() for the plain one"))
-    // fetchN = 0 → the same size-aware default as queryPq (one count
-    // job serves the whole batch)
-    val fn = if (fetchN > 0) fetchN else Ann.pqFetchNFor(count(), k)
-    require(fn >= k, s"fetchN ($fn) must be >= k ($k)")
-    require(fn <= Ann.MaxFetchN,
-      s"fetchN ($fn) exceeds MaxFetchN (${Ann.MaxFetchN}) — shortlists broadcast")
-    val np = resolveNprobe(m, nprobe)
-    val cellsPerQ = queryVecs.map(v => Ann.nearestCellsOf(cents, v, np))
-    val allCells = cellsPerQ.flatten.distinct
-    val indexed = readIndexBuild(idxPath)
-    val layoutCols = indexLayoutCols(idxPath)
-    requireNoReserved(indexed.drop("codes" +: layoutCols: _*),
-      Seq("qid", "rnk", "dist", "adc", "__qvec", "__qcells", "__qluts", "__rn"))
-    val pruned0 = docIndexConfine(
-      indexed.filter(col("cell").isin(allCells: _*)), m, whereDoc)
-    val pruned = ChromaFilter.predicate(where, whereDoc, col("document"),
-      keyResolver(indexed)).map(pruned0.filter).getOrElse(pruned0)
-    val spark0 = pruned.sparkSession
-    import spark0.implicits._
+    val scan = vectorScan(m, "queryPqBatch", queryVecs, k, where, whereDoc, nprobe,
+      exact = false, Seq("qid", "rnk", "dist", "adc", "__qvec", "__qcells", "__qluts", "__rn"),
+      pqPlain = Some("queryBatch"))
+    val (pq, cents, cellsPerQ, pruned) =
+      (scan.pq.get, scan.centroids.get, scan.cellsPerQuery, scan.rows)
+    // one count job (fetchN = 0) serves the whole batch
+    val fn = pqFetchN(m, fetchN, k)
+    import spark.implicits._
     val ksub = pq.ksub
     // per-query ADC tables ride the broadcast query frame: for a plain
     // build one flattened m·ksub array per query; for a RESIDUAL build a
@@ -2155,12 +2076,18 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val refreshed = (prior, priorCents) match {
       case (Some(old), _) if indexVersionOf(old) == m.version =>
         0 // a committed build already serves this version
-      case (Some(old), Some(cents)) if ivfFamily.hasPbSlices(old) &&
-          io.exists(dataDir(indexVersionOf(old))) =>
-        val changed = changedBucketsBetween(indexVersionOf(old), m.version)
-        val claimed = ivfFamily.claim(m.version)
-        val touched = currentWithPtOf(m)
-          .filter(col("pt").isin(changed.toSeq: _*))
+      case (Some(old), Some(cents)) =>
+        // incremental when the prior build has pb slices and its indexed
+        // version's data survives: only CHANGED buckets re-assign. Otherwise
+        // (no pb axis, or that data dir was vacuumed) a FULL re-assignment.
+        // Either way under the SAME centroids — refresh semantics, never a
+        // silent re-train
+        val changed =
+          if (ivfFamily.hasPbSlices(old) && io.exists(dataDir(indexVersionOf(old))))
+            Some(changedBucketsBetween(indexVersionOf(old), m.version))
+          else None
+        val current = currentWithPtOf(m)
+        val touched = changed.fold(current)(c => current.filter(col("pt").isin(c.toSeq: _*)))
           .withColumnRenamed("pt", "pb")
         // a PQ-coded build refreshes its codes too: touched rows re-encode
         // under the PRIOR codebooks (encode is a pure function of (vector,
@@ -2168,41 +2095,23 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         // without this the refreshed slices would lack the codes column
         // and the union-by-name read would serve NULL codes to queryPq
         val priorPq = pqModelOf(old)
-        priorPq.foreach { _ =>
-          require(!touched.columns.contains("codes"),
-            "collection gained a user 'codes' column after its PQ index was built — " +
-              "rename it or dropIndex() before refreshing")
+        if (priorPq.isDefined) requireNoCodes(touched)
+        val assigned = Ann.assignCells(touched, "embedding", cents)
+        val model = Ann.IvfModel(cents,
+          priorPq.fold(assigned)(Ann.pqEncodeFor(assigned, "embedding", cents, _)))
+        changed match {
+          case Some(c) =>
+            // the centroid sidecar is rewritten into the new build too (same
+            // centroids — the sidecar is what later reads/refreshes use)
+            val claimed = ivfFamily.claim(m.version)
+            writeIvfBuild(claimed, model, priorPq)
+            carryUnchangedSlices(old, claimed, c)
+            ivfFamily.commit(claimed)
+            c.size
+          case None =>
+            writeIndex(model, m.version, priorPq)
+            numBuckets
         }
-        val assignedTouched = Ann.assignCells(touched, "embedding", cents)
-        val withCodes = priorPq.fold(assignedTouched)(
-          Ann.pqEncodeFor(assignedTouched, "embedding", cents, _))
-        // writeIvf also rewrites the centroid sidecar into the new build
-        // (same centroids — the sidecar is what later reads/refreshes use)
-        Ann.writeIvf(Ann.IvfModel(cents, withCodes.repartition(col("cell"))),
-          claimed.toString, withPb = true)
-        priorPq.foreach(p =>
-          Ann.writePqSidecar(claimed, p, spark.sparkContext.hadoopConfiguration))
-        carryUnchangedSlices(old, claimed, changed)
-        io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
-        changed.size
-      case (Some(old), Some(cents)) =>
-        // prior build readable but not incrementally refreshable (no pb
-        // axis, or the indexed version's data dir was vacuumed): FULL
-        // re-assignment under the SAME centroids — refresh semantics,
-        // never a silent re-train — and a PQ-coded build re-encodes and
-        // keeps its codebooks instead of downgrading to plain IVF
-        val df = currentWithPtOf(m).withColumnRenamed("pt", "pb")
-        val assigned = Ann.assignCells(df, "embedding", cents)
-        val priorPq = pqModelOf(old)
-        priorPq.foreach { _ =>
-          require(!df.columns.contains("codes"),
-            "collection gained a user 'codes' column after its PQ index was built — " +
-              "rename it or dropIndex() before refreshing")
-        }
-        writeIndex(Ann.IvfModel(cents,
-          priorPq.fold(assigned)(Ann.pqEncodeFor(assigned, "embedding", cents, _))),
-          m.version, priorPq)
-        numBuckets
       case _ =>
         buildIndex() // no readable prior: re-train (ivf:nlist), PQ carried by buildIndex itself
         numBuckets
@@ -2293,28 +2202,30 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         .count(e => !e.isDir && e.name.endsWith(".parquet"))
     }.sum
 
-  private def autoCompactBound(m: CollectionMeta): Option[Int] =
-    metaPositiveInt(m, "graft:autocompact.maxfiles")
-
   /** Data-side policy check, run after every public mutation's commit
     * (NOT inside the commit path itself — [[compact]] commits through
     * the same writeVersion and must never re-trigger the policy). */
   private def maybeAutoCompact(): Unit = {
     val m = meta
-    autoCompactBound(m).foreach { bound =>
-      if (currentDataOf(m).nonEmpty) {
-        val files = dataFileCount(m)
-        if (files > bound) {
-          val keep = metaPositiveInt(m, "graft:autocompact.keephistory").getOrElse(0)
-          log.warn(s"auto-compaction of collection '${m.name}': $files data " +
-            s"files exceed graft:autocompact.maxfiles=$bound — " +
-            s"compact() + vacuum(keepHistory=$keep)")
-          compact()
-          vacuum(keep)
-        }
+    autoCompact(m, "data files", "compact()",
+      if (currentDataOf(m).nonEmpty) dataFileCount(m) else 0)(compact())
+  }
+
+  /** The policy body both checks share: past the bound, compact, then
+    * vacuum with the policy's keephistory (LOUD log line). `files` is
+    * counted only under a bound. */
+  private def autoCompact(m: CollectionMeta, what: String, op: String, files: => Int)(
+      compactAll: => Unit): Unit =
+    metaPositiveInt(m, "graft:autocompact.maxfiles").foreach { bound =>
+      val n = files
+      if (n > bound) {
+        val keep = metaPositiveInt(m, "graft:autocompact.keephistory").getOrElse(0)
+        log.warn(s"auto-compaction of collection '${m.name}': $n $what exceed " +
+          s"graft:autocompact.maxfiles=$bound — $op + vacuum(keepHistory=$keep)")
+        compactAll
+        vacuum(keep)
       }
     }
-  }
 
   /** Index-side policy check, run after an incremental index refresh:
     * a long refresh chain accumulates one small file per refresh per
@@ -2323,17 +2234,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * the superseded builds. */
   private def maybeAutoCompactIndexes(): Unit = {
     val m = meta
-    autoCompactBound(m).foreach { bound =>
-      val files = families.flatMap(_.current(m)).map(indexFileCount).sum
-      if (files > bound) {
-        val keep = metaPositiveInt(m, "graft:autocompact.keephistory").getOrElse(0)
-        log.warn(s"auto-compaction of collection '${m.name}' indexes: $files " +
-          s"resolved index files exceed graft:autocompact.maxfiles=$bound — " +
-          s"compactIndexes() + vacuum(keepHistory=$keep)")
-        compactIndexes()
-        vacuum(keep)
-      }
-    }
+    autoCompact(m, "resolved index files", "compactIndexes()",
+      families.flatMap(_.current(m)).map(indexFileCount).sum)(compactIndexes())
   }
 
   /** LOUD when a read falls back to the full scan because every committed
@@ -2433,12 +2335,10 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
 
   // ---- where_document postings index (SURVEY §2.B B8's scale path) ----
   //
-  // Same MVCC discipline as the IVF index: version-pinned build dirs
-  // (`docindex_v<V>.b<B>/`, committed by `_graft_committed`), claimed via
-  // O_CREAT|O_EXCL directory create, adopted only while meta.version == V,
-  // superseded builds reclaimed by [[vacuum]]. Layout + query semantics:
-  // [[graft.operators.DocIndex]] (trigram postings; index answers are
-  // superset-prefilter + verbatim re-check, bit-identical to the scan).
+  // The [[Family]] build discipline over `docindex_v<V>.b<B>/`. Layout +
+  // query semantics: [[graft.operators.DocIndex]] (trigram postings; index
+  // answers are superset-prefilter + verbatim re-check, bit-identical to
+  // the scan).
 
   def hasDocIndex: Boolean = docFamily.current(meta).isDefined
 
@@ -2446,30 +2346,28 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * Postings are sliced by the store's own id bucket (`gp=<g>/pb=<b>`)
     * so later [[refreshDocIndex]] calls can carry unchanged slices
     * forward instead of re-deriving the whole corpus. */
-  def buildDocIndex(): Unit = buildPostingsFamily(docFamily, DocIndex.writeWithPb)
+  def buildDocIndex(): Unit = buildPostingsFamily(docFamily, docWriter)
+
+  /** A postings family's writer: (id, document, pt) rows → a claimed
+    * build dir, sliced `<axis>=<a>/pb=<pt>`. */
+  private type PostingsWriter = (DataFrame, Path) => Unit
+
+  private def docWriter: PostingsWriter = (rows, build) =>
+    DocIndex.writeWithPb(rows, "id", "document", col("pt"), build.toString, maxRowsPerFile)
 
   /** Shared build for the document-derived postings families ("docindex"
     * trigram postings, "kwindex" keyword stats): one claim/write/commit
     * discipline, the family's writer plugged in — a protocol fix lands
-    * once. The writer receives ((id, document, pt) frame, idCol, docCol,
-    * pbCol, path, maxRowsPerFile) — both writers share that signature. */
-  private def buildPostingsFamily(family: Family,
-      writer: (DataFrame, String, String, Column, String, Long) => Unit,
-      stamp: Option[(String, String)] = None): Unit = {
-    val m = meta
-    require(currentDataOf(m).nonEmpty,
-      s"collection '${m.name}' is empty — nothing to index")
+    * once. */
+  private def buildPostingsFamily(family: Family, writer: PostingsWriter,
+                                  stamp: Option[(String, String)] = None): Unit = {
+    val m = nonEmptyMeta()
     val data = currentWithPtOf(m)
     require(data.columns.contains("document"),
       s"collection '${m.name}' carries no document column — nothing to index")
     val claimed = family.claim(m.version)
-    writer(data.select(col("id"), col("document"), col("pt")),
-      "id", "document", col("pt"), claimed.toString, maxRowsPerFile)
-    // family-specific build identity (e.g. the keyword analyzer stamp),
-    // written BEFORE the marker — a build is never committed unstamped
-    stamp.foreach { case (f, v) =>
-      io.writeBytes(new Path(claimed, f), v.getBytes(StandardCharsets.UTF_8)) }
-    io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
+    writer(data.select(col("id"), col("document"), col("pt")), claimed)
+    family.commit(claimed, stamp)
     family.record()
   }
 
@@ -2479,13 +2377,10 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * `<axis>=<a>/pb=<b>` slice carries from the last committed build by
     * manifest. Returns buckets rebuilt; full rebuild without a usable
     * prior build. */
-  private def refreshPostingsFamily(family: Family,
-      writer: (DataFrame, String, String, Column, String, Long) => Unit,
+  private def refreshPostingsFamily(family: Family, writer: PostingsWriter,
       stamp: Option[(String, String)] = None,
       priorUsable: Path => Boolean = _ => true): Int = {
-    val m = meta
-    require(currentDataOf(m).nonEmpty,
-      s"collection '${m.name}' is empty — nothing to index")
+    val m = nonEmptyMeta()
     val refreshed = family.newestCommitted match {
       // `priorUsable` gates BOTH reuse paths: a build whose identity
       // stamp disagrees with the collection's current setting (the
@@ -2498,16 +2393,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         val changed = changedBucketsBetween(indexVersionOf(old), m.version)
         val claimed = family.claim(m.version)
         if (changed.nonEmpty)
-          writer(
-            currentWithPtOf(m).filter(col("pt").isin(changed.toSeq: _*))
-              .select(col("id"), col("document"), col("pt")),
-            "id", "document", col("pt"), claimed.toString, maxRowsPerFile)
+          writer(currentWithPtOf(m).filter(col("pt").isin(changed.toSeq: _*))
+            .select(col("id"), col("document"), col("pt")), claimed)
         // carry forward unchanged slices: manifest entries for <axis>/pb=<b>
         // for every b whose data bucket is byte-identical carry-over
         carryUnchangedSlices(old, claimed, changed)
-        stamp.foreach { case (f, v) =>
-          io.writeBytes(new Path(claimed, f), v.getBytes(StandardCharsets.UTF_8)) }
-        io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
+        family.commit(claimed, stamp)
         changed.size
       case _ =>
         buildPostingsFamily(family, writer, stamp)
@@ -2517,8 +2408,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     refreshed
   }
 
-  /** Version number encoded in an index build dir name
-    * (`docindex_v<V>[.b<B>]` / `index_v<V>[.b<B>]`). */
+  /** Version number encoded in an index build or data dir name
+    * (`docindex_v<V>[.b<B>]` / `index_v<V>[.b<B>]` / `data_v<V>`). */
   private def indexVersionOf(p: Path): Int =
     p.getName.dropWhile(!_.isDigit).takeWhile(_.isDigit).toInt
 
@@ -2557,27 +2448,24 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * indexed version's data dir was vacuumed away).
     *
     * Returns the number of buckets rebuilt (numBuckets for the full-
-    * rebuild fallback, 0 when the index is already current). Same MVCC
-    * discipline as every build: fresh claimed dir, marker written LAST,
-    * readers adopt only marker-complete builds of the current version.
-    */
+    * rebuild fallback, 0 when the index is already current). */
   def refreshDocIndex(): Int =
-    refreshPostingsFamily(docFamily, DocIndex.writeWithPb)
+    refreshPostingsFamily(docFamily, docWriter)
 
   /** Drop the postings index — every build plus the durable family
     * marker (the [[dropIndex]] contract: a drop must not be undone by
     * `refreshIndexes()`). */
   def dropDocIndex(): Boolean = docFamily.drop()
 
-  /** Confine `df` to the postings index's candidate ids when a committed
-    * index matches snapshot `m` and `whereDoc` is gram-confinable; no-op
-    * otherwise. Callers ALWAYS still apply the verbatim predicate — the
-    * index shrinks IO, never changes answers. Shared by get/query/
-    * queryBatch so every read surface takes the same scale path. */
-  private def docIndexConfine(
-      df: DataFrame, m: CollectionMeta,
-      whereDoc: Option[WhereDocument]): DataFrame =
-    (for {
+  /** The prefilter every read surface shares, so each takes the same
+    * scale path: `df` (rows of snapshot `m`) is confined to the postings
+    * index's candidate ids when a committed index matches `m` and
+    * `whereDoc` is gram-confinable, then the verbatim `where`/`whereDoc`
+    * predicate applies — ALWAYS, so the index shrinks IO and never
+    * changes answers. */
+  private def prefiltered(df: DataFrame, m: CollectionMeta, where: Option[Where],
+                          whereDoc: Option[WhereDocument]): DataFrame = {
+    val confined = (for {
       wd <- whereDoc
       sets <- DocIndex.gramSets(wd)
     } yield docFamily.current(m) match {
@@ -2585,14 +2473,14 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         DocIndex.candidates(readIndexBuild(idx), sets), Seq("id"), "left_semi")
       case None => warnIfStale(docFamily, m); df
     }).getOrElse(df)
+    ChromaFilter.predicate(where, whereDoc, col("document"), keyResolver(confined))
+      .map(confined.filter).getOrElse(confined)
+  }
 
   // ---- keyword-statistics (BM25) sidecar — hybrid retrieval's scale path ----
   //
-  // Same MVCC discipline as the other two index families: version-pinned
-  // build dirs (`kwindex_v<V>.b<B>/`, committed by `_graft_committed`),
-  // claimed via O_CREAT|O_EXCL directory create, adopted only while
-  // meta.version == V, superseded builds reclaimed by [[vacuum]]. Layout
-  // + query semantics: [[graft.operators.KeywordIndex]] (term-hash-sliced
+  // The [[Family]] build discipline over `kwindex_v<V>.b<B>/`. Layout +
+  // query semantics: [[graft.operators.KeywordIndex]] (term-hash-sliced
   // postings carrying tf/dl + per-bucket stats rows; served scores are
   // bit-identical to the Retrieval.bm25 scan by the shared-fold contract).
 
@@ -2624,12 +2512,10 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     })
   }
 
-  /** The kwindex family writer bound to one analyzer (the shared
-    * build/refresh helpers fix the writer signature). */
-  private def kwWriter(analyzer: String)
-      : (DataFrame, String, String, Column, String, Long) => Unit =
-    (df, idc, dc, pb, path, max) =>
-      KeywordIndex.writeWithPb(df, idc, dc, pb, path, max, analyzer)
+  /** The kwindex family writer bound to one analyzer. */
+  private def kwWriter(analyzer: String): PostingsWriter = (rows, build) =>
+    KeywordIndex.writeWithPb(rows, "id", "document", col("pt"), build.toString,
+      maxRowsPerFile, analyzer)
 
   /** Build the keyword-stats (BM25) sidecar over the current version,
     * tokenized with the collection's [[analyzer]] (stamped into the
@@ -2720,18 +2606,23 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   def keywordTopK(queryTerms: Seq[String], n: Int,
                   k1: Double = 1.2, b: Double = 0.75,
                   where: Option[Where] = None,
-                  whereDoc: Option[WhereDocument] = None): DataFrame = {
+                  whereDoc: Option[WhereDocument] = None): DataFrame =
+    keywordRead(n, where, whereDoc, Retrieval.rankTopN) { (m, a, index) =>
+      val terms = analyzedTerms(queryTerms, a)
+      index.fold(Retrieval.bm25(keywordCorpus(m), "id", "document", terms, k1, b, a))(
+        idx => KeywordIndex.bm25Scores(readIndexBuild(idx), terms, k1, b))
+    }
+
+  /** The body both keyword reads share: one meta snapshot and its
+    * analyzer, the servable sidecar (or None for the corpus scan) handed
+    * to `scores`, then the prefilters and the top-n rank. */
+  private def keywordRead(n: Int, where: Option[Where], whereDoc: Option[WhereDocument],
+                          rank: (DataFrame, Int) => DataFrame)(
+      scores: (CollectionMeta, String, Option[Path]) => DataFrame): DataFrame = {
     require(n > 0, s"n must be positive, got $n")
     val m = meta
     val a = analyzerOf(m)
-    val terms = analyzedTerms(queryTerms, a)
-    val scores = servableKwIndex(m, a) match {
-      case Some(idx) =>
-        KeywordIndex.bm25Scores(readIndexBuild(idx), terms, k1, b)
-      case None =>
-        Retrieval.bm25(keywordCorpus(m), "id", "document", terms, k1, b, a)
-    }
-    Retrieval.rankTopN(keywordEligible(scores, m, where, whereDoc), n)
+    rank(keywordEligible(scores(m, a, servableKwIndex(m, a)), m, where, whereDoc), n)
   }
 
   private def keywordCorpus(m: CollectionMeta): DataFrame = {
@@ -2748,18 +2639,14 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * predicate pushes to parquet) semi-joined onto the O(matching
     * postings) score stream, so the sidecar path never re-reads the
     * corpus beyond the filter columns. whereDoc rides the trigram
-    * postings index when one is committed ([[docIndexConfine]]), the
+    * postings index when one is committed ([[prefiltered]]), the
     * same scale path get/query take. No-op without filters. */
   private def keywordEligible(scores: DataFrame, m: CollectionMeta,
                               where: Option[Where],
                               whereDoc: Option[WhereDocument]): DataFrame =
     if (where.isEmpty && whereDoc.isEmpty) scores
-    else {
-      var snap = docIndexConfine(snapshotDF(m), m, whereDoc)
-      ChromaFilter.predicate(where, whereDoc, col("document"), keyResolver(snap))
-        .foreach(p => snap = snap.filter(p))
-      scores.join(snap.select("id"), Seq("id"), "left_semi")
-    }
+    else scores.join(prefiltered(snapshotDF(m), m, where, whereDoc).select("id"),
+      Seq("id"), "left_semi")
 
   /** The BATCH form of [[keywordTopK]] — one pruned sidecar read (or one
     * corpus scan on the fallback path) serves every query in the batch:
@@ -2768,19 +2655,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   def keywordTopKBatch(queries: Seq[Seq[String]], n: Int,
                        k1: Double = 1.2, b: Double = 0.75,
                        where: Option[Where] = None,
-                       whereDoc: Option[WhereDocument] = None): DataFrame = {
-    require(n > 0, s"n must be positive, got $n")
-    val m = meta
-    val a = analyzerOf(m)
-    val analyzed = queries.map(q => analyzedTerms(q, a))
-    val scores = servableKwIndex(m, a) match {
-      case Some(idx) =>
-        KeywordIndex.bm25ScoresBatch(readIndexBuild(idx), analyzed, k1, b)
-      case None =>
-        Retrieval.bm25Batch(keywordCorpus(m), "id", "document", analyzed, k1, b, a)
+                       whereDoc: Option[WhereDocument] = None): DataFrame =
+    keywordRead(n, where, whereDoc, Retrieval.rankTopNBatch) { (m, a, index) =>
+      val analyzed = queries.map(q => analyzedTerms(q, a))
+      index.fold(Retrieval.bm25Batch(keywordCorpus(m), "id", "document", analyzed, k1, b, a))(
+        idx => KeywordIndex.bm25ScoresBatch(readIndexBuild(idx), analyzed, k1, b))
     }
-    Retrieval.rankTopNBatch(keywordEligible(scores, m, where, whereDoc), n)
-  }
 
   /** The corpus tokenization rule applied to a query text — the
     * collection's [[analyzer]] via the shared [[Retrieval.queryTerms]]
@@ -2951,11 +2831,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     require(snapshotDF(m).columns.contains("document"),
       s"collection '${m.name}' carries no document column — MaxSim scores " +
         "chunk vectors of the document text")
-    val efName = m.metadata.getOrElse("embedding_function",
-      throw new IllegalStateException(
-        s"collection '$name' has no registered embedding function — " +
-          "hydrate via addDocuments; MaxSim embeds chunks AND query tokens"))
-    val ef = resolveEmbedder(efName)
+    val ef = recordedEmbedder(m,
+      "hydrate via addDocuments; MaxSim embeds chunks AND query tokens")
     val terms = graft.operators.Retrieval.queryTerms(text, analyzerOf(m))
     require(terms.nonEmpty, s"query text '$text' has no tokens under the " +
       s"'${analyzerOf(m)}' analyzer")
@@ -2983,26 +2860,14 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   private def indexLayoutCols(build: Path): Seq[String] =
     if (ivfFamily.hasPbSlices(build)) Seq("cell", "pb") else Seq("cell")
 
-  /** B6 query: top-k nearest neighbors with optional prefilters. When a
-    * committed index matches the current version, the scan prunes to the
-    * `nprobe` nearest cells (Chroma parity: its HNSW read path is also
-    * approximate); `exact = true` forces the full brute-force scan. */
-  /** Guard against the silent-garbage failure mode of a dimension
-    * mismatch: VectorDistance yields NULL when lengths differ, and a rank
-    * window sorts nulls first — the caller would get k arbitrary rows
-    * with null distances instead of an error. One-row probe, Chroma-add
-    * parity (Chroma rejects mismatched dimensions at query time too). */
-  private def requireDim(qdim: Int): Unit =
-    dim().foreach { d =>
-      require(d == qdim,
-        s"query vector dimension $qdim != collection dimension $d")
-    }
-
   /** The collection's embedding dimension (None while empty): a one-row
     * probe, valid because add/hydrate enforce uniform dimensions. */
-  def dim(): Option[Int] =
-    currentData.flatMap(_ =>
-      toDF.select(size(col("embedding")).as("d")).limit(1).collect()
+  def dim(): Option[Int] = snapshotDim(meta)
+
+  /** [[dim]] of ONE meta snapshot. */
+  private def snapshotDim(m: CollectionMeta): Option[Int] =
+    currentDataOf(m).flatMap(_ =>
+      snapshotDF(m).select(size(col("embedding")).as("d")).limit(1).collect()
         .headOption.map(_.getInt(0)))
 
   /** A positive-integer tuning key from collection metadata. LOUD on a
@@ -3031,36 +2896,85 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       s"collection columns ${clash.mkString(", ")} collide with kNN output names; rename them")
   }
 
-  def query(queryVec: Seq[Float], k: Int, where: Option[Where] = None,
-            whereDoc: Option[WhereDocument] = None, nprobe: Int = 0,
-            exact: Boolean = false): DataFrame = {
-    requireDim(queryVec.length)
-    val m = meta
-    ivfOrScan(m, exact) match {
-      case Some((idxPath, cents)) =>
-        val cells = Ann.nearestCellsOf(cents, queryVec, resolveNprobe(m, nprobe))
-        val indexed = readIndexBuild(idxPath)
+  /** The rows one vector read scores (probed IVF cells or the exact scan,
+    * prefiltered), the index-layout columns to drop from its output, and
+    * on the IVF path the centroids, PQ codebooks and per-query cells. */
+  private final class VectorScan(
+      val rows: DataFrame, val layoutCols: Seq[String],
+      val centroids: Option[Array[(Int, Array[Double])]], val pq: Option[Ann.PqModel],
+      val cellsPerQuery: Seq[Seq[Int]]) {
+    def dropLayout(df: DataFrame): DataFrame =
+      if (layoutCols.isEmpty) df else df.drop(layoutCols: _*)
+  }
+
+  /** The prelude every vector read shares, against ONE meta snapshot `m`:
+    * argument gates — the query dimension is checked against THIS
+    * snapshot, so a concurrent `replaceContents` cannot slip a wrong-
+    * dimension query past the guard into VectorDistance's NULL distances
+    * (which a rank window sorts first: k arbitrary rows, no error) — then
+    * the IVF-or-scan choice, cell probing, the reserved-name check,
+    * `cell isin` pruning and [[prefiltered]]. `pqPlain` marks a PQ read
+    * (naming its plain counterpart for the error): it is LOUD without a
+    * committed PQ-coded build — silently falling back to brute force
+    * would hide exactly the cost the PQ surface exists to avoid. */
+  private def vectorScan(m: CollectionMeta, op: String, queryVecs: Seq[Seq[Float]],
+                         k: Int, where: Option[Where], whereDoc: Option[WhereDocument],
+                         nprobe: Int, exact: Boolean, reserved: Seq[String],
+                         pqPlain: Option[String] = None): VectorScan = {
+    require(queryVecs.nonEmpty, s"$op needs at least one query vector")
+    val dims = queryVecs.map(_.length).distinct
+    require(dims.size == 1, s"query vectors must share one dimension, got $dims")
+    require(k > 0, s"k must be positive, got $k")
+    snapshotDim(m).foreach { d =>
+      require(d == dims.head, s"query vector dimension ${dims.head} != collection dimension $d")
+    }
+    val index =
+      if (pqPlain.isEmpty) ivfOrScan(m, exact)
+      else Some(currentIndex(m).getOrElse(throw new IllegalStateException(
+        s"collection '${m.name}' has no committed index for version ${m.version} — run buildIndexPq")))
+    val pq = index.flatMap { case (build, _) => pqModelOf(build) }
+    pqPlain.filter(_ => pq.isEmpty).foreach { plain =>
+      throw new IllegalStateException(
+        s"index build ${index.get._1} carries no PQ codebooks — built with buildIndex? " +
+          s"run buildIndexPq for the ADC path or $plain() for the plain one")
+    }
+    val (base, layoutCols, cellsPerQuery) = index match {
+      case Some((build, cents)) =>
+        // per-query probe sets, chosen locally from the tiny centroid
+        // table; the scan prunes to the UNION of probed cells
+        val np = resolveNprobe(m, nprobe)
+        val cellsPerQ = queryVecs.map(v => Ann.nearestCellsOf(cents, v, np))
+        val indexed = readIndexBuild(build)
         // `codes` on a PQ-coded build (= the codebook sidecar exists) is
-        // index layout like cell/pb — the exact read path must not leak it
-        // into results; keyed on the SIDECAR, not the column name, so a
-        // plain IVF build over a user data column named codes keeps it
-        val layoutCols = indexLayoutCols(idxPath) ++
-          (if (pqModelOf(idxPath).isDefined) Seq("codes") else Nil)
-        requireNoReserved(indexed.drop(layoutCols: _*), Seq("dist"))
+        // index layout like cell/pb — reads must not leak it into results;
+        // keyed on the SIDECAR, not the column name, so a plain IVF build
+        // over a user data column named codes keeps it
+        val layout = indexLayoutCols(build) ++ (if (pq.isDefined) Seq("codes") else Nil)
+        requireNoReserved(indexed.drop(layout: _*), reserved)
         // `cell` is the index layout's partition column — the isin lands in
         // the scan as a PartitionFilter, so only the probed cells' files
         // are even listed (PlanShapeSpec pins this)
-        val pruned = docIndexConfine(
-          indexed.filter(col("cell").isin(cells: _*)), m, whereDoc)
-        Knn.topK(pruned, "id", "embedding", queryVec, k, m.space,
-          ChromaFilter.predicate(where, whereDoc, col("document"), keyResolver(indexed)))
-          .drop(layoutCols: _*)
+        (indexed.filter(col("cell").isin(cellsPerQ.flatten.distinct: _*)), layout, cellsPerQ)
       case None =>
-        val df = docIndexConfine(snapshotDF(m), m, whereDoc)
-        requireNoReserved(df, Seq("dist"))
-        Knn.topK(df, "id", "embedding", queryVec, k, m.space,
-          ChromaFilter.predicate(where, whereDoc, col("document"), keyResolver(df)))
+        val df = snapshotDF(m)
+        requireNoReserved(df, reserved)
+        (df, Nil, Nil)
     }
+    new VectorScan(prefiltered(base, m, where, whereDoc), layoutCols,
+      index.map(_._2), pq, cellsPerQuery)
+  }
+
+  /** B6 query: top-k nearest neighbors with optional prefilters. When a
+    * committed index matches the current version, the scan prunes to the
+    * `nprobe` nearest cells (Chroma parity: its HNSW read path is also
+    * approximate); `exact = true` forces the full brute-force scan. */
+  def query(queryVec: Seq[Float], k: Int, where: Option[Where] = None,
+            whereDoc: Option[WhereDocument] = None, nprobe: Int = 0,
+            exact: Boolean = false): DataFrame = {
+    val m = meta
+    val s = vectorScan(m, "query", Seq(queryVec), k, where, whereDoc, nprobe, exact,
+      Seq("dist"))
+    s.dropLayout(Knn.topK(s.rows, "id", "embedding", queryVec, k, m.space))
   }
 
   /** B6 batch form: Chroma's `query` accepts a LIST of query embeddings
@@ -3080,51 +2994,26 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   private def queryBatchOf(m: CollectionMeta, queryVecs: Seq[Seq[Float]], k: Int,
                            where: Option[Where], whereDoc: Option[WhereDocument],
                            nprobe: Int, exact: Boolean): DataFrame = {
-    require(queryVecs.nonEmpty, "queryBatch needs at least one query vector")
-    require(queryVecs.map(_.length).distinct.size == 1,
-      s"query vectors must share one dimension, got ${queryVecs.map(_.length).distinct}")
-    requireDim(queryVecs.head.length)
-    ivfOrScan(m, exact) match {
-      case Some((idxPath, cents)) =>
-        // per-query probe sets, chosen driver-side from the tiny centroid
-        // table; the corpus scan prunes to the UNION of probed cells at the
-        // file-listing level, and the broadcast join condition then keeps
-        // each (query, row) pair only when the row's cell is in THAT
-        // query's probe set — one pruned scan serves the whole batch.
-        val np = resolveNprobe(m, nprobe)
-        val cellsPerQ = queryVecs.map(v => Ann.nearestCellsOf(cents, v, np))
-        val allCells = cellsPerQ.flatten.distinct
-        val indexed = readIndexBuild(idxPath)
-        // see query(): codes is index layout iff the PQ sidecar exists
-        val layoutCols = indexLayoutCols(idxPath) ++
-          (if (pqModelOf(idxPath).isDefined) Seq("codes") else Nil)
-        requireNoReserved(indexed.drop(layoutCols: _*),
-          Seq("qid", "rnk", "dist", "__qvec", "__qcells", "__na", "__nq"))
-        val pruned = docIndexConfine(
-          indexed.filter(col("cell").isin(allCells: _*)), m, whereDoc)
-        ChromaFilter.predicate(where, whereDoc, col("document"), keyResolver(indexed))
-          .map(pruned.filter).getOrElse(pruned) match { case base =>
-            val spark0 = base.sparkSession
-            import spark0.implicits._
-            val queries = queryVecs.zipWithIndex
-              .map { case (v, i) => (i, v, cellsPerQ(i)) }.toDF("qid", "__qvec", "__qcells")
-            val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("id"))
-            base.join(broadcast(queries), array_contains(col("__qcells"), col("cell")))
-              .withColumn("dist",
-                graft.functions.Distances.bySpace(m.space)(col("embedding"), col("__qvec")))
-              .withColumn("rnk", row_number().over(w))
-              .filter(col("rnk") <= k)
-              .drop("embedding" +: "__qvec" +: "__qcells" +: layoutCols: _*)
-        }
-      case None =>
-        val df = docIndexConfine(snapshotDF(m), m, whereDoc)
-        requireNoReserved(df, Seq("qid", "rnk", "dist", "__qvec", "__na", "__nq"))
-        val spark0 = df.sparkSession
-        import spark0.implicits._
-        val queries = queryVecs.zipWithIndex.map(_.swap).toDF("qid", "qvec")
-        Knn.topKBatch(df, "id", "embedding", queries, "qid", "qvec", k, m.space,
-          ChromaFilter.predicate(where, whereDoc, col("document"), keyResolver(df)),
-          excludeSelf = false)
+    val s = vectorScan(m, "queryBatch", queryVecs, k, where, whereDoc, nprobe, exact,
+      Seq("qid", "rnk", "dist", "__qvec", "__qcells", "__na", "__nq"))
+    import spark.implicits._
+    if (s.centroids.isEmpty) {
+      val queries = queryVecs.zipWithIndex.map(_.swap).toDF("qid", "qvec")
+      Knn.topKBatch(s.rows, "id", "embedding", queries, "qid", "qvec", k, m.space,
+        excludeSelf = false)
+    } else {
+      // the broadcast join condition keeps each (query, row) pair only
+      // when the row's cell is in THAT query's probe set — one pruned
+      // scan serves the whole batch
+      val queries = queryVecs.zipWithIndex
+        .map { case (v, i) => (i, v, s.cellsPerQuery(i)) }.toDF("qid", "__qvec", "__qcells")
+      val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("id"))
+      s.rows.join(broadcast(queries), array_contains(col("__qcells"), col("cell")))
+        .withColumn("dist",
+          graft.functions.Distances.bySpace(m.space)(col("embedding"), col("__qvec")))
+        .withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= k)
+        .drop("embedding" +: "__qvec" +: "__qcells" +: s.layoutCols: _*)
     }
   }
 
@@ -3261,7 +3150,9 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     }: _*)
 
   /** B10 count / peek. */
-  def count(): Long = currentData.fold(0L)(_ => toDF.count())
+  def count(): Long = snapshotCount(meta)
+  private def snapshotCount(m: CollectionMeta): Long =
+    currentDataOf(m).fold(0L)(_ => snapshotDF(m).count())
   def peek(n: Int = 10): DataFrame = toDF.orderBy("id").limit(n)
 
   /** B11 modify: rename is a catalog move; metadata is a meta.json update. */
@@ -3338,13 +3229,16 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     .filter(v => io.exists(CollectionMeta.commitMarker(dir, v)))
     .sorted
 
+  /** LOUD unless `version`'s data dir and commit marker both survive. */
+  private def requireCommitted(version: Int, problem: String): Unit =
+    require(io.exists(dataDir(version)) &&
+        io.exists(CollectionMeta.commitMarker(dir, version)),
+      s"$problem (available: ${history().mkString(", ")})")
+
   /** Time-travel read: the collection exactly as committed at `version`.
     * Free — the COW layout IS the snapshot; nothing is copied. */
   def toDFAt(version: Int): DataFrame = {
-    require(io.exists(dataDir(version)) &&
-        io.exists(CollectionMeta.commitMarker(dir, version)),
-      s"version $version is not a committed on-disk version " +
-        s"(available: ${history().mkString(", ")})")
+    requireCommitted(version, s"version $version is not a committed on-disk version")
     readVersion(version).drop("pt")
   }
 
@@ -3355,10 +3249,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * content (leaf dirs as scan ROOTS, so the internal `pt` bucket
     * column never infers — the same shape toDF's drop produces). */
   private[graft] def leafDataDirs(version: Int): Seq[String] = {
-    require(io.exists(dataDir(version)) &&
-        io.exists(CollectionMeta.commitMarker(dir, version)),
-      s"version $version is not a committed on-disk version " +
-        s"(available: ${history().mkString(", ")})")
+    requireCommitted(version, s"version $version is not a committed on-disk version")
     Carry.owners(io, dir, dataDir(version), "pt=").toSeq.sortBy(_._1)
       .map { case (part, owner) => new Path(owner, part).toString }
   }
@@ -3412,18 +3303,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   def rollbackTo(version: Int): Unit = {
     val m = meta
     require(version != m.version, s"already at version $version")
-    require(io.exists(dataDir(version)) &&
-        io.exists(CollectionMeta.commitMarker(dir, version)),
-      s"cannot roll back to non-committed/vacuumed version $version " +
-        s"(available: ${history().mkString(", ")})")
-    val next = claimNext(m)
-    val newDir = dataDir(next.version)
-    try {
+    requireCommitted(version, s"cannot roll back to non-committed/vacuumed version $version")
+    commitNext(m) { newDir =>
       io.mkdirs(newDir)
       Carry.write(io, newDir, Carry.owners(io, dir, dataDir(version), "pt=")
         .map { case (part, owner) => part -> owner.getName })
-    } catch { case e: Throwable => abandon(next); throw e }
-    commit(next)
+    }
   }
 
   /** Rewrite the current version into a fresh one with freshly-packed
@@ -3440,7 +3325,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       // also collapses a long mutation history's carry-manifest owner
       // spread back to one dir (run vacuum after to reclaim the old dirs)
       val df = readVersion(m.version).drop("pt")
-      writeVersion(df, m, repack = true)
+      writeVersion(df, m)
     }
   }
 
@@ -3466,39 +3351,29 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * never sees a partial compaction. */
   def compactIndexes(keepRefreshAxis: Boolean = true): Int = {
     val m = meta
-    var n = 0
-    currentIndex(m).foreach { case (old, cents) =>
-      val claimed = ivfFamily.claim(m.version)
-      val assigned0 = readIndexBuild(old)
-      val withPb = keepRefreshAxis && assigned0.columns.contains("pb")
-      val assigned = if (withPb) assigned0 else assigned0.drop("pb")
-      // one task per cell → exactly one file per leaf slice
-      Ann.writeIvf(Ann.IvfModel(cents, assigned.repartition(col("cell"))),
-        claimed.toString, withPb = withPb)
-      // a PQ-coded build keeps its codebooks through the repack (codes
-      // ride automatically — they are a data column)
-      pqModelOf(old).foreach(p =>
-        Ann.writePqSidecar(claimed, p, spark.sparkContext.hadoopConfiguration))
-      io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
-      n += 1
-    }
-    for (f <- postingsFamilies; old <- f.current(m)) {
+    val ivf = currentIndex(m)
+    val builds = ivf.map(ivfFamily -> _._1).toSeq ++
+      postingsFamilies.flatMap(f => f.current(m).map(f -> _))
+    builds.foreach { case (f, old) =>
       val claimed = f.claim(m.version)
-      val postings0 = readIndexBuild(old)
-      val withPb = keepRefreshAxis && postings0.columns.contains("pb")
+      val rows0 = readIndexBuild(old)
+      val withPb = keepRefreshAxis && rows0.columns.contains("pb")
       // dropping the pb axis merges the keyword family's per-bucket
       // STATS rows' slices too — they keep their reserved tp partition,
       // and queries sum them regardless of slicing, so corpus totals are
       // unchanged
-      val postings = if (withPb) postings0 else postings0.drop("pb")
-      val parts = if (withPb) Seq(f.axis, "pb") else Seq(f.axis)
-      postings.repartition(col(f.axis)).write.mode("overwrite")
+      val rows = if (withPb) rows0 else rows0.drop("pb")
+      // one task per cell / axis value → exactly one file per leaf slice;
+      // a PQ-coded build keeps its codebooks (codes ride along as data)
+      if (f == ivfFamily)
+        writeIvfBuild(claimed, Ann.IvfModel(ivf.get._2, rows), pqModelOf(old), withPb)
+      else rows.repartition(col(f.axis)).write.mode("overwrite")
         .option("maxRecordsPerFile", maxRowsPerFile)
-        .partitionBy(parts: _*).parquet(claimed.toString)
-      io.writeBytes(new Path(claimed, "_graft_committed"), Array.emptyByteArray)
-      n += 1
+        .partitionBy((if (withPb) Seq(f.axis, "pb") else Seq(f.axis)): _*)
+        .parquet(claimed.toString)
+      f.commit(claimed)
     }
-    n
+    builds.size
   }
 
   /** Drop superseded copy-on-write versions, keeping the current one plus
@@ -3513,8 +3388,6 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       s"keepHistory must be >= 0, got $keepHistory (negative would delete the LIVE version)")
     val current = meta.version
     val cutoff = current - keepHistory
-    def versionOf(p: Path): Int =
-      p.getName.dropWhile(!_.isDigit).takeWhile(_.isDigit).toInt
     // every index family follows the same build discipline and is
     // vacuumed alike; live-build tracking is keyed (family, version) so
     // the families never shadow each other
@@ -3526,11 +3399,11 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // retained versions still shed superseded/crashed index BUILDS — only
     // the highest committed build (the one readers adopt) survives
     val liveBuild: Map[(String, Int), Int] = versioned
-      .filter(p => kindOf(p).isDefined && io.exists(new Path(p, "_graft_committed")))
-      .groupBy(p => (kindOf(p).get, versionOf(p)))
+      .filter(p => kindOf(p).isDefined && isCommitted(p))
+      .groupBy(p => (kindOf(p).get, indexVersionOf(p)))
       .view.mapValues(_.map(buildNumberOf).max).toMap
     val provisionallyDead = versioned.filter { p =>
-      val v = versionOf(p)
+      val v = indexVersionOf(p)
       v < cutoff || kindOf(p).exists(k =>
         liveBuild.get((k, v)).exists(buildNumberOf(p) < _))
     }.toSet
@@ -3553,7 +3426,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // reclaimed — a torn snapshot. Retired ≠ reclaimed: it is not counted
     // in the returned total.
     provisionallyDead.filter(p => referenced.contains(p.getName))
-      .foreach(p => io.deleteIfExists(new Path(p, "_graft_committed")))
+      .foreach(p => io.deleteIfExists(new Path(p, CollectionMeta.CommittedName)))
     // retired version-claim files (cutoff <= current, so the commit record
     // of the live version always survives)
     io.list(dir).filter(e => CollectionMeta.isClaimFile(e.name))
@@ -3640,11 +3513,15 @@ object Collection {
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Array[Double])]]()
 
+  /** Sidecar cache key of a committed build: its path plus the marker's
+    * mtime as the reborn-path nonce. */
+  private def buildKey(io: StoreIO, build: Path): String =
+    s"$build@${io.modTime(new Path(build, CollectionMeta.CommittedName))}"
+
   private[catalog] def cachedCentroids(
       io: StoreIO, build: Path,
       hadoopConf: org.apache.hadoop.conf.Configuration): Option[Array[(Int, Array[Double])]] = {
-    val marker = new Path(build, "_graft_committed")
-    val key = s"$build@${io.modTime(marker)}"
+    val key = buildKey(io, build)
     Option(centroidCache.get(key)).orElse {
       val parsed = graft.operators.Ann.readCentroids(build.toString, hadoopConf)
       parsed.foreach(centroidCache.put(key, _))
@@ -3662,8 +3539,7 @@ object Collection {
   private[catalog] def cachedPqModel(
       io: StoreIO, build: Path,
       hadoopConf: org.apache.hadoop.conf.Configuration): Option[graft.operators.Ann.PqModel] = {
-    val marker = new Path(build, "_graft_committed")
-    val key = s"$build@${io.modTime(marker)}"
+    val key = buildKey(io, build)
     Option(pqCache.get(key)).getOrElse {
       val parsed = graft.operators.Ann.readPqSidecar(build, hadoopConf)
       pqCache.put(key, parsed)

@@ -189,13 +189,20 @@ object ChromaRestServer {
       s"include must be an array of strings, got $other")
   }
 
+  /** A 32-bit integer field: a value outside the Int range is rejected,
+    * never wrapped (`l.toInt`) or saturated (`d.toInt`) into a different
+    * request. */
   private def intOf(m: Map[String, Any], key: String): Option[Int] =
     m.get(key).filter(_ != null).map {
-      case l: Long => l.toInt
-      case d: Double if d.isWhole => d.toInt
+      case l: Long if l.isValidInt => l.toInt
+      case d: Double if d.isValidInt => d.toInt
       case other => throw new IllegalArgumentException(
-        s"$key must be an integer, got $other")
+        s"$key must be an integer in the 32-bit range, got $other")
     }
+
+  /** A paging field (`limit`, `offset`): an [[intOf]] that is >= 0. */
+  private def pageOf(m: Map[String, Any], key: String): Option[Int] =
+    intOf(m, key).map { v => require(v >= 0, s"$key must be >= 0, got $v"); v }
 
   private def serveGet(coll: graft.catalog.Collection, body: String): String = {
     val m = parsedBody(body)
@@ -206,8 +213,8 @@ object ChromaRestServer {
     val include = includeOf(m, Set("documents", "metadatas"),
       Set("documents", "embeddings", "metadatas"))
     val row = coll.getStruct(ids = ids, where = whereOf(m),
-        whereDoc = whereDocOf(m), limit = intOf(m, "limit"),
-        offset = intOf(m, "offset").getOrElse(0), include = include)
+        whereDoc = whereDocOf(m), limit = pageOf(m, "limit"),
+        offset = pageOf(m, "offset").getOrElse(0), include = include)
       .head()
     val nIds = row.getAs[scala.collection.Seq[_]]("ids").size
     val out = Seq.newBuilder[String]

@@ -41,16 +41,25 @@ class ChromaRestServerSpec extends SparkTestBase {
   /** Raw wire client for the handful of direct-shape asserts; non-2xx
     * fails with the server's own error body in the message. */
   private def rawPost(url: String, body: String): String = {
+    val (code, resp) = post(url, body)
+    assert(code / 100 == 2, s"HTTP $code from $url: $resp")
+    resp
+  }
+
+  /** (HTTP status, response body) of one POST. */
+  private def post(url: String, body: String): (Int, String) = {
     val conn = new java.net.URL(url).openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
     conn.setRequestMethod("POST"); conn.setDoOutput(true)
     conn.getOutputStream.write(body.getBytes("UTF-8"))
     val code = conn.getResponseCode
     val is = if (code / 100 == 2) conn.getInputStream else conn.getErrorStream
-    val resp = new String(is.readAllBytes(), "UTF-8")
-    assert(code / 100 == 2, s"HTTP $code from $url: $resp")
-    resp
+    (code, new String(is.readAllBytes(), "UTF-8"))
   }
+
+  private def verbUrl(srv: ChromaRestServer, coll: String, verb: String): String =
+    s"${srv.baseUrl}/api/v2/tenants/default_tenant/databases/" +
+      s"default_database/collections/gcol-$coll/$verb"
 
   test("loopback read: ChromaRestSource.read reassembles the served collection (v2)") {
     val cat = freshCat("restsrv-read")
@@ -224,6 +233,42 @@ class ChromaRestServerSpec extends SparkTestBase {
         .select(col("rnk"), col("id"), col("dist")).orderBy("rnk")
         .as[(Int, String, Double)].collect().toSeq
       assert(remote == local)
+    }
+  }
+
+  test("n_results of 0 or below answers 400, not an empty 200") {
+    val cat = freshCat("restsrv-k")
+    hydrated(cat)
+    withServer(cat) { srv =>
+      for (n <- Seq("0", "-3")) {
+        val (code, resp) = post(verbUrl(srv, "served", "query"),
+          s"""{"query_embeddings":[[1,1,1]],"n_results":$n}""")
+        assert(code == 400, s"n_results $n: HTTP $code $resp")
+        assert(resp.contains("k must be positive"), resp)
+      }
+    }
+  }
+
+  test("integer fields outside the 32-bit range, and negative paging, answer 400") {
+    val cat = freshCat("restsrv-int")
+    hydrated(cat)
+    withServer(cat) { srv =>
+      def status(verb: String, body: String): (Int, String) =
+        post(verbUrl(srv, "served", verb), body)
+      // 4294967306 = 2^32 + 10: a wrapping toInt would serve 10 rows
+      val (wrapped, wrappedResp) = status("get", """{"limit":4294967306}""")
+      assert(wrapped == 400 && wrappedResp.contains("32-bit range"), wrappedResp)
+      // 1e12 would saturate to Int.MaxValue
+      val (saturated, satResp) = status("query",
+        """{"query_embeddings":[[1,1,1]],"n_results":1e12}""")
+      assert(saturated == 400 && satResp.contains("32-bit range"), satResp)
+      val (negLimit, negLimitResp) = status("get", """{"limit":-1}""")
+      assert(negLimit == 400 && negLimitResp.contains("limit must be >= 0"), negLimitResp)
+      val (negOffset, negOffsetResp) = status("get", """{"offset":-1}""")
+      assert(negOffset == 400 && negOffsetResp.contains("offset must be >= 0"), negOffsetResp)
+      // in-range values still serve
+      assert(status("get", """{"limit":2,"offset":1}""")._1 == 200)
+      assert(status("get", """{"limit":2.0}""")._1 == 200)
     }
   }
 }

@@ -80,4 +80,38 @@ class IndexFamilySpec extends graft.SparkTestBase {
     assert(builds(coll)("docindex").isEmpty)
     assertReadsMatchScans(c)
   }
+
+  test("forkCollection carries every family's current build, never a version-stale one") {
+    val root = tmpDir("family-fork")
+    val cat = new CollectionCatalog(spark, root, numBuckets = 4)
+    val c = cat.getOrCreateCollection("src")
+    c.add(rows(0 until 24))
+    c.buildIndex(nlist = 2)
+    c.buildDocIndex()
+    c.buildKeywordIndex()
+    val fork = cat.forkCollection("src", "dst")
+    assert(fork.hasIndex && fork.hasDocIndex && fork.hasKeywordIndex)
+    assert(builds(new Path(root, "dst")) ==
+      families.map(f => f -> Set(s"${f}_v000001.b000")).toMap)
+    val q = Seq(7f, 3f)
+    val brown = Some(ChromaFilter.Contains("brown fox"))
+    val terms = Seq("brown", "w2", "dog")
+    assert(fork.query(q, k = 5, nprobe = 1).collect().toSeq ==
+      c.query(q, k = 5, nprobe = 1).collect().toSeq)
+    assert(fork.get(whereDoc = brown).collect().toSeq == c.get(whereDoc = brown).collect().toSeq)
+    assert(fork.keywordTopK(terms, 6).collect().toSeq == c.keywordTopK(terms, 6).collect().toSeq)
+    assertReadsMatchScans(fork)
+
+    // every build goes version-stale; only the IVF family is refreshed, so
+    // only it may travel with the next fork
+    c.upsert(Seq(("id4", "rewritten brown fox w2", Seq(7f, 3f)))
+      .toDF("id", "document", "embedding"))
+    assert(c.refreshIndex() == 1)
+    val fork2 = cat.forkCollection("src", "dst2")
+    assert(fork2.hasIndex && !fork2.hasDocIndex && !fork2.hasKeywordIndex)
+    assert(builds(new Path(root, "dst2")) ==
+      Map("index" -> Set("index_v000001.b000"), "docindex" -> Set.empty[String],
+        "kwindex" -> Set.empty[String]))
+    assertReadsMatchScans(fork2)
+  }
 }
