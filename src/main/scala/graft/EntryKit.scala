@@ -101,6 +101,24 @@ private[graft] trait EntryKit {
     java.lang.Long.toHexString(st.getModificationTime ^ (st.getLen * 1315423911L))
   }
 
+  /** The reuse-or-rebuild protocol of every fingerprint-cached fixture
+    * collection: `name` is reused when its `source_fp` metadata equals
+    * `fp` and it is `ready` (its sidecar indexes committed); otherwise it
+    * is dropped, `build` creates and fills it afresh, and `fp` is stamped
+    * last — a build that dies before the stamp is redone on the next
+    * access. */
+  private[graft] def cachedCollection(cat: CollectionCatalog, name: String, fp: String,
+                                      ready: Collection => Boolean = _ => true)(
+      build: => Collection): Collection =
+    cat.getCollection(name)
+      .filter(c => c.meta.metadata.get("source_fp").contains(fp) && ready(c))
+      .getOrElse {
+        cat.deleteCollection(name)
+        val c = build
+        c.modifyMetadata(Map("source_fp" -> fp))
+        c
+      }
+
   /** The fingerprint-cached keyword-indexed collection shared by q154 and
     * q157 (the sidecar BM25 read and the indexed hybrid fusion): the full
     * documents table hydrated THROUGH an incremental keyword-index
@@ -114,10 +132,7 @@ private[graft] trait EntryKit {
     // target) — BM25 scores are independent of extra metadata columns,
     // so q154/q157/q159 hashes are unchanged by the re-hydration
     val fp = s"kwx2|$dir|tag=${fixtureTag(s, dir, "documents")}"
-    val reusable = cat.getCollection("kwx").exists(c =>
-      c.meta.metadata.get("source_fp").contains(fp) && c.hasKeywordIndex)
-    val coll = if (reusable) cat.getCollection("kwx").get else {
-      cat.deleteCollection("kwx")
+    val coll = cachedCollection(cat, "kwx", fp, _.hasKeywordIndex) {
       val c = cat.getOrCreateCollection("kwx")
       val all = docs.select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang"))
@@ -126,7 +141,6 @@ private[graft] trait EntryKit {
       c.upsert(all.filter(col("id").cast("long") % 7 === 3))
       val rebuilt = c.refreshKeywordIndex()
       require(rebuilt > 0, "kwx must exercise an incremental refresh")
-      c.modifyMetadata(Map("source_fp" -> fp))
       c
     }
     require(coll.hasKeywordIndex, "kwx must serve through the keyword sidecar")
@@ -145,10 +159,7 @@ private[graft] trait EntryKit {
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     val fp = s"kwa1|$dir|tag=${fixtureTag(s, dir, "documents")}"
-    val reusable = cat.getCollection("kwa").exists(c =>
-      c.meta.metadata.get("source_fp").contains(fp) && c.hasKeywordIndex)
-    val coll = if (reusable) cat.getCollection("kwa").get else {
-      cat.deleteCollection("kwa")
+    val coll = cachedCollection(cat, "kwa", fp, _.hasKeywordIndex) {
       val c = cat.getOrCreateCollection("kwa",
         metadata = Map(Collection.AnalyzerKey -> "simple"))
       val all = docs.select(col("doc_id").cast("string").as("id"),
@@ -159,7 +170,6 @@ private[graft] trait EntryKit {
       c.upsert(all.filter(col("id").cast("long") % 7 === 3))
       val rebuilt = c.refreshKeywordIndex()
       require(rebuilt > 0, "kwa must exercise an incremental refresh")
-      c.modifyMetadata(Map("source_fp" -> fp))
       c
     }
     require(coll.hasKeywordIndex && coll.analyzer == "simple",
@@ -177,10 +187,7 @@ private[graft] trait EntryKit {
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     val fp = s"dix3|$dir|tag=${fixtureTag(s, dir, "documents")}"
-    val reusable = cat.getCollection("dix").exists(c =>
-      c.meta.metadata.get("source_fp").contains(fp) && c.hasDocIndex)
-    val coll = if (reusable) cat.getCollection("dix").get else {
-      cat.deleteCollection("dix")
+    val coll = cachedCollection(cat, "dix", fp, _.hasDocIndex) {
       val c = cat.getOrCreateCollection("dix")
       val all = docs.select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang"), col("n_chars"))
@@ -189,7 +196,6 @@ private[graft] trait EntryKit {
       c.upsert(all.filter(col("id").cast("long") % 7 === 3))
       val rebuilt = c.refreshDocIndex()
       require(rebuilt > 0, "dix must exercise an incremental refresh")
-      c.modifyMetadata(Map("source_fp" -> fp))
       c
     }
     require(coll.hasDocIndex, "dix must exercise the postings index")
@@ -205,15 +211,11 @@ private[graft] trait EntryKit {
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     val fp = s"qtd2|$dir|tag=${fixtureTag(s, dir, "documents")}|embed=hash16"
-    val reusable = cat.getCollection("qtd").exists(c =>
-      c.meta.metadata.get("source_fp").contains(fp) && c.hasDocIndex)
-    val coll = if (reusable) cat.getCollection("qtd").get else {
-      cat.deleteCollection("qtd")
+    val coll = cachedCollection(cat, "qtd", fp, _.hasDocIndex) {
       val c = cat.getOrCreateCollection("qtd", space = "cosine")
       c.addDocuments(docs.select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang")), HashingEmbedder(16))
       c.buildDocIndex()
-      c.modifyMetadata(Map("source_fp" -> fp))
       c
     }
     require(coll.hasDocIndex, "qtd must exercise the postings index")
@@ -230,15 +232,11 @@ private[graft] trait EntryKit {
     // fp v2: rows carry lang (q166's hybrid where-filter target); the
     // unfiltered q158/q163 hashes are metadata-column-independent
     val fp = s"hyx2|$dir|tag=${fixtureTag(s, dir, "documents")}"
-    val reusable = cat.getCollection("hyx").exists(c =>
-      c.meta.metadata.get("source_fp").contains(fp) && c.hasKeywordIndex)
-    val coll = if (reusable) cat.getCollection("hyx").get else {
-      cat.deleteCollection("hyx")
+    val coll = cachedCollection(cat, "hyx", fp, _.hasKeywordIndex) {
       val c = cat.getOrCreateCollection("hyx", space = "cosine")
       c.addDocuments(docs.select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang")), HashingEmbedder(16))
       c.buildKeywordIndex()
-      c.modifyMetadata(Map("source_fp" -> fp))
       c
     }
     require(coll.hasKeywordIndex, "hyx must serve the keyword leg through the sidecar")
@@ -252,16 +250,50 @@ private[graft] trait EntryKit {
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     val fp = s"qtpq1|$dir|tag=${fixtureTag(s, dir, "documents")}|embed=hash16|cs=0-7|ps=1-16|m=8"
-    val reusable = cat.getCollection("qtpq").exists(c =>
-      c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex)
-    if (reusable) cat.getCollection("qtpq").get else {
-      cat.deleteCollection("qtpq")
+    cachedCollection(cat, "qtpq", fp, _.hasIndex) {
       val c = cat.getOrCreateCollection("qtpq", space = "cosine")
       c.addDocuments(docs.select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang")), HashingEmbedder(16))
       c.buildIndexPqSeeded((0L until 8L).map(_.toString),
         (1L to 16L).map(_.toString), m = 8)
-      c.modifyMetadata(Map("source_fp" -> fp))
+      c
+    }
+  }
+
+  /** The fingerprint-cached seeded IVF-PQ collection over `emb` (the
+    * embeddings table) shared by q140 and q144 (single and batch PQ
+    * reads). fp = store-format/algo tag + source + BUILD PARAMS: any
+    * change to encode/codebook semantics bumps the tag (pq1->pq2 flushed
+    * the r11 pre-commit build) and any re-seed/re-dial changes the param
+    * tail — fingerprint reuse can never serve a stale build (VERDICT r11
+    * #1b). String ids, so every tie-break is string order in both
+    * engines. */
+  private[graft] def pqidxCollection(s: SparkSession, dir: String, emb: DataFrame): Collection = {
+    val cat = new CollectionCatalog(s, verifyCollectionsRoot(dir))
+    val fp = s"pq2|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7|ps=1-16|m=8"
+    cachedCollection(cat, "pqidx", fp, _.hasIndex) {
+      val c = cat.getOrCreateCollection("pqidx", "cosine")
+      c.add(emb.select(col("vec_id").cast("string").as("id"),
+        col("embedding"), col("label")))
+      c.buildIndexPqSeeded((0L until 8L).map(_.toString),
+        (1L to 16L).map(_.toString), m = 8)
+      c
+    }
+  }
+
+  /** The fingerprint-cached RESIDUAL IVF-PQ collection over `emb` shared
+    * by q145 and q149 (single and batch residual reads). PQ seeds are
+    * disjoint from cell seeds: a cell seed's residual is the zero vector
+    * (q141's degeneracy argument). */
+  private[graft] def pqridxCollection(s: SparkSession, dir: String, emb: DataFrame): Collection = {
+    val cat = new CollectionCatalog(s, verifyCollectionsRoot(dir))
+    val fp = s"pqr1|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7|ps=10-25|m=8"
+    cachedCollection(cat, "pqridx", fp, _.hasIndex) {
+      val c = cat.getOrCreateCollection("pqridx", "cosine")
+      c.add(emb.select(col("vec_id").cast("string").as("id"),
+        col("embedding"), col("label")))
+      c.buildIndexPqResidualSeeded((0L until 8L).map(_.toString),
+        (10L to 25L).map(_.toString), m = 8)
       c
     }
   }

@@ -44,28 +44,6 @@ object Probe {
         }
         s32.stop()
         sys.exit(0)
-      case Some("qtime") =>
-        // phase-timing for a named query: DataFrame CONSTRUCTION (driver
-        // side: catalog resolution, fingerprint count jobs, index reads,
-        // plan building) vs EXECUTION (noop write: codegen + jobs), three
-        // reps each, under the bench-shaped session.
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        val names = args.lift(2).map(_.split(",").toSeq).getOrElse(Seq.empty)
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-        val s32 = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-        s32.sparkContext.setLogLevel("ERROR")
-        names.foreach { q =>
-          (1 to 3).foreach { rep =>
-            val t0 = System.nanoTime()
-            val df = SparkEntry.queries(q)(s32, sfDir)
-            val t1 = System.nanoTime()
-            df.write.mode("overwrite").format("noop").save()
-            val t2 = System.nanoTime()
-            println(f"[qtime] $q rep$rep construct=${(t1 - t0) / 1e9}%.3f s exec=${(t2 - t1) / 1e9}%.3f s")
-          }
-        }
-        s32.stop()
-        sys.exit(0)
       case Some("jobcount") =>
         // load-immune evidence for construct-phase job removal (the
         // fixture-fingerprint change): count Spark JOBS submitted during

@@ -119,15 +119,11 @@ private[graft] trait QueriesAnn extends EntryKit {
       // are immutable) guards the reuse: any mismatch — including a stale
       // artifact from an older store layout — drops and rebuilds.
       val fp = s"ivf2|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7"
-      val reusable = cat.getCollection("ivfq").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex)
-      val coll = if (reusable) cat.getCollection("ivfq").get else {
-        cat.deleteCollection("ivfq")
+      val coll = cachedCollection(cat, "ivfq", fp, _.hasIndex) {
         val c = cat.getOrCreateCollection("ivfq", "cosine")
         c.add(emb.select(col("vec_id").cast("string").as("id"),
           col("embedding"), col("label")))
         c.buildIndexSeeded((0L until 8L).map(_.toString))
-        c.modifyMetadata(Map("source_fp" -> fp))
         c
       }
       coll.query(headVec(emb, 0), 10, nprobe = 2)
@@ -138,30 +134,10 @@ private[graft] trait QueriesAnn extends EntryKit {
     // column + codebook sidecar; queryPq ADC-scans (id, codes) inside the
     // probed cells — the embedding column stays unread until the fetchN
     // refine — then exact-cosine re-ranks. Same hydrate-once fingerprint
-    // reuse as q60; ids are STRINGS here, so every tie-break is string
-    // order in both engines.
+    // reuse as q60 ([[EntryKit.pqidxCollection]]).
     "q140_collection_pq_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val root = verifyCollectionsRoot(dir)
-      val cat = new CollectionCatalog(s, root)
-      // fp = store-format/algo tag + source + BUILD PARAMS: any change to
-      // encode/codebook semantics bumps the tag (pq1->pq2 flushed the r11
-      // pre-commit build) and any re-seed/re-dial changes the param tail —
-      // fingerprint reuse can never serve a stale build (VERDICT r11 #1b)
-      val fp = s"pq2|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7|ps=1-16|m=8"
-      val reusable = cat.getCollection("pqidx").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex)
-      val coll = if (reusable) cat.getCollection("pqidx").get else {
-        cat.deleteCollection("pqidx")
-        val c = cat.getOrCreateCollection("pqidx", "cosine")
-        c.add(emb.select(col("vec_id").cast("string").as("id"),
-          col("embedding"), col("label")))
-        c.buildIndexPqSeeded((0L until 8L).map(_.toString),
-          (1L to 16L).map(_.toString), m = 8)
-        c.modifyMetadata(Map("source_fp" -> fp))
-        c
-      }
-      coll.queryPq(headVec(emb, 0), 10, nprobe = 2, fetchN = 30)
+      pqidxCollection(s, dir, emb).queryPq(headVec(emb, 0), 10, nprobe = 2, fetchN = 30)
         .select(col("id"), col("adc"), col("dist"))
     }),
     // TRIPLE composition on one read (r8): a committed IVF index AND a
@@ -177,17 +153,13 @@ private[graft] trait QueriesAnn extends EntryKit {
       val root = verifyCollectionsRoot(dir)
       val cat = new CollectionCatalog(s, root)
       val fp = s"ivfdx2|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7"
-      val reusable = cat.getCollection("ivfdx").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex && c.hasDocIndex)
-      val coll = if (reusable) cat.getCollection("ivfdx").get else {
-        cat.deleteCollection("ivfdx")
+      val coll = cachedCollection(cat, "ivfdx", fp, c => c.hasIndex && c.hasDocIndex) {
         val c = cat.getOrCreateCollection("ivfdx", "cosine")
         c.add(emb.join(docs, col("vec_id") === col("doc_id"))
           .select(col("vec_id").cast("string").as("id"), col("embedding"),
             col("text").as("document"), col("lang")))
         c.buildIndexSeeded((0L until 8L).map(_.toString))
         c.buildDocIndex()
-        c.modifyMetadata(Map("source_fp" -> fp))
         c
       }
       require(coll.hasIndex && coll.hasDocIndex,
@@ -221,10 +193,7 @@ private[graft] trait QueriesAnn extends EntryKit {
       val root = verifyCollectionsRoot(dir)
       val cat = new CollectionCatalog(s, root)
       val fp = s"ivfcx2|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7"
-      val reusable = cat.getCollection("ivfcx").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex && c.hasDocIndex)
-      val coll = if (reusable) cat.getCollection("ivfcx").get else {
-        cat.deleteCollection("ivfcx")
+      val coll = cachedCollection(cat, "ivfcx", fp, c => c.hasIndex && c.hasDocIndex) {
         val c = cat.getOrCreateCollection("ivfcx", "cosine")
         val all = emb.join(docs, col("vec_id") === col("doc_id"))
           .select(col("vec_id").cast("string").as("id"), col("embedding"),
@@ -237,7 +206,6 @@ private[graft] trait QueriesAnn extends EntryKit {
         require(c.refreshIndex() > 0, "q130 must exercise an IVF refresh")
         require(c.refreshDocIndex() > 0, "q130 must exercise a postings refresh")
         require(c.compactIndexes() == 2, "q130 must compact both builds")
-        c.modifyMetadata(Map("source_fp" -> fp))
         c
       }
       require(coll.hasIndex && coll.hasDocIndex,
@@ -252,10 +220,7 @@ private[graft] trait QueriesAnn extends EntryKit {
       val root = verifyCollectionsRoot(dir)
       val cat = new CollectionCatalog(s, root)
       val fp = s"ivfr2|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7"
-      val reusable = cat.getCollection("ivfr").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex)
-      val coll = if (reusable) cat.getCollection("ivfr").get else {
-        cat.deleteCollection("ivfr")
+      val coll = cachedCollection(cat, "ivfr", fp, _.hasIndex) {
         val c = cat.getOrCreateCollection("ivfr", "cosine")
         val all = emb.select(col("vec_id").cast("string").as("id"),
           col("embedding"), col("label"))
@@ -265,7 +230,6 @@ private[graft] trait QueriesAnn extends EntryKit {
         c.upsert(all.filter(col("id").cast("long") % 17 === 9))
         val rebuilt = c.refreshIndex()
         require(rebuilt > 0, "q125 must exercise an incremental IVF refresh")
-        c.modifyMetadata(Map("source_fp" -> fp))
         c
       }
       require(coll.hasIndex, "q125 must serve from the refreshed index")
@@ -340,22 +304,7 @@ private[graft] trait QueriesAnn extends EntryKit {
     // whole per-qid pipeline keyed by qid.
     "q144_collection_pq_batch" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val root = verifyCollectionsRoot(dir)
-      val cat = new CollectionCatalog(s, root)
-      val fp = s"pq2|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7|ps=1-16|m=8"
-      val reusable = cat.getCollection("pqidx").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex)
-      val coll = if (reusable) cat.getCollection("pqidx").get else {
-        cat.deleteCollection("pqidx")
-        val c = cat.getOrCreateCollection("pqidx", "cosine")
-        c.add(emb.select(col("vec_id").cast("string").as("id"),
-          col("embedding"), col("label")))
-        c.buildIndexPqSeeded((0L until 8L).map(_.toString),
-          (1L to 16L).map(_.toString), m = 8)
-        c.modifyMetadata(Map("source_fp" -> fp))
-        c
-      }
-      coll.queryPqBatch(Seq(headVec(emb, 0), headVec(emb, 17)),
+      pqidxCollection(s, dir, emb).queryPqBatch(Seq(headVec(emb, 0), headVec(emb, 17)),
           k = 10, nprobe = 2, fetchN = 30)
         .select(col("qid"), col("rnk"), col("id"), col("adc"), col("dist"))
         .orderBy("qid", "rnk")
@@ -368,24 +317,7 @@ private[graft] trait QueriesAnn extends EntryKit {
     // self-exclusion — the store surface's semantics, q140's discipline.
     "q145_collection_pq_residual_knn" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val root = verifyCollectionsRoot(dir)
-      val cat = new CollectionCatalog(s, root)
-      val fp = s"pqr1|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7|ps=10-25|m=8"
-      val reusable = cat.getCollection("pqridx").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex)
-      val coll = if (reusable) cat.getCollection("pqridx").get else {
-        cat.deleteCollection("pqridx")
-        val c = cat.getOrCreateCollection("pqridx", "cosine")
-        c.add(emb.select(col("vec_id").cast("string").as("id"),
-          col("embedding"), col("label")))
-        // PQ seeds disjoint from cell seeds (a cell seed's residual is
-        // the zero vector — q141's degeneracy argument)
-        c.buildIndexPqResidualSeeded((0L until 8L).map(_.toString),
-          (10L to 25L).map(_.toString), m = 8)
-        c.modifyMetadata(Map("source_fp" -> fp))
-        c
-      }
-      coll.queryPq(headVec(emb, 0), 10, nprobe = 2, fetchN = 30)
+      pqridxCollection(s, dir, emb).queryPq(headVec(emb, 0), 10, nprobe = 2, fetchN = 30)
         .select(col("id"), col("adc"), col("dist"))
     }),
     // SIZE-AWARE PQ DIALS under the oracle (the q113 nBitsFor discipline
@@ -406,16 +338,12 @@ private[graft] trait QueriesAnn extends EntryKit {
       val n = emb.count()
       val ksub = Ann.pqKsubFor(n)
       val fp = s"pqauto1|$dir|n=$n|cs=0-7|ps=1-$ksub|m=8"
-      val reusable = cat.getCollection("pqauto").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex)
-      val coll = if (reusable) cat.getCollection("pqauto").get else {
-        cat.deleteCollection("pqauto")
+      val coll = cachedCollection(cat, "pqauto", fp, _.hasIndex) {
         val c = cat.getOrCreateCollection("pqauto", "cosine")
         c.add(emb.select(col("vec_id").cast("string").as("id"),
           col("embedding"), col("label")))
         c.buildIndexPqSeeded((0L until 8L).map(_.toString),
           (1L to ksub.toLong).map(_.toString), m = 8)
-        c.modifyMetadata(Map("source_fp" -> fp))
         c
       }
       coll.queryPq(headVec(emb, 0), 10, nprobe = 8, fetchN = 0)
@@ -430,22 +358,7 @@ private[graft] trait QueriesAnn extends EntryKit {
     // q145 (fingerprint-shared).
     "q149_collection_pq_residual_batch" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val root = verifyCollectionsRoot(dir)
-      val cat = new CollectionCatalog(s, root)
-      val fp = s"pqr1|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7|ps=10-25|m=8"
-      val reusable = cat.getCollection("pqridx").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasIndex)
-      val coll = if (reusable) cat.getCollection("pqridx").get else {
-        cat.deleteCollection("pqridx")
-        val c = cat.getOrCreateCollection("pqridx", "cosine")
-        c.add(emb.select(col("vec_id").cast("string").as("id"),
-          col("embedding"), col("label")))
-        c.buildIndexPqResidualSeeded((0L until 8L).map(_.toString),
-          (10L to 25L).map(_.toString), m = 8)
-        c.modifyMetadata(Map("source_fp" -> fp))
-        c
-      }
-      coll.queryPqBatch(Seq(headVec(emb, 0), headVec(emb, 17)),
+      pqridxCollection(s, dir, emb).queryPqBatch(Seq(headVec(emb, 0), headVec(emb, 17)),
           k = 10, nprobe = 2, fetchN = 30)
         .select(col("qid"), col("rnk"), col("id"), col("adc"), col("dist"))
         .orderBy("qid", "rnk")

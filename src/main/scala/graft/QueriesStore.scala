@@ -192,14 +192,11 @@ private[graft] trait QueriesStore extends EntryKit {
       val root = verifyCollectionsRoot(dir)
       val cat = new CollectionCatalog(s, root, numBuckets = 8)
       val fp = s"dsv1|$dir|tag=${fixtureTag(s, dir, "documents")}"
-      val reusable = cat.getCollection("dsv").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp))
-      if (!reusable) {
-        cat.deleteCollection("dsv")
+      cachedCollection(cat, "dsv", fp) {
         val c = cat.getOrCreateCollection("dsv")
         c.add(docs.select(col("doc_id").cast("string").as("id"),
           col("text").as("document"), col("lang"), col("n_chars")))
-        c.modifyMetadata(Map("source_fp" -> fp))
+        c
       }
       s.read.format("graft").option("root", root).option("name", "dsv").load()
         .filter(col("lang") === "en" && col("n_chars") > 200)
@@ -899,16 +896,13 @@ private[graft] trait QueriesStore extends EntryKit {
       val root = verifyCollectionsRoot(dir)
       val cat = new CollectionCatalog(s, root, numBuckets = 8)
       val fp = s"srv1|$dir|tag=${fixtureTag(s, dir, "documents")}"
-      val reusable = cat.getCollection("served")
-        .exists(_.meta.metadata.get("source_fp").contains(fp))
-      if (!reusable) {
-        cat.deleteCollection("served")
+      cachedCollection(cat, "served", fp) {
         val c = cat.getOrCreateCollection("served", space = "l2")
         c.add(docs.join(emb, col("doc_id") === col("vec_id"))
           .select(col("doc_id").cast("string").as("id"),
             col("text").as("document"), col("embedding"),
             map(lit("lang"), col("lang")).as("metadata")))
-        c.modifyMetadata(Map("source_fp" -> fp))
+        c
       }
       val srv = graft.sources.ChromaRestServer.serve(cat)
       try {

@@ -330,10 +330,7 @@ private[graft] trait QueriesStreaming extends EntryKit {
       // and the indexed read path never. A fresh root (the driver's
       // Verify) always runs the stream once.
       val fp = s"stream2|$dir|tag=${fixtureTag(s, dir, "documents")}"
-      val reusable = cat.getCollection("stream127").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp) && c.hasDocIndex)
-      val coll = if (reusable) cat.getCollection("stream127").get else {
-        cat.deleteCollection("stream127")
+      val coll = cachedCollection(cat, "stream127", fp, _.hasDocIndex) {
         val c = cat.getOrCreateCollection("stream127")
         // bounded driver-side fixture (150 rows at any sf): MemoryStream
         // is driver-fed by design; ids sorted so batch slicing is stable
@@ -362,7 +359,6 @@ private[graft] trait QueriesStreaming extends EntryKit {
         require(c.hasDocIndex,
           "q127 must end with a committed index at the CURRENT version " +
             "(the per-batch refresh is the thing under test)")
-        c.modifyMetadata(Map("source_fp" -> fp))
         c
       }
       require(coll.hasDocIndex, "q127 must serve through the refreshed index")
@@ -387,10 +383,7 @@ private[graft] trait QueriesStreaming extends EntryKit {
       val root = verifyCollectionsRoot(dir)
       val cat = new CollectionCatalog(s, root, numBuckets = 8)
       val fp = s"fstream1|$dir|tag=${fixtureTag(s, dir, "documents")}"
-      val reusable = cat.getCollection("fstream").exists(c =>
-        c.meta.metadata.get("source_fp").contains(fp))
-      val coll = if (reusable) cat.getCollection("fstream").get else {
-        cat.deleteCollection("fstream")
+      val coll = cachedCollection(cat, "fstream", fp) {
         val c = cat.getOrCreateCollection("fstream")
         val staged = cachedExport(s, dir, "documents", "q151src") { path =>
           docs.filter(col("doc_id") < 300)
@@ -410,7 +403,6 @@ private[graft] trait QueriesStreaming extends EntryKit {
         val q = StreamingHydrator.hydrate(stream, c, ckpt,
           orderCol = Some("ver"), trigger = Trigger.AvailableNow()).start()
         q.awaitTermination() // AvailableNow drains the staged files and stops
-        c.modifyMetadata(Map("source_fp" -> fp))
         c
       }
       coll.get().select(col("id"), col("lang"),

@@ -90,6 +90,13 @@ private[graft] object Carry {
       local.map(part => part -> build).toMap
   }
 
+  /** Parquet files across resolved partition dirs (an [[owners]] or
+    * [[slicedOwners]] map) — a pure listing walk, no Spark job. */
+  def parquetFileCount(io: StoreIO, owners: Map[String, Path]): Int =
+    owners.toSeq.map { case (part, owner) =>
+      io.list(new Path(owner, part)).count(e => !e.isDir && e.name.endsWith(".parquet"))
+    }.sum
+
   /** Resolved parquet read of a possibly-carrying version/build dir. The
     * manifest-free case is the plain whole-dir scan (identical plan to a
     * layout with no carry history); otherwise each physical owner dir is
@@ -116,14 +123,9 @@ private[graft] object Carry {
   * (extras/...sas:126-132: `PersistentClient(path)`,
   * `get_or_create_collection(name)`; sas:177-190: `collection.add(...)`).
   * Chroma persists to SQLite + an HNSW segment on ONE node; that shape caps
-  * out long before 100 TB. Here a collection is:
-  *
-  *   <root>/<name>/meta.json          {name, space, version, metadata}
-  *   <root>/<name>/data_v<N>/         parquet, hash(id)-bucketed `pt` dirs
-  *                                    (+ `_graft_carry.json`: buckets this
-  *                                    version did NOT rewrite → the sibling
-  *                                    dir physically holding them — see
-  *                                    [[Carry]])
+  * out long before 100 TB. Here a collection is a dir of copy-on-write
+  * data versions ([[VersionStore]] owns their layout and commit) plus
+  * sidecar index builds ([[IndexFamily]]).
   *
   * Rows: id STRING (unique), document STRING, embedding ARRAY<FLOAT>,
   * metadata columns flattened as ordinary typed columns (filter pushdown
@@ -165,14 +167,9 @@ final class CollectionCatalog(
     * build/query defaults (see [[Collection.buildIndex]] / `query`). */
   def getOrCreateCollection(name: String, space: String = "l2",
                             metadata: Map[String, String] = Map.empty): Collection = {
-    // dot-prefixed names are reserved for in-flight build temps (fork):
-    // they are hidden from listCollections and subject to reclamation —
-    // admitting one here would create a collection that can silently
-    // disappear (chromadb likewise constrains collection names)
-    require(!name.startsWith("."),
-      s"collection name '$name' is invalid: dot-prefixed names are reserved")
+    requireName(name)
     val dir = new Path(root, name)
-    if (!io.exists(new Path(dir, "meta.json"))) {
+    if (!VersionStore.isCollection(io, dir)) {
       // validate BEFORE touching the filesystem: a conflict must not
       // leave a meta-less collection dir behind
       val effSpace = resolvedSpace(space, metadata)
@@ -189,12 +186,50 @@ final class CollectionCatalog(
       // write instead would let the slower creator silently overwrite
       // the winner's space). Same CAS primitive as version claims —
       // the per-backend atomicity caveats in [[StoreIO]] apply alike.
-      try io.createExclusive(new Path(dir, "meta.json"),
+      try io.createExclusive(VersionStore.pointer(dir),
         CollectionMeta.toJson(CollectionMeta(name, effSpace, 0, metadata, numBuckets))
           .getBytes(StandardCharsets.UTF_8))
       catch { case _: java.nio.file.FileAlreadyExistsException => () }
     }
     new Collection(spark, io, dir, maxRowsPerFile)
+  }
+
+  /** Dot-prefixed names are reserved for in-flight build temps
+    * ([[adopted]]): they are hidden from listCollections and subject to
+    * reclamation — admitting one would create a collection that can
+    * silently disappear (chromadb likewise constrains collection names). */
+  private def requireName(name: String): Unit =
+    require(!name.startsWith("."),
+      s"collection name '$name' is invalid: dot-prefixed names are reserved")
+
+  /** Crash- and reject-safe adoption: collection `name` is BUILT in the
+    * dot-prefixed temp sibling `.<kind>-tmp-<name>` and lands via ONE
+    * atomic rename (the pattern of the pointer's atomicWrite), so the
+    * target is either absent or complete and the call stays retryable: a
+    * crash leaves only the temp, which the retry reclaims first, and a
+    * CAUGHT failure reclaims it eagerly (best-effort — the rethrow wins). */
+  private def adopted(kind: String, name: String)(build: Path => Unit): Collection = {
+    val tmpDir = new Path(root, s".$kind-tmp-$name")
+    if (io.exists(tmpDir)) io.deleteRecursively(tmpDir)
+    io.mkdirs(tmpDir)
+    try build(tmpDir)
+    catch { case e: Throwable =>
+      try io.deleteRecursively(tmpDir)
+      catch { case scala.util.control.NonFatal(_) => () }
+      throw e
+    }
+    val dstDir = new Path(root, name)
+    io.moveDir(tmpDir, dstDir)
+    new Collection(spark, io, dstDir, maxRowsPerFile)
+  }
+
+  /** The fitted embedding-model sidecar of `fromDir`, if any, into
+    * `toDir`: the embedding-function BINDING travels in metadata, and the
+    * MODEL must travel with it or the copy cannot queryText. */
+  private def copyEmbedder(fromDir: Path, toDir: Path): Unit = {
+    val sidecar = new Path(fromDir, Collection.EmbedderSidecar)
+    if (io.exists(sidecar))
+      io.writeBytes(new Path(toDir, Collection.EmbedderSidecar), io.readBytes(sidecar))
   }
 
   /** Chroma's `hnsw:space` metadata convention vs the `space` parameter:
@@ -211,7 +246,7 @@ final class CollectionCatalog(
 
   def getCollection(name: String): Option[Collection] = {
     val dir = new Path(root, name)
-    if (io.exists(new Path(dir, "meta.json")))
+    if (VersionStore.isCollection(io, dir))
       Some(new Collection(spark, io, dir, maxRowsPerFile))
     else None
   }
@@ -223,8 +258,7 @@ final class CollectionCatalog(
       // collections — a crashed fork temp must not list as one; the
       // meta.json probe additionally excludes crashed half-creates
       val entries = io.list(root).filter(!_.name.startsWith("."))
-      def isColl(e: DirEntry): Boolean =
-        io.exists(new Path(e.path, "meta.json"))
+      def isColl(e: DirEntry): Boolean = VersionStore.isCollection(io, e.path)
       // the probe is one filesystem round trip PER entry — free on a
       // local FS (r17 audit: 10k collections list in 0.09 s) but N
       // sequential HEADs on an object store (~10-20 ms each → minutes at
@@ -279,58 +313,25 @@ final class CollectionCatalog(
     * fails loudly on the missing file, never links half a version
     * silently (the commit marker is written only after a complete walk). */
   def forkCollection(from: String, to: String): Collection = {
-    require(!to.startsWith("."),
-      s"collection name '$to' is invalid: dot-prefixed names are reserved")
+    requireName(to)
     val srcDir = new Path(root, from)
-    require(io.exists(new Path(srcDir, "meta.json")), s"no such collection: $from")
-    val dstDir = new Path(root, to)
-    require(!io.exists(dstDir), s"collection '$to' already exists")
-    // Crash-safe adoption: the fork is BUILT in a temp sibling and lands
-    // via ONE atomic rename (the same pattern meta.json's atomicWrite
-    // uses). The old in-place build had unretryable crash residue: a
-    // death between createDirectories(dstDir) and the final meta write
-    // left a meta-less dstDir holding a stale version claim — a retry
-    // hit "already exists", and getOrCreateCollection would lay a v0
-    // meta over orphaned v1 data. Now a crash leaves only the temp
-    // (reclaimed on retry below); dstDir is either absent or complete.
-    val tmpDir = new Path(root, s".fork-tmp-$to")
-    if (io.exists(tmpDir)) io.deleteRecursively(tmpDir)
-    val src = CollectionMeta.read(io, srcDir)
-    val lineage = s"${src.name}@v${src.version}"
-    io.mkdirs(tmpDir)
-    val srcData = new Path(srcDir, f"data_v${src.version}%06d")
-    if (!io.exists(srcData)) {
-      // never-written source → an empty fork, lineage still recorded
-      writeMeta(tmpDir, CollectionMeta(to, src.space, 0,
-        src.metadata + ("forked_from" -> lineage), src.buckets))
-    } else {
-      val dst = CollectionMeta(to, src.space, 1,
-        src.metadata + ("forked_from" -> lineage), src.buckets)
-      CollectionMeta.claimVersion(io, tmpDir, dst)
-      val dstData = new Path(tmpDir, f"data_v${1}%06d")
-      io.mkdirs(dstData)
-      // resolve the source's carry manifest: a carried bucket's files live
-      // in an OLDER sibling dir, and the fork must carry the physical
-      // files (a manifest cannot cross the collection boundary)
-      Carry.owners(io, srcDir, srcData, "pt=").foreach { case (part, owner) =>
-        val from = new Path(owner, part); val into = new Path(dstData, part)
-        io.mkdirs(into)
-        io.list(from).filterNot(_.isDir).foreach(f =>
-          io.carryFile(f.path, new Path(into, f.name)))
-      }
-      // the embedding-function BINDING travels in metadata — the fitted
-      // MODEL sidecar must travel with it or the fork cannot queryText
-      val sidecar = new Path(srcDir, Collection.EmbedderSidecar)
-      if (io.exists(sidecar))
-        io.writeBytes(new Path(tmpDir, Collection.EmbedderSidecar),
-          io.readBytes(sidecar))
-      // committed sidecar indexes, re-keyed to v1 (see scaladoc)
-      new Collection(spark, io, srcDir, maxRowsPerFile).copyBuildsForFork(src, tmpDir)
-      io.writeBytes(CollectionMeta.commitMarker(tmpDir, 1), Array.emptyByteArray)
-      CollectionMeta.atomicWrite(io, tmpDir, dst)
+    require(VersionStore.isCollection(io, srcDir), s"no such collection: $from")
+    require(!io.exists(new Path(root, to)), s"collection '$to' already exists")
+    adopted("fork", to) { tmpDir =>
+      val source = new VersionStore(spark, io, srcDir, maxRowsPerFile)
+      val src = source.meta
+      // born at v0, lineage recorded; a never-written source stays an
+      // empty fork, any other commits v1 through the store's commit path
+      val born = CollectionMeta(to, src.space, 0,
+        src.metadata + ("forked_from" -> s"${src.name}@v${src.version}"), src.buckets)
+      writeMeta(tmpDir, born)
+      if (source.currentDataOf(src).nonEmpty)
+        new VersionStore(spark, io, tmpDir, maxRowsPerFile).writeForkedVersion(born, source, src) {
+          copyEmbedder(srcDir, tmpDir)
+          // committed sidecar indexes, re-keyed to v1 (see scaladoc)
+          new Collection(spark, io, srcDir, maxRowsPerFile).copyBuildsForFork(src, tmpDir)
+        }
     }
-    io.moveDir(tmpDir, dstDir)
-    new Collection(spark, io, dstDir, maxRowsPerFile)
   }
 
   /** Import an [[Collection.export]]'d parquet directory as a NEW
@@ -343,8 +344,7 @@ final class CollectionCatalog(
     * fails loudly instead of seeding a bad store. */
   def importCollection(name: String, path: String, space: String = "l2",
                        metadata: Map[String, String] = Map.empty): Collection = {
-    require(!name.startsWith("."),
-      s"collection name '$name' is invalid: dot-prefixed names are reserved")
+    requireName(name)
     require(getCollection(name).isEmpty, s"collection '$name' already exists")
     val df = spark.read.parquet(path)
     require(df.columns.contains("id"),
@@ -372,41 +372,21 @@ final class CollectionCatalog(
         s"import source records a fitted embedding function but carries no " +
           s"${Collection.EmbedderSidecar} sidecar — the model cannot be " +
           "reconstructed from the name; re-export the source collection")
-    // Reject-safe adoption (same pattern as forkCollection): the load runs
-    // against a dot-prefixed temp sibling and lands via ONE atomic rename,
-    // so a rejected source (duplicate ids, ragged dims — add()'s gates) or
-    // a crash leaves NO registered collection behind and the import stays
-    // retryable. The old in-place build registered the collection BEFORE
-    // add() gated the data, so a rejected source left an empty collection
-    // whose retry died on 'already exists' — the same unretryable-residue
-    // class forkCollection was fixed for.
-    val tmpDir = new Path(root, s".import-tmp-$name")
-    if (io.exists(tmpDir)) io.deleteRecursively(tmpDir)
-    io.mkdirs(tmpDir)
-    writeMeta(tmpDir, CollectionMeta(name, effSpace, 0, effMetadata, numBuckets))
-    if (io.exists(exportedSidecar))
-      io.writeBytes(new Path(tmpDir, Collection.EmbedderSidecar),
-        io.readBytes(exportedSidecar))
-    try new Collection(spark, io, tmpDir, maxRowsPerFile).add(df)
-    catch { case e: Throwable =>
-      // reclaim eagerly on a CAUGHT rejection (a crash leaves the temp for
-      // the retry's reclamation above); best-effort — the rethrow wins
-      try io.deleteRecursively(tmpDir)
-      catch { case scala.util.control.NonFatal(_) => () }
-      throw e
+    // a rejected source (duplicate ids, ragged dims — add()'s gates)
+    // leaves NO registered collection behind ([[adopted]])
+    adopted("import", name) { tmpDir =>
+      writeMeta(tmpDir, CollectionMeta(name, effSpace, 0, effMetadata, numBuckets))
+      copyEmbedder(new Path(path), tmpDir)
+      new Collection(spark, io, tmpDir, maxRowsPerFile).add(df)
     }
-    val dstDir = new Path(root, name)
-    io.moveDir(tmpDir, dstDir)
-    new Collection(spark, io, dstDir, maxRowsPerFile)
   }
 
   /** B11 rename: catalog-level move + meta.json name update (atomic dir
     * move on the same filesystem; data files untouched). */
   def renameCollection(from: String, to: String): Boolean = {
-    require(!to.startsWith("."),
-      s"collection name '$to' is invalid: dot-prefixed names are reserved")
+    requireName(to)
     val src = new Path(root, from); val dst = new Path(root, to)
-    if (!io.exists(new Path(src, "meta.json")) || io.exists(dst)) false
+    if (!VersionStore.isCollection(io, src) || io.exists(dst)) false
     else {
       io.moveDir(src, dst)
       val m = CollectionMeta.read(io, dst)
@@ -417,123 +397,6 @@ final class CollectionCatalog(
 
   private[catalog] def writeMeta(dir: Path, meta: CollectionMeta): Unit =
     CollectionMeta.atomicWrite(io, dir, meta)
-}
-
-final case class CollectionMeta(
-    name: String,
-    space: String,
-    version: Int,
-    metadata: Map[String, String],
-    buckets: Int = 32)
-
-object CollectionMeta {
-  /** Minimal hand-rolled JSON (flat strings/ints only) — no extra deps.
-    * Braces and control characters are \uXXXX-escaped so the regex reader
-    * below can delimit the metadata object without a full JSON parser. */
-  def toJson(m: CollectionMeta): String = {
-    def q(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' || c == '{' || c == '}' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val md = m.metadata.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
-    s"""{"name": ${q(m.name)}, "space": ${q(m.space)}, "version": ${m.version}, "buckets": ${m.buckets}, "metadata": $md}"""
-  }
-
-  private def unescape(raw: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < raw.length) {
-      if (raw(i) == '\\' && i + 1 < raw.length) raw(i + 1) match {
-        case 'u' => sb.append(Integer.parseInt(raw.substring(i + 2, i + 6), 16).toChar); i += 6
-        case 'n' => sb.append('\n'); i += 2
-        case c   => sb.append(c); i += 2
-      } else { sb.append(raw(i)); i += 1 }
-    }
-    sb.toString
-  }
-
-  def fromJson(s: String): CollectionMeta = {
-    def str(k: String) = ("\"" + k + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      .findFirstMatchIn(s).map(m => unescape(m.group(1)))
-    def int(k: String) = ("\"" + k + "\"\\s*:\\s*(\\d+)").r
-      .findFirstMatchIn(s).map(_.group(1).toInt)
-    val mdBody = ("\"metadata\"\\s*:\\s*\\{([^}]*)\\}").r.findFirstMatchIn(s).map(_.group(1)).getOrElse("")
-    val md = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findAllMatchIn(mdBody).map(m => unescape(m.group(1)) -> unescape(m.group(2))).toMap
-    CollectionMeta(str("name").get, str("space").getOrElse("l2"),
-      int("version").getOrElse(0), md, int("buckets").getOrElse(32))
-  }
-
-  private[catalog] def claimFile(dir: Path, version: Int): Path =
-    new Path(dir, f"meta.v$version%06d.json")
-
-  private[catalog] def isClaimFile(name: String): Boolean =
-    name.startsWith("meta.v") && name.endsWith(".json")
-
-  private[catalog] def claimVersionOf(name: String): Int =
-    name.stripPrefix("meta.v").stripSuffix(".json").toInt
-
-  /** Completeness marker of a data version or an index build, written
-    * LAST: readers adopt only dirs that carry it. */
-  private[catalog] val CommittedName = "_graft_committed"
-
-  /** `data_v<N>/_graft_committed`: written after ALL data work for the
-    * version (parquet write + carry manifest) — `_SUCCESS` alone is not
-    * enough, Spark writes it before the carry pass. */
-  private[catalog] def commitMarker(dir: Path, version: Int): Path =
-    new Path(new Path(dir, f"data_v$version%06d"), CommittedName)
-
-  /** Current meta = the `meta.json` pointer, unless a newer COMMITTED
-    * claim exists (claim file + its version's completeness marker): a
-    * writer that crashed between the marker and the pointer refresh
-    * cannot lose its commit, and a claim whose data write never finished
-    * is never served. The common path compares claim-file NAMES only —
-    * no extra reads/parses when the pointer is current. Version ties
-    * prefer the pointer (rename refreshes only the pointer's `name`). */
-  def read(io: StoreIO, dir: Path): CollectionMeta = {
-    val pointerPath = new Path(dir, "meta.json")
-    val pointer =
-      if (io.exists(pointerPath))
-        Some(fromJson(new String(io.readBytes(pointerPath), StandardCharsets.UTF_8)))
-      else None
-    val floor = pointer.map(_.version).getOrElse(-1)
-    val adopted = io.list(dir).filter(e => isClaimFile(e.name))
-      .filter(e => claimVersionOf(e.name) > floor)
-      .sortBy(e => claimVersionOf(e.name)).reverse
-      .find(e => io.exists(commitMarker(dir, claimVersionOf(e.name))))
-      .map(e => fromJson(new String(io.readBytes(e.path), StandardCharsets.UTF_8)))
-    adopted.orElse(pointer).getOrElse(
-      throw new java.nio.file.NoSuchFileException(pointerPath.toString))
-  }
-
-  /** Atomically claim `meta.version`: `O_CREAT|O_EXCL` create of the
-    * version-numbered claim file — of two racing writers exactly one
-    * create succeeds; the loser gets `FileAlreadyExistsException`. (A
-    * `Files.move` without `REPLACE_EXISTING` is NOT a CAS on POSIX: the
-    * provider stat-checks then rename(2)s, and rename silently replaces.)
-    * This is the one true serialization point of the copy-on-write commit
-    * protocol, taken BEFORE any data write. Claim content is only parsed
-    * by readers after the commit marker exists, so the non-atomic content
-    * write is safe. */
-  private[catalog] def claimVersion(io: StoreIO, dir: Path, meta: CollectionMeta): Unit =
-    io.createExclusive(claimFile(dir, meta.version),
-      toJson(meta).getBytes(StandardCharsets.UTF_8))
-
-  def atomicWrite(io: StoreIO, dir: Path, meta: CollectionMeta): Unit = {
-    // tmp name is UNIQUE per call: two live writers refreshing the
-    // pointer concurrently (commit of v2 racing commit of v3) must not
-    // share a staging file — with a fixed name, one writer's replace
-    // consumes the other's tmp and the victim fails AFTER its commit
-    // marker landed (a commit reported as failed that actually
-    // succeeded). With unique tmps both replaces land; whichever pointer
-    // loses the last-rename race is harmless — the pointer is a cache,
-    // read() recovers the newest COMMITTED claim above it.
-    val tmp = new Path(dir, s"meta.json.tmp.${java.util.UUID.randomUUID}")
-    io.writeBytes(tmp, toJson(meta).getBytes(StandardCharsets.UTF_8))
-    io.replace(tmp, new Path(dir, "meta.json"))
-  }
 }
 
 /** chromadb ≥0.4.15 tenant/database namespaces — the multi-team surface
@@ -625,240 +488,22 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
 
   import ChromaFilter.{Where, WhereDocument}
 
-  def meta: CollectionMeta = CollectionMeta.read(io, dir)
+  /** The data-version MVCC: layout, bucket hash, reads and commits. */
+  private val versions = new VersionStore(spark, io, dir, maxRowsPerFile)
 
-  /** The bucket count is part of the collection's on-disk identity: a
-    * session configured differently must still merge against the layout the
-    * data was written with, or bucket-pruned merges would corrupt it. */
-  private def numBuckets: Int = meta.buckets
+  def meta: CollectionMeta = versions.meta
+
   def name: String = meta.name
   def space: String = meta.space
 
-  private def dataDir(v: Int): Path = new Path(dir, f"data_v$v%06d")
-
-  // Every mutation reads `meta` ONCE, derives its inputs from that
-  // snapshot, and passes the same snapshot to the commit as the expected
-  // CAS value — a fresh re-read at commit time would compare fresh
-  // against fresh and wave through a concurrent commit (lost update).
-  private def currentDataOf(m: CollectionMeta): Option[Path] = {
-    val p = dataDir(m.version)
-    if (io.exists(p)) Some(p) else None
-  }
-
-  /** Opt-in MUTATION-LOCALITY bucketing (`graft:pt_prefix_sep` collection
-    * metadata, set at creation): when present, the pt hash covers only
-    * the id's PREFIX up to the first separator occurrence — so every id
-    * of one tenant/prefix lands in ONE bucket, a tenant-confined
-    * mutation touches one pt slice, and the postings-sidecar refresh
-    * carry actually carries (BASELINE.md r16 measured full-SPREAD
-    * refresh ≈ rebuild; r17 measures the locality win). Ids without the
-    * separator hash whole — mixed corpora stay correct. The setting is
-    * LAYOUT (like `buckets`): immutable once data exists
-    * ([[modifyMetadata]] guards). Trade-off to size consciously: bucket
-    * balance now follows tenant sizes — a whale tenant is a whale
-    * bucket (the store's occupancy/skew diagnostics read on it). */
-  private def ptPrefixSep: Option[String] =
-    meta.metadata.get(Collection.PtPrefixSepKey).filter(_.nonEmpty)
-
-  private def bucketed(df: DataFrame): DataFrame = {
-    val key = ptPrefixSep.fold(col("id"))(sep => substring_index(col("id"), sep, 1))
-    df.withColumn("pt", pmod(xxhash64(key), lit(numBuckets)).cast("int"))
-  }
-
-  /** The pt buckets a literal id list can live in — the writer's own hash
-    * ([[bucketed]]'s xxhash64-of-id) evaluated driver-side per id, so a
-    * point read lists and scans ONLY the partition dirs that can hold its
-    * rows: at numBuckets=32 a one-id `get` touches 1 directory instead of
-    * 32 (and at 100 TB, 1/numBuckets of the corpus's files instead of all
-    * of them — parquet row-group stats prune WITHIN files, but only
-    * partition pruning prunes the listing itself). None (= scan all) when
-    * the stored id column is not STRING: the hash is type-sensitive, and
-    * a legacy non-string layout must stay correct over fast. */
-  private def ptBucketsOf(cur: DataFrame, ids: Seq[String]): Option[Seq[Int]] =
-    if (!cur.schema.fields.exists(f =>
-        f.name == "id" && f.dataType == org.apache.spark.sql.types.StringType)) None
-    else Some(ids.map(ptOfString).distinct)
-
-  /** The write hash of one STRING id, evaluated driver-side: Spark's own
-    * XxHash64 expression (same default seed 42 as the xxhash64() the
-    * write path uses), then Pmod's non-negative form — bit-for-bit
-    * [[bucketed]]'s hash. */
-  private def ptOfString(id: String): Int = {
-    // the same prefix rule as [[bucketed]]: substring_index(id, sep, 1)
-    // = everything before the FIRST full-separator occurrence, the whole
-    // id when absent
-    val key = ptPrefixSep.fold(id) { sep =>
-      val i = id.indexOf(sep); if (i < 0) id else id.substring(0, i)
-    }
-    val h = org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
-        org.apache.spark.sql.catalyst.expressions.Literal.create(
-          key, org.apache.spark.sql.types.StringType)), 42L)
-      .eval(org.apache.spark.sql.catalyst.InternalRow.empty)
-      .asInstanceOf[Long]
-    val nb = numBuckets.toLong
-    (((h % nb) + nb) % nb).toInt
-  }
-
-  /** Read ONE committed version's rows WITH the `pt` column, resolving
-    * carried buckets through its [[Carry]] manifest: each distinct
-    * physical owner dir contributes one parquet read of exactly its owned
-    * bucket dirs (explicit partition paths under `basePath`, so `pt`
-    * stays a real partition column and pruning behaves as on a plain dir
-    * scan), unioned by name with missing columns admitted (cross-version
-    * schema evolution, the same semantics per-dir `mergeSchema` gives).
-    * The no-carry case — every fresh write, every compacted collection —
-    * short-circuits to the plain whole-dir read: the identical plan to
-    * the pre-manifest layout (PlanShapeSpec pins it). */
-  private def readVersion(v: Int): DataFrame =
-    Carry.readResolved(spark, io, dataDir(v),
-      Carry.owners(io, dir, dataDir(v), "pt="))
-
-  /** Resolved read of an index build dir (see [[readVersion]] — same
-    * mechanics over the two-level `<axis>=<a>/pb=<b>` slice layout). */
+  /** Resolved read of an index build dir (see [[VersionStore.readVersion]]
+    * — same mechanics over the two-level `<axis>=<a>/pb=<b>` slice
+    * layout). */
   private def readIndexBuild(build: Path): DataFrame =
     Carry.readResolved(spark, io, build, Carry.slicedOwners(io, dir, build))
 
   /** Current contents (empty frame with canonical schema if never written). */
-  def toDF: DataFrame = snapshotDF(meta)
-
-  /** Current contents WITH the bucket column (internal merge path). */
-  private def currentWithPtOf(m: CollectionMeta): DataFrame =
-    readVersion(m.version)
-
-  /** Contents of ONE meta snapshot (empty canonical frame if never
-    * written). Every read surface that also consults snapshot-bound
-    * sidecars (IVF cells, posting lists) must scan THIS, not [[toDF]] —
-    * toDF re-reads meta, and a commit landing in between would pair
-    * version-N+1 data with version-N index artifacts. */
-  private def snapshotDF(m: CollectionMeta): DataFrame = currentDataOf(m) match {
-    case Some(_) => readVersion(m.version).drop("pt")
-    case None => spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.StringType, false),
-        org.apache.spark.sql.types.StructField("document", org.apache.spark.sql.types.StringType, true),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType), true))))
-  }
-
-  /** Single-writer commit: the version-claim file move is the atomic CAS
-    * (an `O_CREAT|O_EXCL` create of the version-claim file — exactly one
-    * of two racing writers succeeds; the loser fails LOUDLY instead of
-    * silently dropping the winner's rows).
-    *
-    * ORDER MATTERS: the claim is taken BEFORE any data is written, so a
-    * losing writer cannot overwrite the winner's `data_v<N+1>` directory
-    * during its (multi-second) Spark write — it never starts it. Commit
-    * then = data write → `_graft_committed` marker → pointer refresh;
-    * `read()` only adopts a claim whose marker exists, so a half-written
-    * version is never served. A claim left by a writer that crashed
-    * mid-write blocks that version until `vacuum()`/manual cleanup —
-    * loud and recoverable, never silent corruption. */
-  private def claimNext(expected: CollectionMeta): CollectionMeta = {
-    if (meta.version != expected.version) throw new java.util.ConcurrentModificationException(
-      s"collection '${expected.name}' advanced past v${expected.version} during this mutation; retry")
-    val next = expected.copy(version = expected.version + 1)
-    try CollectionMeta.claimVersion(io, dir, next)
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      throw new java.util.ConcurrentModificationException(
-        s"collection '${expected.name}' v${next.version} was claimed by a concurrent writer; retry")
-    }
-    next
-  }
-
-  /** Second half of the commit: completeness marker, then pointer. */
-  private def commit(next: CollectionMeta): Unit = {
-    io.writeBytes(CollectionMeta.commitMarker(dir, next.version), Array.emptyByteArray)
-    CollectionMeta.atomicWrite(io, dir, next)
-  }
-
-  /** Drop a claim whose data write failed (nothing was committed — the
-    * marker does not exist — so the version number can be re-claimed).
-    * The partially-written data dir is deleted FIRST: it sits ABOVE the
-    * current version number, so vacuum (which only reclaims v < current)
-    * would never collect it — without this, every rejected write (id
-    * clash, ragged-dim abort) permanently leaked a full copy of the
-    * affected buckets. Claim release comes last so a concurrent writer
-    * cannot re-claim the number while the dead dir still exists. */
-  private def abandon(next: CollectionMeta): Unit = {
-    // best-effort on the dir: abandon runs inside catch blocks that
-    // rethrow the ORIGINAL failure, and the claim release must happen
-    // even if the cleanup trips (a straggler task still flushing can race
-    // the walk) — a leftover dir is harmless (the next writer's
-    // mode(overwrite) replaces it) but a leaked claim wedges the
-    // collection permanently (vacuum only reclaims v < current)
-    try {
-      val dead = dataDir(next.version)
-      if (io.exists(dead)) io.deleteRecursively(dead)
-    } catch { case scala.util.control.NonFatal(_) => () }
-    finally io.deleteIfExists(CollectionMeta.claimFile(dir, next.version))
-  }
-
-  /** Full rewrite into a fresh version (first write / fallback /
-    * compaction), repacked to one file chain per bucket (see below). */
-  private def writeVersion(
-      df: DataFrame, expected: CollectionMeta,
-      beforeCommit: () => Unit = () => ()): Unit = commitNext(expected) { newDir =>
-    val b = bucketed(df)
-    // EVERY full write routes through the hash-by-pt exchange, not just
-    // compaction: a dynamic-partition write from W input partitions
-    // emits up to W x numBuckets files (each task starts a file per pt
-    // it holds) — a 32-wide embed pipeline feeding this store paid
-    // ~W x buckets tiny files per commit (measured: q121 1.9 -> 4.7 s
-    // when its input went 32-wide). The exchange moves one commit's
-    // batch (small by definition) and makes the layout CANONICAL — one
-    // file chain per bucket at every version, which every later pruned
-    // read pays for otherwise. Width cannot be probed here cheaply:
-    // calling .rdd on `df` would create a second plan reference, and
-    // these frames carry caller observe() nodes whose metrics must fire
-    // exactly once (the add/Hydrator single-reference contract).
-    val out = b.repartition(numBuckets, col("pt"))
-    out.write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRowsPerFile)
-      .partitionBy("pt").parquet(newDir.toString)
-    beforeCommit()
-  }
-
-  /** One version commit: claim the next version, run `write` into its
-    * data dir, then marker + pointer — or, if `write` throws, abandon the
-    * claim (nothing is ever served) and rethrow. */
-  private def commitNext(expected: CollectionMeta)(write: Path => Unit): Unit = {
-    val next = claimNext(expected)
-    try write(dataDir(next.version))
-    catch { case e: Throwable => abandon(next); throw e }
-    commit(next)
-  }
-
-  /** Partition-pruned copy-on-write (SURVEY §7.4.3): rewrite ONLY the id-hash
-    * buckets named in `affected`; every other bucket is carried forward by
-    * a [[Carry]] manifest entry pointing at the dir that physically holds
-    * it (fully resolved — a bucket carried across ten commits still
-    * records its one physical owner). At 100 TB a point upsert writes 1 of
-    * `numBuckets` buckets plus one O(buckets) metadata file — no link
-    * walk, no object-store copy storm. The meta.json swap stays atomic,
-    * so readers see either the old or the new version, never a mix.
-    *
-    * @param mergedAffected replacement rows for the affected buckets only
-    *                       (must already be exactly those buckets' content)
-    */
-  private def writeMergedVersion(
-      mergedAffected: DataFrame, affected: Set[Int], expected: CollectionMeta,
-      beforeCommit: () => Unit = () => ()): Unit = commitNext(expected) { newDir =>
-    // same canonical-layout rule as writeVersion (and the same
-    // no-.rdd-probe constraint: the merge plan carries the clash-probe
-    // observe()); the affected-bucket count bounds the exchange width
-    val out = bucketed(mergedAffected.drop("pt"))
-      .repartition(math.min(numBuckets, math.max(1, affected.size)), col("pt"))
-    out.write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRowsPerFile)
-      .partitionBy("pt").parquet(newDir.toString)
-    val carryEntries = Carry.owners(io, dir, dataDir(expected.version), "pt=")
-      .filterNot { case (part, _) =>
-        affected.contains(part.stripPrefix("pt=").toInt) }
-      .map { case (part, owner) => part -> owner.getName }
-    Carry.write(io, newDir, carryEntries)
-    beforeCommit()
-  }
+  def toDF: DataFrame = versions.snapshotDF(meta)
 
   /** ONE job for both facts every mutation needs about its batch: the
     * id-hash buckets it touches (partition pruning) and whether any id
@@ -866,14 +511,14 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * per-bucket `count vs count_distinct` detects the repeat without a
     * per-id grouping — the collect is ≤numBuckets rows regardless of batch
     * size. The offending id (error-path only) is looked up separately. */
-  private def bucketStats(df: DataFrame): (Set[Int], Boolean) = {
+  private def bucketStats(df: DataFrame, m: CollectionMeta): (Set[Int], Boolean) = {
     // count(id) counts NON-NULL ids: comparing count(*) against the
     // distinct count would misread a single null id as a "duplicate".
     // Null ids are detected as n != total per bucket (xxhash64 hashes a
     // NULL to a seed value, so a null id lands in an ordinary bucket) and
     // rejected loudly: the old per-id grouping silently admitted them,
     // and a keyed store with a null key corrupts every id-pruned read.
-    val rows = bucketed(df).groupBy("pt")
+    val rows = versions.bucketed(df, m).groupBy("pt")
       .agg(org.apache.spark.sql.functions.count(col("id")).as("n"),
         countDistinct(col("id")).as("d"),
         org.apache.spark.sql.functions.count(lit(1)).as("tot")).collect()
@@ -918,6 +563,17 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     }
   }
 
+  /** A count metric a write's observe() probe collected. Fails CLOSED:
+    * only an empty batch (sum over zero rows = null) reads as 0 — a
+    * missing or mistyped metric must abort the commit, not silently admit
+    * what the probe exists to reject. */
+  private def observedCount(obs: Observation, name: String): Long = obs.get.get(name) match {
+    case Some(l: java.lang.Long) => l.longValue()
+    case Some(null) => 0L
+    case other => throw new IllegalStateException(
+      s"$name probe metric missing or mistyped: $other")
+  }
+
   /** B1 add: batch insert; errors on duplicate ids (within the batch or vs
     * the collection) — Chroma `add()` semantics. Only the buckets receiving
     * new rows are rewritten.
@@ -931,11 +587,11 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     */
   def add(batch: DataFrame, beforeCommit: () => Unit = () => ()): Unit = withBatchPinned(batch) {
     val m = meta
-    val (affected, withinDup) = bucketStats(batch)
+    val (affected, withinDup) = bucketStats(batch, m)
     if (withinDup)
       throw new IllegalArgumentException(s"duplicate id in batch: ${firstDupId(batch)}")
-    currentDataOf(m) match {
-      case None => writeVersion(batch, m, beforeCommit = beforeCommit)
+    versions.currentDataOf(m) match {
+      case None => versions.writeVersion(batch, m, beforeCommit = beforeCommit)
       case Some(_) =>
         // clashes can only live in the batch's own buckets — probe those,
         // not the whole collection (point-inserts must stay O(affected)).
@@ -943,7 +599,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         // pruned buckets are scanned exactly once: a clash abandons the
         // claimed version pre-commit (never served), same outcome as the
         // old pre-write check but one full pass cheaper.
-        val curAffected = currentWithPtOf(m).filter(col("pt").isin(affected.toSeq: _*)).drop("pt")
+        val curAffected = versions.readVersion(m.version).filter(col("pt").isin(affected.toSeq: _*)).drop("pt")
         // the batch appears ONCE in the write plan (callers may have hung an
         // observe() on it — Hydrator does — and a second reference would
         // re-fire its metrics); the probe side is the pruned current scan,
@@ -953,19 +609,10 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
           .join(curAffected.select(col("id"), lit(1).as("__clash")), Seq("id"), "left")
           .observe(obs, sum(col("__clash")).as("clashes"))
           .drop("__clash")
-        writeMergedVersion(
+        versions.writeMergedVersion(
           curAffected.unionByName(flaggedBatch, allowMissingColumns = true), affected, m,
           beforeCommit = () => {
-            // fail CLOSED: only an empty batch (sum over zero rows = null)
-            // may read as "no clash" — a missing or mistyped metric must
-            // abort the commit, not silently admit a duplicate id
-            val clashes = obs.get.get("clashes") match {
-              case Some(l: java.lang.Long) => l.longValue()
-              case Some(null) => 0L
-              case other => throw new IllegalStateException(
-                s"clash-probe metric missing or mistyped: $other")
-            }
-            if (clashes > 0L) {
+            if (observedCount(obs, "clashes") > 0L) {
               val clash = batch.join(curAffected.select("id"), Seq("id"), "left_semi")
                 .limit(1).collect()
               throw new IllegalArgumentException(
@@ -1004,7 +651,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // validate BEFORE any write work: a typo'd space must not commit
     // (creation validates through the same gate)
     space.foreach(Collection.requireSpace)
-    val (_, withinDup) = bucketStats(batch)
+    val (_, withinDup) = bucketStats(batch, m)
     if (withinDup)
       throw new IllegalArgumentException(s"duplicate id in batch: ${firstDupId(batch)}")
     val hadBinding = m.metadata.contains("embedding_function")
@@ -1018,7 +665,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       if (cleared0.contains("hnsw:space") && newSpace != m.space)
         cleared0 + ("hnsw:space" -> newSpace)
       else cleared0
-    writeVersion(batch, m.copy(space = newSpace, metadata = cleared))
+    versions.writeVersion(batch, m.copy(space = newSpace, metadata = cleared))
     // the fitted-model sidecar pairs with the cleared fingerprint:
     // reclaim it post-commit, best-effort (an orphan is dormant without
     // a metadata binding, and a fresh fitted bind writes its own)
@@ -1096,16 +743,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val zeroVec = col("embedding").isNotNull &&
       not(exists(col("embedding"), x => x =!= lit(0.0f)))
     val zeroCnt = sum(when(zeroVec, 1L).otherwise(0L)).as("zero_vecs")
-    // fail CLOSED, like the add clash probe: a missing metric aborts;
-    // only an empty batch (sum over zero rows = null) reads as clean
-    def metric(name: String): Long = obs.get.get(name) match {
-      case Some(l: java.lang.Long) => l.longValue()
-      case Some(null) => 0L
-      case other => throw new IllegalStateException(
-        s"$name probe metric missing or mistyped: $other")
-    }
     def gateNulls(): Unit = {
-      val nulls = metric("null_embeds")
+      val nulls = observedCount(obs, "null_embeds")
       require(nulls == 0L,
         s"$nulls document(s) are null — collection documents must be non-null " +
           "(chromadb add() rejects None documents the same way)")
@@ -1114,7 +753,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       add(embedded.observe(obs, nullEmb, zeroCnt),
         beforeCommit = () => {
           gateNulls()
-          val zeros = metric("zero_vecs")
+          val zeros = observedCount(obs, "zero_vecs")
           require(zeros == 0L,
             s"$zeros document(s) embed to the zero vector — cosine distance is undefined; " +
               "drop them or use l2/ip space")
@@ -1176,9 +815,9 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     require(efName.startsWith(Embedder.TfIdfV1Prefix),
       s"collection '$name' is bound to '$efName', which is not a fitted " +
         "function family — only fitted functions re-fit")
-    require(currentDataOf(m).nonEmpty,
+    require(versions.currentDataOf(m).nonEmpty,
       s"collection '$name' is empty — nothing to re-fit on")
-    val cur = snapshotDF(m)
+    val cur = versions.snapshotDF(m)
     require(cur.columns.contains("document"),
       s"collection '$name' carries no document column — nothing to re-fit on")
     // same family, same dimension: the binding NAME stays, the model
@@ -1190,7 +829,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // in-place column REPLACE (refit's ef is always the fitted TF-IDF
     // family — compiled column path; embedFrame would append at the end
     // and silently reorder the stored layout)
-    writeVersion(cur.withColumn("embedding", ef.embedText(col("document"))),
+    versions.writeVersion(cur.withColumn("embedding", ef.embedText(col("document"))),
       expected,
       beforeCommit = () => io.writeBytes(new Path(dir, Collection.EmbedderSidecar),
         ef.modelText.getBytes(StandardCharsets.UTF_8)))
@@ -1347,32 +986,32 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // Its dup flag is ignored: within-batch dups are upsert's JOB to
     // resolve. Probing the RAW batch skips one window computation — the
     // dedup preserves the id set, so the buckets are identical.
-    val (affected, _) = bucketStats(batch.select("id"))
-    currentDataOf(m) match {
-      case None => writeVersion(dedupBatch, m)
+    val (affected, _) = bucketStats(batch.select("id"), m)
+    versions.currentDataOf(m) match {
+      case None => versions.writeVersion(dedupBatch, m)
       case Some(_) =>
-        val curAffected = currentWithPtOf(m).filter(col("pt").isin(affected.toSeq: _*)).drop("pt")
+        val curAffected = versions.readVersion(m.version).filter(col("pt").isin(affected.toSeq: _*)).drop("pt")
         val merged = curAffected.join(dedupBatch.select("id"), Seq("id"), "left_anti")
           .unionByName(dedupBatch, allowMissingColumns = true)
-        writeMergedVersion(merged, affected, m)
+        versions.writeMergedVersion(merged, affected, m)
     }
     maybeAutoCompact()
   }
 
   /** B3 update: replace non-null fields for EXISTING ids only. Only the
     * buckets containing updated ids are rewritten. */
-  def update(batch: DataFrame): Unit = { val m = meta; currentDataOf(m).foreach { _ =>
-    val (affected, dup) = bucketStats(batch.select("id"))
+  def update(batch: DataFrame): Unit = { val m = meta; versions.currentDataOf(m).foreach { _ =>
+    val (affected, dup) = bucketStats(batch.select("id"), m)
     if (dup) throw new IllegalArgumentException(
       s"duplicate id in update batch: ${firstDupId(batch)} — the left join would fan out")
-    val cur = currentWithPtOf(m).filter(col("pt").isin(affected.toSeq: _*)).drop("pt")
+    val cur = versions.readVersion(m.version).filter(col("pt").isin(affected.toSeq: _*)).drop("pt")
     val upd = batch.columns.filter(_ != "id")
     val joined = cur.alias("c").join(batch.alias("u"), Seq("id"), "left")
     val merged = joined.select(
       col("id") +: cur.columns.filter(_ != "id").map { c =>
         if (upd.contains(c)) coalesce(col(s"u.$c"), col(s"c.$c")).as(c) else col(s"c.$c").as(c)
       }: _*)
-    writeMergedVersion(merged, affected, m)
+    versions.writeMergedVersion(merged, affected, m)
     maybeAutoCompact()
   } }
 
@@ -1384,8 +1023,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   def delete(ids: Seq[String] = Nil, where: Option[Where] = None,
              whereDoc: Option[WhereDocument] = None): Unit = {
     val m = meta
-    currentDataOf(m).foreach { _ =>
-      val cur0 = currentWithPtOf(m)
+    versions.currentDataOf(m).foreach { _ =>
+      val cur0 = versions.readVersion(m.version)
       val byIds: Option[Column] = if (ids.nonEmpty) Some(col("id").isin(ids: _*)) else None
       val byPred = ChromaFilter.predicate(where, whereDoc, col("document"),
         keyResolver(cur0.drop("pt")))
@@ -1396,12 +1035,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         // the listing for a point delete)
         val scan0 =
           if (ids.isEmpty) cur0
-          else ptBucketsOf(cur0, ids).fold(cur0)(pts => cur0.filter(col("pt").isin(pts: _*)))
+          else versions.idPruned(m, cur0, ids)
         val affected = scan0.filter(coalesce(c, lit(false)))
           .select("pt").distinct().collect().map(_.getInt(0)).toSet
         if (affected.nonEmpty) {
           val cur = cur0.filter(col("pt").isin(affected.toSeq: _*)).drop("pt")
-          writeMergedVersion(cur.filter(!coalesce(c, lit(false))), affected, m)
+          versions.writeMergedVersion(cur.filter(!coalesce(c, lit(false))), affected, m)
           maybeAutoCompact()
         }
       }
@@ -1477,13 +1116,11 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val m = meta
     // id point reads prune at the PARTITION level first: the id filter is
     // verbatim on top, so pruning can only shrink IO, never the result
-    var df = if (ids.nonEmpty && currentDataOf(m).isDefined) {
-      val cur = currentWithPtOf(m)
-      ptBucketsOf(cur, ids)
-        .fold(cur)(pts => cur.filter(col("pt").isin(pts: _*)))
+    var df = if (ids.nonEmpty && versions.currentDataOf(m).isDefined) {
+      versions.idPruned(m, versions.readVersion(m.version), ids)
         .drop("pt").filter(col("id").isin(ids: _*))
     } else {
-      val base = snapshotDF(m)
+      val base = versions.snapshotDF(m)
       if (ids.nonEmpty) base.filter(col("id").isin(ids: _*)) else base
     }
     df = prefiltered(df, m, where, whereDoc)
@@ -1550,180 +1187,46 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   // The index is valid only while meta.version == V: any mutation bumps the
   // version and the read path falls back to the exact scan until a build
   // or refresh runs again — approximate answers are never served from
-  // stale data. Builds follow the [[Family]] discipline. The base store
+  // stale data. Builds follow the [[IndexFamily]] discipline. The base store
   // stays id-hash (`pt`) partitioned so merges keep their
   // O(affected-buckets) cost; the index pays one extra corpus copy, the
   // normal price of any secondary index.
 
-  /** One sidecar index family (`index` IVF/PQ, `docindex` trigram
-    * postings, `kwindex` keyword stats): version-pinned build dirs
-    * `<name>_v<V>.b<B>/` whose refreshable layout slices on
-    * `<axis>=<x>/pb=<b>`, plus the durable `_graft_has_<name>` marker.
-    * ONE discipline for every family, the data versions' MVCC: each build
-    * claims a FRESH dir (`O_CREAT|O_EXCL` directory create = the CAS,
-    * racing writers get distinct dirs), commits with its marker LAST,
-    * readers adopt the highest marker-complete build of their version
-    * (a crashed build is never adopted), and nothing is deleted in place
-    * — a rebuild cannot pull files from under an in-flight reader;
-    * [[vacuum]] reclaims superseded builds. */
-  private final class Family(val name: String, val axis: String,
-                             val refresh: () => Int) {
-    private def prefix(v: Int): String = f"${name}_v$v%06d"
-
-    /** Whether a dir name is a build of this family (any version). The
-      * `_v` suffix keeps `index_v` from matching `docindex_v`. */
-    def owns(dirName: String): Boolean = dirName.startsWith(s"${name}_v")
-
-    private def buildsOf(v: Int): Seq[Path] =
-      io.list(dir).filter { e =>
-        e.isDir && (e.name == prefix(v) || e.name.startsWith(prefix(v) + ".b"))
-      }.map(_.path)
-
-    /** Build dir `b` of version `version` under collection dir `under`. */
-    def buildDir(under: Path, version: Int, b: Int): Path =
-      new Path(under, f"${prefix(version)}.b$b%03d")
-
-    /** Highest marker-complete build for version `m.version`. */
-    def current(m: CollectionMeta): Option[Path] =
-      buildsOf(m.version).filter(isCommitted).sortBy(buildNumberOf).lastOption
-
-    /** Newest committed build of ANY version (highest (version, build))
-      * — the refresh diff basis. */
-    def newestCommitted: Option[Path] =
-      io.list(dir).filter(e => e.isDir && owns(e.name)).map(_.path)
-        .filter(isCommitted)
-        .sortBy(p => (indexVersionOf(p), buildNumberOf(p))).lastOption
-
-    /** Claim the next build dir via O_CREAT|O_EXCL directory create —
-      * racing builders each win a DISTINCT number, never share a dir. */
-    def claim(version: Int): Path = {
-      var b = buildsOf(version).map(buildNumberOf).maxOption.fold(0)(_ + 1)
-      var claimed: Path = null
-      while (claimed == null) {
-        try {
-          io.createDirExclusive(buildDir(dir, version, b))
-          claimed = buildDir(dir, version, b)
-        } catch { case _: java.nio.file.FileAlreadyExistsException => b += 1 }
-      }
-      claimed
-    }
-
-    /** Commit a fully written build: the family's identity stamp (e.g.
-      * the keyword analyzer), then the marker — LAST, so a build is never
-      * adopted unstamped or half-written. */
-    def commit(build: Path, stamp: Option[(String, String)] = None): Unit = {
-      stamp.foreach { case (f, v) =>
-        io.writeBytes(new Path(build, f), v.getBytes(StandardCharsets.UTF_8)) }
-      io.writeBytes(new Path(build, CollectionMeta.CommittedName), Array.emptyByteArray)
-    }
-
-    /** Whether `build` uses the two-level refreshable layout: its first-
-      * axis dirs hold `pb=` slices — locally, or via carry-manifest
-      * entries (a refresh that rewrote nothing has ONLY carried slices). */
-    def hasPbSlices(build: Path): Boolean =
-      io.list(build).find(e => e.isDir && e.name.startsWith(s"$axis=")).exists(g =>
-        io.list(g.path).exists(e => e.isDir && e.name.startsWith("pb="))) ||
-        Carry.read(io, build).keys.exists(k => k.startsWith(s"$axis=") && k.contains("/pb="))
-
-    private def marker: Path = new Path(dir, s"_graft_has_$name")
-
-    /** Durable "this family was built once" marker (a flat file outside
-      * the versioned build dirs): the owner's sizing decision survives
-      * even when [[vacuum]] reclaims every superseded BUILD (an
-      * overwrite makes all builds version-stale, and an overwrite+vacuum
-      * without refresh used to leave [[refreshIndexes]] with nothing to
-      * detect the family by — refresh=true on the NEXT write silently
-      * no-opped and the collection was stranded index-less with no
-      * SQL-surface recovery). Written at every build commit; self-healed
-      * by [[refreshIndexes]] for pre-marker collections. */
-    def record(): Unit = if (!io.exists(marker)) io.writeBytes(marker, Array.emptyByteArray)
-
-    def recorded: Boolean = io.exists(marker)
-
-    /** Delete ALL builds (any version, committed or claimed) plus the
-      * marker. Returns whether any build existed. */
-    def drop(): Boolean = {
-      val builds = io.list(dir).filter(e => e.isDir && owns(e.name)).map(_.path)
-      builds.foreach(io.deleteRecursively)
-      if (recorded) io.deleteRecursively(marker)
-      builds.nonEmpty
-    }
-  }
-
-  private val ivfFamily = new Family("index", "cell", () => refreshIndex())
-  private val docFamily = new Family("docindex", "gp", () => refreshDocIndex())
-  private val kwFamily = new Family("kwindex", "tp", () => refreshKeywordIndex())
-  /** The postings families share one build/refresh/compaction body. */
+  private val ivfFamily = new IndexFamily(versions, "index", "cell", () => refreshIndex())
+  private val docFamily = new IndexFamily(versions, "docindex", "gp", () => refreshDocIndex())
+  private val kwFamily = new IndexFamily(versions, "kwindex", "tp", () => refreshKeywordIndex())
+  /** The postings families share one build and compaction body. */
   private val postingsFamilies = Seq(docFamily, kwFamily)
   /** Every family, in refresh and compaction order. */
   private val families = ivfFamily +: postingsFamilies
 
-  /** Build number of an index dir name; the legacy unsuffixed
-    * `index_v<V>` layout reads as build 0. */
-  private def buildNumberOf(p: Path): Int = {
-    val n = p.getName
-    val dot = n.indexOf(".b")
-    if (dot < 0) 0 else n.substring(dot + 2).toInt
-  }
-
-  private def isCommitted(build: Path): Boolean =
-    io.exists(new Path(build, CollectionMeta.CommittedName))
-
   /** [[CollectionCatalog.forkCollection]]'s index carry: each family's
-    * committed build of snapshot `m` — never a version-stale one, which
-    * would answer for content the fork does not hold — lands in
-    * `forkDir` as build 0 of v1. Slices are resolved through the carry
-    * manifest and copied physically (a manifest cannot cross the
-    * collection boundary); top-level sidecars (centroids, PQ codebooks,
-    * stamps) travel as bytes; the marker is written last. */
+    * committed build of snapshot `m` lands in `forkDir` as build 0 of v1
+    * ([[IndexFamily.copyForFork]]). */
   private[catalog] def copyBuildsForFork(m: CollectionMeta, forkDir: Path): Unit =
-    for (f <- families; srcBuild <- f.current(m)) {
-      val dstBuild = f.buildDir(forkDir, 1, 0)
-      io.mkdirs(dstBuild)
-      def filesIn(p: Path): Seq[DirEntry] = io.list(p).filterNot(_.isDir)
-      def copyFiles(files: Seq[DirEntry], into: Path): Unit = {
-        io.mkdirs(into)
-        files.foreach(e => io.carryFile(e.path, new Path(into, e.name)))
-      }
-      // two-level slices (cell|gp|tp / pb), carry-manifest-resolved
-      Carry.slicedOwners(io, dir, srcBuild).foreach { case (slice, owner) =>
-        copyFiles(filesIn(new Path(owner, slice)), new Path(dstBuild, slice)) }
-      // one-level slices (compactIndexes(keepRefreshAxis = false) drops
-      // the pb axis; such builds are manifest-free)
-      io.list(srcBuild).filter(e => e.isDir && e.name.contains("=")).foreach { axis =>
-        val files = filesIn(axis.path)
-        if (files.nonEmpty) copyFiles(files, new Path(dstBuild, axis.name))
-      }
-      io.list(srcBuild).filterNot(_.isDir)
-        .filterNot(e => e.name == CollectionMeta.CommittedName || e.name == Carry.ManifestName)
-        .foreach(e => io.writeBytes(new Path(dstBuild, e.name), io.readBytes(e.path)))
-      f.commit(dstBuild)
-    }
+    families.foreach(_.copyForFork(m, forkDir))
 
   /** Committed index for the CURRENT version: (path, centroids), if any —
     * the highest marker-complete build. Centroid sidecars are parsed once
     * per committed build (they are immutable after the marker lands), not
     * on every query. */
   private def currentIndex(m: CollectionMeta): Option[(Path, Array[(Int, Array[Double])])] =
-    ivfFamily.current(m)
-      .flatMap { p =>
-        Collection.cachedCentroids(io, p, spark.sparkContext.hadoopConfiguration)
-          .map(c => (p, c))
-      }
+    ivfFamily.current(m).flatMap(p => centroidsOf(p).map(c => (p, c)))
+
+  /** Centroids of a committed IVF build, parsed once per build via the
+    * sidecar cache. */
+  private def centroidsOf(build: Path): Option[Array[(Int, Array[Double])]] =
+    Collection.cachedCentroids(io, build, spark.sparkContext.hadoopConfiguration)
 
   def hasIndex: Boolean = currentIndex(meta).isDefined
 
   /** The IVF read choice every vector read makes — the committed
-    * current-version index, or None for the exact corpus scan. The
-    * version-STALE fallback (a build exists, just not for this version)
-    * logs loudly via [[warnIfStale]]: correct answers, O(corpus) cost. */
+    * current-version index, or None for the exact corpus scan (LOUD when
+    * version-stale: [[IndexFamily.servable]]). */
   private def ivfOrScan(m: CollectionMeta,
                         exact: Boolean): Option[(Path, Array[(Int, Array[Double])])] =
     if (exact) None
-    else currentIndex(m) match {
-      case s @ Some(_) => s
-      case None => warnIfStale(ivfFamily, m); None
-    }
+    else ivfFamily.servable(m).flatMap(p => centroidsOf(p).map(c => (p, c)))
 
   /** Build an IVF index over the current version with k-means centroids
     * (fit on `trainFraction` of the corpus — at scale you never train on
@@ -1815,7 +1318,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * the id bucket as `pb`, and the row count sizing reads from that
     * same snapshot (lazy: only the trained PQ builds size by it). */
   private final class BuildInput(val snapshot: CollectionMeta) {
-    val df: DataFrame = currentWithPtOf(snapshot).withColumnRenamed("pt", "pb")
+    val df: DataFrame = versions.readVersion(snapshot.version).withColumnRenamed("pt", "pb")
     lazy val rows: Long = snapshotCount(snapshot)
     def ksubOr(ksub: Int): Int = if (ksub > 0) ksub else Ann.pqKsubFor(rows)
   }
@@ -1841,13 +1344,13 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   private def buildIvfPq(
       cells: BuildInput => Ann.IvfModel,
       codebooks: Option[(BuildInput, Ann.IvfModel, Int) => Ann.PqModel] = None): Unit = {
-    val b = new BuildInput(indexableMeta())
+    val b = new BuildInput(indexable()._1)
     val (ivf, pq) = codebooks match {
       case None =>
         val carried = carriedPq(b.df)
         (cells(b), carried)
       case Some(train) =>
-        requireNoCodes(b.df)
+        requireNoCodes(b.df.columns)
         val d = snapshotDim(b.snapshot).getOrElse(throw new IllegalStateException(
           s"collection '${b.snapshot.name}' is empty — nothing to index"))
         val ivf = cells(b)
@@ -1860,30 +1363,31 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   /** The current meta, LOUD when it holds no data to index. */
   private def nonEmptyMeta(): CollectionMeta = {
     val m = meta
-    require(currentDataOf(m).nonEmpty, s"collection '${m.name}' is empty — nothing to index")
+    require(versions.currentDataOf(m).nonEmpty, s"collection '${m.name}' is empty — nothing to index")
     m
   }
 
-  private def indexableMeta(): CollectionMeta = {
+  /** [[nonEmptyMeta]] and its data columns, LOUD when a user column
+    * collides with the index layout. */
+  private def indexable(): (CollectionMeta, Array[String]) = {
     val m = nonEmptyMeta()
-    val clash = currentWithPtOf(m).columns.intersect(Seq("cell", "pb"))
+    val columns = versions.readVersion(m.version).columns
+    val clash = columns.intersect(Seq("cell", "pb"))
     require(clash.isEmpty,
       s"collection has ${clash.mkString("/")} column(s), which collide with the index layout; rename them")
-    m
+    (m, columns)
   }
 
   /** A user `codes` column collides with a PQ-coded layout's own: every
     * PQ build, rebuild and refresh rejects it. */
-  private def requireNoCodes(df: DataFrame): Unit =
-    require(!df.columns.contains("codes"),
+  private def requireNoCodes(columns: Array[String]): Unit =
+    require(!columns.contains("codes"),
       "collection has a 'codes' column, which collides with the PQ index layout; " +
         "rename it (or dropIndex() to rebuild without PQ)")
 
   private def writeIndex(model: Ann.IvfModel, version: Int,
                          pq: Option[Ann.PqModel]): Unit = {
-    val claimed = ivfFamily.claim(version)
-    writeIvfBuild(claimed, model, pq)
-    ivfFamily.commit(claimed)
+    ivfFamily.build(version)(writeIvfBuild(_, model, pq))
     ivfFamily.record()
   }
 
@@ -1915,7 +1419,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * when refreshIndexReport flags drift. */
   private def carriedPq(df: DataFrame): Option[Ann.PqModel] = {
     val pq = ivfFamily.newestCommitted.flatMap(pqModelOf)
-    if (pq.isDefined) requireNoCodes(df)
+    if (pq.isDefined) requireNoCodes(df.columns)
     pq
   }
 
@@ -2066,58 +1570,37 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * collection without `ivf:nlist` metadata fails LOUDLY there — size it
     * or rebuild explicitly. */
   def refreshIndex(): Int = {
-    // the same clash guard the full builds run (indexableMeta): a refresh
+    // the same clash guard the full builds run (indexable()): a refresh
     // must not silently clobber a user column named cell/pb that a later
     // batch introduced (upsert's allowMissingColumns admits new columns)
-    val m = indexableMeta()
-    val prior = ivfFamily.newestCommitted
-    val priorCents = prior.flatMap(p =>
-      Collection.cachedCentroids(io, p, spark.sparkContext.hadoopConfiguration))
-    val refreshed = (prior, priorCents) match {
-      case (Some(old), _) if indexVersionOf(old) == m.version =>
-        0 // a committed build already serves this version
-      case (Some(old), Some(cents)) =>
-        // incremental when the prior build has pb slices and its indexed
-        // version's data survives: only CHANGED buckets re-assign. Otherwise
-        // (no pb axis, or that data dir was vacuumed) a FULL re-assignment.
-        // Either way under the SAME centroids — refresh semantics, never a
-        // silent re-train
-        val changed =
-          if (ivfFamily.hasPbSlices(old) && io.exists(dataDir(indexVersionOf(old))))
-            Some(changedBucketsBetween(indexVersionOf(old), m.version))
-          else None
-        val current = currentWithPtOf(m)
-        val touched = changed.fold(current)(c => current.filter(col("pt").isin(c.toSeq: _*)))
-          .withColumnRenamed("pt", "pb")
-        // a PQ-coded build refreshes its codes too: touched rows re-encode
-        // under the PRIOR codebooks (encode is a pure function of (vector,
-        // codebooks), the same argument that lets assignment refresh) —
-        // without this the refreshed slices would lack the codes column
-        // and the union-by-name read would serve NULL codes to queryPq
-        val priorPq = pqModelOf(old)
-        if (priorPq.isDefined) requireNoCodes(touched)
-        val assigned = Ann.assignCells(touched, "embedding", cents)
-        val model = Ann.IvfModel(cents,
-          priorPq.fold(assigned)(Ann.pqEncodeFor(assigned, "embedding", cents, _)))
-        changed match {
-          case Some(c) =>
-            // the centroid sidecar is rewritten into the new build too (same
-            // centroids — the sidecar is what later reads/refreshes use)
-            val claimed = ivfFamily.claim(m.version)
-            writeIvfBuild(claimed, model, priorPq)
-            carryUnchangedSlices(old, claimed, c)
-            ivfFamily.commit(claimed)
-            c.size
-          case None =>
-            writeIndex(model, m.version, priorPq)
-            numBuckets
-        }
-      case _ =>
-        buildIndex() // no readable prior: re-train (ivf:nlist), PQ carried by buildIndex itself
-        numBuckets
+    val (m, columns) = indexable()
+    // the prior's CENTROIDS assign (re-)written rows — refresh semantics,
+    // never a silent re-train — and a PQ-coded prior re-encodes them under
+    // its codebooks (encode is a pure function of (vector, codebooks), the
+    // same argument that lets assignment refresh): without this the new
+    // slices would lack the codes column and the union-by-name read would
+    // serve NULL codes to queryPq
+    def reassigned(prior: Path, changed: Option[Set[Int]]): Ann.IvfModel = {
+      val current = versions.readVersion(m.version)
+      val touched = changed.fold(current)(c => current.filter(col("pt").isin(c.toSeq: _*)))
+        .withColumnRenamed("pt", "pb")
+      val cents = centroidsOf(prior).get
+      val assigned = Ann.assignCells(touched, "embedding", cents)
+      Ann.IvfModel(cents, pqModelOf(prior).fold(assigned)(Ann.pqEncodeFor(assigned, "embedding", cents, _)))
     }
-    if (refreshed > 0) maybeAutoCompactIndexes()
-    refreshed
+    ivfFamily.refreshTo(m,
+      // the centroid sidecar is rewritten into the new build too (same
+      // centroids — the sidecar is what later reads/refreshes use)
+      writeChanged = (prior, changed, build) =>
+        writeIvfBuild(build, reassigned(prior, Some(changed)), pqModelOf(prior)),
+      full = {
+        case Some(prior) => writeIndex(reassigned(prior, None), m.version, pqModelOf(prior))
+        case None => buildIndex() // re-train (ivf:nlist); buildIndex carries PQ itself
+      },
+      usable = prior => {
+        if (pqModelOf(prior).isDefined) requireNoCodes(columns)
+        centroidsOf(prior).isDefined
+      })(maybeAutoCompactIndexes())
   }
 
   /** Default skew (max/mean cell occupancy) above which
@@ -2186,29 +1669,13 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   // `graft:autocompact.keephistory = <k>` (optional) is passed to the
   // policy's vacuum — time-travel readers keep k predecessor versions.
 
-  /** Resolved data-file count of version `m.version` — a pure listing
-    * walk over the carry-resolved owner dirs (no Spark job). */
-  private def dataFileCount(m: CollectionMeta): Int =
-    Carry.owners(io, dir, dataDir(m.version), "pt=").toSeq.map {
-      case (part, owner) =>
-        io.list(new Path(owner, part))
-          .count(e => !e.isDir && e.name.endsWith(".parquet"))
-    }.sum
-
-  /** Resolved parquet-file count of an index build dir. */
-  private def indexFileCount(build: Path): Int =
-    Carry.slicedOwners(io, dir, build).toSeq.map { case (slice, owner) =>
-      io.list(new Path(owner, slice))
-        .count(e => !e.isDir && e.name.endsWith(".parquet"))
-    }.sum
-
   /** Data-side policy check, run after every public mutation's commit
     * (NOT inside the commit path itself — [[compact]] commits through
     * the same writeVersion and must never re-trigger the policy). */
   private def maybeAutoCompact(): Unit = {
     val m = meta
     autoCompact(m, "data files", "compact()",
-      if (currentDataOf(m).nonEmpty) dataFileCount(m) else 0)(compact())
+      if (versions.currentDataOf(m).nonEmpty) versions.dataFileCount(m) else 0)(compact())
   }
 
   /** The policy body both checks share: past the bound, compact, then
@@ -2235,47 +1702,13 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   private def maybeAutoCompactIndexes(): Unit = {
     val m = meta
     autoCompact(m, "resolved index files", "compactIndexes()",
-      families.flatMap(_.current(m)).map(indexFileCount).sum)(compactIndexes())
-  }
-
-  /** LOUD when a read falls back to the full scan because every committed
-    * build of `family` is version-stale: the answer stays correct (scan
-    * semantics are the contract), but at 100 TB the SILENT cost cliff is
-    * the bug — a SQL-only writer (`df.write.format("graft")`) advances
-    * the version without any way to know the sidecars went stale. */
-  private def warnIfStale(family: Family, m: CollectionMeta): Unit = {
-    // memoized per (collection, family, version) and JVM: the warning is
-    // a log line, so probing once per version is enough — without the
-    // memo EVERY scan-fallback read (including on collections that never
-    // built the family at all) would pay a directory LIST purely to
-    // decide not to log, a per-query I/O tax on object stores. A build
-    // committed for the SAME version after the probe only suppresses the
-    // (already moot) warning, never a serving decision.
-    if (!Collection.staleProbe.add(s"$dir|${family.name}|v${m.version}")) return
-    if (Collection.staleProbe.size > 65536) Collection.staleProbe.clear()
-    family.newestCommitted match {
-      case Some(b) if indexVersionOf(b) != m.version =>
-        log.warn(s"collection '${m.name}': newest committed ${family.name} build " +
-          s"serves v${indexVersionOf(b)} but the collection is at " +
-          s"v${m.version} — serving the full scan instead (correct, but " +
-          "O(corpus)); refresh via refreshIndexes() or the SQL write " +
-          "option refresh=true")
-      case None if family.recorded =>
-        // the family was built once but NO build survives (an overwrite
-        // made every build version-stale and vacuum reclaimed them) —
-        // without this arm the cost cliff would be silent forever
-        log.warn(s"collection '${m.name}': the ${family.name} index was built " +
-          "once but no build survives (overwrite + vacuum) — serving the " +
-          "full scan; refreshIndexes() or the SQL write option " +
-          "refresh=true rebuilds it in full")
-      case _ => ()
-    }
+      families.flatMap(f => f.current(m).map(f.fileCount)).sum)(compactIndexes())
   }
 
   /** Refresh EVERY index family that has ever been built — the one-call
     * freshness contract behind the SQL write surface's `refresh=true`
     * option (a plain-SQL user has no per-family handles). Family
-    * detection is committed-build OR the durable [[Family.record]] marker,
+    * detection is committed-build OR the durable [[IndexFamily.record]] marker,
     * so an overwrite+vacuum that reclaimed every stale build still
     * rebuilds (full re-derivation — the refresh methods' own fallback).
     * Families never built are not built here (building is a sizing
@@ -2301,41 +1734,19 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       } else Some(f.name -> f.refresh())
     }.toMap
 
-  /** Id buckets whose data changed between two committed versions (see
-    * [[bucketSignatures]] for why an owner+file-name diff is the right
-    * detector). */
-  private def changedBucketsBetween(vOld: Int, vNew: Int): Set[Int] = {
-    val o = bucketSignatures(vOld)
-    val n = bucketSignatures(vNew)
-    (o.keySet ++ n.keySet).filter(b => o.get(b) != n.get(b))
-  }
-
-  /** Carry the prior build's unchanged pb slices forward: every
-    * `<axis>=<x>/pb=<b>` slice of `old` with b ∉ changed becomes a carry-
-    * manifest entry of `claimed` pointing at the dir PHYSICALLY holding
-    * it (old's own carries stay one-hop resolved) — O(slices) metadata,
-    * no per-file work, works on any filesystem. MUST run after the
-    * claimed build's parquet write: `mode(overwrite)` clears the dir. */
-  private def carryUnchangedSlices(old: Path, claimed: Path,
-                                   changed: Set[Int]): Unit =
-    Carry.write(io, claimed, Carry.slicedOwners(io, dir, old)
-      .filterNot { case (slice, _) =>
-        changed.contains(slice.substring(slice.indexOf("/pb=") + 4).toInt) }
-      .map { case (slice, owner) => slice -> owner.getName })
-
   /** Drop the IVF index (reads fall back to the exact scan). Explicit
     * user intent — unlike rebuild, this DOES delete: every build of the
     * family (stale versions included — they serve nothing, and a
     * surviving committed one would let [[refreshIndexes]]'s self-heal
-    * resurrect the family) AND the durable [[Family.record]] marker, so
+    * resurrect the family) AND the durable [[IndexFamily.record]] marker, so
     * `refreshIndexes()` / the SQL write option `refresh=true` honor the
-    * drop instead of silently rebuilding in full, and [[warnIfStale]]
+    * drop instead of silently rebuilding in full, and [[IndexFamily.servable]]
     * stays quiet on a deliberately index-less collection. */
   def dropIndex(): Boolean = ivfFamily.drop()
 
   // ---- where_document postings index (SURVEY §2.B B8's scale path) ----
   //
-  // The [[Family]] build discipline over `docindex_v<V>.b<B>/`. Layout +
+  // The [[IndexFamily]] build discipline over `docindex_v<V>.b<B>/`. Layout +
   // query semantics: [[graft.operators.DocIndex]] (trigram postings; index
   // answers are superset-prefilter + verbatim re-check, bit-identical to
   // the scan).
@@ -2359,76 +1770,26 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * trigram postings, "kwindex" keyword stats): one claim/write/commit
     * discipline, the family's writer plugged in — a protocol fix lands
     * once. */
-  private def buildPostingsFamily(family: Family, writer: PostingsWriter,
+  private def buildPostingsFamily(family: IndexFamily, writer: PostingsWriter,
                                   stamp: Option[(String, String)] = None): Unit = {
     val m = nonEmptyMeta()
-    val data = currentWithPtOf(m)
+    val data = versions.readVersion(m.version)
     require(data.columns.contains("document"),
       s"collection '${m.name}' carries no document column — nothing to index")
-    val claimed = family.claim(m.version)
-    writer(data.select(col("id"), col("document"), col("pt")), claimed)
-    family.commit(claimed, stamp)
+    family.build(m.version, stamp)(writer(data.select(col("id"), col("document"), col("pt")), _))
     family.record()
   }
 
-  /** Shared incremental refresh for the postings families (see
-    * [[buildPostingsFamily]]): postings (and, for the keyword family, the
-    * per-bucket stats rows) of CHANGED id buckets re-derive; every other
-    * `<axis>=<a>/pb=<b>` slice carries from the last committed build by
-    * manifest. Returns buckets rebuilt; full rebuild without a usable
-    * prior build. */
-  private def refreshPostingsFamily(family: Family, writer: PostingsWriter,
-      stamp: Option[(String, String)] = None,
-      priorUsable: Path => Boolean = _ => true): Int = {
-    val m = nonEmptyMeta()
-    val refreshed = family.newestCommitted match {
-      // `priorUsable` gates BOTH reuse paths: a build whose identity
-      // stamp disagrees with the collection's current setting (the
-      // keyword analyzer was re-pointed) must not satisfy the refresh —
-      // and must never donate carried slices — or index ≡ scan breaks
-      case Some(old) if indexVersionOf(old) == m.version && priorUsable(old) =>
-        0 // a committed build already serves this version
-      case Some(old) if priorUsable(old) && family.hasPbSlices(old) &&
-          io.exists(dataDir(indexVersionOf(old))) =>
-        val changed = changedBucketsBetween(indexVersionOf(old), m.version)
-        val claimed = family.claim(m.version)
-        if (changed.nonEmpty)
-          writer(currentWithPtOf(m).filter(col("pt").isin(changed.toSeq: _*))
-            .select(col("id"), col("document"), col("pt")), claimed)
-        // carry forward unchanged slices: manifest entries for <axis>/pb=<b>
-        // for every b whose data bucket is byte-identical carry-over
-        carryUnchangedSlices(old, claimed, changed)
-        family.commit(claimed, stamp)
-        changed.size
-      case _ =>
-        buildPostingsFamily(family, writer, stamp)
-        numBuckets
-    }
-    if (refreshed > 0) maybeAutoCompactIndexes()
-    refreshed
-  }
-
-  /** Version number encoded in an index build or data dir name
-    * (`docindex_v<V>[.b<B>]` / `index_v<V>[.b<B>]` / `data_v<V>`). */
-  private def indexVersionOf(p: Path): Int =
-    p.getName.dropWhile(!_.isDigit).takeWhile(_.isDigit).toInt
-
-  /** Per-bucket identity for change detection: (physical owner dir name,
-    * file names). A carried bucket keeps its owner's identity, so a COW
-    * carry reads as unchanged and a rewrite (fresh files in the new
-    * version dir) reads as changed — the same contract the hard-link
-    * layout had, where carried files kept their names in place. An owner
-    * dir a concurrent vacuum already reclaimed reads as an empty file
-    * set — conservatively "changed", never a crash. */
-  private def bucketSignatures(v: Int): Map[Int, (String, Set[String])] =
-    Carry.owners(io, dir, dataDir(v), "pt=").map { case (part, owner) =>
-      val bdir = new Path(owner, part)
-      val files =
-        if (io.exists(bdir))
-          io.list(bdir).filterNot(_.isDir).map(_.name).toSet
-        else Set.empty[String]
-      part.stripPrefix("pt=").toInt -> (owner.getName -> files)
-    }
+  /** The postings families' incremental step for [[IndexFamily.refreshTo]]:
+    * `writer` over the CHANGED buckets' (id, document, pt) rows —
+    * postings and, for the keyword family, the per-bucket stats rows
+    * re-derive; nothing is written when no bucket changed. */
+  private def postingsChanged(m: CollectionMeta,
+                              writer: PostingsWriter): (Path, Set[Int], Path) => Unit =
+    (_, changed, build) =>
+      if (changed.nonEmpty)
+        writer(versions.readVersion(m.version).filter(col("pt").isin(changed.toSeq: _*))
+          .select(col("id"), col("document"), col("pt")), build)
 
   /** Incrementally refresh the postings index to the CURRENT version:
     * rebuild postings ONLY for the id buckets whose data changed since
@@ -2442,15 +1803,18 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * bookkeeping): merge commits carry untouched buckets in place (same
     * physical owner, same file names), so a bucket changed iff its
     * (owner, file-name set) signature differs between the indexed
-    * version and the current one ([[bucketSignatures]]).
+    * version and the current one ([[VersionStore.changedBucketsBetween]]).
     * Falls back to a full [[buildDocIndex]] when there is no usable
     * prior build (none committed, legacy un-sliced layout, or the
     * indexed version's data dir was vacuumed away).
     *
     * Returns the number of buckets rebuilt (numBuckets for the full-
     * rebuild fallback, 0 when the index is already current). */
-  def refreshDocIndex(): Int =
-    refreshPostingsFamily(docFamily, docWriter)
+  def refreshDocIndex(): Int = {
+    val m = nonEmptyMeta()
+    docFamily.refreshTo(m, postingsChanged(m, docWriter), _ => buildDocIndex())(
+      maybeAutoCompactIndexes())
+  }
 
   /** Drop the postings index — every build plus the durable family
     * marker (the [[dropIndex]] contract: a drop must not be undone by
@@ -2468,18 +1832,15 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val confined = (for {
       wd <- whereDoc
       sets <- DocIndex.gramSets(wd)
-    } yield docFamily.current(m) match {
-      case Some(idx) => df.join(
-        DocIndex.candidates(readIndexBuild(idx), sets), Seq("id"), "left_semi")
-      case None => warnIfStale(docFamily, m); df
-    }).getOrElse(df)
+    } yield docFamily.servable(m).fold(df)(idx => df.join(
+      DocIndex.candidates(readIndexBuild(idx), sets), Seq("id"), "left_semi"))).getOrElse(df)
     ChromaFilter.predicate(where, whereDoc, col("document"), keyResolver(confined))
       .map(confined.filter).getOrElse(confined)
   }
 
   // ---- keyword-statistics (BM25) sidecar — hybrid retrieval's scale path ----
   //
-  // The [[Family]] build discipline over `kwindex_v<V>.b<B>/`. Layout +
+  // The [[IndexFamily]] build discipline over `kwindex_v<V>.b<B>/`. Layout +
   // query semantics: [[graft.operators.KeywordIndex]] (term-hash-sliced
   // postings carrying tf/dl + per-bucket stats rows; served scores are
   // bit-identical to the Retrieval.bm25 scan by the shared-fold contract).
@@ -2540,10 +1901,14 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * stamp disagrees with the collection's current [[analyzer]] (its
     * slices tokenize under a retired rule and must not be carried). */
   def refreshKeywordIndex(): Int = {
-    val a = analyzerOf(meta)
-    refreshPostingsFamily(kwFamily, kwWriter(a),
-      stamp = Some((KeywordIndex.AnalyzerStamp, a)),
-      priorUsable = b => kwAnalyzerOf(b) == a)
+    val m = nonEmptyMeta()
+    val a = analyzerOf(m)
+    kwFamily.refreshTo(m, postingsChanged(m, kwWriter(a)), _ => buildKeywordIndex(),
+      // a build whose analyzer stamp disagrees with the collection's
+      // current setting must neither satisfy the refresh nor donate
+      // carried slices, or index ≡ scan breaks
+      usable = b => kwAnalyzerOf(b) == a,
+      stamp = Some((KeywordIndex.AnalyzerStamp, a)))(maybeAutoCompactIndexes())
   }
 
   /** Drop the keyword sidecar — every build plus the durable family
@@ -2557,20 +1922,18 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * way a version-stale one is — both fall back to the (analyzer-
     * correct) scan, loudly, until a refresh rebuilds. */
   private def servableKwIndex(m: CollectionMeta, a: String): Option[Path] =
-    kwFamily.current(m) match {
-      case Some(idx) if kwAnalyzerOf(idx) == a => Some(idx)
-      case Some(idx) =>
-        // memoized like warnIfStale: the mismatch holds until a refresh
-        // lands (which changes the newest build PATH, keying a new warn),
-        // so warning once per (build, setting) is enough — unmemoized,
-        // every keyword query would log the same line
-        if (Collection.staleProbe.add(s"$dir|kwindex-analyzer|$idx|$a"))
-          log.warn(s"keyword sidecar of collection '${m.name}' was built " +
-            s"under analyzer '${kwAnalyzerOf(idx)}' but the collection is " +
-            s"set to '$a' — serving the O(corpus) scan path; run " +
-            "refreshKeywordIndex() to rebuild")
-        None
-      case None => warnIfStale(kwFamily, m); None
+    kwFamily.servable(m).filter { idx =>
+      // memoized like IndexFamily.servable: the mismatch holds until a
+      // refresh lands (which changes the newest build PATH, keying a new
+      // warn), so warning once per (build, setting) is enough —
+      // unmemoized, every keyword query would log the same line
+      val ok = kwAnalyzerOf(idx) == a
+      if (!ok && Collection.staleProbe.add(s"$dir|kwindex-analyzer|$idx|$a"))
+        log.warn(s"keyword sidecar of collection '${m.name}' was built " +
+          s"under analyzer '${kwAnalyzerOf(idx)}' but the collection is " +
+          s"set to '$a' — serving the O(corpus) scan path; run " +
+          "refreshKeywordIndex() to rebuild")
+      ok
     }
 
   /** Caller-provided terms normalized by the collection's analyzer
@@ -2626,7 +1989,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   }
 
   private def keywordCorpus(m: CollectionMeta): DataFrame = {
-    val df = snapshotDF(m)
+    val df = versions.snapshotDF(m)
     require(df.columns.contains("document"),
       s"collection '${m.name}' carries no document column — keyword " +
         "retrieval needs one")
@@ -2645,7 +2008,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
                               where: Option[Where],
                               whereDoc: Option[WhereDocument]): DataFrame =
     if (where.isEmpty && whereDoc.isEmpty) scores
-    else scores.join(prefiltered(snapshotDF(m), m, where, whereDoc).select("id"),
+    else scores.join(prefiltered(versions.snapshotDF(m), m, where, whereDoc).select("id"),
       Seq("id"), "left_semi")
 
   /** The BATCH form of [[keywordTopK]] — one pruned sidecar read (or one
@@ -2784,7 +2147,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     require(k > 0, s"k must be positive, got $k")
     require(fetchN >= k, s"fetchN ($fetchN) must be >= k ($k)")
     val m = meta
-    require(snapshotDF(m).columns.contains("document"),
+    require(versions.snapshotDF(m).columns.contains("document"),
       s"collection '${m.name}' carries no document column — rerank scores " +
         "(query, document) pairs")
     val fused = queryHybridText(text, fetchN, fetchN, rrfK, where, whereDoc)
@@ -2793,7 +2156,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val prior = fused.orderBy(col("rrf").desc, col("id"))
       .collect().map(_.getAs[String]("id")).zipWithIndex
       .map { case (id, i) => (id, i + 1) }
-    val spark = snapshotDF(m).sparkSession
+    val spark = versions.snapshotDF(m).sparkSession
     import spark.implicits._
     if (prior.isEmpty)
       // zero candidates (a prefilter excluded everything): empty result —
@@ -2828,7 +2191,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     require(k > 0, s"k must be positive, got $k")
     require(fetchN >= k, s"fetchN ($fetchN) must be >= k ($k)")
     val m = meta
-    require(snapshotDF(m).columns.contains("document"),
+    require(versions.snapshotDF(m).columns.contains("document"),
       s"collection '${m.name}' carries no document column — MaxSim scores " +
         "chunk vectors of the document text")
     val ef = recordedEmbedder(m,
@@ -2839,7 +2202,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // bounded collect (≤ fetchN rows) — same contract as the rerank prior
     val cand = keywordTopK(terms, fetchN, where = where, whereDoc = whereDoc)
       .select("id").collect().map(_.getString(0)).toSeq
-    val spark = snapshotDF(m).sparkSession
+    val spark = versions.snapshotDF(m).sparkSession
     import spark.implicits._
     if (cand.isEmpty)
       return Seq.empty[(String, Double)].toDF("id", "score")
@@ -2855,7 +2218,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   /** The layout-owned columns of an index build dir: always `cell`, plus
     * `pb` ONLY when the build actually has pb slices (r8+ layouts) — a
     * pre-r8 legacy build cannot own a `pb` column, so one appearing there
-    * is USER data and must survive the read (indexableMeta rejects the
+    * is USER data and must survive the read (indexable() rejects the
     * name for every new build, so the ambiguity cannot recur). */
   private def indexLayoutCols(build: Path): Seq[String] =
     if (ivfFamily.hasPbSlices(build)) Seq("cell", "pb") else Seq("cell")
@@ -2866,8 +2229,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
 
   /** [[dim]] of ONE meta snapshot. */
   private def snapshotDim(m: CollectionMeta): Option[Int] =
-    currentDataOf(m).flatMap(_ =>
-      snapshotDF(m).select(size(col("embedding")).as("d")).limit(1).collect()
+    versions.currentDataOf(m).flatMap(_ =>
+      versions.snapshotDF(m).select(size(col("embedding")).as("d")).limit(1).collect()
         .headOption.map(_.getInt(0)))
 
   /** A positive-integer tuning key from collection metadata. LOUD on a
@@ -2956,7 +2319,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         // are even listed (PlanShapeSpec pins this)
         (indexed.filter(col("cell").isin(cellsPerQ.flatten.distinct: _*)), layout, cellsPerQ)
       case None =>
-        val df = snapshotDF(m)
+        val df = versions.snapshotDF(m)
         requireNoReserved(df, reserved)
         (df, Nil, Nil)
     }
@@ -2990,7 +2353,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   /** [[queryBatch]] against ONE caller-held meta snapshot — the entry
     * point for read surfaces that pair the hit set with OTHER reads of
     * the same snapshot (queryStruct's embeddings join): both sides must
-    * see the same version, per the snapshot rule at [[snapshotDF]]. */
+    * see the same version, per the snapshot rule at [[VersionStore.snapshotDF]]. */
   private def queryBatchOf(m: CollectionMeta, queryVecs: Seq[Seq[Float]], k: Int,
                            where: Option[Where], whereDoc: Option[WhereDocument],
                            nprobe: Int, exact: Boolean): DataFrame = {
@@ -3048,7 +2411,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // column-pruned (id, embedding) scan of the SAME snapshot the hits
     // came from (a toDF here would re-read meta; a commit landing in
     // between would pair old-vector distances with newer vectors — the
-    // rule at [[snapshotDF]]). The hit set is MATERIALIZED once (bounded:
+    // rule at [[VersionStore.snapshotDF]]). The hit set is MATERIALIZED once (bounded:
     // ≤ nq·k rows — this is the presentation path, whose whole output is
     // client-sized by contract) so the expensive kNN executes a single
     // time: referencing long0 twice in one plan would run the entire
@@ -3062,7 +2425,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         val hits = spark.createDataFrame(
           spark.sparkContext.parallelize(hitRows.toIndexedSeq, 1), long0.schema)
         val hitIds = hitRows.map(_.getAs[Any]("id")).distinct.toSeq
-        val embs = snapshotDF(m).select(col("id"), col("embedding").as("__emb"))
+        val embs = versions.snapshotDF(m).select(col("id"), col("embedding").as("__emb"))
           .filter(col("id").isin(hitIds: _*))
         hits.join(broadcast(embs), Seq("id"), "left")
       }
@@ -3152,7 +2515,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   /** B10 count / peek. */
   def count(): Long = snapshotCount(meta)
   private def snapshotCount(m: CollectionMeta): Long =
-    currentDataOf(m).fold(0L)(_ => snapshotDF(m).count())
+    versions.currentDataOf(m).fold(0L)(_ => versions.snapshotDF(m).count())
   def peek(n: Int = 10): DataFrame = toDF.orderBy("id").limit(n)
 
   /** B11 modify: rename is a catalog move; metadata is a meta.json update. */
@@ -3168,7 +2531,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // sit in the buckets the creation-time rule hashed them into, and a
     // silent re-point would corrupt every bucket-pruned read and merge
     kv.get(Collection.PtPrefixSepKey).foreach(s => require(
-      currentDataOf(m).isEmpty ||
+      versions.currentDataOf(m).isEmpty ||
         m.metadata.get(Collection.PtPrefixSepKey).contains(s),
       s"${Collection.PtPrefixSepKey} is part of the on-disk bucket " +
         "layout and cannot change once data is written — fork or " +
@@ -3223,23 +2586,13 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * [[vacuum]]; this lists the ones whose commit marker AND data dir
     * both survive (an uncommitted claim or a vacuumed dir is not
     * readable history). */
-  def history(): Seq[Int] = io.list(dir)
-    .filter(e => e.isDir && e.name.startsWith("data_v"))
-    .map(e => e.name.stripPrefix("data_v").toInt)
-    .filter(v => io.exists(CollectionMeta.commitMarker(dir, v)))
-    .sorted
-
-  /** LOUD unless `version`'s data dir and commit marker both survive. */
-  private def requireCommitted(version: Int, problem: String): Unit =
-    require(io.exists(dataDir(version)) &&
-        io.exists(CollectionMeta.commitMarker(dir, version)),
-      s"$problem (available: ${history().mkString(", ")})")
+  def history(): Seq[Int] = versions.history()
 
   /** Time-travel read: the collection exactly as committed at `version`.
     * Free — the COW layout IS the snapshot; nothing is copied. */
   def toDFAt(version: Int): DataFrame = {
-    requireCommitted(version, s"version $version is not a committed on-disk version")
-    readVersion(version).drop("pt")
+    versions.requireCommitted(version, s"version $version is not a committed on-disk version")
+    versions.readVersion(version).drop("pt")
   }
 
   /** Resolved PHYSICAL leaf dirs (`<owner>/pt=<b>`) of one committed
@@ -3249,14 +2602,14 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * content (leaf dirs as scan ROOTS, so the internal `pt` bucket
     * column never infers — the same shape toDF's drop produces). */
   private[graft] def leafDataDirs(version: Int): Seq[String] = {
-    requireCommitted(version, s"version $version is not a committed on-disk version")
-    Carry.owners(io, dir, dataDir(version), "pt=").toSeq.sortBy(_._1)
+    versions.requireCommitted(version, s"version $version is not a committed on-disk version")
+    versions.owners(version).toSeq.sortBy(_._1)
       .map { case (part, owner) => new Path(owner, part).toString }
   }
 
   /** [[leafDataDirs]] confined to the `pt` buckets a literal id list can
     * live in (the writer's own hash, evaluated driver-side — exactly
-    * [[ptBucketsOf]]'s point-read rule, surfaced for the SQL read path's
+    * [[VersionStore.idPruned]]'s point-read rule, surfaced for the SQL read path's
     * `ids` option): the result is a SUPERSET binding — whole buckets, not
     * rows — so callers must still filter by id. Falls back to every leaf
     * dir when the stored id column is not STRING (the hash is
@@ -3282,7 +2635,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       .exists(_.dataType == org.apache.spark.sql.types.StringType)
     if (!idIsString) all
     else {
-      val want = ids.map(ptOfString).distinct.map(b => s"pt=$b").toSet
+      val want = versions.idBuckets(meta, ids).map(b => s"pt=$b").toSet
       val pruned = all.filter(d => want.contains(new Path(d).getName))
       // every wanted bucket dir may be absent (ids hashing to buckets
       // that never received rows): the true answer is empty, but a V1
@@ -3303,12 +2656,9 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   def rollbackTo(version: Int): Unit = {
     val m = meta
     require(version != m.version, s"already at version $version")
-    requireCommitted(version, s"cannot roll back to non-committed/vacuumed version $version")
-    commitNext(m) { newDir =>
-      io.mkdirs(newDir)
-      Carry.write(io, newDir, Carry.owners(io, dir, dataDir(version), "pt=")
-        .map { case (part, owner) => part -> owner.getName })
-    }
+    versions.requireCommitted(version,
+      s"cannot roll back to non-committed/vacuumed version $version")
+    versions.writeCarriedVersion(m, version)
   }
 
   /** Rewrite the current version into a fresh one with freshly-packed
@@ -3320,12 +2670,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * reclaim the superseded bytes. */
   def compact(): Unit = {
     val m = meta
-    currentDataOf(m).foreach { _ =>
+    versions.currentDataOf(m).foreach { _ =>
       // full local rewrite: the new version carries NOTHING, so compaction
       // also collapses a long mutation history's carry-manifest owner
       // spread back to one dir (run vacuum after to reclaim the old dirs)
-      val df = readVersion(m.version).drop("pt")
-      writeVersion(df, m)
+      val df = versions.readVersion(m.version).drop("pt")
+      versions.writeVersion(df, m)
     }
   }
 
@@ -3354,8 +2704,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val ivf = currentIndex(m)
     val builds = ivf.map(ivfFamily -> _._1).toSeq ++
       postingsFamilies.flatMap(f => f.current(m).map(f -> _))
-    builds.foreach { case (f, old) =>
-      val claimed = f.claim(m.version)
+    builds.foreach { case (f, old) => f.build(m.version) { claimed =>
       val rows0 = readIndexBuild(old)
       val withPb = keepRefreshAxis && rows0.columns.contains("pb")
       // dropping the pb axis merges the keyword family's per-bucket
@@ -3371,8 +2720,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         .option("maxRecordsPerFile", maxRowsPerFile)
         .partitionBy((if (withPb) Seq(f.axis, "pb") else Seq(f.axis)): _*)
         .parquet(claimed.toString)
-      f.commit(claimed)
-    }
+    } }
     builds.size
   }
 
@@ -3394,18 +2742,18 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     def kindOf(p: Path): Option[String] =
       families.find(_.owns(p.getName)).map(_.name)
     val versioned = io.list(dir)
-      .filter(e => e.isDir && (e.name.startsWith("data_v") || kindOf(e.path).isDefined))
+      .filter(e => e.isDir && (VersionStore.isDataDir(e.name) || kindOf(e.path).isDefined))
       .map(_.path)
     // retained versions still shed superseded/crashed index BUILDS — only
     // the highest committed build (the one readers adopt) survives
     val liveBuild: Map[(String, Int), Int] = versioned
-      .filter(p => kindOf(p).isDefined && isCommitted(p))
-      .groupBy(p => (kindOf(p).get, indexVersionOf(p)))
-      .view.mapValues(_.map(buildNumberOf).max).toMap
+      .filter(p => kindOf(p).isDefined && versions.isCommitted(p))
+      .groupBy(p => (kindOf(p).get, VersionStore.versionOf(p)))
+      .view.mapValues(_.map(IndexFamily.buildNumberOf).max).toMap
     val provisionallyDead = versioned.filter { p =>
-      val v = indexVersionOf(p)
+      val v = VersionStore.versionOf(p)
       v < cutoff || kindOf(p).exists(k =>
-        liveBuild.get((k, v)).exists(buildNumberOf(p) < _))
+        liveBuild.get((k, v)).exists(IndexFamily.buildNumberOf(p) < _))
     }.toSet
     // Carry-manifest reachability: a superseded dir stays ALIVE while any
     // retained dir's manifest still points at it for physical bytes.
@@ -3429,9 +2777,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       .foreach(p => io.deleteIfExists(new Path(p, CollectionMeta.CommittedName)))
     // retired version-claim files (cutoff <= current, so the commit record
     // of the live version always survives)
-    io.list(dir).filter(e => CollectionMeta.isClaimFile(e.name))
-      .filter(e => CollectionMeta.claimVersionOf(e.name) < cutoff)
-      .foreach(e => io.deleteIfExists(e.path))
+    versions.dropClaimsBelow(cutoff)
     dead.size
   }
 }
@@ -3470,7 +2816,7 @@ object Collection {
     * immutable once data exists): pt hashes the id PREFIX up to the
     * first occurrence of this separator, so one tenant/prefix = one
     * bucket and tenant-confined mutations keep the sidecar-refresh
-    * carry path cheap. See `Collection.bucketed`. */
+    * carry path cheap. See `VersionStore.bucketed`. */
   val PtPrefixSepKey = "graft:pt_prefix_sep"
 
   /** The distance spaces the engine implements (the Chroma set). Every
@@ -3500,7 +2846,7 @@ object Collection {
       .take(8).map(b => f"$b%02x").mkString
 
   /** [[Collection]]'s stale-index warn memo: (dir, family, version)
-    * triples already probed this JVM (see warnIfStale — bounds the
+    * triples already probed this JVM (see IndexFamily.servable — bounds the
     * fallback-read listing tax to one LIST per version per family).
     * Size-capped by coarse clear: re-probing is the only cost. */
   private[catalog] val staleProbe =

@@ -8,24 +8,40 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Regrowth guard for the commit protocol: the completeness-marker name is
   * spelled once, as `CollectionMeta.CommittedName`, and every writer and
-  * reader of the marker goes through it. A second literal means the
-  * protocol is being written out by hand again at a new site. */
+  * reader of the marker goes through it; the version pointer and the data
+  * dir names are spelled only in `VersionStore.scala`, which owns the
+  * data-version layout. A second literal elsewhere means the protocol is
+  * being written out by hand again at a new site. */
 class CommitMarkerGuardSpec extends AnyFunSuite {
 
-  test("src/main/scala spells the \"_graft_committed\" literal at most once") {
+  /** `file:line` of every line in src/main/scala containing `literal`. */
+  private def sites(literal: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath} is missing")
-    val literal = "\"_graft_committed\""
     val files = {
       val s = Files.walk(root)
       try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
     }
-    val sites = files.flatMap { f =>
+    files.flatMap { f =>
       Files.readAllLines(f).asScala.zipWithIndex
         .filter(_._1.contains(literal)).map { case (_, i) => s"$f:${i + 1}" }
     }
+  }
+
+  test("src/main/scala spells the \"_graft_committed\" literal at most once") {
+    val sites = this.sites("\"_graft_committed\"")
     assert(sites.nonEmpty, "the marker constant itself is missing — the scan checked nothing")
     assert(sites.size == 1, s"the commit-marker literal is spelled at ${sites.size} sites: " +
       sites.mkString(", "))
+  }
+
+  test("the \"meta.json\" and \"data_v\" names are spelled only in VersionStore.scala") {
+    for (literal <- Seq("\"meta.json", "\"data_v")) {
+      val found = sites(literal)
+      assert(found.nonEmpty, s"$literal is spelled nowhere — the scan checked nothing")
+      val outside = found.filterNot(_.contains("/catalog/VersionStore.scala:"))
+      assert(outside.isEmpty, s"$literal is spelled outside VersionStore.scala: " +
+        outside.mkString(", "))
+    }
   }
 }

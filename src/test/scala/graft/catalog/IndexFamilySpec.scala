@@ -81,6 +81,49 @@ class IndexFamilySpec extends graft.SparkTestBase {
     assertReadsMatchScans(c)
   }
 
+  /** Centroid and PQ codebook sidecar text of the newest committed IVF build. */
+  private def ivfSidecars(coll: Path): Map[String, String] = {
+    val newest = io.list(coll).filter(e => e.isDir && e.name.startsWith("index_v"))
+      .filter(e => io.exists(new Path(e.path, CollectionMeta.CommittedName)))
+      .map(_.path).maxBy(_.getName)
+    Seq("_ivf_centroids.txt", "_pq_codebooks.txt").map(new Path(newest, _))
+      .filter(io.exists).map(p => p.getName -> new String(io.readBytes(p), "UTF-8")).toMap
+  }
+
+  test("a refresh without an incremental basis re-derives in full, never re-training") {
+    // two triggers: (a) compactIndexes(keepRefreshAxis = false) leaves no
+    // pb slices to diff against; (b) the indexed version's data dir is gone
+    // while its builds survive — compact(), then that dir reclaimed the way
+    // a vacuum interrupted between the data dir and the builds leaves it
+    for (trigger <- Seq("unsliced", "data-gone"); pq <- Seq(false, true)) {
+      val root = tmpDir("family-fallback")
+      val cat = new CollectionCatalog(spark, root, numBuckets = 4)
+      // ivf:nlist present, so a wrong re-train would succeed and differ
+      val c = cat.getOrCreateCollection("c", metadata = Map("ivf:nlist" -> "2"))
+      val coll = new Path(root, "c")
+      c.add(rows(0 until 24))
+      if (pq) c.buildIndexPq(m = 2, ksub = 4, nlist = 2) else c.buildIndex(nlist = 2)
+      c.buildDocIndex()
+      c.buildKeywordIndex()
+      if (trigger == "unsliced") assert(c.compactIndexes(keepRefreshAxis = false) == 3)
+      else {
+        val indexed = c.meta.version
+        c.compact()
+        io.deleteRecursively(new Path(coll, f"data_v$indexed%06d"))
+      }
+      val prior = ivfSidecars(coll)
+      assert(prior.contains("_ivf_centroids.txt") && prior.contains("_pq_codebooks.txt") == pq)
+      c.upsert(rows(20 until 30).withColumn("embedding", array(lit(9f), lit(1f))))
+      val what = s"$trigger, pq=$pq"
+      assert(c.refreshIndex() == 4, what)
+      assert(c.refreshDocIndex() == 4, what)
+      assert(c.refreshKeywordIndex() == 4, what)
+      assert(c.hasIndex && c.hasDocIndex && c.hasKeywordIndex, what)
+      assert(ivfSidecars(coll) == prior, s"$what: the refresh re-trained")
+      assertReadsMatchScans(c)
+    }
+  }
+
   test("forkCollection carries every family's current build, never a version-stale one") {
     val root = tmpDir("family-fork")
     val cat = new CollectionCatalog(spark, root, numBuckets = 4)
