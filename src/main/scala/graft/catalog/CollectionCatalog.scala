@@ -102,19 +102,30 @@ private[graft] object Carry {
     * layout with no carry history); otherwise each physical owner dir is
     * read once with explicit partition paths under `basePath` (partition
     * columns infer and prune exactly as on the plain scan), unioned by
-    * name with missing columns admitted. */
+    * name with missing columns admitted.
+    *
+    * Cached per COMMITTED dir ([[ResolvedCache]], keyed `<dir>@<marker
+    * mtime>`): the owner reads and each one's resolved schema. The first
+    * read of a committed dir infers (one `mergeSchema` job per owner read)
+    * and fills the cache; every later read of it builds the same frames
+    * from the cached schemas — no inference job, no manifest or listing
+    * IO. An uncommitted dir is read uncached, every time. */
   def readResolved(spark: SparkSession, io: StoreIO, vdir: Path,
-                   ownersFor: => Map[String, Path]): DataFrame =
-    if (read(io, vdir).isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(vdir.toString)
-    else
-      ownersFor.groupBy(_._2).toSeq.sortBy(_._1.toString)
-        .map { case (base, parts) =>
-          spark.read.option("mergeSchema", "true")
-            .option("basePath", base.toString)
-            .parquet(parts.keys.toSeq.sorted.map(p => new Path(base, p).toString): _*)
-        }
-        .reduce(_.unionByName(_, allowMissingColumns = true))
+                   ownersFor: => Map[String, Path]): DataFrame = {
+    var inferred: Seq[DataFrame] = Nil
+    val reads = ResolvedCache.memo(io, vdir, "reads") {
+      val plan =
+        if (read(io, vdir).isEmpty) Seq(vdir -> Seq.empty[String])
+        else ownersFor.groupBy(_._2).toSeq.sortBy(_._1.toString)
+          .map { case (base, parts) => base -> parts.keys.toSeq.sorted }
+      inferred = plan.map { case (base, parts) => ResolvedCache.ownerRead(spark, base, parts, None) }
+      plan.zip(inferred).map { case ((base, parts), df) => ResolvedCache.OwnerRead(base, parts, df.schema) }
+    }
+    val frames =
+      if (inferred.nonEmpty) inferred
+      else reads.map(r => ResolvedCache.ownerRead(spark, r.base, r.parts, Some(r.schema)))
+    frames.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
 }
 
 /** Parquet-backed vector-collection store with Chroma collection semantics.
@@ -1207,16 +1218,15 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     families.foreach(_.copyForFork(m, forkDir))
 
   /** Committed index for the CURRENT version: (path, centroids), if any —
-    * the highest marker-complete build. Centroid sidecars are parsed once
-    * per committed build (they are immutable after the marker lands), not
-    * on every query. */
+    * the highest marker-complete build. */
   private def currentIndex(m: CollectionMeta): Option[(Path, Array[(Int, Array[Double])])] =
     ivfFamily.current(m).flatMap(p => centroidsOf(p).map(c => (p, c)))
 
-  /** Centroids of a committed IVF build, parsed once per build via the
-    * sidecar cache. */
+  /** Centroids of an IVF build, parsed once per committed build
+    * ([[ResolvedCache]]). */
   private def centroidsOf(build: Path): Option[Array[(Int, Array[Double])]] =
-    Collection.cachedCentroids(io, build, spark.sparkContext.hadoopConfiguration)
+    ResolvedCache.memo(io, build, "centroids")(
+      Ann.readCentroids(build.toString, spark.sparkContext.hadoopConfiguration))
 
   def hasIndex: Boolean = currentIndex(meta).isDefined
 
@@ -1314,11 +1324,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
       Some((b, ivf, d) => Ann.buildPqResidualSeeded(ivf.assigned, "id", "embedding",
         ivf.centroids, d, m, pqSeedIds)))
 
-  /** The snapshot one IVF/PQ build indexes: ONE meta read, its rows with
-    * the id bucket as `pb`, and the row count sizing reads from that
-    * same snapshot (lazy: only the trained PQ builds size by it). */
-  private final class BuildInput(val snapshot: CollectionMeta) {
-    val df: DataFrame = versions.readVersion(snapshot.version).withColumnRenamed("pt", "pb")
+  /** The snapshot one IVF/PQ build indexes: ONE meta read and ONE
+    * resolved read of its data ([[indexable]]), its rows with the id
+    * bucket as `pb`, and the row count sizing reads from that same
+    * snapshot (lazy: only the trained PQ builds size by it). */
+  private final class BuildInput(val snapshot: CollectionMeta, data: DataFrame) {
+    val df: DataFrame = data.withColumnRenamed("pt", "pb")
     lazy val rows: Long = snapshotCount(snapshot)
     def ksubOr(ksub: Int): Int = if (ksub > 0) ksub else Ann.pqKsubFor(rows)
   }
@@ -1344,7 +1355,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   private def buildIvfPq(
       cells: BuildInput => Ann.IvfModel,
       codebooks: Option[(BuildInput, Ann.IvfModel, Int) => Ann.PqModel] = None): Unit = {
-    val b = new BuildInput(indexable()._1)
+    val (m, data) = indexable()
+    val b = new BuildInput(m, data)
     val (ivf, pq) = codebooks match {
       case None =>
         val carried = carriedPq(b.df)
@@ -1367,15 +1379,16 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     m
   }
 
-  /** [[nonEmptyMeta]] and its data columns, LOUD when a user column
-    * collides with the index layout. */
-  private def indexable(): (CollectionMeta, Array[String]) = {
+  /** [[nonEmptyMeta]] and the one resolved read of its data (rows with
+    * `pt`) that the build or refresh then indexes, LOUD when a user
+    * column collides with the index layout. */
+  private def indexable(): (CollectionMeta, DataFrame) = {
     val m = nonEmptyMeta()
-    val columns = versions.readVersion(m.version).columns
-    val clash = columns.intersect(Seq("cell", "pb"))
+    val data = versions.readVersion(m.version)
+    val clash = data.columns.intersect(Seq("cell", "pb"))
     require(clash.isEmpty,
       s"collection has ${clash.mkString("/")} column(s), which collide with the index layout; rename them")
-    (m, columns)
+    (m, data)
   }
 
   /** A user `codes` column collides with a PQ-coded layout's own: every
@@ -1402,10 +1415,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     pq.foreach(p => Ann.writePqSidecar(build, p, spark.sparkContext.hadoopConfiguration))
   }
 
-  /** PQ codebooks of a committed index build (None for a plain IVF one);
-    * parsed once per committed build via the sidecar cache. */
+  /** PQ codebooks of an index build (None for a plain IVF one), parsed
+    * once per committed build ([[ResolvedCache]]) — the None too, so a
+    * plain build pays no sidecar probe per read. */
   private def pqModelOf(build: Path): Option[Ann.PqModel] =
-    Collection.cachedPqModel(io, build, spark.sparkContext.hadoopConfiguration)
+    ResolvedCache.memo(io, build, "pq")(
+      Ann.readPqSidecar(build, spark.sparkContext.hadoopConfiguration))
 
   /** The newest committed build's PQ codebooks regardless of version —
     * what any REBUILD must carry forward: a rebuild that dropped them
@@ -1573,7 +1588,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // the same clash guard the full builds run (indexable()): a refresh
     // must not silently clobber a user column named cell/pb that a later
     // batch introduced (upsert's allowMissingColumns admits new columns)
-    val (m, columns) = indexable()
+    val (m, current) = indexable()
     // the prior's CENTROIDS assign (re-)written rows — refresh semantics,
     // never a silent re-train — and a PQ-coded prior re-encodes them under
     // its codebooks (encode is a pure function of (vector, codebooks), the
@@ -1581,7 +1596,6 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // slices would lack the codes column and the union-by-name read would
     // serve NULL codes to queryPq
     def reassigned(prior: Path, changed: Option[Set[Int]]): Ann.IvfModel = {
-      val current = versions.readVersion(m.version)
       val touched = changed.fold(current)(c => current.filter(col("pt").isin(c.toSeq: _*)))
         .withColumnRenamed("pt", "pb")
       val cents = centroidsOf(prior).get
@@ -1598,7 +1612,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
         case None => buildIndex() // re-train (ivf:nlist); buildIndex carries PQ itself
       },
       usable = prior => {
-        if (pqModelOf(prior).isDefined) requireNoCodes(columns)
+        if (pqModelOf(prior).isDefined) requireNoCodes(current.columns)
         centroidsOf(prior).isDefined
       })(maybeAutoCompactIndexes())
   }
@@ -1861,17 +1875,15 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   /** The analyzer a committed keyword build was tokenized with — its
     * [[KeywordIndex.AnalyzerStamp]] file (absent = "whitespace": builds
     * predate the setting, whose rule was the only one then). Cached per
-    * build dir ([[Collection.kwStampCache]]): stamps are immutable once
-    * the marker lands, and an uncached read would tax EVERY sidecar-path
+    * committed build ([[ResolvedCache]]): stamps are immutable once the
+    * marker lands, and an uncached read would tax EVERY sidecar-path
     * keyword query with a small-file read. */
-  private def kwAnalyzerOf(build: Path): String = {
-    if (Collection.kwStampCache.size > 65536) Collection.kwStampCache.clear()
-    Collection.kwStampCache.computeIfAbsent(build.toString, _ => {
+  private def kwAnalyzerOf(build: Path): String =
+    ResolvedCache.memo(io, build, "kwstamp") {
       val p = new Path(build, KeywordIndex.AnalyzerStamp)
       if (io.exists(p)) new String(io.readBytes(p), StandardCharsets.UTF_8).trim
       else Retrieval.DefaultAnalyzer
-    })
-  }
+    }
 
   /** The kwindex family writer bound to one analyzer. */
   private def kwWriter(analyzer: String): PostingsWriter = (rows, build) =>
@@ -2156,7 +2168,6 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val prior = fused.orderBy(col("rrf").desc, col("id"))
       .collect().map(_.getAs[String]("id")).zipWithIndex
       .map { case (id, i) => (id, i + 1) }
-    val spark = versions.snapshotDF(m).sparkSession
     import spark.implicits._
     if (prior.isEmpty)
       // zero candidates (a prefilter excluded everything): empty result —
@@ -2202,7 +2213,6 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     // bounded collect (≤ fetchN rows) — same contract as the rerank prior
     val cand = keywordTopK(terms, fetchN, where = where, whereDoc = whereDoc)
       .select("id").collect().map(_.getString(0)).toSeq
-    val spark = versions.snapshotDF(m).sparkSession
     import spark.implicits._
     if (cand.isEmpty)
       return Seq.empty[(String, Double)].toDF("id", "score")
@@ -2227,11 +2237,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * probe, valid because add/hydrate enforce uniform dimensions. */
   def dim(): Option[Int] = snapshotDim(meta)
 
-  /** [[dim]] of ONE meta snapshot. */
+  /** [[dim]] of ONE meta snapshot, probed once per committed data version
+    * ([[ResolvedCache]]). */
   private def snapshotDim(m: CollectionMeta): Option[Int] =
-    versions.currentDataOf(m).flatMap(_ =>
+    versions.currentDataOf(m).flatMap(data => ResolvedCache.memo(io, data, "dim")(
       versions.snapshotDF(m).select(size(col("embedding")).as("d")).limit(1).collect()
-        .headOption.map(_.getInt(0)))
+        .headOption.map(_.getInt(0))))
 
   /** A positive-integer tuning key from collection metadata. LOUD on a
     * present-but-malformed value: silently falling back to a default on a
@@ -2830,14 +2841,6 @@ object Collection {
     require(Spaces.contains(s),
       s"unknown space '$s' — supported: ${Spaces.toSeq.sorted.mkString(", ")}")
 
-  /** Keyword-sidecar analyzer stamps, cached per committed build dir: a
-    * build is immutable once its marker lands, so the one-file read never
-    * changes — without the cache EVERY keyword query on the sidecar path
-    * pays a small-file read just to re-learn the same stamp (an object-
-    * store tax). Coarse clear bounds the size, like [[staleProbe]]. */
-  private[catalog] val kwStampCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Fingerprint pairing committed data with the model that embedded it
     * (first 8 SHA-256 bytes of the sidecar text, hex). */
   private[catalog] def modelFp(text: String): String =
@@ -2851,45 +2854,4 @@ object Collection {
     * Size-capped by coarse clear: re-probing is the only cost. */
   private[catalog] val staleProbe =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Centroid sidecars parsed once per committed build. A committed build
-    * dir is immutable, but a path CAN be reborn (drop collection →
-    * recreate → rebuild lands on the same name), so the cache key carries
-    * the commit marker's mtime as a nonce. */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[(Int, Array[Double])]]()
-
-  /** Sidecar cache key of a committed build: its path plus the marker's
-    * mtime as the reborn-path nonce. */
-  private def buildKey(io: StoreIO, build: Path): String =
-    s"$build@${io.modTime(new Path(build, CollectionMeta.CommittedName))}"
-
-  private[catalog] def cachedCentroids(
-      io: StoreIO, build: Path,
-      hadoopConf: org.apache.hadoop.conf.Configuration): Option[Array[(Int, Array[Double])]] = {
-    val key = buildKey(io, build)
-    Option(centroidCache.get(key)).orElse {
-      val parsed = graft.operators.Ann.readCentroids(build.toString, hadoopConf)
-      parsed.foreach(centroidCache.put(key, _))
-      parsed
-    }
-  }
-
-  /** PQ codebook sidecars, cached like [[cachedCentroids]] (same
-    * immutable-once-committed argument, same reborn-path nonce). The
-    * None result is cached too — plain IVF builds would otherwise pay a
-    * filesystem probe on every query/queryBatch layout decision. */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[graft.operators.Ann.PqModel]]()
-
-  private[catalog] def cachedPqModel(
-      io: StoreIO, build: Path,
-      hadoopConf: org.apache.hadoop.conf.Configuration): Option[graft.operators.Ann.PqModel] = {
-    val key = buildKey(io, build)
-    Option(pqCache.get(key)).getOrElse {
-      val parsed = graft.operators.Ann.readPqSidecar(build, hadoopConf)
-      pqCache.put(key, parsed)
-      parsed
-    }
-  }
 }

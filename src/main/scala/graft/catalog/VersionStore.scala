@@ -113,7 +113,9 @@ private[catalog] final class VersionStore(spark: SparkSession, val io: StoreIO, 
     * schema evolution, the same semantics per-dir `mergeSchema` gives).
     * The no-carry case — every fresh write, every compacted collection —
     * short-circuits to the plain whole-dir read: the identical plan to
-    * the pre-manifest layout (PlanShapeSpec pins it). */
+    * the pre-manifest layout (PlanShapeSpec pins it). A committed
+    * version's owner reads and their schemas are resolved once per JVM
+    * ([[Carry.readResolved]], [[ResolvedCache]]). */
   def readVersion(v: Int): DataFrame =
     Carry.readResolved(spark, io, dataDir(v), owners(v))
 
@@ -121,7 +123,14 @@ private[catalog] final class VersionStore(spark: SparkSession, val io: StoreIO, 
     * written). Every read surface that also consults snapshot-bound
     * sidecars (IVF cells, posting lists) must scan THIS, not a fresh
     * `toDF` — that re-reads meta, and a commit landing in between would
-    * pair version-N+1 data with version-N index artifacts. */
+    * pair version-N+1 data with version-N index artifacts.
+    *
+    * Cheap to call again: the committed version's read plan and schema are
+    * cached under `<data dir>@<marker mtime>` ([[ResolvedCache]] — the
+    * marker's mtime is the nonce that keeps a reborn path from reusing a
+    * dead dir's schema), so only the first frame of a version pays the
+    * `mergeSchema` inference job; later frames are built from the cached
+    * schema with no Spark job. An uncommitted dir is never cached. */
   def snapshotDF(m: CollectionMeta): DataFrame = currentDataOf(m) match {
     case Some(_) => readVersion(m.version).drop("pt")
     case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(Seq(

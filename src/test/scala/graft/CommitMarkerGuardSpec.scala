@@ -11,12 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * reader of the marker goes through it; the version pointer and the data
   * dir names are spelled only in `VersionStore.scala`, which owns the
   * data-version layout. A second literal elsewhere means the protocol is
-  * being written out by hand again at a new site. */
+  * being written out by hand again at a new site. Likewise every read of
+  * a committed dir in the store goes through the one resolved-read cache
+  * (`ResolvedCache.scala`): a `mergeSchema` option or a second map cache
+  * elsewhere in the store means a read surface is skipping it. */
 class CommitMarkerGuardSpec extends AnyFunSuite {
 
-  /** `file:line` of every line in src/main/scala containing `literal`. */
-  private def sites(literal: String): Seq[String] = {
-    val root = Paths.get("src/main/scala")
+  /** `file:line` of every line under `dir` containing `literal`. */
+  private def sites(literal: String, dir: String = "src/main/scala"): Seq[String] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the project root: ${root.toAbsolutePath} is missing")
     val files = {
       val s = Files.walk(root)
@@ -43,5 +46,20 @@ class CommitMarkerGuardSpec extends AnyFunSuite {
       assert(outside.isEmpty, s"$literal is spelled outside VersionStore.scala: " +
         outside.mkString(", "))
     }
+  }
+
+  test("the store spells mergeSchema and builds a map cache only in ResolvedCache.scala") {
+    val store = "src/main/scala/graft/catalog"
+    val cache = "/catalog/ResolvedCache.scala:"
+    val merge = sites("option(\"mergeSchema\"", store)
+    assert(merge.exists(_.contains(cache)), "the cache spells no mergeSchema read — the scan checked nothing")
+    assert(merge.forall(_.contains(cache)), "a mergeSchema read outside the resolved-read cache: " +
+      merge.filterNot(_.contains(cache)).mkString(", "))
+    // CommitCoordinator's maps key writer coordination (catalog roots,
+    // lock and lease keys), not facts about committed dirs
+    val maps = sites("ConcurrentHashMap[", store).filterNot(_.contains("/catalog/CommitCoordinator.scala:"))
+    assert(maps.count(_.contains(cache)) == 1, s"the resolved-read cache is not one map: $maps")
+    assert(maps.forall(_.contains(cache)), "a map cache outside the resolved-read cache: " +
+      maps.filterNot(_.contains(cache)).mkString(", "))
   }
 }

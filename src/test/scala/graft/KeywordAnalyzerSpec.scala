@@ -182,4 +182,31 @@ class KeywordAnalyzerSpec extends SparkTestBase {
       c.modifyMetadata(Map(Collection.AnalyzerKey -> "porter"))
     }
   }
+
+  test("a reborn keyword build is never served under the dead build's analyzer stamp") {
+    val root = tmpDir("kwa-reborn")
+    val cat = new CollectionCatalog(spark, root, numBuckets = 4)
+    // "hash" matches doc 1 under both rules; "joins" and doc 2's quoted
+    // "Hash" match only under "simple" — so a "simple" sidecar served to a
+    // "whitespace" query answers differently from the scan
+    val terms = Seq("joins", "hash")
+    def top(c: Collection) = c.keywordTopK(terms, 10)
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getDouble(2))).toSeq
+    val dead = cat.getOrCreateCollection("r",
+      metadata = Map(Collection.AnalyzerKey -> "whitespace"))
+    dead.add(corpus.toDF("id", "document"))
+    dead.buildKeywordIndex()
+    top(dead) // the sidecar path reads this build's stamp: "whitespace"
+    assert(cat.deleteCollection("r"))
+    val c = cat.getOrCreateCollection("r",
+      metadata = Map(Collection.AnalyzerKey -> "simple"))
+    c.add(corpus.toDF("id", "document"))
+    c.buildKeywordIndex() // the same build path, stamped "simple"
+    c.modifyMetadata(Map(Collection.AnalyzerKey -> "whitespace"))
+    val served = top(c)
+    c.dropKeywordIndex()
+    val scan = top(c)
+    assert(scan.nonEmpty && served == scan,
+      s"the reborn 'simple' build answered a 'whitespace' query: $served vs scan $scan")
+  }
 }

@@ -1,0 +1,125 @@
+package graft.catalog
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkTestBase
+
+/** The resolved-read cache ([[ResolvedCache]]): a committed data version or
+  * index build is resolved once — its read plan, schemas, dimension and
+  * sidecars — so constructing a read of an unchanged snapshot runs no Spark
+  * job, while every new version, carried version, rollback and reborn path
+  * reads exactly what a fresh schema inference reads. */
+class ResolvedReadSpec extends SparkTestBase {
+  import spark.implicits._
+
+  /** Spark jobs started while `call` runs (its construction only: the
+    * returned frame is not executed). */
+  private def jobs(call: => Any): Int = {
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      call
+      TestBus.drain(spark.sparkContext)
+      n.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def rows(ids: Range) =
+    ids.map(i => (s"id$i", s"doc $i", Seq(i.toFloat, (i % 7).toFloat, 1f)))
+      .toDF("id", "document", "embedding")
+
+  private def collection(name: String, indexed: Boolean = true): Collection = {
+    val c = new CollectionCatalog(spark, tmpDir("resolved-read"), numBuckets = 4)
+      .getOrCreateCollection(name)
+    c.add(rows(0 until 40))
+    if (indexed) c.buildIndex(nlist = 3)
+    c
+  }
+
+  /** Rows as sorted strings over the sorted column names. */
+  private def contents(df: DataFrame): (Seq[(String, String)], Seq[String]) = {
+    val cols = df.columns.sorted.toSeq
+    (df.schema.fields.map(f => f.name -> f.dataType.simpleString).sortBy(_._1).toSeq,
+      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq)
+  }
+
+  /** A fresh `mergeSchema` inference over a version's resolved leaf dirs —
+    * the read with no cache in front of it. */
+  private def inferred(c: Collection, version: Int): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(c.leafDataDirs(version): _*)
+
+  test("a second construct of query/queryStruct/get on an unchanged snapshot runs no job") {
+    val q = Seq(3f, 3f, 1f)
+    // the IVF reads resolve their build (the build itself resolved the
+    // data version); get resolves the data version a plain add never read
+    for ((what, indexed, construct) <- Seq[(String, Boolean, Collection => Any)](
+        ("query", true, _.query(q, 5)),
+        ("queryStruct", true, _.queryStruct(Seq(q), 5)),
+        ("get", false, _.get(ids = Seq("id3", "id4"))))) {
+      val c = collection(s"c_$what", indexed)
+      val first = jobs(construct(c))
+      val second = jobs(construct(c))
+      assert(first >= 1, s"$what: the first construct resolved nothing ($first jobs)")
+      assert(second == 0, s"$what: the second construct on an unchanged snapshot ran $second jobs")
+    }
+    // a frame built from the cache answers like the one that filled it
+    val c = collection("answers")
+    val miss = c.query(q, 5).collect().toSeq
+    assert(miss.nonEmpty && c.query(q, 5).collect().toSeq == miss)
+    assert(c.get(ids = Seq("id3")).select("document").as[String].collect().toSeq == Seq("doc 3"))
+  }
+
+  test("an upsert that adds a column is visible in the new version") {
+    val c = collection("addcol")
+    val v1 = c.meta.version
+    assert(!c.toDF.columns.contains("tag"))
+    c.upsert(Seq(("id1", "patched", Seq(1f, 1f, 1f), "t1"))
+      .toDF("id", "document", "embedding", "tag"))
+    val now = c.toDF
+    assert(now.columns.contains("tag"))
+    assert(now.filter(col("id") === "id1").select("tag").as[String].collect().toSeq == Seq("t1"))
+    assert(now.filter(col("tag").isNull).count() == 39)
+    assert(!c.toDFAt(v1).columns.contains("tag"))
+  }
+
+  test("a carried version and a rollback read what a fresh inference reads") {
+    val c = collection("carry")
+    val v1 = c.meta.version
+    c.toDF.count()
+    // a partial upsert: one bucket rewritten with a new column, the others
+    // carried from v1 by manifest — a union of two owner reads
+    c.upsert(Seq(("id2", "patched", Seq(2f, 2f, 2f), 7L))
+      .toDF("id", "document", "embedding", "score"))
+    val v2 = c.meta.version
+    c.rollbackTo(v1)
+    val v3 = c.meta.version
+    for (v <- Seq(v1, v2, v3)) {
+      c.toDFAt(v).count() // fills the cache
+      assert(jobs(c.toDFAt(v)) == 0, s"v$v: the cached read still infers")
+      assert(contents(c.toDFAt(v)) == contents(inferred(c, v).drop("pt")), s"v$v differs")
+    }
+    assert(contents(c.toDF) == contents(c.toDFAt(v1)))
+  }
+
+  test("a deleted and recreated collection at the same path reads its new schema") {
+    val root = tmpDir("resolved-reborn")
+    val cat = new CollectionCatalog(spark, root, numBuckets = 4)
+    cat.getOrCreateCollection("c").add(rows(0 until 8).withColumn("a", lit(1)))
+    assert(cat.getCollection("c").get.toDF.columns.contains("a"))
+    assert(cat.deleteCollection("c"))
+    val c = cat.getOrCreateCollection("c")
+    c.add(rows(0 until 8).withColumn("b", lit("x")))
+    val cols = c.toDF.columns
+    assert(cols.contains("b") && !cols.contains("a"), s"reborn path read ${cols.mkString(",")}")
+    assert(c.toDF.filter(col("b") === "x").count() == 8)
+  }
+}
