@@ -8,7 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ann, ChromaFilter, DocIndex, Embedder, EmbeddingFunction, KeywordIndex, Knn, Retrieval}
+import graft.operators.{Ann, ChromaFilter, DocIndex, Embedder, EmbeddingFunction, KeywordIndex, Knn,
+  KnnTopK, Retrieval}
 
 /** Logical carry-forward for copy-on-write versions: instead of hard-
   * linking every file of every untouched partition into the new version
@@ -2149,9 +2150,8 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * Bounded by construction: the candidate list is ≤ fetchN rows (the
     * retrieval contract), so the id collect, the pruned document read
     * and the rank window are all client-sized — the corpus never feeds
-    * the scorer. Like [[queryBatchOf]]'s embeddings path, the fused
-    * kNN executes eagerly at call time (the candidate ids prune the
-    * document read). */
+    * the scorer. The fused kNN executes eagerly at call time (the
+    * candidate ids prune the document read). */
   def queryRerankText(text: String, k: Int, fn: graft.operators.RerankFunction,
                       fetchN: Int = 50, rrfK: Int = 60,
                       where: Option[Where] = None,
@@ -2285,7 +2285,7 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     * argument gates — the query dimension is checked against THIS
     * snapshot, so a concurrent `replaceContents` cannot slip a wrong-
     * dimension query past the guard into VectorDistance's NULL distances
-    * (which a rank window sorts first: k arbitrary rows, no error) — then
+    * (which rank first: k arbitrary rows, no error) — then
     * the IVF-or-scan choice, cell probing, the reserved-name check,
     * `cell isin` pruning and [[prefiltered]]. `pqPlain` marks a PQ read
     * (naming its plain counterpart for the error): it is LOUD without a
@@ -2352,60 +2352,48 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
   }
 
   /** B6 batch form: Chroma's `query` accepts a LIST of query embeddings
-    * and returns per-query result sets. `qid` is the 0-based position of
-    * the query vector; results carry `(qid, rnk, id, dist, ...)`. One
-    * broadcast of the (tiny) query set against one corpus scan — never a
-    * per-query rescan. */
+    * and returns per-query result sets: `(…, qid, dist, rnk)`, the stored
+    * columns minus the vector, `qid` the 0-based position of the query
+    * vector and `rnk` its 1-based rank. One corpus scan serves the whole
+    * batch — never a per-query rescan — through [[KnnTopK]]: the scan
+    * stage scores each row against every query vector (on the IVF path
+    * only the queries whose probed cells hold it), each task keeps a
+    * size-k heap per query, and collecting the frame runs ONE Spark job.
+    * Constructing it runs none on a resolved snapshot. */
   def queryBatch(queryVecs: Seq[Seq[Float]], k: Int, where: Option[Where] = None,
                  whereDoc: Option[WhereDocument] = None, nprobe: Int = 0,
                  exact: Boolean = false): DataFrame =
-    queryBatchOf(meta, queryVecs, k, where, whereDoc, nprobe, exact)
+    rankedBatch(queryVecs, k, where, whereDoc, nprobe, exact, keepVector = false)
 
-  /** [[queryBatch]] against ONE caller-held meta snapshot — the entry
-    * point for read surfaces that pair the hit set with OTHER reads of
-    * the same snapshot (queryStruct's embeddings join): both sides must
-    * see the same version, per the snapshot rule at [[VersionStore.snapshotDF]]. */
-  private def queryBatchOf(m: CollectionMeta, queryVecs: Seq[Seq[Float]], k: Int,
-                           where: Option[Where], whereDoc: Option[WhereDocument],
-                           nprobe: Int, exact: Boolean): DataFrame = {
+  /** The [[queryBatch]] body; `keepVector` carries each hit's stored
+    * vector (queryStruct's embeddings). */
+  private def rankedBatch(queryVecs: Seq[Seq[Float]], k: Int, where: Option[Where],
+                          whereDoc: Option[WhereDocument], nprobe: Int, exact: Boolean,
+                          keepVector: Boolean): DataFrame = {
+    val m = meta
     val s = vectorScan(m, "queryBatch", queryVecs, k, where, whereDoc, nprobe, exact,
       Seq("qid", "rnk", "dist", "__qvec", "__qcells", "__na", "__nq"))
-    import spark.implicits._
-    if (s.centroids.isEmpty) {
-      val queries = queryVecs.zipWithIndex.map(_.swap).toDF("qid", "qvec")
-      Knn.topKBatch(s.rows, "id", "embedding", queries, "qid", "qvec", k, m.space,
-        excludeSelf = false)
-    } else {
-      // the broadcast join condition keeps each (query, row) pair only
-      // when the row's cell is in THAT query's probe set — one pruned
-      // scan serves the whole batch
-      val queries = queryVecs.zipWithIndex
-        .map { case (v, i) => (i, v, s.cellsPerQuery(i)) }.toDF("qid", "__qvec", "__qcells")
-      val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("id"))
-      s.rows.join(broadcast(queries), array_contains(col("__qcells"), col("cell")))
-        .withColumn("dist",
-          graft.functions.Distances.bySpace(m.space)(col("embedding"), col("__qvec")))
-        .withColumn("rnk", row_number().over(w))
-        .filter(col("rnk") <= k)
-        .drop("embedding" +: "__qvec" +: "__qcells" +: s.layoutCols: _*)
-    }
+    // per-query probe sets: a row outside THIS query's probed cells is
+    // never ranked for it, even though the scan reads the union
+    val probed = s.cellsPerQuery.map(cells => col("cell").isin(cells: _*))
+    KnnTopK.batch(s.rows, "id", "embedding", queryVecs, k, m.space, probed,
+      dropCols = s.layoutCols, keepVector = keepVector)
   }
 
   /** Chroma result-SHAPE parity: `collection.query` returns parallel
     * per-query lists (`ids`, and — under `include=` control — `documents`,
-    * `distances`, `metadatas`). This is a thin fold over [[queryBatch]]'s
-    * long form: one `collect_list` per query id (k elements each, never
-    * corpus-sized), rank-ordered via the struct's leading `rnk` field.
-    * Metadata = every stored column that isn't id/document/embedding,
-    * stringified into one map per hit (the flat typed columns stay the
-    * pushdown layout; this is presentation only).
+    * `distances`, `metadatas`, `embeddings`, `uris`, `data`). One row per
+    * query vector in `qid` order; a query whose filter leaves no hits gets
+    * empty lists, not a missing row. Metadata = every stored column that
+    * isn't id/document/embedding, stringified into one map per hit (the
+    * flat typed columns stay the pushdown layout; this is presentation
+    * only).
     *
-    * Laziness caveat: with include("embeddings") the call is EAGER — the
-    * kNN executes (and any error surfaces) at call time, because the hit
-    * set (≤ nq·k rows, client-sized by contract) is materialized once to
-    * dedup the expensive search out of the vector join-back below. Every
-    * other include set returns the usual lazy frame.
-    */
+    * The fold runs inside [[queryBatch]]'s one job ([[KnnTopK.fold]]):
+    * the driver gathers each query's ranked hits — with their stored
+    * vectors under include("embeddings") — into the lists. Collecting the
+    * frame runs ONE Spark job, and the call itself stays lazy for every
+    * include set. */
   def queryStruct(queryVecs: Seq[Seq[Float]], k: Int,
                   where: Option[Where] = None,
                   whereDoc: Option[WhereDocument] = None,
@@ -2414,52 +2402,17 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     val unknown = include.diff(
       Set("documents", "distances", "metadatas", "embeddings", "uris", "data"))
     require(unknown.isEmpty, s"unknown include entries: ${unknown.mkString(", ")}")
-    val m = meta
-    val long0 = queryBatchOf(m, queryVecs, k, where, whereDoc, nprobe, exact)
-    // Chroma's query(include=["embeddings"]) returns per-hit VECTORS; the
-    // long form deliberately drops them (k vectors per query would bloat
-    // every read that doesn't ask) — join them back by id against one
-    // column-pruned (id, embedding) scan of the SAME snapshot the hits
-    // came from (a toDF here would re-read meta; a commit landing in
-    // between would pair old-vector distances with newer vectors — the
-    // rule at [[VersionStore.snapshotDF]]). The hit set is MATERIALIZED once (bounded:
-    // ≤ nq·k rows — this is the presentation path, whose whole output is
-    // client-sized by contract) so the expensive kNN executes a single
-    // time: referencing long0 twice in one plan would run the entire
-    // search twice (the two subtrees differ, ReuseExchange cannot
-    // deduplicate them). The id literals confine the embedding scan via
-    // parquet pushdown, and the LEFT join preserves every hit row: a hit
-    // can never silently drop to fewer than k entries.
-    val long = if (!include("embeddings")) long0
-      else {
-        val hitRows = long0.collect()
-        val hits = spark.createDataFrame(
-          spark.sparkContext.parallelize(hitRows.toIndexedSeq, 1), long0.schema)
-        val hitIds = hitRows.map(_.getAs[Any]("id")).distinct.toSeq
-        val embs = versions.snapshotDF(m).select(col("id"), col("embedding").as("__emb"))
-          .filter(col("id").isin(hitIds: _*))
-        hits.join(broadcast(embs), Seq("id"), "left")
-      }
+    val long = rankedBatch(queryVecs, k, where, whereDoc, nprobe, exact,
+      keepVector = include("embeddings"))
     val fields: Seq[FoldField] =
       ("id", "ids", col("id")) +:
       (docField(long, include("documents")) ++
         (if (include("distances")) Seq(("dist", "distances", col("dist"))) else Nil) ++
-        (if (include("embeddings")) Seq(("embedding", "embeddings", col("__emb"))) else Nil) ++
+        (if (include("embeddings")) Seq(("embedding", "embeddings", col("embedding"))) else Nil) ++
         uriDataFields(long, include) ++
         metaField(long, include("metadatas"),
-          exclude = Seq("qid", "rnk", "id", "dist", "document", "embedding", "__emb", "uri", "data")))
-    // rnk is a dense per-query row_number, so subtraction is a valid
-    // total-order comparator (the default struct ordering cannot sort a
-    // payload carrying a MAP field)
-    val rows = sortedRows(long, Seq("qid"), col("rnk"), (l, r) => l - r, fields)
-    // Chroma returns one entry PER QUERY VECTOR — a query whose filter
-    // leaves zero hits gets empty lists, not a missing row (the groupBy
-    // alone would drop it and misalign positional zips in the caller)
-    val allQ = spark.range(queryVecs.size.toLong)
-      .select(col("id").cast("int").as("qid"))
-    val full = allQ.join(rows, Seq("qid"), "left")
-      .withColumn("rows", coalesce(col("rows"), array()))
-    extractLists(full, Seq("qid"), fields).orderBy("qid")
+          exclude = Seq("qid", "rnk", "id", "dist", "document", "embedding", "uri", "data")))
+    KnnTopK.fold(long, fields.map { case (_, list, e) => e.as(list) })
   }
 
   // ---- shared presentation fold for queryStruct/getStruct ----
@@ -2617,6 +2570,13 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     versions.owners(version).toSeq.sortBy(_._1)
       .map { case (part, owner) => new Path(owner, part).toString }
   }
+
+  /** The schema a `mergeSchema` read of exactly `dirs` — leaf dirs of
+    * committed `version`, as [[leafDataDirs]] or [[leafDataDirsForIds]]
+    * bind them — infers, resolved once per committed version and dir set
+    * ([[ResolvedCache]]). */
+  private[graft] def leafSchema(version: Int, dirs: Seq[String]): org.apache.spark.sql.types.StructType =
+    ResolvedCache.leafSchema(spark, io, versions.dataDir(version), dirs)
 
   /** [[leafDataDirs]] confined to the `pt` buckets a literal id list can
     * live in (the writer's own hash, evaluated driver-side — exactly

@@ -13,6 +13,8 @@ import org.apache.spark.sql.types.StructType
   *    owner dir, each with its resolved schema, so a hit builds the frame
   *    with `spark.read.schema(...)` and runs no `mergeSchema` inference job
   *    (carried versions and carried builds included);
+  *  - the schema of a read bound to some of a data version's leaf dirs
+  *    (the `graft` SQL source);
   *  - a data version's embedding dimension;
   *  - an index build's centroids, PQ codebooks and keyword analyzer stamp.
   *
@@ -50,6 +52,15 @@ private[catalog] object ResolvedCache {
         facts.put(key, v)
         v
       }
+    }
+
+  /** The schema a `mergeSchema` read of exactly the leaf dirs `leaves` of
+    * committed `dir` infers (one Spark job on a miss), keyed on the leaf
+    * set too: a read bound to a subset of the leaves keeps the schema its
+    * own dirs infer. */
+  def leafSchema(spark: SparkSession, io: StoreIO, dir: Path, leaves: Seq[String]): StructType =
+    memo(io, dir, leaves.sorted.mkString("leaves|", "|", "")) {
+      spark.read.option("mergeSchema", "true").parquet(leaves: _*).schema
     }
 
   /** The parquet read of one owner: with `schema` given, no inference;

@@ -6,9 +6,13 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Distances
 
-/** Brute-force exact top-k nearest-neighbor search — the read path of the
-  * hydrated Chroma collection (`collection.query(query_embeddings, n_results,
-  * where, where_document)`, reference README.md:5 "similarity search").
+/** Brute-force exact top-k nearest-neighbor search over any frame
+  * (`collection.query(query_embeddings, n_results, where, where_document)`,
+  * reference README.md:5 "similarity search"). [[topK]] is also the plan of
+  * `Collection.query` (one vector: a `TakeOrderedAndProject`, one job);
+  * the collection's batch and Chroma-shaped reads (`queryBatch`,
+  * `queryStruct`) run [[KnnTopK]] instead. [[topKBatch]] and
+  * [[hardNegatives]] are the library's broadcast-and-window forms.
   *
   * Design for scale (100 TB):
   *  - The query side is always tiny (a handful of vectors) → `broadcast()` it,

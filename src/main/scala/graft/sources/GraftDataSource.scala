@@ -189,13 +189,14 @@ class GraftDataSource extends RelationProvider
       case None => coll.leafDataDirs(version)
     }
     require(dirs.nonEmpty, s"collection '$name' version $version has no data dirs")
-    // Spark's own parquet relation machinery over the resolved snapshot:
-    // schema from footers (mergeSchema across buckets), full pushdown
+    // Spark's own parquet relation machinery over the resolved snapshot,
+    // full pushdown; the schema is what the bound dirs' footers merge to,
+    // inferred once per committed version and dir set
     val rel = DataSource(
       sparkSession = spark,
       className = "parquet",
       paths = dirs,
-      options = Map("mergeSchema" -> "true")
+      userSpecifiedSchema = Some(coll.leafSchema(version, dirs))
     ).resolveRelation()
     rel match {
       // the INSERT guard (see class doc), two independent layers:

@@ -13,6 +13,14 @@ object GraftColumnShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The analyzed logical plan of `df`, and a frame over a logical plan
+    * (`classic.Dataset.ofRows` is `private[sql]`) — how an operator with
+    * its own logical node hands it to the DataFrame API. */
+  def analyzed(df: DataFrame): catalyst.plans.logical.LogicalPlan =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+  def frame(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
   /** Whether `c` is syntactically a call to one of `names` (lower-case).
     * Spark 4 Columns carry a ColumnNode AST (`UnresolvedFunction` for the
     * `functions._` builders), only convertible to Catalyst at analysis —

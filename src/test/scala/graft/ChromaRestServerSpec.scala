@@ -271,4 +271,55 @@ class ChromaRestServerSpec extends SparkTestBase {
       assert(status("get", """{"limit":2.0}""")._1 == 200)
     }
   }
+
+  /** The parsed JSON object of one served /query. */
+  private def served(srv: ChromaRestServer, body: String): Map[String, Any] =
+    ChromaFilter.JsonMini.parse(rawPost(verbUrl(srv, "served", "query"), body))._1
+      .asInstanceOf[Map[String, Any]]
+
+  test("served query with include embeddings returns the stored vectors in rank order") {
+    val cat = freshCat("restsrv-emb")
+    val c = hydrated(cat)
+    withServer(cat) { srv =>
+      val obj = served(srv,
+        """{"query_embeddings":[[12.5,3,1]],"n_results":4,"include":["embeddings","distances"]}""")
+      val ids = obj("ids").asInstanceOf[Seq[Seq[String]]]
+      val embs = obj("embeddings").asInstanceOf[Seq[Seq[Seq[Double]]]]
+      assert(ids.map(_.size) == Seq(4) && embs.map(_.size) == Seq(4))
+      assert(ids.head == c.query(Seq(12.5f, 3f, 1f), 4).orderBy("dist", "id")
+        .select("id").as[String].collect().toSeq)
+      val stored = c.toDF.select("id", "embedding").as[(String, Seq[Float])].collect().toMap
+      assert(embs.head == ids.head.map(id => stored(id).map(_.toDouble)))
+      assert(obj("documents") == null && obj("metadatas") == null)
+    }
+  }
+
+  test("served query whose where matches nothing answers an empty list per query vector") {
+    val cat = freshCat("restsrv-nohit")
+    hydrated(cat)
+    withServer(cat) { srv =>
+      val obj = served(srv,
+        """{"query_embeddings":[[1,1,1],[30,2,1]],"n_results":3,"where":{"lang":"de"}}""")
+      for (key <- Seq("ids", "distances", "documents", "metadatas"))
+        assert(obj(key) == Seq(Nil, Nil), s"$key: ${obj(key)}")
+      assert(obj("embeddings") == null)
+    }
+  }
+
+  test("served query of two vectors answers per-query lists in request order") {
+    val cat = freshCat("restsrv-two")
+    val c = hydrated(cat)
+    withServer(cat) { srv =>
+      val qs = Seq(Seq(38f, 3f, 1f), Seq(0f, 0f, 1f))
+      val obj = served(srv,
+        """{"query_embeddings":[[38,3,1],[0,0,1]],"n_results":3}""")
+      val ids = obj("ids").asInstanceOf[Seq[Seq[String]]]
+      val dists = obj("distances").asInstanceOf[Seq[Seq[Double]]]
+      val local = qs.map(q => c.query(q, 3).orderBy("dist", "id")
+        .select("id", "dist").as[(String, Double)].collect().toSeq)
+      assert(ids == local.map(_.map(_._1)))
+      assert(dists == local.map(_.map(_._2)))
+      assert(ids.head != ids(1))
+    }
+  }
 }

@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * data-version layout. A second literal elsewhere means the protocol is
   * being written out by hand again at a new site. Likewise every read of
   * a committed dir in the store goes through the one resolved-read cache
-  * (`ResolvedCache.scala`): a `mergeSchema` option or a second map cache
-  * elsewhere in the store means a read surface is skipping it. */
+  * (`ResolvedCache.scala`): a `mergeSchema` option in the store or its
+  * SQL source, or a second map cache in the store, means a read surface is
+  * skipping it. */
 class CommitMarkerGuardSpec extends AnyFunSuite {
 
   /** `file:line` of every line under `dir` containing `literal`. */
@@ -51,7 +52,8 @@ class CommitMarkerGuardSpec extends AnyFunSuite {
   test("the store spells mergeSchema and builds a map cache only in ResolvedCache.scala") {
     val store = "src/main/scala/graft/catalog"
     val cache = "/catalog/ResolvedCache.scala:"
-    val merge = sites("option(\"mergeSchema\"", store)
+    // the SQL source reads committed dirs too
+    val merge = Seq(store, "src/main/scala/graft/sources").flatMap(sites("\"mergeSchema\"", _))
     assert(merge.exists(_.contains(cache)), "the cache spells no mergeSchema read — the scan checked nothing")
     assert(merge.forall(_.contains(cache)), "a mergeSchema read outside the resolved-read cache: " +
       merge.filterNot(_.contains(cache)).mkString(", "))

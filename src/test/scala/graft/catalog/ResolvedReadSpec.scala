@@ -57,6 +57,9 @@ class ResolvedReadSpec extends SparkTestBase {
   private def inferred(c: Collection, version: Int): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(c.leafDataDirs(version): _*)
 
+  private def inferredOf(dirs: Seq[String]) =
+    spark.read.option("mergeSchema", "true").parquet(dirs: _*).schema
+
   test("a second construct of query/queryStruct/get on an unchanged snapshot runs no job") {
     val q = Seq(3f, 3f, 1f)
     // the IVF reads resolve their build (the build itself resolved the
@@ -76,6 +79,50 @@ class ResolvedReadSpec extends SparkTestBase {
     val miss = c.query(q, 5).collect().toSeq
     assert(miss.nonEmpty && c.query(q, 5).collect().toSeq == miss)
     assert(c.get(ids = Seq("id3")).select("document").as[String].collect().toSeq == Seq("doc 3"))
+  }
+
+  test("a served read runs one Spark job: constructing it on a warm snapshot runs none") {
+    val c = collection("one_job")
+    val q = Seq(3f, 3f, 1f)
+    val batch = Seq(q, Seq(1f, 0f, 1f), Seq(20f, 6f, 1f), Seq(39f, 4f, 1f))
+    for ((what, read) <- Seq[(String, Collection => DataFrame)](
+        ("queryStruct IVF", _.queryStruct(Seq(q), 5)),
+        ("queryStruct exact", _.queryStruct(Seq(q), 5, exact = true)),
+        ("queryStruct embeddings", _.queryStruct(Seq(q), 5,
+          include = Set("embeddings", "distances", "documents"))),
+        ("queryBatch of 4", _.queryBatch(batch, 5)),
+        ("query", _.query(q, 5)))) {
+      read(c).collect() // warms the snapshot
+      var df: DataFrame = null
+      assert(jobs { df = read(c) } == 0, s"$what: the construct ran a job")
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val n = jobs { rows = df.collect() }
+      assert(n == 1, s"$what: collecting ran $n Spark jobs")
+      assert(rows.nonEmpty, s"$what: no rows")
+    }
+  }
+
+  test("the graft SQL source resolves its schema once per committed version and dir set") {
+    val root = tmpDir("resolved-sql")
+    val c = new CollectionCatalog(spark, root, numBuckets = 4).getOrCreateCollection("s")
+    c.add(rows(0 until 40))
+    // one bucket rewritten with a new column, the others carried
+    c.upsert(Seq(("id1", "patched", Seq(1f, 1f, 1f), "t1"))
+      .toDF("id", "document", "embedding", "tag"))
+    def read(opts: (String, String)*): DataFrame = spark.read.format("graft")
+      .option("root", root).option("name", "s").options(opts.toMap).load()
+    read().collect() // fills the cache
+    assert(jobs(read()) == 0, "the second construct still infers")
+    assert(read().columns.contains("tag"))
+    assert(read().filter(col("id") === "id1").select("tag").as[String].collect().toSeq == Seq("t1"))
+    // an ids= read binds its ids' buckets: it keeps what THOSE dirs infer
+    val v = c.meta.version
+    val tagged = (0 until 40).map { i =>
+      val bound = read("ids" -> s"id$i")
+      assert(bound.schema == inferredOf(c.leafDataDirsForIds(v, Seq(s"id$i"))), s"id$i")
+      bound.columns.contains("tag")
+    }
+    assert(tagged.contains(true) && tagged.contains(false))
   }
 
   test("an upsert that adds a column is visible in the new version") {
