@@ -298,10 +298,10 @@ private[graft] trait QueriesAnn extends EntryKit {
     }),
     // The BATCH form of the store-side PQ read (q140's collection,
     // reused by fingerprint): one pruned codes-only scan serves BOTH
-    // query vectors — per-query probe sets and ADC tables ride the
-    // broadcast query frame, per-query shortlists prune under the
-    // exchange, one join back re-ranks exactly. The oracle replays the
-    // whole per-qid pipeline keyed by qid.
+    // query vectors — each query ranks its own ADC column inside its own
+    // probe set to a per-query shortlist, and one broadcast join back to
+    // the pruned cells re-ranks exactly. The oracle replays the whole
+    // per-qid pipeline keyed by qid.
     "q144_collection_pq_batch" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       pqidxCollection(s, dir, emb).queryPqBatch(Seq(headVec(emb, 0), headVec(emb, 17)),
@@ -352,10 +352,9 @@ private[graft] trait QueriesAnn extends EntryKit {
     }),
     // The BATCH read of the residual store index (q144 : q140 ::
     // q149 : q145): one pruned codes-only scan serves both queries, but
-    // the ADC tables are now per-(query, cell) — each query's broadcast
-    // row carries a MAP cell → flattened residual lut for its probed
-    // cells, rows pick their table by their own cell. Same collection as
-    // q145 (fingerprint-shared).
+    // the ADC tables are now per-(query, cell) — each query's ADC column
+    // holds one residual lut per probed cell, and a row picks its table
+    // by its own cell. Same collection as q145 (fingerprint-shared).
     "q149_collection_pq_residual_batch" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       pqridxCollection(s, dir, emb).queryPqBatch(Seq(headVec(emb, 0), headVec(emb, 17)),
@@ -394,7 +393,7 @@ private[graft] trait QueriesAnn extends EntryKit {
       val pq = Ann.buildPqResidualSeeded(ivf.assigned, "vec_id", "embedding",
         ivf.centroids, dim = 64, m = 8, seedIds = 10L to 25L)
       val encoded = Ann.pqEncodeResidual(ivf.assigned, "embedding", ivf.centroids, pq)
-      Ann.queryIvfPqResidual(encoded, ivf, pq, emb, "vec_id", "embedding",
+      Ann.queryIvfPq(encoded, ivf, pq, emb, "vec_id", "embedding",
           headVec(emb, 0), k = 10, nprobe = 2, fetchN = 30,
           space = "cosine", excludeIds = Seq(0L))
         .select(col("vec_id"), col("adc"), col("dist"))

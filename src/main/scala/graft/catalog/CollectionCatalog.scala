@@ -1439,127 +1439,50 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
     pq
   }
 
-  /** The ADC shortlist depth of a PQ read. fetchN = 0 → SIZE-AWARE
-    * default from the snapshot's row count (Ann.pqFetchNFor, integer-only
-    * and oracle-replayable) — a frozen k·4 measured recall 0.2 at bench
-    * scale where the scaled dial measures ~1.0 (Recall.pq_scaled); the
-    * count on a parquet-backed version is a footer-count job,
-    * listing-order work. */
-  private def pqFetchN(m: CollectionMeta, fetchN: Int, k: Int): Int = {
-    val fn = if (fetchN > 0) fetchN else Ann.pqFetchNFor(snapshotCount(m), k)
-    require(fn >= k, s"fetchN ($fn) must be >= k ($k)")
-    require(fn <= Ann.MaxFetchN,
-      s"fetchN ($fn) exceeds MaxFetchN (${Ann.MaxFetchN}) — shortlists broadcast")
-    fn
-  }
-
   /** B6 through the PQ-coded index: ADC over the probed cells' (id,
     * codes) columns shortlists `fetchN` candidates (prefilters applied
     * BEFORE the shortlist, so k survivors exist whenever they exist in
     * the data), then exact `space` re-rank over the shortlist's raw
     * vectors fetched from the same pruned cells. Returns (id, adc, dist)
-    * — the approximate path's audit trail rides along. LOUD without a
-    * committed PQ-coded build for the current version: silently falling
-    * back to brute force would hide exactly the cost this surface
-    * exists to avoid. */
+    * — the approximate path's audit trail rides along. A residual build
+    * scores through per-cell tables (its codes encode v − centroid(cell)).
+    * LOUD without a committed PQ-coded build for the current version:
+    * silently falling back to brute force would hide exactly the cost
+    * this surface exists to avoid. The one-vector case of
+    * [[queryPqBatch]]. */
   def queryPq(queryVec: Seq[Float], k: Int, nprobe: Int = 0, fetchN: Int = 0,
               where: Option[Where] = None,
-              whereDoc: Option[WhereDocument] = None): DataFrame = {
-    val m = meta
-    val scan = vectorScan(m, "queryPq", Seq(queryVec), k, where, whereDoc, nprobe,
-      exact = false, Seq("dist", "adc"), pqPlain = Some("query"))
-    val (pq, cents, cells, pruned) =
-      (scan.pq.get, scan.centroids.get, scan.cellsPerQuery.head, scan.rows)
-    val fn = pqFetchN(m, fetchN, k)
-    // ADC stage: column-pruned to (id, codes[, cell]) + whatever the
-    // prefilters referenced; the embedding column stays unread until the
-    // refine. A residual build routes through per-cell tables (the codes
-    // encode v − centroid(cell), so the lut must be q − centroid(cell)).
-    val shortlist =
-      if (pq.residual)
-        pruned.select(col("id"),
-            Ann.pqAdcColByCell(pq, Ann.residualLuts(pq, cents, cells, queryVec)).as("adc"))
-          .orderBy(col("adc"), col("id")).limit(fn)
-      else Ann.queryPqAdc(pruned, pq, "id", queryVec, fn)
-    pruned.select(col("id"), col("embedding"))
-      .join(broadcast(shortlist), Seq("id"))
-      .select(col("id"), col("adc"),
-        graft.functions.Distances.bySpace(m.space)(col("embedding"),
-          typedLit(queryVec)).as("__d"))
-      .orderBy(col("__d"), col("id")).limit(k)
-      // terminal ROUND on adc too (SURVEY §2.D rule 2): the round-6
-      // DECIMAL fold is order-free but its raw L2 partials are not
-      // engine-portable at the 0.5e-6 boundary — CORRECTNESS_r11 caught
-      // exactly this (q140 hash flip); ordering stays on unrounded values.
-      // roundz (rule 2c) also kills the signed zero: the stored query
-      // vector IS a legal hit (Chroma returns the self row), its exact
-      // cosine distance is a tiny NEGATIVE (float32 norm ≈ 1+ε), and a
-      // sign-preserving round would emit −0.0 — CORRECTNESS_r12's only
-      // red class (q140/q144/q145/q148/q149)
-      .select(col("id"), graft.functions.Distances.roundz(col("adc"), 4).as("adc"),
-        graft.functions.Distances.roundz(col("__d"), 4).as("dist"))
-  }
+              whereDoc: Option[WhereDocument] = None): DataFrame =
+    pqRead("queryPq", "query", Seq(queryVec), k, nprobe, fetchN, where, whereDoc)
+      .select(col("id"), col("adc"), col("dist"))
 
   /** Batch form of [[queryPq]], shaped like [[queryBatch]]: ONE pruned
-    * codes-only scan serves every query — each query's ADC lookup table
-    * rides the broadcast query frame as a flattened m·ksub array, rows
-    * pair with queries whose probe set contains their cell, and the
-    * per-query fetchN shortlists (WindowGroupLimit under the exchange)
-    * join back to the pruned cells once for the exact re-rank. Output:
-    * (qid, rnk, id, adc, dist). */
+    * codes-only scan serves every query — each query ranks its own ADC
+    * column inside its own probed cells to a fetchN shortlist — and the
+    * shortlists broadcast back onto the pruned cells once for the exact
+    * re-rank ([[Ann.pqRanked]]). Output: (qid, rnk, id, adc, dist). */
   def queryPqBatch(queryVecs: Seq[Seq[Float]], k: Int, nprobe: Int = 0,
                    fetchN: Int = 0, where: Option[Where] = None,
-                   whereDoc: Option[WhereDocument] = None): DataFrame = {
+                   whereDoc: Option[WhereDocument] = None): DataFrame =
+    pqRead("queryPqBatch", "queryBatch", queryVecs, k, nprobe, fetchN, where, whereDoc)
+
+  /** The one body of the PQ reads ([[Ann.pqRanked]] over the pruned,
+    * prefiltered build). No stored column reaches its output, so none is
+    * reserved; `plain` names the read's non-PQ counterpart for the error
+    * on a build without codebooks. fetchN = 0 → SIZE-AWARE shortlist depth
+    * from the snapshot's row count (Ann.pqFetchNFor, integer-only and
+    * oracle-replayable) — a frozen k·4 measured recall 0.2 at bench scale
+    * where the scaled dial measures ~1.0 (Recall.pq_scaled); the count is
+    * taken once per committed data version ([[snapshotCount]]). */
+  private def pqRead(op: String, plain: String, queryVecs: Seq[Seq[Float]], k: Int,
+                     nprobe: Int, fetchN: Int, where: Option[Where],
+                     whereDoc: Option[WhereDocument]): DataFrame = {
     val m = meta
-    val scan = vectorScan(m, "queryPqBatch", queryVecs, k, where, whereDoc, nprobe,
-      exact = false, Seq("qid", "rnk", "dist", "adc", "__qvec", "__qcells", "__qluts", "__rn"),
-      pqPlain = Some("queryBatch"))
-    val (pq, cents, cellsPerQ, pruned) =
-      (scan.pq.get, scan.centroids.get, scan.cellsPerQuery, scan.rows)
-    // one count job (fetchN = 0) serves the whole batch
-    val fn = pqFetchN(m, fetchN, k)
-    import spark.implicits._
-    val ksub = pq.ksub
-    // per-query ADC tables ride the broadcast query frame: for a plain
-    // build one flattened m·ksub array per query; for a RESIDUAL build a
-    // map cell → flattened array per probed cell (nprobe·m·ksub doubles
-    // per query — still driver-cheap), since residual tables are
-    // per-(query, cell) by construction
-    val queries = queryVecs.zipWithIndex.map { case (v, i) =>
-      val luts: Map[Int, Seq[Double]] =
-        if (pq.residual)
-          Ann.residualLuts(pq, cents, cellsPerQ(i), v)
-            .map { case (c, lut) => c -> lut.flatten.toSeq }
-        else Map(-1 -> Ann.pqLut(pq, v).flatten.toSeq)
-      (i, v, cellsPerQ(i), luts)
-    }.toDF("qid", "__qvec", "__qcells", "__qluts")
-    import org.apache.spark.sql.types.DecimalType
-    val lutCol = if (pq.residual) element_at(col("__qluts"), col("cell"))
-                 else element_at(col("__qluts"), lit(-1))
-    val adcCol = (0 until pq.m).map { s =>
-      round(element_at(lutCol,
-          (lit(s * ksub) + col("codes").getItem(s) + 1).cast("int")), 6)
-        .cast(DecimalType(18, 6))
-    }.reduce(_ + _).cast(DecimalType(18, 6)).cast("double")
-    val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc"), col("id"))
-    val shortlist = pruned.select(col("id"), col("cell"), col("codes"))
-      .join(broadcast(queries), array_contains(col("__qcells"), col("cell")))
-      .withColumn("adc", adcCol)
-      .withColumn("__rn", row_number().over(wAdc)).filter(col("__rn") <= fn)
-      .select(col("qid"), col("id"), col("adc"), col("__qvec"))
-    val wK = Window.partitionBy(col("qid")).orderBy(col("__d"), col("id"))
-    pruned.select(col("id"), col("embedding"))
-      .join(broadcast(shortlist), Seq("id"))
-      .withColumn("__d",
-        graft.functions.Distances.bySpace(m.space)(col("embedding"), col("__qvec")))
-      .withColumn("rnk", row_number().over(wK))
-      .filter(col("rnk") <= k)
-      // roundz, not round: rule 2c (see queryPq) — the batch includes the
-      // stored query vectors themselves, whose rounded distance is a zero
-      // that must not carry DuckDB's sign bit
-      .select(col("qid"), col("rnk"), col("id"),
-        graft.functions.Distances.roundz(col("adc"), 4).as("adc"),
-        graft.functions.Distances.roundz(col("__d"), 4).as("dist"))
+    val s = vectorScan(m, op, queryVecs, k, where, whereDoc, nprobe, exact = false, Nil,
+      pqPlain = Some(plain))
+    Ann.pqRanked(s.rows, s.rows, s.pq.get, "id", "embedding", queryVecs, s.centroids.get,
+      s.cellsPerQuery, k, if (fetchN > 0) fetchN else Ann.pqFetchNFor(snapshotCount(m), k),
+      m.space)
   }
 
   /** Incrementally refresh the IVF index to the CURRENT version: keep the
@@ -2478,8 +2401,12 @@ final class Collection(spark: SparkSession, io: StoreIO, dir: Path,
 
   /** B10 count / peek. */
   def count(): Long = snapshotCount(meta)
+
+  /** [[count]] of ONE meta snapshot, counted once per committed data
+    * version ([[ResolvedCache]]). */
   private def snapshotCount(m: CollectionMeta): Long =
-    versions.currentDataOf(m).fold(0L)(_ => versions.snapshotDF(m).count())
+    versions.currentDataOf(m).fold(0L)(data => ResolvedCache.memo(io, data, "count")(
+      java.lang.Long.valueOf(versions.snapshotDF(m).count())).longValue)
   def peek(n: Int = 10): DataFrame = toDF.orderBy("id").limit(n)
 
   /** B11 modify: rename is a catalog move; metadata is a meta.json update. */

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   *    (carried versions and carried builds included);
   *  - the schema of a read bound to some of a data version's leaf dirs
   *    (the `graft` SQL source);
-  *  - a data version's embedding dimension;
+  *  - a data version's embedding dimension and row count;
   *  - an index build's centroids, PQ codebooks and keyword analyzer stamp.
   *
   * Key: `<dir>@<marker mtime>`. A path can be reborn — drop a collection,

@@ -441,20 +441,49 @@ object Ann {
     }
   }
 
-  /** ADC distance column over a [[pqEncode]]d frame: Σ_s lut[s][codes_s],
-    * each partial rounded to 6 then summed as DECIMAL — order-free, so
-    * the fold replays on any engine. The lut rides the plan as m ksub-
-    * element literal arrays (m lookups + adds per row — no join, no
-    * shuffle; the corpus is scanned from codes alone). */
-  def pqAdcCol(model: PqModel, lut: Array[Array[Double]]): Column = {
+  /** A query's ADC lookup tables under `pq`, each keyed by the cell whose
+    * rows it scores. A plain model's codes encode raw vectors: its one
+    * [[pqLut]] scores every row (key None). A residual model's codes encode
+    * `v − centroid(cell)`: each cell of `cells` gets its own table over
+    * `q − centroid(cell)` — nprobe·m·ksub doubles, driver-cheap, the
+    * subtraction a double fold in element order (oracle parity). The
+    * model's `residual` flag picks the construction, as in [[pqEncodeFor]]. */
+  def pqTables(pq: PqModel, query: Seq[Float], cents: Array[(Int, Array[Double])],
+               cells: Seq[Int]): Seq[(Option[Int], Array[Array[Double]])] =
+    if (!pq.residual) Seq(None -> pqLut(pq, query))
+    else {
+      require(cells.nonEmpty, "a residual PQ model scores codes per probed cell; no cells given")
+      val centMap = cents.toMap
+      cells.sorted.map { cell =>
+        val cent = centMap(cell)
+        Some(cell) -> pqLutD(pq, query.indices.map(j => query(j).toDouble - cent(j)))
+      }
+    }
+
+  /** The ADC distance column over a [[pqEncode]]d frame, the one written
+    * form of the fold: Σ_s table[s][codes_s], each partial rounded to 6
+    * then summed as DECIMAL — order-free, so the fold replays on any
+    * engine. The [[pqTables]] ride the plan as m ksub-element literal
+    * arrays (m lookups + adds per row — no join, no shuffle; the corpus is
+    * scanned from codes alone); per-cell tables are picked by the row's
+    * `cell` through a chained conditional. */
+  def pqAdcCol(pq: PqModel, tables: Seq[(Option[Int], Array[Array[Double]])]): Column = {
     import org.apache.spark.sql.types.DecimalType
-    (0 until model.m).map { s =>
+    def adc(lut: Array[Array[Double]]): Column = (0 until pq.m).map { s =>
       round(element_at(typedLit(lut(s).toSeq), col("codes").getItem(s) + 1), 6)
         .cast(DecimalType(18, 6))
     }.reduce(_ + _).cast(DecimalType(18, 6)).cast("double")
+    tables match {
+      case Seq((None, lut)) => adc(lut)
+      case (Some(first), lut) +: rest =>
+        rest.foldLeft(when(col("cell") === first, adc(lut))) {
+          case (acc, (cell, t)) => acc.when(col("cell") === cell.get, adc(t))
+        }
+      case _ => throw new IllegalArgumentException(s"malformed ADC tables: ${tables.map(_._1)}")
+    }
   }
 
-  /** LOUD bound on PQ shortlists: [[refineExact]] BROADCASTS the
+  /** LOUD bound on PQ shortlists: [[pqRanked]]'s refine BROADCASTS the
     * shortlist onto the raw-vector scan (its whole point — the corpus is
     * never re-ranked), so fetchN must stay broadcast-sized. 2¹⁶ rows ×
     * (id + adc) is comfortably inside any broadcast budget; a caller
@@ -487,15 +516,67 @@ object Ann {
   }
 
   /** PQ top-k by ADC alone: (id, adc) for the k code-nearest rows, ties
-    * by id. TakeOrdered shape — per-partition heaps, never a global sort. */
+    * by id — [[pqRanked]]'s shortlist stage. A plain model only: a
+    * residual one needs its cells' centroids ([[queryIvfPq]]). */
   def queryPqAdc(encoded: DataFrame, model: PqModel, idCol: String,
                  query: Seq[Float], k: Int, excludeIds: Seq[Any] = Nil): DataFrame = {
-    val lut = pqLut(model, query)
-    val base = if (excludeIds.isEmpty) encoded
-               else encoded.filter(!col(idCol).isin(excludeIds: _*))
-    base.select(col(idCol), pqAdcCol(model, lut).as("adc"))
-      .orderBy(col("adc"), col(idCol)).limit(k)
+    requirePlain(model, "queryPqAdc")
+    pqShortlist(excluding(encoded, idCol, excludeIds), model, idCol, Seq(query), Array.empty, Nil, k)
+      .select(col(idCol), col("dist").as("adc"))
   }
+
+  /** The one two-stage PQ read, every query of `queries` served by one
+    * pass of each stage. The shortlist ranks each query's [[pqAdcCol]]
+    * over the `codes` rows to its `fetchN` nearest — inside its own
+    * probed cells `cells(q)` when cells are given — reading only (id,
+    * codes[, cell]); the refine ranks each query's exact `space` distance
+    * over the `raw` rows (id, vecCol) of its shortlist to `k`. Both stages
+    * are [[KnnTopK]] nodes ordered by `(score, id)`, and the shortlist
+    * (at most nq·fetchN rows) BROADCASTS onto the raw scan. Output
+    * `(qid, rnk, id, adc, dist)`: both floats pass through a terminal
+    * ROUND(x, 4) (SURVEY §2.D rule 2): the round-6 DECIMAL partial fold
+    * makes the adc SUM order-free, but the raw L2 partials feeding it can
+    * land on opposite sides of a 0.5e-6 boundary on an independent engine
+    * — the coarser output round absorbs those boundary flips (both ranks
+    * use the unrounded values). roundz, not round (rule 2c): the shortlist
+    * can hold a stored query vector itself, whose exact cosine distance is
+    * a tiny negative, and the signed zero must die structurally. */
+  def pqRanked(codes: DataFrame, raw: DataFrame, pq: PqModel, idCol: String, vecCol: String,
+               queries: Seq[Seq[Float]], cents: Array[(Int, Array[Double])],
+               cells: Seq[Seq[Int]], k: Int, fetchN: Int, space: String): DataFrame = {
+    require(fetchN >= k, s"fetchN ($fetchN) must be >= k ($k)")
+    require(fetchN <= MaxFetchN,
+      s"fetchN ($fetchN) exceeds MaxFetchN ($MaxFetchN) — the shortlist broadcasts; widen ksub instead")
+    val shortlist = pqShortlist(codes, pq, idCol, queries, cents, cells, fetchN)
+      .select(col(idCol), col("qid").as("__sq"), col("dist").as("adc"))
+    KnnTopK.batch(raw.select(col(idCol), col(vecCol)).join(broadcast(shortlist), Seq(idCol)),
+        idCol, queries.map(v => Distances.bySpace(space)(col(vecCol), typedLit(v))), k,
+        queries.indices.map(q => col("__sq") === q), Seq(vecCol, "__sq"))
+      .select(col("qid"), col("rnk"), col(idCol),
+        Distances.roundz(col("adc"), 4).as("adc"), Distances.roundz(col("dist"), 4).as("dist"))
+  }
+
+  /** The shortlist stage of [[pqRanked]]: each query's `n` ADC-nearest
+    * `codes` rows, long form `(id, qid, dist, rnk)` with the ADC as `dist`. */
+  private def pqShortlist(codes: DataFrame, pq: PqModel, idCol: String,
+                          queries: Seq[Seq[Float]], cents: Array[(Int, Array[Double])],
+                          cells: Seq[Seq[Int]], n: Int): DataFrame = {
+    val layout = if (cells.isEmpty) Seq("codes") else Seq("codes", "cell")
+    KnnTopK.batch(codes.select((idCol +: layout).map(col): _*), idCol,
+      queries.zipWithIndex.map { case (v, q) =>
+        pqAdcCol(pq, pqTables(pq, v, cents, cells.lift(q).getOrElse(Nil)))
+      }, n, cells.map(c => col("cell").isin(c: _*)), layout)
+  }
+
+  /** A residual model's codes encode `v − centroid(cell)`: a read without
+    * the cells' centroids would rank them against raw-query tables and
+    * return wrong neighbours with no error. */
+  private def requirePlain(pq: PqModel, op: String): Unit =
+    require(!pq.residual, s"$op reads raw-vector codes, but this PQ model is residual " +
+      "(codes encode v − centroid(cell)); query it through queryIvfPq with its IVF model")
+
+  private def excluding(df: DataFrame, idCol: String, excludeIds: Seq[Any]): DataFrame =
+    if (excludeIds.isEmpty) df else df.filter(!col(idCol).isin(excludeIds: _*))
 
   /** Persist a PQ code table: (id, codes) parquet — m small ints per row
     * instead of dim floats, the ingestion-time form of [[pqEncode]] (the
@@ -569,62 +650,36 @@ object Ann {
   /** Two-stage PQ read: ADC over codes shortlists `fetchN` candidates,
     * then exact `space` distance over their RAW vectors re-ranks to k —
     * the standard PQ recall recovery (fetchN raw-vector fetches instead
-    * of a corpus-wide scan). The shortlist is fetchN rows, so it
-    * BROADCASTS onto the raw-vector scan; output (id, adc, dist) rounds
-    * dist to 4 like every other kNN surface. */
+    * of a corpus-wide scan), [[pqRanked]] for one query. Output (id, adc,
+    * dist). A plain model only: a residual one needs its cells'
+    * centroids ([[queryIvfPq]]). */
   def queryPqRefined(encoded: DataFrame, corpus: DataFrame, model: PqModel,
                      idCol: String, vecCol: String, query: Seq[Float],
                      k: Int, fetchN: Int, space: String = "l2",
                      excludeIds: Seq[Any] = Nil): DataFrame = {
-    require(fetchN >= k, s"fetchN ($fetchN) must be >= k ($k)")
-    require(fetchN <= MaxFetchN,
-      s"fetchN ($fetchN) exceeds MaxFetchN ($MaxFetchN) — the shortlist broadcasts; widen ksub instead")
-    refineExact(queryPqAdc(encoded, model, idCol, query, fetchN, excludeIds),
-      corpus, idCol, vecCol, query, k, space)
+    requirePlain(model, "queryPqRefined")
+    pqRanked(excluding(encoded, idCol, excludeIds), corpus, model, idCol, vecCol, Seq(query),
+      Array.empty, Nil, k, fetchN, space).select(col(idCol), col("adc"), col("dist"))
   }
-
-  /** Exact re-rank of an ADC shortlist: fetch the shortlist rows' raw
-    * vectors (the shortlist BROADCASTS onto the corpus scan), exact
-    * `space` distance, top-k. Both float outputs pass through a terminal
-    * ROUND(x, 4) (SURVEY §2.D rule 2): the round-6 DECIMAL partial fold
-    * makes the adc SUM order-free, but the raw L2 partials feeding it
-    * can land on opposite sides of a 0.5e-6 boundary on an independent
-    * engine — the coarser output round absorbs those boundary flips
-    * (shortlist and rank order still use the unrounded values). */
-  private def refineExact(shortlist: DataFrame, corpus: DataFrame,
-                          idCol: String, vecCol: String, query: Seq[Float],
-                          k: Int, space: String): DataFrame =
-    corpus.select(col(idCol), col(vecCol))
-      .join(broadcast(shortlist), Seq(idCol))
-      .select(col(idCol), col("adc"),
-        graft.functions.Distances.bySpace(space)(col(vecCol), typedLit(query)).as("__d"))
-      .orderBy(col("__d"), col(idCol)).limit(k)
-      // roundz, not round (rule 2c): the shortlist can contain the stored
-      // query vector itself, whose exact distance is a tiny negative —
-      // the signed zero must die structurally here too, not rely on
-      // Spark's BigDecimal rounding happening to drop it
-      .select(col(idCol), graft.functions.Distances.roundz(col("adc"), 4).as("adc"),
-        graft.functions.Distances.roundz(col("__d"), 4).as("dist"))
 
   /** IVF-PQ, the canonical composition (FAISS's IVFPQ): the corpus is
     * cell-PARTITIONED (IVF prunes which rows the query lists/reads) and
     * code-COMPRESSED (PQ shrinks what each pruned row costs) — at 100 TB
     * a query touches nprobe/nlist of the directories and reads m bytes
     * per row in them, then re-ranks a bounded fetchN shortlist against
-    * raw vectors. `assignedEncoded` carries both layouts' columns
-    * (`cell`, `codes`) — in production the [[writeIvf]]-partitioned form
-    * of a [[pqEncode]]d corpus. */
+    * raw vectors ([[pqRanked]] for one query). `assignedEncoded` carries
+    * both layouts' columns (`cell`, `codes`) — in production the
+    * [[writeIvf]]-partitioned form of a [[pqEncodeFor]]-encoded corpus: a
+    * residual model's rows score through per-probed-cell tables
+    * ([[pqTables]]). Output (id, adc, dist). */
   def queryIvfPq(assignedEncoded: DataFrame, ivf: IvfModel, pq: PqModel,
                  corpus: DataFrame, idCol: String, vecCol: String,
                  query: Seq[Float], k: Int, nprobe: Int, fetchN: Int,
                  space: String = "l2", excludeIds: Seq[Any] = Nil): DataFrame = {
-    require(fetchN >= k, s"fetchN ($fetchN) must be >= k ($k)")
-    require(fetchN <= MaxFetchN,
-      s"fetchN ($fetchN) exceeds MaxFetchN ($MaxFetchN) — the shortlist broadcasts; widen ksub instead")
     val cells = nearestCells(ivf, query, nprobe)
-    val pruned = assignedEncoded.filter(col("cell").isin(cells: _*))
-    refineExact(queryPqAdc(pruned, pq, idCol, query, fetchN, excludeIds),
-      corpus, idCol, vecCol, query, k, space)
+    pqRanked(excluding(assignedEncoded.filter(col("cell").isin(cells: _*)), idCol, excludeIds),
+      corpus, pq, idCol, vecCol, Seq(query), ivf.centroids, Seq(cells), k, fetchN, space)
+      .select(col(idCol), col("adc"), col("dist"))
   }
 
   // ---- Residual IVF-PQ (the full Jégou construction, §IV-A) ----
@@ -695,57 +750,6 @@ object Ann {
       assigned.withColumn("__res", residuals(assigned, vecCol, cents)),
       idCol, "__res", dim, m, ksub, seed, iterations, maxTrainRows)
       .copy(residual = true)
-
-  /** Residual IVF-PQ query: per probed cell, the ADC table is built
-    * against `q − centroid_cell` (driver-side: nprobe·m·ksub doubles);
-    * the per-row ADC picks its cell's table via a chained conditional —
-    * m lookups + adds per row, no join, then the exact re-rank of
-    * [[queryIvfPq]]. */
-  /** Per-probed-cell residual ADC lookup tables: lut(cell)(s)(c) =
-    * ‖sub_s(q − centroid_cell) − cb_s_c‖² — nprobe·m·ksub doubles,
-    * driver-cheap; the residual subtraction is a double fold in element
-    * order (oracle parity). */
-  def residualLuts(pq: PqModel, cents: Array[(Int, Array[Double])],
-                   cells: Seq[Int], query: Seq[Float]): Map[Int, Array[Array[Double]]] = {
-    val centMap = cents.toMap
-    cells.map { cell =>
-      val cent = centMap(cell)
-      val qres = query.indices.map(j => query(j).toDouble - cent(j))
-      cell -> pqLutD(pq, qres)
-    }.toMap
-  }
-
-  /** ADC column that picks its lookup table by the row's `cell` via a
-    * chained conditional — the residual counterpart of [[pqAdcCol]]
-    * (same round-6 DECIMAL partial fold; m lookups + adds per row). */
-  def pqAdcColByCell(pq: PqModel, lutByCell: Map[Int, Array[Array[Double]]]): Column = {
-    import org.apache.spark.sql.types.DecimalType
-    val cells = lutByCell.keys.toSeq.sorted
-    val adcFor: Int => Column = cell => (0 until pq.m).map { s =>
-      round(element_at(typedLit(lutByCell(cell)(s).toSeq),
-        col("codes").getItem(s) + 1), 6).cast(DecimalType(18, 6))
-    }.reduce(_ + _).cast(DecimalType(18, 6)).cast("double")
-    cells.tail.foldLeft(when(col("cell") === cells.head, adcFor(cells.head))) {
-      (acc, cell) => acc.when(col("cell") === cell, adcFor(cell))
-    }
-  }
-
-  def queryIvfPqResidual(assignedEncoded: DataFrame, ivf: IvfModel, pq: PqModel,
-                         corpus: DataFrame, idCol: String, vecCol: String,
-                         query: Seq[Float], k: Int, nprobe: Int, fetchN: Int,
-                         space: String = "l2", excludeIds: Seq[Any] = Nil): DataFrame = {
-    require(fetchN >= k, s"fetchN ($fetchN) must be >= k ($k)")
-    require(fetchN <= MaxFetchN,
-      s"fetchN ($fetchN) exceeds MaxFetchN ($MaxFetchN) — the shortlist broadcasts; widen ksub instead")
-    val cells = nearestCells(ivf, query, nprobe)
-    val adcCol = pqAdcColByCell(pq, residualLuts(pq, ivf.centroids, cells, query))
-    val base0 = assignedEncoded.filter(col("cell").isin(cells: _*))
-    val base = if (excludeIds.isEmpty) base0
-               else base0.filter(!col(idCol).isin(excludeIds: _*))
-    val shortlist = base.select(col(idCol), adcCol.as("adc"))
-      .orderBy(col("adc"), col(idCol)).limit(fetchN)
-    refineExact(shortlist, corpus, idCol, vecCol, query, k, space)
-  }
 
   /** recall@k of an approximate kNN result against the exact one (same
     * query, same k): |approx ∩ exact| / |exact|. One row, `recall`

@@ -24,12 +24,15 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
 import graft.functions.Distances
 
 /** Per-query top-k over ONE corpus scan, executed as ONE Spark job when
-  * collected — the body of `Collection.queryBatch`/`queryStruct`.
+  * collected — the body of `Collection.queryBatch`/`queryStruct` and of
+  * both stages of every PQ read ([[Ann.pqRanked]]).
   *
-  * The scan stage (the child) computes each query's distance with the
-  * codegen'd [[Distances.bySpace]] on that query's literal vector; on an
-  * IVF read a per-query `probed` flag marks the rows inside that query's
-  * probed cells, and a row outside them is skipped for that query. Each
+  * The scan stage (the child) computes each query's score column: on the
+  * kNN reads the codegen'd [[Distances.bySpace]] on that query's literal
+  * vector, on a PQ read its ADC sum or its exact refine distance. A
+  * per-query `probed` flag, when given, marks the rows that query may
+  * rank (inside its probed cells, or in its shortlist), and a row outside
+  * it is skipped for that query. Each
   * task keeps a size-k heap per query, ordered by Catalyst's own
   * `dist ASC, id ASC` (nulls first, NaN last, −0.0 = 0.0 — what a
   * `row_number` window over the same keys ranks), and ships only its
@@ -204,21 +207,19 @@ object KnnTopK {
     }
   }
 
-  /** Long-form per-query top-k of `corpus`: its columns minus `vecCol`
-    * (kept with `keepVector`) and `dropCols`, then `qid` (0-based position
-    * in `queryVecs`), `dist` and `rnk` (1-based). `probed(q)`, when given,
-    * is the predicate selecting the rows query q may rank. */
-  def batch(corpus: DataFrame, idCol: String, vecCol: String, queryVecs: Seq[Seq[Float]],
-            k: Int, space: String, probed: Seq[Column] = Nil, dropCols: Seq[String] = Nil,
-            keepVector: Boolean = false): DataFrame = {
-    require(probed.isEmpty || probed.size == queryVecs.size,
-      s"${probed.size} probe predicates for ${queryVecs.size} query vectors")
+  /** Long-form per-query top-k of `corpus`, ranked by `(score, id)`: its
+    * columns minus `dropCols`, then `qid` (0-based position in `scores`),
+    * `dist` (that query's score) and `rnk` (1-based). `scores(q)` is query
+    * q's score column over the corpus rows; `probed(q)`, when given, is the
+    * predicate selecting the rows query q may rank. */
+  def batch(corpus: DataFrame, idCol: String, scores: Seq[Column], k: Int,
+            probed: Seq[Column], dropCols: Seq[String]): DataFrame = {
+    require(probed.isEmpty || probed.size == scores.size,
+      s"${probed.size} probe predicates for ${scores.size} queries")
     val spark = corpus.sparkSession
     setup(spark)
-    val kept = GraftColumnShim.analyzed(corpus).output.filterNot(a =>
-      dropCols.contains(a.name) || (!keepVector && a.name == vecCol))
-    val scored = queryVecs.zipWithIndex.map { case (v, q) =>
-      val d = Distances.bySpace(space)(col(vecCol), typedLit(v))
+    val kept = GraftColumnShim.analyzed(corpus).output.filterNot(a => dropCols.contains(a.name))
+    val scored = scores.zipWithIndex.map { case (d, q) =>
       (if (probed.isEmpty) d else when(probed(q), d)).as(s"__dist$q")
     }
     val flags = probed.zipWithIndex.map { case (p, q) => p.as(s"__probed$q") }
@@ -226,16 +227,27 @@ object KnnTopK {
       corpus.select(kept.map(GraftColumnShim.column) ++ scored ++ flags: _*))
     val out = child.output
     val payload = out.take(kept.size)
+    val dists = out.slice(kept.size, kept.size + scores.size)
+    require(dists.forall(_.dataType == DoubleType),
+      s"score columns must be double, got ${dists.map(_.dataType.simpleString).distinct.mkString(", ")}")
     val node = KnnTopK(payload,
       payload.find(_.name == idCol).getOrElse(throw new IllegalArgumentException(
         s"no id column '$idCol' among ${payload.map(_.name).mkString(", ")}")),
-      out.slice(kept.size, kept.size + queryVecs.size), out.drop(kept.size + queryVecs.size), k,
+      dists, out.drop(kept.size + scores.size), k,
       AttributeReference("qid", IntegerType, nullable = false)(),
       AttributeReference("dist", DoubleType)(),
       AttributeReference("rnk", IntegerType, nullable = false)(),
       Nil, Nil, child)
     GraftColumnShim.frame(spark, node)
   }
+
+  /** [[batch]] scored by each query vector's [[Distances.bySpace]]
+    * distance to `vecCol`, which the output drops unless `keepVector`. */
+  def batch(corpus: DataFrame, idCol: String, vecCol: String, queryVecs: Seq[Seq[Float]],
+            k: Int, space: String, probed: Seq[Column] = Nil, dropCols: Seq[String] = Nil,
+            keepVector: Boolean = false): DataFrame =
+    batch(corpus, idCol, queryVecs.map(v => Distances.bySpace(space)(col(vecCol), typedLit(v))),
+      k, probed, if (keepVector) dropCols else dropCols :+ vecCol)
 
   /** The presentation fold of a [[batch]] frame, inside the same job: one
     * row per query vector, `qid` then one list per column of `lists`

@@ -2,7 +2,7 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,11 +10,12 @@ import graft.catalog.CollectionCatalog
 import graft.functions.Distances
 import graft.operators.{ChromaFilter, Knn, KnnTopK}
 
-/** [[KnnTopK]] — the one-job per-query top-k body of `queryBatch` and
-  * `queryStruct` — ranks exactly what the window form it replaced ranked:
-  * same ids, ranks and distance bits, for every space, on corpora built to
-  * tie, to repeat vectors, to carry null and NaN embeddings, to run short
-  * of k and to leave a query of the batch with no candidates. */
+/** [[KnnTopK]] — the one-job per-query top-k body of `queryBatch`,
+  * `queryStruct` and both PQ read stages — ranks exactly what the window
+  * form it replaced ranked: same ids, ranks and distance bits, for every
+  * space and for arbitrary score columns, on corpora built to tie, to
+  * repeat vectors, to carry null and NaN embeddings, to run short of k and
+  * to leave a query of the batch with no candidates. */
 class KnnTopKSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -38,6 +39,19 @@ class KnnTopKSpec extends SparkTestBase {
         .filter(col("rnk") <= k)
         .drop("embedding", "__qvec", "__qcells", "cell")
     }
+
+  /** The window form over arbitrary per-query score columns: each query's
+    * rows (those `probed(q)` admits) scored by `scores(q)`, a `row_number`
+    * over `(dist, id)` per query and the `rnk <= k` filter. */
+  private def scoreWindowForm(corpus: DataFrame, scores: Seq[Column], probed: Seq[Column],
+                              k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("id"))
+    scores.indices.map { q =>
+      val rows = corpus.withColumn("qid", lit(q)).withColumn("dist", scores(q))
+      if (probed.isEmpty) rows else rows.filter(probed(q))
+    }.reduce(_ union _)
+      .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= k)
+  }
 
   /** Rows as (qid, rnk, id, dist bits, document), in (qid, rnk) order. */
   private def ranked(df: DataFrame): Seq[(Int, Int, String, Option[Long], String)] =
@@ -78,6 +92,23 @@ class KnnTopKSpec extends SparkTestBase {
       assert(ranked(got.orderBy("qid", "rnk")) == want, s"$space seed $seed k $k (parent)")
       if (k >= 4) assert(want.filter(_._1 == 0).take(3).forall(_._4.isEmpty),
         s"$space seed $seed: null embeddings rank first")
+    }
+    // arbitrary per-query score columns, built to tie, to be null, NaN and
+    // ±0.0 and to differ per query, with and without probe predicates
+    def score(q: Int): Column =
+      when(col("tag") === "even", ((col("cell") + q) % 3).cast("double"))
+        .when(col("cell") === q % 4, lit(Double.NaN))
+        .when(col("cell") === (q + 1) % 4, lit(-0.0))
+        .when(col("cell") === (q + 2) % 4, lit(0.0))
+    for (seed <- 1 to 3; k <- Seq(1, 3, 100); probe <- Seq(false, true)) {
+      val df = corpus(seed)
+      val scores = (0 until 4).map(score)
+      val probed = if (probe) (0 until 4).map(q => col("cell") =!= q) else Nil
+      val want = ranked(scoreWindowForm(df, scores, probed, k))
+      val got = KnnTopK.batch(df, "id", scores, k, probed, Seq("embedding", "cell"))
+      assert(ranked(got) == want, s"scores seed $seed k $k probe $probe (collect)")
+      assert(ranked(got.orderBy("qid", "rnk")) == want, s"scores seed $seed k $k probe $probe (parent)")
+      assert(got.columns.toSeq == Seq("id", "document", "tag", "qid", "dist", "rnk"))
     }
   }
 

@@ -4,10 +4,11 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Ann, Knn}
 
 /** Product-quantization (Ann.PqModel / pqEncode / queryPqAdc /
-  * queryPqRefined): codebook shape, encode correctness against a
-  * driver-side argmin, the ADC ≈ exact-distance relationship, the
-  * degenerate exact case (ksub = corpus), and the two-stage refine's
-  * recall dominance over ADC alone. */
+  * queryPqRefined / queryIvfPq): codebook shape, encode correctness
+  * against a driver-side argmin, the ADC ≈ exact-distance relationship,
+  * the degenerate exact case (ksub = corpus), the two-stage refine's
+  * recall dominance over ADC alone, and the residual model's per-cell
+  * tables. */
 class PqSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -194,7 +195,7 @@ class PqSpec extends SparkTestBase {
     val q = emb.filter(col("vec_id") === 0L).select("embedding").as[Seq[Float]].head()
     val exact = Knn.topK(emb, "vec_id", "embedding", q, 10, "l2",
         excludeIds = Seq(0L)).select("vec_id").as[Long].collect().toSet
-    val res = Ann.queryIvfPqResidual(enc, ivf, rpq, emb, "vec_id", "embedding",
+    val res = Ann.queryIvfPq(enc, ivf, rpq, emb, "vec_id", "embedding",
         q, 10, nprobe = 8, fetchN = 50, space = "l2", excludeIds = Seq(0L))
       .select("vec_id").as[Long].collect().toSet
     // same layout/fetchN raw-PQ comparison point (q136 config, all cells probed)
@@ -218,13 +219,74 @@ class PqSpec extends SparkTestBase {
       ivf.centroids, 64, 8, 10L to 25L)
     val enc = Ann.pqEncodeResidual(ivf.assigned, "embedding", ivf.centroids, rpq).cache()
     val q = emb.filter(col("vec_id") === 3L).select("embedding").as[Seq[Float]].head()
-    def run() = Ann.queryIvfPqResidual(enc, ivf, rpq, emb, "vec_id", "embedding",
+    def run() = Ann.queryIvfPq(enc, ivf, rpq, emb, "vec_id", "embedding",
         q, 5, nprobe = 2, fetchN = 20).select("vec_id", "adc")
       .as[(Long, Double)].collect().toSeq
     val a = run(); val b = run()
     assert(a == b)
     assert(a.forall(_._2 >= 0.0))
     enc.unpersist()
+  }
+
+  /** The residual IVF-PQ read written out by hand, stage by stage: one
+    * lookup table per probed cell over `q − centroid(cell)`, the row's
+    * cell picking its table, an `(adc, id)` ordered shortlist of fetchN,
+    * then the exact re-rank of the shortlist's raw vectors. */
+  private def residualByHand(enc: org.apache.spark.sql.DataFrame, ivf: Ann.IvfModel,
+                             rpq: Ann.PqModel, q: Seq[Float], k: Int, nprobe: Int,
+                             fetchN: Int, exclude: Long): Seq[(Long, Double, Double)] = {
+    import org.apache.spark.sql.types.DecimalType
+    val cells = Ann.nearestCells(ivf, q, nprobe).sorted
+    val cents = ivf.centroids.toMap
+    def adc(cell: Int) = {
+      val lut = Ann.pqLutD(rpq, q.indices.map(j => q(j).toDouble - cents(cell)(j)))
+      (0 until rpq.m).map { s =>
+        round(element_at(typedLit(lut(s).toSeq), col("codes").getItem(s) + 1), 6)
+          .cast(DecimalType(18, 6))
+      }.reduce(_ + _).cast(DecimalType(18, 6)).cast("double")
+    }
+    val adcCol = cells.tail.foldLeft(when(col("cell") === cells.head, adc(cells.head))) {
+      (acc, c) => acc.when(col("cell") === c, adc(c))
+    }
+    val shortlist = enc.filter(col("cell").isin(cells: _*) && col("vec_id") =!= exclude)
+      .select(col("vec_id"), adcCol.as("adc")).orderBy(col("adc"), col("vec_id")).limit(fetchN)
+    emb.select("vec_id", "embedding").join(broadcast(shortlist), Seq("vec_id"))
+      .select(col("vec_id"), col("adc"),
+        graft.functions.Distances.l2Sq(col("embedding"), typedLit(q)).as("d"))
+      .orderBy(col("d"), col("vec_id")).limit(k)
+      .select(col("vec_id"), graft.functions.Distances.roundz(col("adc"), 4),
+        graft.functions.Distances.roundz(col("d"), 4))
+      .as[(Long, Double, Double)].collect().toSeq
+  }
+
+  test("queryIvfPq reads a residual model through its per-cell tables") {
+    val ivf = Ann.buildIvfSeeded(emb, "vec_id", "embedding", 0L until 8L)
+    val rpq = Ann.buildPqResidualSeeded(ivf.assigned, "vec_id", "embedding",
+      ivf.centroids, 64, 8, 10L to 25L)
+    val enc = Ann.pqEncodeResidual(ivf.assigned, "embedding", ivf.centroids, rpq).cache()
+    for (qid <- Seq(0L, 3L); nprobe <- Seq(2, 8)) {
+      val q = emb.filter(col("vec_id") === qid).select("embedding").as[Seq[Float]].head()
+      val got = Ann.queryIvfPq(enc, ivf, rpq, emb, "vec_id", "embedding",
+          q, 10, nprobe = nprobe, fetchN = 50, space = "l2", excludeIds = Seq(qid))
+        .as[(Long, Double, Double)].collect().toSeq
+      assert(got == residualByHand(enc, ivf, rpq, q, 10, nprobe, 50, qid),
+        s"query $qid nprobe $nprobe")
+    }
+    enc.unpersist()
+  }
+
+  test("the PQ reads without centroids reject a residual model, naming queryIvfPq") {
+    val ivf = Ann.buildIvfSeeded(emb, "vec_id", "embedding", 0L until 4L)
+    val rpq = Ann.buildPqResidualSeeded(ivf.assigned, "vec_id", "embedding",
+      ivf.centroids, 64, 8, 10L to 25L)
+    val enc = Ann.pqEncodeResidual(ivf.assigned, "embedding", ivf.centroids, rpq)
+    val q = Seq.fill(64)(0.5f)
+    for (read <- Seq[() => Any](
+        () => Ann.queryPqAdc(enc, rpq, "vec_id", q, 10),
+        () => Ann.queryPqRefined(enc, emb, rpq, "vec_id", "embedding", q, 10, 50))) {
+      val e = intercept[IllegalArgumentException](read())
+      assert(e.getMessage.contains("queryIvfPq"), e.getMessage)
+    }
   }
 
   test("size-aware PQ dials: integer-exact, clamped, monotone in n") {

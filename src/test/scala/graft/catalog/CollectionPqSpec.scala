@@ -489,4 +489,29 @@ class CollectionPqSpec extends SparkTestBase {
       assert(batch(i) == single, s"query $i diverges between batch and single")
     }
   }
+
+  test("queryPqBatch ranks each query only inside its own probed cells") {
+    // two cell seeds as queries at nprobe = 1: each query's probe set is
+    // its own cell, and the batch scan reads both cells — a query ranking
+    // the other's cell would shortlist rows its single read never sees
+    val emb = spark.read.parquet(sf("embeddings"))
+    val qs = Seq(0L, 1L).map(id =>
+      emb.filter(col("vec_id") === id).select("embedding").as[Seq[Float]].head())
+    for ((name, build) <- Seq[(String, Collection => Unit)](
+        ("pq13", pqBuild), ("rpq7", pqResidualBuild))) {
+      val c = freshColl(name)
+      build(c)
+      val batch = c.queryPqBatch(qs, k = 5, nprobe = 1, fetchN = 20)
+        .select("qid", "rnk", "id", "adc", "dist")
+        .as[(Int, Int, String, Double, Double)].collect()
+        .groupBy(_._1).view
+        .mapValues(_.sortBy(_._2).map(r => (r._3, r._4, r._5)).toSeq).toMap
+      qs.zipWithIndex.foreach { case (q, i) =>
+        val single = c.queryPq(q, 5, nprobe = 1, fetchN = 20)
+          .select("id", "adc", "dist").as[(String, Double, Double)].collect().toSeq
+        assert(single.nonEmpty && batch(i) == single, s"$name query $i")
+      }
+      assert(batch(0).map(_._1) != batch(1).map(_._1), s"$name: both queries probed one cell")
+    }
+  }
 }

@@ -37,11 +37,16 @@ class ResolvedReadSpec extends SparkTestBase {
     ids.map(i => (s"id$i", s"doc $i", Seq(i.toFloat, (i % 7).toFloat, 1f)))
       .toDF("id", "document", "embedding")
 
-  private def collection(name: String, indexed: Boolean = true): Collection = {
+  private val ivf: Collection => Unit = _.buildIndex(nlist = 3)
+  private val pq: Collection => Unit = _.buildIndexPq(m = 3, ksub = 4, nlist = 3)
+  private val residualPq: Collection => Unit = _.buildIndexPqResidual(m = 3, ksub = 4, nlist = 3)
+  private val unindexed: Collection => Unit = _ => ()
+
+  private def collection(name: String, index: Collection => Unit = ivf): Collection = {
     val c = new CollectionCatalog(spark, tmpDir("resolved-read"), numBuckets = 4)
       .getOrCreateCollection(name)
     c.add(rows(0 until 40))
-    if (indexed) c.buildIndex(nlist = 3)
+    index(c)
     c
   }
 
@@ -63,12 +68,15 @@ class ResolvedReadSpec extends SparkTestBase {
   test("a second construct of query/queryStruct/get on an unchanged snapshot runs no job") {
     val q = Seq(3f, 3f, 1f)
     // the IVF reads resolve their build (the build itself resolved the
-    // data version); get resolves the data version a plain add never read
-    for ((what, indexed, construct) <- Seq[(String, Boolean, Collection => Any)](
-        ("query", true, _.query(q, 5)),
-        ("queryStruct", true, _.queryStruct(Seq(q), 5)),
-        ("get", false, _.get(ids = Seq("id3", "id4"))))) {
-      val c = collection(s"c_$what", indexed)
+    // data version); get resolves the data version a plain add never read;
+    // count and a PQ read at fetchN = 0 count the version's rows
+    for ((what, index, construct) <- Seq[(String, Collection => Unit, Collection => Any)](
+        ("query", ivf, _.query(q, 5)),
+        ("queryStruct", ivf, _.queryStruct(Seq(q), 5)),
+        ("get", unindexed, _.get(ids = Seq("id3", "id4"))),
+        ("count", unindexed, _.count()),
+        ("queryPq fetchN=0", pq, _.queryPq(q, 5)))) {
+      val c = collection(s"c_${what.takeWhile(_ != ' ')}", index)
       val first = jobs(construct(c))
       val second = jobs(construct(c))
       assert(first >= 1, s"$what: the first construct resolved nothing ($first jobs)")
@@ -83,21 +91,27 @@ class ResolvedReadSpec extends SparkTestBase {
 
   test("a served read runs one Spark job: constructing it on a warm snapshot runs none") {
     val c = collection("one_job")
+    val (plain, residual) = (collection("one_job_pq", pq), collection("one_job_rpq", residualPq))
     val q = Seq(3f, 3f, 1f)
     val batch = Seq(q, Seq(1f, 0f, 1f), Seq(20f, 6f, 1f), Seq(39f, 4f, 1f))
-    for ((what, read) <- Seq[(String, Collection => DataFrame)](
-        ("queryStruct IVF", _.queryStruct(Seq(q), 5)),
-        ("queryStruct exact", _.queryStruct(Seq(q), 5, exact = true)),
-        ("queryStruct embeddings", _.queryStruct(Seq(q), 5,
-          include = Set("embeddings", "distances", "documents"))),
-        ("queryBatch of 4", _.queryBatch(batch, 5)),
-        ("query", _.query(q, 5)))) {
-      read(c).collect() // warms the snapshot
+    // a PQ read runs two: the shortlist's broadcast, then the refine
+    for ((what, coll, read, want) <- Seq[(String, Collection, Collection => DataFrame, Int)](
+        ("queryStruct IVF", c, _.queryStruct(Seq(q), 5), 1),
+        ("queryStruct exact", c, _.queryStruct(Seq(q), 5, exact = true), 1),
+        ("queryStruct embeddings", c, _.queryStruct(Seq(q), 5,
+          include = Set("embeddings", "distances", "documents")), 1),
+        ("queryBatch of 4", c, _.queryBatch(batch, 5), 1),
+        ("query", c, _.query(q, 5), 1),
+        ("queryPq plain", plain, _.queryPq(q, 5), 2),
+        ("queryPqBatch of 4 plain", plain, _.queryPqBatch(batch, 5), 2),
+        ("queryPq residual", residual, _.queryPq(q, 5, fetchN = 10), 2),
+        ("queryPqBatch of 4 residual", residual, _.queryPqBatch(batch, 5, fetchN = 10), 2))) {
+      read(coll).collect() // warms the snapshot
       var df: DataFrame = null
-      assert(jobs { df = read(c) } == 0, s"$what: the construct ran a job")
+      assert(jobs { df = read(coll) } == 0, s"$what: the construct ran a job")
       var rows = Array.empty[org.apache.spark.sql.Row]
       val n = jobs { rows = df.collect() }
-      assert(n == 1, s"$what: collecting ran $n Spark jobs")
+      assert(n == want, s"$what: collecting ran $n Spark jobs")
       assert(rows.nonEmpty, s"$what: no rows")
     }
   }
