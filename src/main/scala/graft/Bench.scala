@@ -53,16 +53,6 @@ object Bench {
       .filter(_.nonEmpty)
     def selected(name: String): Boolean = only.forall(_.exists(o =>
       name == o || (name.startsWith(o) && name.charAt(o.length) == '_')))
-    // SPARK_GRAFT_BENCH_DIAG=1: per-query stderr line with JVM/session
-    // state (heap, persisted-RDD blocks, live threads) — the tool that
-    // located the r6 suite-context litter inflating q80/q81 8x. The
-    // SNAPSHOT itself is taken for EVERY query regardless of the flag
-    // (it is three cheap JVM reads) and attached to the slowest-10
-    // entries of bench_summary: two rounds running, the driver bench
-    // has manufactured contention bursts (r6 q80/q81, r7 q35-q37) that
-    // the record couldn't self-explain because diagnostics were opt-in
-    // and the driver never opts in. Now the evidence rides the artifact.
-    val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").contains("1")
     // Per-query session hygiene. A ~110-query single-JVM suite accumulates
     // session litter that per-query fixed costs pay for: persisted
     // blocks left by iterative localCheckpoint rounds (q76) and
@@ -88,7 +78,8 @@ object Bench {
     // after a query finishes — the burst signature the r6/r7 anomalies
     // needed: a load far above the suite's own thread count names the
     // machine, a heap/thread spike names the engine. Cheap enough to run
-    // per query: counter reads, not stack-trace materialization.
+    // per query: counter reads, not stack-trace materialization. Taken
+    // for every query; bench_summary's `slowest10_diag` carries it.
     def gcMsTotal(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -114,11 +105,6 @@ object Bench {
     }
     val diags = scala.collection.mutable.LinkedHashMap[String, (Long, Int, Int, Double, Long)]()
     val worstSec = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def diagLine(name: String, sec: Double, snap: (Long, Int, Int, Double, Long)): Unit = {
-      val (heapMb, threads, rdds, load, gcMs) = snap
-      System.err.println(
-        f"[diag] $name sec=$sec%.3f heapMB=$heapMb rdds=$rdds threads=$threads load=$load%.1f gcMs=$gcMs")
-    }
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     val perRun = (1 to effRuns).map { _ =>
       SparkEntry.queries.toSeq.sortBy(_._1)
@@ -135,9 +121,8 @@ object Bench {
           // make the suite look faster than a passing run
           name -> -1.0
         }
-        // the stderr diag line pairs THIS run's timing with THIS run's
-        // state; the summary keeps the snapshot of the SLOWEST run of
-        // each query — min-time reduce keeps fast timings, but the
+        // the summary keeps the snapshot of the SLOWEST run of each
+        // query — min-time reduce keeps fast timings, but the
         // diagnostic question is always about the slow outlier (a
         // failure counts as slowest)
         val snap = snapshot()
@@ -146,7 +131,6 @@ object Bench {
           worstSec(name) = effSec
           diags(name) = snap
         }
-        if (diag) diagLine(name, r._2, snap)
         cleanup()
         r
       }

@@ -125,7 +125,6 @@ private[graft] trait EntryKit {
     * refresh (bulk add + build, then an upsert slice + refresh, which
     * rebuilds only touched id buckets and carries the rest by manifest). */
   private[graft] def kwxCollection(s: SparkSession, dir: String): Collection = {
-    val docs = t(s, dir, "documents")
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     // fp v2: rows carry the lang metadata column (q165's where-filter
@@ -134,7 +133,7 @@ private[graft] trait EntryKit {
     val fp = s"kwx2|$dir|tag=${fixtureTag(s, dir, "documents")}"
     val coll = cachedCollection(cat, "kwx", fp, _.hasKeywordIndex) {
       val c = cat.getOrCreateCollection("kwx")
-      val all = docs.select(col("doc_id").cast("string").as("id"),
+      val all = t(s, dir, "documents").select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang"))
       c.add(all.filter(col("id").cast("long") % 7 =!= 3))
       c.buildKeywordIndex()
@@ -155,14 +154,13 @@ private[graft] trait EntryKit {
     * same incremental keyword-refresh discipline as [[kwxCollection]] so
     * the analyzer stamp rides the carry path too. */
   private[graft] def kwaCollection(s: SparkSession, dir: String): Collection = {
-    val docs = t(s, dir, "documents")
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     val fp = s"kwa1|$dir|tag=${fixtureTag(s, dir, "documents")}"
     val coll = cachedCollection(cat, "kwa", fp, _.hasKeywordIndex) {
       val c = cat.getOrCreateCollection("kwa",
         metadata = Map(Collection.AnalyzerKey -> "simple"))
-      val all = docs.select(col("doc_id").cast("string").as("id"),
+      val all = t(s, dir, "documents").select(col("doc_id").cast("string").as("id"),
         concat(lit("<<"), regexp_replace(col("text"), " ", ", "), lit("..."))
           .as("document"))
       c.add(all.filter(col("id").cast("long") % 7 =!= 3))
@@ -183,13 +181,12 @@ private[graft] trait EntryKit {
     * buildDocIndex, then an upsert slice + refreshDocIndex — only
     * touched id buckets re-derive postings, the rest carry). */
   private[graft] def dixCollection(s: SparkSession, dir: String): Collection = {
-    val docs = t(s, dir, "documents")
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     val fp = s"dix3|$dir|tag=${fixtureTag(s, dir, "documents")}"
     val coll = cachedCollection(cat, "dix", fp, _.hasDocIndex) {
       val c = cat.getOrCreateCollection("dix")
-      val all = docs.select(col("doc_id").cast("string").as("id"),
+      val all = t(s, dir, "documents").select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang"), col("n_chars"))
       c.add(all.filter(col("id").cast("long") % 7 =!= 3))
       c.buildDocIndex()
@@ -207,13 +204,12 @@ private[graft] trait EntryKit {
     * prefilter, via the Scala API and via the `graft_knn` SQL table
     * function). */
   private[graft] def qtdCollection(s: SparkSession, dir: String): Collection = {
-    val docs = t(s, dir, "documents")
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     val fp = s"qtd2|$dir|tag=${fixtureTag(s, dir, "documents")}|embed=hash16"
     val coll = cachedCollection(cat, "qtd", fp, _.hasDocIndex) {
       val c = cat.getOrCreateCollection("qtd", space = "cosine")
-      c.addDocuments(docs.select(col("doc_id").cast("string").as("id"),
+      c.addDocuments(t(s, dir, "documents").select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang")), HashingEmbedder(16))
       c.buildDocIndex()
       c
@@ -226,7 +222,6 @@ private[graft] trait EntryKit {
     * shared by q158 and q163 (the one-call hybrid, via the Scala API and
     * via the `graft_hybrid` SQL table function). */
   private[graft] def hyxCollection(s: SparkSession, dir: String): Collection = {
-    val docs = t(s, dir, "documents")
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     // fp v2: rows carry lang (q166's hybrid where-filter target); the
@@ -234,7 +229,7 @@ private[graft] trait EntryKit {
     val fp = s"hyx2|$dir|tag=${fixtureTag(s, dir, "documents")}"
     val coll = cachedCollection(cat, "hyx", fp, _.hasKeywordIndex) {
       val c = cat.getOrCreateCollection("hyx", space = "cosine")
-      c.addDocuments(docs.select(col("doc_id").cast("string").as("id"),
+      c.addDocuments(t(s, dir, "documents").select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang")), HashingEmbedder(16))
       c.buildKeywordIndex()
       c
@@ -246,13 +241,12 @@ private[graft] trait EntryKit {
   /** The fingerprint-cached PQ-indexed, hash-embedded collection shared
     * by q150 and q160 (text→PQ reads, and the both-legs-indexed hybrid). */
   private[graft] def qtpqCollection(s: SparkSession, dir: String): Collection = {
-    val docs = t(s, dir, "documents")
     val root = verifyCollectionsRoot(dir)
     val cat = new CollectionCatalog(s, root, numBuckets = 8)
     val fp = s"qtpq1|$dir|tag=${fixtureTag(s, dir, "documents")}|embed=hash16|cs=0-7|ps=1-16|m=8"
     cachedCollection(cat, "qtpq", fp, _.hasIndex) {
       val c = cat.getOrCreateCollection("qtpq", space = "cosine")
-      c.addDocuments(docs.select(col("doc_id").cast("string").as("id"),
+      c.addDocuments(t(s, dir, "documents").select(col("doc_id").cast("string").as("id"),
         col("text").as("document"), col("lang")), HashingEmbedder(16))
       c.buildIndexPqSeeded((0L until 8L).map(_.toString),
         (1L to 16L).map(_.toString), m = 8)

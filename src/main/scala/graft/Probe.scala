@@ -1,216 +1,77 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftColumnShim, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dev-only smoke/plan runner for the driver contract surface. */
+/** Dev-only smoke/plan runner for the driver contract surface:
+  *  - no argument: the entry smoke, `SparkEntry.entry` twice on sf0.001;
+  *  - `explain [sfDir] [outDir] [q1,q2,...] [suffix]`: each query's
+  *    formatted plan, written to `<outDir>/<query>_<suffix>.txt`;
+  *  - `jobcount [sfDir] [q1,q2,...]`: the Spark jobs and seconds of each
+  *    query's construction and of its execution, cold then warm. */
 object Probe {
+  /** The bench-shaped session `explain` and `jobcount` run under. */
+  private def benchSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val s = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
   def main(args: Array[String]): Unit = {
-    // lazy: the `explain` mode builds its own bench-shaped session and a
-    // pre-built local[8] context would win getOrCreate (master is frozen
-    // at first context creation)
-    lazy val spark = {
-      val s = SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
-    val dir = "/root/testdata/sf0.001"
+    val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     args.headOption match {
       case Some("explain") =>
-        // plan-artifact dump for the optimization record: run each named
-        // query under a bench-shaped session and write its
-        // explain("formatted") to <outDir>/<query>.txt. Store-mutating
+        // plan-artifact dump for the optimization record. Store-mutating
         // queries execute their side effects while building the frame —
         // same as in the bench — so the captured plan is the final read.
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
         val outDir = args.lift(2).getOrElse("/root/repo/plans/r17")
-        val names = args.lift(3).map(_.split(",").toSeq)
-          .getOrElse(Seq.empty)
+        val names = args.lift(3).map(_.split(",").toSeq).getOrElse(Seq.empty)
         val suffix = args.lift(4).getOrElse("before")
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-        val s32 = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-        s32.sparkContext.setLogLevel("ERROR")
+        val spark = benchSession()
         new java.io.File(outDir).mkdirs()
         names.foreach { q =>
-          val df = SparkEntry.queries(q)(s32, sfDir)
-          val txt = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val txt = SparkEntry.queries(q)(spark, sfDir).queryExecution.explainString(FormattedMode)
           val w = new java.io.PrintWriter(s"$outDir/${q}_$suffix.txt")
           try w.write(txt) finally w.close()
           println(s"[explain] wrote $outDir/${q}_$suffix.txt")
         }
-        s32.stop()
+        spark.stop()
         sys.exit(0)
       case Some("jobcount") =>
-        // load-immune evidence for construct-phase job removal (the
-        // fixture-fingerprint change): count Spark JOBS submitted during
-        // DataFrame CONSTRUCTION vs EXECUTION of each named query. Suite
-        // seconds on this sandbox drift ±30% with ambient host load, but
-        // a job submitted is a job submitted — the before/after job count
-        // is the deterministic record a seconds A/B cannot give.
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
+        // load-immune evidence for construct-phase job removal: seconds on
+        // a shared host drift ±30% with ambient load, but a job submitted
+        // is a job submitted — the before/after job count is the
+        // deterministic record a seconds A/B cannot give.
         val names = args.lift(2).map(_.split(",").toSeq).getOrElse(Seq.empty)
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-        val s32 = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-        s32.sparkContext.setLogLevel("ERROR")
-        val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-        s32.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              jobs.incrementAndGet()
-          })
-        def settled(): Int = { // listener bus is async: drain before reading
-          org.apache.spark.sql.GraftColumnShim.drainListenerBus(s32.sparkContext)
-          jobs.get()
+        val spark = benchSession()
+        def timedJobs[T](body: => T): (T, Int, Double) = {
+          val t0 = System.nanoTime()
+          val (out, jobs) = GraftColumnShim.countJobs(spark.sparkContext)(body)
+          (out, jobs, (System.nanoTime() - t0) / 1e9)
         }
         names.foreach { q =>
           (1 to 2).foreach { rep =>
-            val j0 = settled()
-            val t0 = System.nanoTime()
-            val df = SparkEntry.queries(q)(s32, sfDir)
-            val j1 = settled()
-            val t1 = System.nanoTime()
-            df.write.mode("overwrite").format("noop").save()
-            val j2 = settled()
-            val t2 = System.nanoTime()
-            println(f"[jobcount] $q rep$rep construct_jobs=${j1 - j0} exec_jobs=${j2 - j1} construct=${(t1 - t0) / 1e9}%.3f s exec=${(t2 - t1) / 1e9}%.3f s")
+            val (df, cJobs, cSec) = timedJobs(SparkEntry.queries(q)(spark, sfDir))
+            val (_, eJobs, eSec) = timedJobs(df.write.mode("overwrite").format("noop").save())
+            println(f"[jobcount] $q rep$rep construct_jobs=$cJobs exec_jobs=$eJobs construct=$cSec%.3f s exec=$eSec%.3f s")
           }
         }
-        s32.stop()
+        spark.stop()
         sys.exit(0)
-      case Some("threads") =>
-        // thread-growth attribution: run the named queries bench-style
-        // (noop sink + per-query cleanup), then histogram live thread
-        // names by prefix — names the leak the bench diag can only count.
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        val names = args.lift(2).map(_.split(",").toSeq).getOrElse(Seq.empty)
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-        val s32 = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-        s32.sparkContext.setLogLevel("ERROR")
-        def threadNames(): Seq[String] = {
-          val tg = Thread.getAllStackTraces.keySet()
-          import scala.jdk.CollectionConverters._
-          tg.asScala.toSeq.map(_.getName)
-        }
-        def histo(ns: Seq[String]): Map[String, Int] =
-          ns.groupBy(_.replaceAll("[-0-9]+$", "").replaceAll("[0-9]+", "N"))
-            .view.mapValues(_.size).toMap
-        val before = histo(threadNames())
-        (1 to 2).foreach { _ =>
-          names.foreach { q =>
-            SparkEntry.queries(q)(s32, sfDir)
-              .write.mode("overwrite").format("noop").save()
-            val sc = s32.sparkContext
-            sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-            s32.sharedState.cacheManager.clearCache()
-            s32.streams.resetTerminated()
-            org.apache.spark.sql.GraftColumnShim.unloadStateStores()
-          }
-        }
-        val after = histo(threadNames())
-        println(s"[threads] total before=${before.values.sum} after=${after.values.sum}")
-        (after.keySet ++ before.keySet).toSeq.sorted.foreach { k =>
-          val d = after.getOrElse(k, 0) - before.getOrElse(k, 0)
-          if (d != 0) println(f"[threads] $d%+5d  $k  (now ${after.getOrElse(k, 0)})")
-        }
-        s32.stop()
-        sys.exit(0)
-      case Some("sprof") =>
-        // streaming micro-batch cost breakdown: replicate q142's stream
-        // shape and dump each batch's durationMs map (walCommit,
-        // stateStoreCommit, addBatch, queryPlanning, ...).
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import org.apache.spark.sql.streaming.Trigger
-        import org.apache.spark.sql.functions._
-        import graft.streaming.StreamingHydrator
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        val parts = args.lift(2).map(_.toInt).getOrElse(2)
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-        val s32 = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-        s32.sparkContext.setLogLevel("ERROR")
-        val base = s32.read.parquet(s"$sfDir/events.parquet")
-          .filter(col("event_id") < 1000)
-          .select(col("event_id"), col("user_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        def ts(i: Long) = new java.sql.Timestamp(86400000L + i * 60000L)
-        val lRows = base.filter(_._1 % 2 == 0).map { case (i, u) => (u, ts(i), i) }
-        val rRows = base.filter(_._1 % 2 == 1).map { case (i, u) => (u, ts(i), i) }
-        val s2 = StreamingHydrator.streamingSession(s32, partitions = parts)
-        implicit val sqlc: org.apache.spark.sql.SQLContext = s2.sqlContext
-        import s2.implicits._
-        val lMem = MemoryStream[(Long, java.sql.Timestamp, Long)]
-        val rMem = MemoryStream[(Long, java.sql.Timestamp, Long)]
-        val joined = StreamingHydrator.intervalJoinStream(
-          lMem.toDF().toDF("user_id", "lts", "l_event"),
-          rMem.toDF().toDF("user_id", "rts", "r_event"),
-          "user_id", "lts", "rts", delay = "8 hours", within = "4 hours")
-        val t0 = System.nanoTime()
-        val q = joined.writeStream.format("memory").queryName("sprof_out")
-          .outputMode("append").trigger(Trigger.ProcessingTime(0L)).start()
-        try {
-          lMem.addData(lRows.filter(_._3 < 500).toIndexedSeq: _*)
-          rMem.addData(rRows.filter(_._3 < 500).toIndexedSeq: _*)
-          q.processAllAvailable()
-          lMem.addData(lRows.filter(_._3 >= 500).toIndexedSeq: _*)
-          rMem.addData(rRows.filter(_._3 >= 500).toIndexedSeq: _*)
-          q.processAllAvailable()
-          lMem.addData(Seq((999999L, ts(100000L), 999999L)): _*)
-          rMem.addData(Seq((999999L, ts(100001L), 999998L)): _*)
-          q.processAllAvailable()
-          lMem.addData(lRows.take(1).toIndexedSeq: _*)
-          q.processAllAvailable()
-          println(f"[sprof] wall=${(System.nanoTime() - t0) / 1e9}%.2f s parts=$parts batches=${q.recentProgress.length}")
-          q.recentProgress.foreach { p =>
-            import scala.jdk.CollectionConverters._
-            val d = p.durationMs.asScala.toSeq.sortBy(-_._2).map { case (k, v) => s"$k=$v" }.mkString(" ")
-            println(s"[sprof] batch=${p.batchId} rows=${p.numInputRows} $d")
-          }
-        } finally q.stop()
-        s32.stop()
-        sys.exit(0)
-      case Some("finalplan") =>
-        // AQE-final plan check: `explain` captures the INITIAL adaptive
-        // plan (isFinalPlan=false), which shows SortMergeJoin for joins
-        // AQE converts to broadcast at runtime — this executes the query
-        // (noop sink) and prints the EXECUTED plan, the one that actually
-        // ran, for join-strategy claims.
-        val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-        val names = args.lift(2).map(_.split(",").toSeq).getOrElse(Seq.empty)
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-        val s32 = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-        s32.sparkContext.setLogLevel("ERROR")
-        names.foreach { q =>
-          val df = SparkEntry.queries(q)(s32, sfDir)
-          // drive THIS QueryExecution (a .write spawns a separate one and
-          // would leave this plan un-finalized): executing the adaptive
-          // root materializes every stage and pins the final plan
-          df.queryExecution.executedPlan.execute().count()
-          val p = df.queryExecution.executedPlan.toString
-          val joins = p.split('\n').filter(l =>
-            l.contains("SortMergeJoin") || l.contains("BroadcastHashJoin") ||
-              l.contains("ShuffledHashJoin"))
-          println(s"[finalplan] $q isFinal=${p.contains("isFinalPlan=true")}")
-          joins.foreach(l => println(s"[finalplan]   ${l.trim.take(120)}"))
-        }
-        s32.stop()
-        sys.exit(0)
-      case Some("plans") =>
-        Seq("q06_filter_range", "q11_knn_cosine", "q15_knn_batch",
-            "q20_tpch_q1", "q21_topk_per_nation", "q30_minhash_candidates").foreach { q =>
-          println(s"========== $q ==========")
-          SparkEntry.queries(q)(spark, dir).explain("formatted")
-        }
       case _ =>
+        val spark = SparkSession.builder().master("local[8]")
+          .config("spark.sql.shuffle.partitions", "8")
+          .config("spark.sql.adaptive.enabled", "true")
+          .config("spark.ui.enabled", "false")
+          .getOrCreate()
+        spark.sparkContext.setLogLevel("ERROR")
         val df = SparkEntry.entry(spark)
         df.show(10, false)
         println(s"ENTRY ROWS: ${df.count()}")
         val df2 = SparkEntry.entry(spark)
         println(s"ENTRY ROWS 2ND RUN: ${df2.count()}")
+        spark.stop()
     }
-    spark.stop()
   }
 }

@@ -335,19 +335,20 @@ private[graft] trait QueriesAnn extends EntryKit {
       val emb = t(s, dir, "embeddings")
       val root = verifyCollectionsRoot(dir)
       val cat = new CollectionCatalog(s, root)
-      val n = emb.count()
-      val ksub = Ann.pqKsubFor(n)
-      val fp = s"pqauto1|$dir|n=$n|cs=0-7|ps=1-$ksub|m=8"
+      // the source's file tag keys the fixture; the dials size from the
+      // collection's row count, which a warm construct reads memoized
+      val fp = s"pqauto2|$dir|tag=${fixtureTag(s, dir, "embeddings")}|cs=0-7|ps=auto|m=8"
       val coll = cachedCollection(cat, "pqauto", fp, _.hasIndex) {
         val c = cat.getOrCreateCollection("pqauto", "cosine")
         c.add(emb.select(col("vec_id").cast("string").as("id"),
           col("embedding"), col("label")))
         c.buildIndexPqSeeded((0L until 8L).map(_.toString),
-          (1L to ksub.toLong).map(_.toString), m = 8)
+          (1L to Ann.pqKsubFor(c.count()).toLong).map(_.toString), m = 8)
         c
       }
+      val n = coll.count()
       coll.queryPq(headVec(emb, 0), 10, nprobe = 8, fetchN = 0)
-        .withColumn("ksub", lit(ksub))
+        .withColumn("ksub", lit(Ann.pqKsubFor(n)))
         .withColumn("fetch_n", lit(Ann.pqFetchNFor(n, 10)))
     }),
     // The BATCH read of the residual store index (q144 : q140 ::

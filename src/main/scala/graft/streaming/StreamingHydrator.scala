@@ -54,7 +54,8 @@ object StreamingHydrator {
     // (state eviction / expiry sweeps). Each such batch costs the full
     // per-batch fixed overhead (~0.8 s at this fixture scale: job
     // scheduling + state-store commits + incremental re-planning;
-    // measured with Probe sprof: 9 batches 9.1 s -> 6 batches 6.5 s).
+    // measured on the q142 shape: 9 batches 9.1 s -> 6 batches 6.5 s,
+    // OPTIMIZATION_r17.md §1).
     // Safe ONLY for sinks whose OUTPUT never originates in an expiry
     // sweep-after-final-batch: inner stream-stream joins (emission on
     // match; eviction is internal) and watermark dedup (emission on

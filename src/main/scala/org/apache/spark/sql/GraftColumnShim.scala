@@ -46,8 +46,27 @@ object GraftColumnShim {
   def unloadStateStores(): Unit =
     execution.streaming.state.StateStore.unloadAll()
 
-  /** Drain the async listener bus (`private[spark]`) so a listener-based
-    * probe (Probe `jobcount`) reads a settled counter, not a racing one. */
-  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+  /** Drain the async listener bus (`private[spark]`) so a listener reads a
+    * settled counter, not a racing one. */
+  private def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(30000)
+
+  /** `body`'s value and the number of Spark jobs started while it ran — the
+    * one job counter (`Probe jobcount`, the specs). The bus is drained
+    * before the listener is added, so no earlier call's job is counted, and
+    * again before the count is read, so none of `body`'s is missed. */
+  def countJobs[T](sc: org.apache.spark.SparkContext)(body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      drainListenerBus(sc)
+      (out, n.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -18,7 +18,6 @@ class EnvSwitchGuardSpec extends AnyFunSuite {
     "SPARK_GRAFT_BENCH_RUNS",    // Bench: suite repetitions
     "SPARK_GRAFT_BENCH_STEADY",  // Bench: steady-state vector on/off
     "SPARK_GRAFT_BENCH_ONLY",    // Bench: query-name filter
-    "SPARK_GRAFT_BENCH_DIAG",    // Bench: per-query JVM diagnostics
     "SPARK_GRAFT_BENCH_RECALL")  // Bench: recall measurement
 
   test("src/main/scala reads no SPARK_GRAFT_* name outside the run-mode allowlist") {

@@ -1,10 +1,6 @@
 package graft.catalog
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnShim}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -19,19 +15,7 @@ class ResolvedReadSpec extends SparkTestBase {
 
   /** Spark jobs started while `call` runs (its construction only: the
     * returned frame is not executed). */
-  private def jobs(call: => Any): Int = {
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      call
-      TestBus.drain(spark.sparkContext)
-      n.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobs(call: => Any): Int = GraftColumnShim.countJobs(spark.sparkContext)(call)._2
 
   private def rows(ids: Range) =
     ids.map(i => (s"id$i", s"doc $i", Seq(i.toFloat, (i % 7).toFloat, 1f)))
